@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Filters
 import graft.sources.Sinks
@@ -41,13 +43,14 @@ object Orchestrator {
   def droppedPath(outDir: String, v: Int): String =
     s"$outDir/dropped_v$v.parquet"
 
-  /** Write one stage's kept/dropped split. The stage frame is PERSISTED
-    * across the two writes: without it (a) the whole scalar chain runs
-    * twice (once per write), and (b) Catalyst pushes each
-    * `drop_reason`-filter down through the stage's projections,
-    * substituting the FULL expression chain into the filter condition —
-    * at stage 2 that inlines the nfkc/profile/reason tree ~50× into one
-    * Filter, janino dies on the generated method
+  /** Write one stage's kept/dropped split and return the (kept, dropped)
+    * row counts, observed on the two writes themselves — no read-back.
+    * The stage frame is PERSISTED across the two writes: without it
+    * (a) the whole scalar chain runs twice (once per write), and (b)
+    * Catalyst pushes each `drop_reason`-filter down through the stage's
+    * projections, substituting the FULL expression chain into the filter
+    * condition — at stage 2 that inlines the nfkc/profile/reason tree
+    * ~50× into one Filter, janino dies on the generated method
     * (InternalCompilerException, 6× per round-11 test run) and the
     * write silently runs interpreted. Filtering the materialized
     * columns instead costs one local spill of a frame this mode is
@@ -55,12 +58,21 @@ object Orchestrator {
     * text-processing-vs-IO profile (BASELINE.md) it de-duplicates.
     */
   private def writeSplit(out: DataFrame, keptPath: String,
-                         droppedPath: String): Unit = {
-    val mat = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      Filters.kept(mat).write.mode("overwrite").parquet(keptPath)
-      Filters.dropped(mat).write.mode("overwrite").parquet(droppedPath)
-    } finally mat.unpersist(blocking = false)
+                         droppedPath: String): (Long, Long) = {
+    val mat = out.persist(StorageLevel.MEMORY_AND_DISK)
+    try (writeCounted(Filters.kept(mat), keptPath),
+      writeCounted(Filters.dropped(mat), droppedPath))
+    finally mat.unpersist(blocking = false)
+  }
+
+  /** Overwrite `path` with `df`; the row count comes from a
+    * `Dataset.observe` metric collected by the write job itself.
+    */
+  private def writeCounted(df: DataFrame, path: String): Long = {
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(path)
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Ordered stage table: (version, name, transform). Stage v consumes
@@ -74,28 +86,41 @@ object Orchestrator {
     (6, "tokenise", df => Pipeline.tokenise(df)),
     (7, "shard", df => Pipeline.shard(df)))
 
-  /** The end-of-run cache fence behind `releaseCaches = true`: session-
-    * global clearCache (the stage transforms' internal persists are not
-    * individually reachable from here), but with a WARN when the fence
-    * is about to evict cached plans that already existed when the run
-    * STARTED — those are caller-owned frames the orchestrator did not
-    * create, and an embedder losing them silently was the ADVICE r13
-    * finding. The warned caller's fix is `releaseCaches = false` (own
-    * the release). `preRun` is the RDD-id snapshot taken at entry.
+  /** The stage runner behind [[run]] and [[incrementalRun]]: stages
+    * [firstVersion..7] over `mainpipe_v{firstVersion-1}.parquet` in
+    * `outDir`, each split-written by [[writeSplit]] and read back as the
+    * next stage's input — lineage is cut at every boundary (no 7-stage
+    * mega-plan), and a resume sees byte-identical input to the original
+    * run. Writes `run_summary.json` with the `prefix` row (if any) and
+    * one (stage, kept, dropped) row per stage, and returns the last
+    * read-back.
+    *
+    * Cache ownership: the only persist a stage transform leaves behind
+    * is [[graft.ops.Dedup.dedupStage]]'s branch point, which it places
+    * on its input frame; every other persist is released inside its
+    * stage. So releasing each stage's input once the stage is written
+    * releases everything the run created, and frames the caller cached
+    * in the same session are left alone.
     */
-  private def releaseFence(spark: SparkSession, preRun: Set[Int]): Unit = {
-    val survivors = spark.sparkContext.getPersistentRDDs.keySet & preRun
-    if (survivors.nonEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"orchestrator cache fence: clearCache() is evicting " +
-          s"${survivors.size} cached RDD(s) that existed before this run " +
-          "— caller-owned frames the orchestrator did not create; pass " +
-          "releaseCaches = false to keep them and own the release")
-    spark.catalog.clearCache()
+  private def runStages(spark: SparkSession, outDir: String,
+                        firstVersion: Int, dropPii: Boolean,
+                        prefix: Option[(String, Long, Long)] = None): DataFrame = {
+    var cur = spark.read.parquet(versionPath(outDir, firstVersion - 1))
+    val counts = prefix.toSeq ++
+      stages(dropPii).filter(_._1 >= firstVersion).map { case (v, name, fn) =>
+        val (kept, dropped) =
+          try writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v))
+          finally cur.unpersist(blocking = false)
+        cur = spark.read.parquet(versionPath(outDir, v))
+        (s"v$v:$name", kept, dropped)
+      }
+    val summary = {
+      import spark.implicits._
+      counts.toDF("stage", "kept", "dropped")
+    }
+    Sinks.writeMetricsJson(Map("stages" -> summary), s"$outDir/run_summary.json")
+    cur
   }
-
-  private def persistentRddIds(spark: SparkSession): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Run stages [fromVersion..7], materializing each boundary.
     *
@@ -104,53 +129,20 @@ object Orchestrator {
     * — `raw` is ignored, matching the reference's "rerun from stage N"
     * workflow. Returns the final frame read back from v7, and writes a
     * `run_summary.json` with per-stage kept/dropped row counts (H3).
-    *
-    * Each stage's input is the parquet read-back, not the in-memory
-    * frame: lineage is cut at every boundary (no 7-stage mega-plan), and
-    * a resume sees byte-identical input to the original run.
     */
   def run(spark: SparkSession, outDir: String,
           raw: Option[DataFrame] = None,
           fromVersion: Int = 1,
-          dropPii: Boolean = false,
-          releaseCaches: Boolean = true): DataFrame = {
+          dropPii: Boolean = false): DataFrame = {
     require(fromVersion >= 1 && fromVersion <= LastVersion,
       s"fromVersion must be in [1, $LastVersion], got $fromVersion")
-    val preRun = if (releaseCaches) persistentRddIds(spark) else Set.empty[Int]
     if (fromVersion == 1) {
       val rawDf = raw.getOrElse(throw new IllegalArgumentException(
         "fromVersion = 1 requires the raw input frame"))
       Pipeline.ingest(rawDf).write.mode("overwrite")
         .parquet(versionPath(outDir, 1))
     }
-    val startV = math.max(fromVersion, 2)
-    var cur = spark.read.parquet(versionPath(outDir, startV - 1))
-    val counts = Seq.newBuilder[(String, Long, Long)]
-    stages(dropPii).dropWhile(_._1 < startV).foreach { case (v, name, fn) =>
-      writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v))
-      cur = spark.read.parquet(versionPath(outDir, v))
-      counts += ((s"v$v:$name", cur.count(),
-        spark.read.parquet(droppedPath(outDir, v)).count()))
-    }
-    val summary = {
-      import spark.implicits._
-      counts.result().toDF("stage", "kept", "dropped")
-    }
-    Sinks.writeMetricsJson(Map("stages" -> summary), s"$outDir/run_summary.json")
-    // Cache hygiene: the stage transforms persist their multi-consumer
-    // branch points (dedupStage etc.) under the engine's
-    // released-by-the-caller convention — and for this entry point the
-    // owning caller is the orchestrator itself. Every stage output is on
-    // disk and `cur` is a parquet read-back, so nothing cached is live;
-    // without the fence a long-lived session invoking runs repeatedly
-    // accretes pinned frames (the production CLI never calls
-    // clearCache). The fence is session-GLOBAL (the stage transforms'
-    // internal persists are not individually reachable from here), so
-    // an embedder holding its own cached frames in the same session
-    // passes releaseCaches = false and owns the release itself (the
-    // fence WARNs when it is about to evict such pre-existing frames).
-    if (releaseCaches) releaseFence(spark, preRun)
-    cur
+    runStages(spark, outDir, math.max(fromVersion, 2), dropPii)
   }
 
   /** Incremental run over a previous completed run's outputs — the
@@ -170,11 +162,11 @@ object Orchestrator {
     * from-scratch run's. v2 and the per-stage dropped audits of the
     * delta prefix are not materialized in this mode (the trade for not
     * rescanning the corpus); run the full mode when audits are needed.
+    * The summary's `v3:incremental_prefix` row holds the merged v3's
+    * row count, with -1 for its (unmaterialized) dropped rows.
     */
   def incrementalRun(spark: SparkSession, prevDir: String, outDir: String,
-                     rawCur: DataFrame, dropPii: Boolean = false,
-                     releaseCaches: Boolean = true): DataFrame = {
-    val preRun = if (releaseCaches) persistentRddIds(spark) else Set.empty[Int]
+                     rawCur: DataFrame, dropPii: Boolean = false): DataFrame = {
     val prevV1 = spark.read.parquet(versionPath(prevDir, 1))
     val prevV3 = spark.read.parquet(versionPath(prevDir, 3))
     Pipeline.ingest(rawCur).write.mode("overwrite")
@@ -184,44 +176,23 @@ object Orchestrator {
     // [[writeSplit]] — the stage-2 chain must not be substituted into
     // the filter condition (janino limit) or computed twice. The caches
     // are only live inputs to the v3 write, so they are released right
-    // after it in the same try/finally discipline as writeSplit (the
-    // production CLI never calls clearCache, so nothing else would).
+    // after it, like writeSplit's.
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val rowLocal: DataFrame => DataFrame = df => {
-      val s2 = Pipeline.cleanAndFilter(df)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val s2 = Pipeline.cleanAndFilter(df).persist(StorageLevel.MEMORY_AND_DISK)
       persisted += s2
       val s3 = Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       persisted += s3
       Filters.kept(s3)
     }
-    try {
-      graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal)
-        .write.mode("overwrite").parquet(versionPath(outDir, 3))
-    } finally persisted.foreach(_.unpersist(blocking = false))
-    var cur = spark.read.parquet(versionPath(outDir, 3))
-    val counts = Seq.newBuilder[(String, Long, Long)]
-    counts += (("v3:incremental_prefix", cur.count(), -1L))
-    stages(dropPii).dropWhile(_._1 < 4).foreach { case (v, name, fn) =>
-      writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v))
-      cur = spark.read.parquet(versionPath(outDir, v))
-      counts += ((s"v$v:$name", cur.count(),
-        spark.read.parquet(droppedPath(outDir, v)).count()))
-    }
-    val summary = {
-      import spark.implicits._
-      counts.result().toDF("stage", "kept", "dropped")
-    }
-    Sinks.writeMetricsJson(Map("stages" -> summary),
-      s"$outDir/run_summary.json")
-    // same end-of-run cache fence as [[run]] (see the note there,
-    // including the embedder opt-out): the stage transforms'
-    // branch-point persists are owned by this entry point, everything
-    // live is on disk, and OrchestratorSpec pins that no
-    // DataFrame-level cache survives the call
-    if (releaseCaches) releaseFence(spark, preRun)
-    cur
+    val v3Rows =
+      try writeCounted(
+        graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal),
+        versionPath(outDir, 3))
+      finally persisted.foreach(_.unpersist(blocking = false))
+    runStages(spark, outDir, 4, dropPii,
+      Some(("v3:incremental_prefix", v3Rows, -1L)))
   }
 
   /** CLI parity with the reference's `python run_pipeline.py` entry:
@@ -232,10 +203,12 @@ object Orchestrator {
     * in outDir (the reference's rerun-from-stage-N workflow).
     */
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2 && args.length <= 3,
-      "usage: Orchestrator <sfDir> <outDir> [fromVersion]")
+    val usage = s"usage: Orchestrator <sfDir> <outDir> [fromVersion in 1..$LastVersion]"
+    require(args.length >= 2 && args.length <= 3, usage)
+    val fromVersion = args.lift(2).fold(1)(_.toIntOption
+      .filter(v => v >= 1 && v <= LastVersion)
+      .getOrElse(throw new IllegalArgumentException(usage)))
     val Array(sfDir, outDir) = args.take(2)
-    val fromVersion = if (args.length == 3) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -44,9 +44,19 @@ object Sizing {
     * the core count.
     */
   def shufflePartitions(dir: String): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.trim.toInt).getOrElse {
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(parsePartitions).getOrElse {
       val bytes = sizeOf(new java.io.File(dir))
       math.min(Cap.toLong, math.max(Floor.toLong,
         bytes / BytesPerPartition + 1)).toInt
     }
+
+  /** A `SPARK_GRAFT_SHUFFLE_PARTS` value as a partition count: a
+    * malformed, zero or negative value fails here, naming the variable,
+    * instead of as a bare NumberFormatException or a Spark conf error
+    * far from its cause.
+    */
+  private[graft] def parsePartitions(value: String): Int =
+    value.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_SHUFFLE_PARTS must be a positive integer, got '$value'"))
 }

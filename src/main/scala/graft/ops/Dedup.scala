@@ -109,54 +109,43 @@ object Dedup {
     * for the key itself (grouping is identical up to md5 collisions,
     * ~2^-128 per pair).
     */
-  def dedupStage(df0: DataFrame, textCol: String = "text_pii_masked",
-                 seqCol: String = "ingest_seq",
-                 branchCache: Option[org.apache.spark.storage.StorageLevel] =
-                   Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      : DataFrame = {
+  def dedupStage(df: DataFrame, textCol: String = "text_pii_masked",
+                 seqCol: String = "ingest_seq"): DataFrame = {
     // The frame is consumed twice (narrow window branch + join-back), so
     // persist at the branch point: without it the flags branch re-runs
     // the whole upstream scalar chain — the stage-2/3 regex pipeline at
     // pipeline scale — on a second scan (measured 7.1 s vs 4.5 s for
     // q_pipeline_full at sf0.1). Node-local materialization, not a
-    // shuffle; released by the caller's clearCache like every
-    // multi-consumer frame in the engine.
+    // shuffle. The persist is placed on the INPUT frame itself, so the
+    // caller releases it with `df.unpersist()` once the result is
+    // written (Orchestrator does so after every stage).
     //
     // Columnar-cache compression is OFF for this one persist (r14 A/B
-    // at the 100x layout, DedupProfile + CacheFootprint): the frame is
-    // dominated by four high-entropy text columns the lightweight
-    // columnar codecs barely shrink — 1.10x footprint, measured — while
-    // encode+2-consumer-decode costs 4.3 s of the 12.9 s dedup prefix
-    // (45.4 -> 41.2 s for the s3+dedup chain). Network bytes at the
-    // 1000-executor shape are unchanged either way (the cache is
-    // node-local); a 10% bigger spill is the right price for dropping
-    // one compress and two decompress passes over ~2 KB/row. The conf
-    // is captured by CacheManager at persist() time (confirmed by the
-    // A/B itself, which toggles it per-variant at build time), so the
+    // at the 100x layout, min-of-3): the frame is dominated by four
+    // high-entropy text columns the lightweight columnar codecs barely
+    // shrink — 65.9 MiB compressed vs 72.2 MiB raw at the 10x layout, a
+    // 1.10x footprint — while encode+2-consumer-decode costs 4.3 s of
+    // the 12.9 s dedup prefix (45.4 -> 41.2 s for the s3+dedup chain).
+    // Network bytes at the 1000-executor shape are unchanged either way
+    // (the cache is node-local); a 10% bigger spill is the right price
+    // for dropping one compress and two decompress passes over ~2 KB/row.
+    // The conf is captured by CacheManager at persist() time, so the
     // save/restore scopes it to exactly this cache.
-    //
-    // `branchCache` exposes the storage strategy to the profiling
-    // harness (DedupProfile A/Bs MEMORY_AND_DISK vs DISK_ONLY vs no
-    // persist at the 100x/1000x layouts); production callers keep the
-    // default.
     val compKey = "spark.sql.inMemoryColumnarStorage.compressed"
-    val spark = df0.sparkSession
+    val spark = df.sparkSession
     // The set→persist→restore window mutates session-global conf; the
     // JVM-wide lock makes it atomic so two queries building concurrently
     // in one session can never interleave their save/restore pairs (the
     // r14 hygiene finding). Callers that capture this conf for their own
     // persists must build under the same lock — today query build is
     // single-threaded (Orchestrator), so this is belt-and-braces.
-    val df = branchCache match {
-      case None => df0
-      case Some(level) => Dedup.ConfLock.synchronized {
-        val prevComp = spark.conf.getOption(compKey)
-        spark.conf.set(compKey, "false")
-        try df0.persist(level)
-        finally prevComp match {
-          case Some(v) => spark.conf.set(compKey, v)
-          case None => spark.conf.unset(compKey)
-        }
+    Dedup.ConfLock.synchronized {
+      val prevComp = spark.conf.getOption(compKey)
+      spark.conf.set(compKey, "false")
+      try df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      finally prevComp match {
+        case Some(v) => spark.conf.set(compKey, v)
+        case None => spark.conf.unset(compKey)
       }
     }
     val idExpr =

@@ -89,13 +89,6 @@ object Shard {
       Map("global" -> global, "shards" -> shardManifest(sharded)), path)
   }
 
-  /** X1 sink: partitioned JSONL export, one directory per shard.
-    * (Spark writes part-files per shard dir rather than single files —
-    * documented divergence from the reference's one-file-per-shard.)
-    */
-  def writeShards(df: DataFrame, outDir: String): Unit =
-    df.write.mode("overwrite").partitionBy("shard_id").json(outDir)
-
   /** X3: seeded toy sample (approximate n like df.sample; excluded from
     * oracle checks — engine RNGs differ by design, SURVEY §2.8 O4).
     */

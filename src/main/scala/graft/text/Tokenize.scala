@@ -53,12 +53,4 @@ object Tokenize {
 
   /** Native kernel form: struct<input_ids, attention_mask, n_tokens>. */
   def native(c: Column): Column = graft.plans.TokenizeText(c)
-
-  /** Column helper: adds the three reference columns. */
-  def withTokens(c: Column): (Column, Column, Column) = {
-    val t = native(c)
-    (t.getField("input_ids").as("input_ids"),
-      t.getField("attention_mask").as("attention_mask"),
-      t.getField("n_tokens").as("n_tokens"))
-  }
 }

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** E1 checkpointed orchestrator: per-stage materialization, drop-reason
   * side outputs, and resume-from-stage equivalence at sf0.001.
@@ -17,6 +19,45 @@ class OrchestratorSpec extends SparkTestBase {
       .select("url", "text")
     Orchestrator.run(spark, dir, raw = Some(raw))
     dir
+  }
+
+  private def stageNames(from: Int): Seq[String] =
+    Orchestrator.stages().collect { case (v, name, _) if v >= from => s"v$v:$name" }
+
+  /** `run_summary.json` must list `expected` in order, and each row's
+    * kept/dropped must equal the row counts of the parquets it names
+    * (dropped = -1 marks a stage without a dropped split).
+    */
+  private def assertSummaryMatchesParquet(dir: String, expected: Seq[String]): Unit = {
+    import spark.implicits._
+    val txt = Files.readString(java.nio.file.Paths.get(s"$dir/run_summary.json"))
+    val rows = spark.read.json(Seq(txt).toDS())
+      .select(explode(col("stages")).as("s"))
+      .select("s.stage", "s.kept", "s.dropped").as[(String, Long, Long)].collect()
+    assert(rows.map(_._1).toSeq === expected)
+    def rowsIn(p: String) = spark.read.parquet(p).count()
+    rows.foreach { case (stage, kept, dropped) =>
+      val v = stage.stripPrefix("v").takeWhile(_ != ':').toInt
+      assert(kept === rowsIn(Orchestrator.versionPath(dir, v)), stage)
+      if (dropped != -1L)
+        assert(dropped === rowsIn(Orchestrator.droppedPath(dir, v)), stage)
+    }
+  }
+
+  test("an empty corpus runs every stage and summarizes zero counts") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-orch-empty").toString
+    Orchestrator.run(spark, dir,
+      raw = Some(Seq.empty[(String, String)].toDF("url", "text")))
+    assertSummaryMatchesParquet(dir, stageNames(2))
+  }
+
+  test("CLI: a malformed or out-of-range fromVersion fails with the usage message") {
+    Seq("x", "2.5", "0", "8").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        Orchestrator.main(Array(sfDir, "unused-out", v)))
+      assert(e.getMessage.contains("usage: Orchestrator"), v)
+    }
   }
 
   test("ingest: the injectable P11 batch timestamp lands verbatim; the " +
@@ -79,6 +120,8 @@ class OrchestratorSpec extends SparkTestBase {
     assert(v7.count() ===
       spark.read.parquet(Orchestrator.versionPath(outDir, 6)).count())
     assert(v7.columns.contains("shard_id") && v7.columns.contains("global_seq"))
+    // the summary's counts (observed on the writes) equal the parquets'
+    assertSummaryMatchesParquet(outDir, stageNames(2))
   }
 
   test("fused pipeline equals checkpointed pipeline on kept rows") {
@@ -109,6 +152,7 @@ class OrchestratorSpec extends SparkTestBase {
       .select("doc_id", "quality_score", "subset", "n_tokens", "shard_id")
       .collect().map(_.toSeq).toSet
     assert(resumed === original)
+    assertSummaryMatchesParquet(outDir, stageNames(5))
   }
 
   test("incremental run matches a from-scratch run on content columns") {
@@ -126,15 +170,25 @@ class OrchestratorSpec extends SparkTestBase {
           .withColumn("doc_id", col("doc_id") + 1000000L)))
       .select("url", "text")
     val prevDir = Files.createTempDirectory("graft-inc-prev").toString
+    // a run releases every cache it takes and none the caller owns
+    spark.catalog.clearCache()
+    val callerOwned = spark.range(5).toDF("x").persist()
+    callerOwned.count()
     Orchestrator.run(spark, prevDir, raw = Some(rawA))
+    assert(callerOwned.storageLevel === StorageLevel.MEMORY_AND_DISK,
+      "run evicted a frame the caller cached")
+    callerOwned.unpersist(blocking = true)
+    assert(GraftSqlBridge.noCachedPlans(spark),
+      "run left DataFrame-level caches pinned")
     // the production CLI never calls clearCache, so incrementalRun must
     // release its own stage-2/3 persists (ADVICE r12): start from a
     // clean cache and assert none survive the call
     spark.catalog.clearCache()
     val incDir = Files.createTempDirectory("graft-inc-out").toString
     val incr = Orchestrator.incrementalRun(spark, prevDir, incDir, rawB)
-    assert(org.apache.spark.sql.GraftSqlBridge.noCachedPlans(spark),
+    assert(GraftSqlBridge.noCachedPlans(spark),
       "incrementalRun left DataFrame-level caches pinned")
+    assertSummaryMatchesParquet(incDir, "v3:incremental_prefix" +: stageNames(4))
     val fullDir = Files.createTempDirectory("graft-inc-full").toString
     Orchestrator.run(spark, fullDir, raw = Some(rawB))
     // content columns must agree; seq-derived artifacts (shard_id,

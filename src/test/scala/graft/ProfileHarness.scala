@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The shared bench discipline behind the test-scope profiling mains
-  * ([[ChainProfile]], [[S3Profile]], [[DedupProfile]]): one place for
-  * the session config, the untimed sf0.001 warm-up, the
-  * SPARK_GRAFT_BENCH_REPEAT min-of-N passes, the noop-sink timing and
-  * the clearCache-between-runs rule — a discipline tweak lands once
-  * instead of drifting across three copies.
+  * ([[ChainProfile]], [[S3Profile]]): one place for the session
+  * config, the untimed sf0.001 warm-up, the SPARK_GRAFT_BENCH_REPEAT
+  * min-of-N passes, the noop-sink timing and the clearCache-between-runs
+  * rule — a discipline tweak lands once instead of drifting across
+  * copies.
   */
 object ProfileHarness {
 
