@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // input-derived, NOT core-derived (r15; see graft.Sizing): the
-      // same data gets the same task count at every $SPARK_GRAFT_CPUS,
-      // so the low-core re-run measures parallel compute instead of
-      // task-count overhead
-      .config("spark.sql.shuffle.partitions", Sizing.shufflePartitions(sfDir))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // input-derived, NOT core-derived shuffle partitions (graft.Sizing):
+    // the same data gets the same task count at every $SPARK_GRAFT_CPUS,
+    // so the low-core re-run measures parallel compute instead of
+    // task-count overhead
+    val spark = Sizing.session(sfDir)
     // Untimed steady-state warm-up (JIT + codegen + parquet footers) on
     // the smallest SF. Different data dir -> timed runs below get no
     // cached-plan/data reuse; clearCache drops any persisted sketches so
@@ -31,7 +24,7 @@ object Bench {
     if (warmDir.nonEmpty && new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       selected.foreach { case (_, fn) =>
         try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => }
+        catch { case NonFatal(_) => }
       }
       spark.catalog.clearCache()
     }
@@ -42,11 +35,11 @@ object Bench {
       "lineitem", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet")
         .write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
     try Tables.events(spark, sfDir)
       .write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // noop sink, not count(): count() lets Catalyst prune every column a
     // projection query computes (a scoring query would bench as scan +
     // count). The noop sink consumes fully-evaluated rows — the honest
@@ -71,11 +64,18 @@ object Bench {
       .map(_.toInt).getOrElse(3).max(1)
     val names = selected.keys.toIndexedSeq
     val timings = collection.mutable.Map.empty[String, Double]
+    // A failed query keeps its elapsed time in the timings and the total
+    // (their format is the contract), but it is reported on stderr as it
+    // happens and listed on the FAILED_QUERIES line.
+    val failed = collection.mutable.LinkedHashSet.empty[String]
     def timeOne(name: String): Unit = {
       val fn = selected(name)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+      }
       val d = (System.nanoTime() - t0) / 1e9
       // sketch/overlap queries persist intermediates they cannot
       // safely release themselves (Verify does the same); dropping
@@ -147,6 +147,9 @@ object Bench {
     val head = headline.flatMap(k => results.get(k).map(k -> _))
     val total = if (results.nonEmpty) results.values.sum else 0.0
     spark.stop()
+    if (failed.nonEmpty)
+      println("FAILED_QUERIES " +
+        names.filter(failed).map("\"" + _ + "\"").mkString("[", ",", "]"))
     println("FULL_TIMINGS " + jsonMap(results, "%.4f"))
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonMap(head, "%.3f")},"sf":"$sfDir"}""")
     System.out.flush()

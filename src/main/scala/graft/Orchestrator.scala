@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Filters
@@ -44,7 +45,9 @@ object Orchestrator {
     s"$outDir/dropped_v$v.parquet"
 
   /** Write one stage's kept/dropped split and return the (kept, dropped)
-    * row counts, observed on the two writes themselves — no read-back.
+    * row counts, observed on the two writes themselves — no read-back —
+    * and the kept frame's schema, so the next stage reads the file back
+    * without a schema-inference job.
     * The stage frame is PERSISTED across the two writes: without it
     * (a) the whole scalar chain runs twice (once per write), and (b)
     * Catalyst pushes each `drop_reason`-filter down through the stage's
@@ -58,12 +61,22 @@ object Orchestrator {
     * text-processing-vs-IO profile (BASELINE.md) it de-duplicates.
     */
   private def writeSplit(out: DataFrame, keptPath: String,
-                         droppedPath: String): (Long, Long) = {
+                         droppedPath: String): (Long, Long, StructType) = {
     val mat = out.persist(StorageLevel.MEMORY_AND_DISK)
-    try (writeCounted(Filters.kept(mat), keptPath),
-      writeCounted(Filters.dropped(mat), droppedPath))
+    val kept = Filters.kept(mat)
+    try (writeCounted(kept, keptPath),
+      writeCounted(Filters.dropped(mat), droppedPath), kept.schema)
     finally mat.unpersist(blocking = false)
   }
+
+  /** Read a checkpoint back. With the writer's schema the read plans
+    * without touching the files; without it (a resume's first read of a
+    * file an earlier run wrote) Spark infers the schema in one job.
+    */
+  private def readVersion(spark: SparkSession, outDir: String, v: Int,
+                          schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(versionPath(outDir, v))
 
   /** Overwrite `path` with `df`; the row count comes from a
     * `Dataset.observe` metric collected by the write job itself.
@@ -88,10 +101,11 @@ object Orchestrator {
 
   /** The stage runner behind [[run]] and [[incrementalRun]]: stages
     * [firstVersion..7] over `mainpipe_v{firstVersion-1}.parquet` in
-    * `outDir`, each split-written by [[writeSplit]] and read back as the
-    * next stage's input — lineage is cut at every boundary (no 7-stage
+    * `outDir` (read with `inputSchema` when the caller just wrote it),
+    * each split-written by [[writeSplit]] and read back as the next
+    * stage's input — lineage is cut at every boundary (no 7-stage
     * mega-plan), and a resume sees byte-identical input to the original
-    * run. Writes `run_summary.json` with the `prefix` row (if any) and
+    * run. Writes `run_summary.json` with the `earlier` rows followed by
     * one (stage, kept, dropped) row per stage, and returns the last
     * read-back.
     *
@@ -104,22 +118,44 @@ object Orchestrator {
     */
   private def runStages(spark: SparkSession, outDir: String,
                         firstVersion: Int, dropPii: Boolean,
-                        prefix: Option[(String, Long, Long)] = None): DataFrame = {
-    var cur = spark.read.parquet(versionPath(outDir, firstVersion - 1))
-    val counts = prefix.toSeq ++
+                        inputSchema: Option[StructType],
+                        earlier: Seq[(String, Long, Long)]): DataFrame = {
+    var cur = readVersion(spark, outDir, firstVersion - 1, inputSchema)
+    val counts = earlier ++
       stages(dropPii).filter(_._1 >= firstVersion).map { case (v, name, fn) =>
-        val (kept, dropped) =
+        val (kept, dropped, schema) =
           try writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v))
           finally cur.unpersist(blocking = false)
-        cur = spark.read.parquet(versionPath(outDir, v))
+        cur = readVersion(spark, outDir, v, Some(schema))
         (s"v$v:$name", kept, dropped)
       }
     val summary = {
       import spark.implicits._
       counts.toDF("stage", "kept", "dropped")
     }
-    Sinks.writeMetricsJson(Map("stages" -> summary), s"$outDir/run_summary.json")
+    Sinks.writeMetricsJson(Map("stages" -> summary), summaryPath(outDir))
     cur
+  }
+
+  private def summaryPath(outDir: String): String = s"$outDir/run_summary.json"
+
+  /** The rows of `outDir`'s existing `run_summary.json` for stages below
+    * `fromVersion` — what a resume carries over, since those stages'
+    * checkpoints stay on disk. Empty when there is no summary or no
+    * stage (v2 is the first) lies below `fromVersion`.
+    */
+  private def summaryRowsBelow(outDir: String,
+                               fromVersion: Int): Seq[(String, Long, Long)] = {
+    val file = new java.io.File(summaryPath(outDir))
+    if (fromVersion <= 2 || !file.isFile) Nil
+    else {
+      import scala.jdk.CollectionConverters._
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(file)
+        .get("stages").elements().asScala.toSeq
+        .map(r => (r.get("stage").asText, r.get("kept").asLong,
+          r.get("dropped").asLong))
+        .filter(_._1.stripPrefix("v").takeWhile(_.isDigit).toInt < fromVersion)
+    }
   }
 
   /** Run stages [fromVersion..7], materializing each boundary.
@@ -128,7 +164,8 @@ object Orchestrator {
     * value resumes from `mainpipe_v{fromVersion-1}.parquet` in `outDir`
     * — `raw` is ignored, matching the reference's "rerun from stage N"
     * workflow. Returns the final frame read back from v7, and writes a
-    * `run_summary.json` with per-stage kept/dropped row counts (H3).
+    * `run_summary.json` with per-stage kept/dropped row counts (H3); a
+    * resume keeps the existing summary's rows for stages below N.
     */
   def run(spark: SparkSession, outDir: String,
           raw: Option[DataFrame] = None,
@@ -136,13 +173,15 @@ object Orchestrator {
           dropPii: Boolean = false): DataFrame = {
     require(fromVersion >= 1 && fromVersion <= LastVersion,
       s"fromVersion must be in [1, $LastVersion], got $fromVersion")
-    if (fromVersion == 1) {
+    val v1Schema = if (fromVersion > 1) None else {
       val rawDf = raw.getOrElse(throw new IllegalArgumentException(
         "fromVersion = 1 requires the raw input frame"))
-      Pipeline.ingest(rawDf).write.mode("overwrite")
-        .parquet(versionPath(outDir, 1))
+      val v1 = Pipeline.ingest(rawDf)
+      v1.write.mode("overwrite").parquet(versionPath(outDir, 1))
+      Some(v1.schema)
     }
-    runStages(spark, outDir, math.max(fromVersion, 2), dropPii)
+    runStages(spark, outDir, math.max(fromVersion, 2), dropPii, v1Schema,
+      summaryRowsBelow(outDir, fromVersion))
   }
 
   /** Incremental run over a previous completed run's outputs — the
@@ -169,9 +208,9 @@ object Orchestrator {
                      rawCur: DataFrame, dropPii: Boolean = false): DataFrame = {
     val prevV1 = spark.read.parquet(versionPath(prevDir, 1))
     val prevV3 = spark.read.parquet(versionPath(prevDir, 3))
-    Pipeline.ingest(rawCur).write.mode("overwrite")
-      .parquet(versionPath(outDir, 1))
-    val curV1 = spark.read.parquet(versionPath(outDir, 1))
+    val ingested = Pipeline.ingest(rawCur)
+    ingested.write.mode("overwrite").parquet(versionPath(outDir, 1))
+    val curV1 = readVersion(spark, outDir, 1, Some(ingested.schema))
     // persist before each kept(): same pushdown-inlining rationale as
     // [[writeSplit]] — the stage-2 chain must not be substituted into
     // the filter condition (janino limit) or computed twice. The caches
@@ -186,13 +225,13 @@ object Orchestrator {
       persisted += s3
       Filters.kept(s3)
     }
+    val merged =
+      graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal)
     val v3Rows =
-      try writeCounted(
-        graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal),
-        versionPath(outDir, 3))
+      try writeCounted(merged, versionPath(outDir, 3))
       finally persisted.foreach(_.unpersist(blocking = false))
-    runStages(spark, outDir, 4, dropPii,
-      Some(("v3:incremental_prefix", v3Rows, -1L)))
+    runStages(spark, outDir, 4, dropPii, Some(merged.schema),
+      Seq(("v3:incremental_prefix", v3Rows, -1L)))
   }
 
   /** CLI parity with the reference's `python run_pipeline.py` entry:
@@ -209,16 +248,7 @@ object Orchestrator {
       .filter(v => v >= 1 && v <= LastVersion)
       .getOrElse(throw new IllegalArgumentException(usage)))
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // input-derived, not core-derived (graft.Sizing) — the production
-      // justification lives there; override: SPARK_GRAFT_SHUFFLE_PARTS
-      .config("spark.sql.shuffle.partitions", Sizing.shufflePartitions(sfDir))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sizing.session(sfDir)
     val raw = if (fromVersion == 1)
       Some(Pipeline.fromDocuments(Tables.documents(spark, sfDir)).select("url", "text"))
     else None

@@ -164,10 +164,4 @@ object Pipeline {
   def fromDocuments(docs: DataFrame): DataFrame =
     docs.withColumn("url", concat(lit("https://"), col("source"),
       lit("/doc/"), col("doc_id").cast("string")))
-
-  /** P12 best-available text for export (Export_to_jsonl.py:25-30). */
-  def exportText(df: DataFrame): DataFrame =
-    df.withColumn("export_text", Normalize.bestText(
-      col("text_pii_masked"), col("text_deep_clean"),
-      col("text_norm"), col("text")))
 }

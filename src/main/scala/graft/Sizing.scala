@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Input-size-derived session sizing (guide §2.2/§2.3: shuffle
   * partitioning should follow the data, and AQE's coalescing — not a
   * constant pinned to the local core count — is the mechanism that
@@ -49,6 +51,24 @@ object Sizing {
       math.min(Cap.toLong, math.max(Floor.toLong,
         bytes / BytesPerPartition + 1)).toInt
     }
+
+  /** The local session every entry point runs on: `local[$SPARK_GRAFT_CPUS]`
+    * (default 4 cores), the input-derived shuffle-partition count for
+    * `dataDir`, UTC session time, no UI and WARN logging. A change to
+    * the session conf lands here once for Bench, Verify, Orchestrator
+    * and PlanDump.
+    */
+  def session(dataDir: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions(dataDir))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** A `SPARK_GRAFT_SHUFFLE_PARTS` value as a partition count: a
     * malformed, zero or negative value fails here, naming the variable,

@@ -1,21 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same input-derived partitioning as Bench (graft.Sizing), so the
-      // oracle verifies results under the benched plan shape
-      .config("spark.sql.shuffle.partitions", Sizing.shufflePartitions(sfDir))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the same session as Bench (graft.Sizing), so the oracle verifies
+    // results under the benched plan shape
+    val spark = Sizing.session(sfDir)
     new java.io.File(outDir).mkdirs()
     // Optional name filter for iteration (comma-separated); the graded
     // driver run leaves it unset and dumps everything.
@@ -28,7 +21,7 @@ object Verify {
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // several sketch/retrieval queries persist intermediates they

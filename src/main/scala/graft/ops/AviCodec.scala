@@ -2,6 +2,8 @@ package graft.ops
 
 import java.io.ByteArrayOutputStream
 
+import scala.util.control.NonFatal
+
 /** Minimal MJPEG-in-AVI container codec — the second real video
   * container after animated GIF ([[GifCodec]]), JVM-pure like every
   * codec in the engine.
@@ -49,7 +51,7 @@ object AviCodec {
     * `movi`.
     */
   def decode(bytes: Array[Byte]): Option[(AviMeta, Seq[Array[Byte]])] =
-    try decodeImpl(bytes) catch { case _: Throwable => None }
+    try decodeImpl(bytes) catch { case NonFatal(_) => None }
 
   private def decodeImpl(b: Array[Byte]): Option[(AviMeta, Seq[Array[Byte]])] = {
     if (b.length < 24) return None

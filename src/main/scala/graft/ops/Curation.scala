@@ -105,10 +105,10 @@ object Curation {
     *
     * Counting runs through the native one-pass kernel
     * (graft.plans.NgramRepStats, hash-map per row, codegen'd); the
-    * declarative HOF form below is kept as the executable spec and
-    * parity-pinned in CurationSpec — its O(u·n) string comparisons made
-    * it the slowest per-row query on the bench (2.6 s at sf0.1 vs
-    * ~0.3 s for the kernel).
+    * declarative HOF form it replaced is CurationSpec's executable spec
+    * and parity pin — its O(u·n) string comparisons made it the slowest
+    * per-row query on the bench (2.6 s at sf0.1 vs ~0.3 s for the
+    * kernel).
     */
   def dupNgramStats(df: DataFrame, textCol: String = "text"): DataFrame = {
     val st = col("__st")
@@ -123,48 +123,6 @@ object Curation {
       .withColumn("top2gram_frac_q", q(st.getField("top2_num")))
       .withColumn("dup3gram_frac_q", q(st.getField("dup3_num")))
       .drop("__st")
-  }
-
-  /** The declarative HOF form of [[dupNgramStats]] — executable spec
-    * for the kernel (CurationSpec parity) and the shape the DuckDB
-    * oracle states.
-    */
-  def dupNgramStatsHof(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = col("__toks")
-    val n = size(toks)
-    def grams(k: Int): Column = {
-      // windows of k consecutive tokens, joined with a single space
-      val slices = (0 until k).map(i => slice(toks, lit(i + 1), n - lit(k - 1)))
-      zip_with(slices(0), slices.drop(1).reduceLeft((a, b) =>
-        zip_with(a, b, (x, y) => concat(x, lit(" "), y))), (x, y) => concat(x, lit(" "), y))
-    }
-    // (occurrences * non-space chars) per distinct gram
-    def weights(gramCol: Column): Column = transform(array_distinct(gramCol),
-      g => (size(filter(gramCol, x => x === g)) *
-        (length(g) - length(regexp_replace(g, "[^ ]", "")))).cast("long"))
-    def dupWeights(gramCol: Column): Column = transform(array_distinct(gramCol),
-      g => {
-        val occ = size(filter(gramCol, x => x === g))
-        when(occ > 1, (occ * (length(g) - length(regexp_replace(g, "[^ ]", ""))))
-          .cast("long")).otherwise(lit(0L))
-      })
-    val totalChars = aggregate(transform(toks, t => length(t).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    def q(numer: Column): Column =
-      when(col("__total") > 0,
-        floor(numer.cast("double") * 10000.0d / col("__total").cast("double")))
-        .otherwise(lit(0L)).cast("long")
-    df.withColumn("__toks", TextMetrics.tokens(col(textCol)))
-      .withColumn("__total", totalChars)
-      .withColumn("__g2", when(n >= 2, grams(2)).otherwise(array().cast("array<string>")))
-      .withColumn("__g3", when(n >= 3, grams(3)).otherwise(array().cast("array<string>")))
-      .withColumn("n_words", n.cast("long"))
-      .withColumn("total_chars", col("__total"))
-      .withColumn("top2gram_frac_q",
-        q(coalesce(array_max(weights(col("__g2"))), lit(0L))))
-      .withColumn("dup3gram_frac_q",
-        q(coalesce(aggregate(dupWeights(col("__g3")), lit(0L), (a, x) => a + x), lit(0L))))
-      .drop("__toks", "__total", "__g2", "__g3")
   }
 
   val DsirBuckets = 256
@@ -397,8 +355,8 @@ object Curation {
     // ~8-token string (~7× smaller cache at any scale, the r14 weak
     // finding's prescribed fix, and −29% wall at sf0.1). Results are
     // identical modulo a 64-bit collision between two spans of one
-    // corpus (p ≈ n²/2⁶⁵; ~1e-5 at the sf0.1 volume — R15Check pins
-    // row equality at sf0.01/sf0.1 and the DuckDB oracle, which
+    // corpus (p ≈ n²/2⁶⁵; ~1e-5 at the sf0.1 volume — row equality at
+    // sf0.01/sf0.1 in OPTIMIZATION_r15.md, and the DuckDB oracle, which
     // replays exact strings, re-verifies the hash).
     val spans = df
       .withColumn("__toks", TextMetrics.tokens(col(textCol)))
@@ -470,8 +428,8 @@ object Curation {
     // of an ~n-token string. That shrinks the r14 weak-finding cache
     // ~7× at any scale AND cut the query 2.51 → 1.72 s at sf0.1
     // (cold-JVM interleaved min-of-3). Identical results modulo a
-    // 64-bit collision (p ≈ n²/2⁶⁵; R15Check pins row equality at
-    // sf0.01/sf0.1, oracle hash re-verified).
+    // 64-bit collision (p ≈ n²/2⁶⁵; row equality at sf0.01/sf0.1 in
+    // OPTIMIZATION_r15.md, oracle hash re-verified).
     val grams = base
       .select(col(idCol), posexplode(
         when(size(col("__toks")) >= n,
@@ -577,8 +535,8 @@ object Curation {
     * exact strings, so a collision cannot pass unnoticed at the checked
     * SFs). Pair counts leave each map partition pre-aggregated —
     * ≤ |sources|² distinct keys — so the pair exchange is bytes, not
-    * rows. R15Check: row-identical at sf0.01/sf0.1; R15Profile `ovl`:
-    * 1.41 → 1.19 s at sf0.1.
+    * rows. Row-identical at sf0.01/sf0.1, 1.41 → 1.19 s at sf0.1
+    * (OPTIMIZATION_r15.md).
     */
   def sourceOverlap(df: DataFrame, sourceCol: String = "source",
                     textCol: String = "text",

@@ -13,10 +13,11 @@ import graft.text.TextMetrics
   * Scale shape: the benchmark side is small (eval suites are thousands
   * of docs, not billions) — its distinct n-gram set is broadcast, so the
   * corpus side never shuffles: explode → broadcast-hash semi-match →
-  * partial-count per doc. At 100 TB the corpus n-grams would be 64-bit
-  * [[SketchDedup.shingleHashes]] instead of strings (8 bytes/gram on the
-  * wire instead of ~30); string grams are kept here because they are
-  * engine-portable (the DuckDB oracle reproduces them verbatim).
+  * partial-count per doc. At 100 TB the corpus n-grams would be the
+  * 64-bit shingle hashes of [[SketchDedup.sketchDoc]] instead of strings
+  * (8 bytes/gram on the wire instead of ~30); string grams are kept here
+  * because they are engine-portable (the DuckDB oracle reproduces them
+  * verbatim).
   */
 object Decontaminate {
 

@@ -47,33 +47,11 @@ object HashedEmbed {
   /** The signed-count vector as array<double> (integer-valued), via
     * the compiled one-pass kernel [[graft.plans.HashedSignedCount]] —
     * one md5 + one primitive-array add per token inside whole-stage
-    * codegen (the interpreted HOF form below costs ~4s vs <1s at
-    * sf0.1; parity-pinned in SimilaritySpec).
+    * codegen (the interpreted HOF form it replaced costs ~4s vs <1s at
+    * sf0.1; SimilaritySpec keeps that form as the parity reference).
     */
   def hashedVector(toks: Column, dim: Int = Dim): Column =
     graft.plans.HashedSignedCount(toks, dim)
-
-  /** Declarative reference form of [[hashedVector]] (the parity
-    * oracle for the kernel): ONE fold over the tokens with a dim-slot
-    * array accumulator — not dim separate folds. The naive
-    * `transform(sequence(0, dim-1), i -> aggregate(pairs, ...))`
-    * shape re-evaluates the pairs argument (and its md5 calls) once
-    * per bucket index, because a HOF's argument expression is inside
-    * the enclosing lambda's body: that is dim× the hashing work per
-    * row (measured 10.9s vs <1s on the sf0.001 bench). The inner
-    * `transform(toks, md5)` likewise pins md5 to exactly one call per
-    * token — bucket and sign both read the precomputed hex.
-    */
-  def hashedVectorHof(toks: Column, dim: Int = Dim): Column = {
-    val pairs = transform(transform(toks, t => md5(t)), h =>
-      struct(
-        (conv(substring(h, 1, 2), 16, 10).cast("int") % dim).cast("int").as("b"),
-        when(conv(substring(h, 3, 1), 16, 10).cast("int") % 2 === 0, lit(1.0))
-          .otherwise(lit(-1.0)).as("s")))
-    aggregate(pairs, array_repeat(lit(0.0), dim), (acc, p) =>
-      transform(acc, (x, i) =>
-        x + when(p.getField("b") === i, p.getField("s")).otherwise(lit(0.0))))
-  }
 
   /** Per-doc embedding summary with harness-safe scalar columns:
     * token count, nonzero components, exact squared norm (integer),

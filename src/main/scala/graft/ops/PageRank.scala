@@ -49,8 +49,8 @@ object PageRank {
     // a union whose two branches both scan `e`, and against a cache
     // that is only marked-not-materialized those two branches RACE —
     // each recomputes the upstream edge join before either publishes
-    // the blocks (q_pagerank_nations' 5-way join ran twice; R14Profile
-    // measured the query at 6.6 s vs 1.8 s for the join itself). One
+    // the blocks (q_pagerank_nations' 5-way join ran twice; measured at
+    // 6.6 s vs 1.8 s for the join itself, OPTIMIZATION_r14.md). One
     // count() runs the expensive subtree exactly once.
     e.count()
     val nodes = e.select(col("src").as("node"))

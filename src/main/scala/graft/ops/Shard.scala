@@ -89,12 +89,6 @@ object Shard {
       Map("global" -> global, "shards" -> shardManifest(sharded)), path)
   }
 
-  /** X3: seeded toy sample (approximate n like df.sample; excluded from
-    * oracle checks — engine RNGs differ by design, SURVEY §2.8 O4).
-    */
-  def toySample(df: DataFrame, n: Int = 1000, seed: Long = 42): DataFrame =
-    df.orderBy(rand(seed)).limit(n)
-
   /** Deterministic per-epoch corpus shuffle (beyond ref) — the training
     * ORDER operator: every epoch sees the whole corpus in a different
     * pseudo-random permutation, reproducible from the data alone

@@ -45,9 +45,6 @@ object Similarity {
     aggregate(sequence(start, start + nbits - 1), lit(0L),
       (acc, i) => acc * 2 + when(element_at(v, i.cast("int")) > 0, 1L).otherwise(0L))
 
-  def lshBucket(v: Column, nbits: Int = 16): Column =
-    lshBucketAt(v, lit(1), nbits)
-
   /** Brute-force cosine top-k: exact baseline. Query set = vec_id < nQueries.
     * Ranking is TopK.perQuery (bounded-heap aggregate with map-side
     * combine), NOT a per-query window: a window would funnel the whole
@@ -140,19 +137,6 @@ object Similarity {
     pairs
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), Seq("id_a"))
       .join(e.select(col("vec_id").as("id_b"), col("v").as("vb")), Seq("id_b"))
-      .withColumn("cosine", cosine(col("va"), col("vb")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-  }
-
-  /** Exact all-pairs baseline (tests + recall measurement only — the
-    * cross join is quadratic; never the scale path).
-    */
-  def nearDupPairsBrute(emb: DataFrame, threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"))
-    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"))
-    a.join(b, col("id_a") < col("id_b"))
       .withColumn("cosine", cosine(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")

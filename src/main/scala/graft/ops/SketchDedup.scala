@@ -22,64 +22,30 @@ object SketchDedup {
 
   /** Distinct word k-shingles — the compiled one-pass kernel
     * [[graft.plans.WordShinglesK]] (evaluates its child exactly once,
-    * so inline tokenizer subtrees are safe here, unlike the HOF form
-    * below). This single expression feeds the whole sketch family;
-    * compiling it moved every shingle-based query (MinHash,
-    * prefix-Jaccard, containment, n-gram Jaccard, decontamination).
+    * so inline tokenizer subtrees are safe here, unlike the HOF form it
+    * replaced, SketchDedupSpec's parity reference). This single
+    * expression feeds the whole sketch family; compiling it moved every
+    * shingle-based query (MinHash, prefix-Jaccard, containment, n-gram
+    * Jaccard, decontamination).
     */
   def shinglesFromTokens(toks: Column, k: Int = 3): Column =
     graft.plans.WordShinglesK(toks, k)
-
-  /** Declarative reference form (the kernel's parity oracle).
-    * ⚠ `toks` MUST be a bound attribute (a column produced by a previous
-    * select), not an inline expression: an inline tokenizer subtree gets
-    * copied into the `slice` lambda and re-evaluated per shingle index —
-    * O(n²) per document (measured 3× the whole query's budget at sf0.1).
-    * Interpreted: HOFs are CodegenFallback, one boxed lambda frame and
-    * k-slice array per window.
-    */
-  def shinglesFromTokensHof(toks: Column, k: Int = 3): Column =
-    when(size(toks) >= k,
-      array_distinct(transform(sequence(lit(0), size(toks) - k),
-        i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
-      .otherwise(when(size(toks) > 0, array(concat_ws(" ", toks)))
-        .otherwise(array().cast("array<string>")))
 
   /** Convenience single-expression form. */
   def wordShingles(c: Column, k: Int = 3): Column =
     shinglesFromTokens(TextMetrics.tokens(c), k)
 
-  /** Shingle identities as 64-bit hashes built from per-token hashes —
-    * no shingle strings are ever materialized. `tokenHashes` must be a
-    * bound attribute (same inlining hazard as [[shinglesFromTokens]]).
-    * A hash collision perturbing a Jaccard estimate is ~2^-64 noise.
-    */
-  def shingleHashes(tokenHashes: Column, k: Int = 3): Column =
-    when(size(tokenHashes) >= k,
-      array_distinct(transform(sequence(lit(0), size(tokenHashes) - k),
-        i => xxhash64((1 to k).map(d => element_at(tokenHashes, i + d)): _*))))
-      .otherwise(when(size(tokenHashes) > 0,
-        array(aggregate(tokenHashes, lit(-1L), (a, h) => xxhash64(a, h))))
-        .otherwise(array().cast("array<bigint>")))
-
-  /** MinHash signature over base-hashed shingles: the numHashes-member
-    * hash family is derived by re-mixing the 8-byte base hash
-    * (xxhash64(j, h)) rather than re-hashing the shingle string per
-    * seed — bytes hashed per row drop by ~|shingle|/8 × numHashes.
-    */
-  def minhashSignature(hashes: Column, numHashes: Int = 64): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), j =>
-      when(size(hashes) > 0,
-        array_min(transform(hashes, h => xxhash64(j, h))))
-        .otherwise(lit(Long.MaxValue)))
-
-  // ---- compiled sketch fast path -----------------------------------------
+  // ---- compiled sketch ---------------------------------------------------
   //
   // Higher-order array expressions are CodegenFallback (interpreted) in
-  // Spark; the nested transform/array_min tree above costs seconds of JIT
-  // warm-up alone and ~10× steady-state vs compiled code. The hot path
-  // computes the identical hashes (verified in SketchDedupSpec) in one
-  // tight loop per document. Hash parity rules with the expression form:
+  // Spark; the nested transform/array_min tree of the expression form
+  // (SketchDedupSpec's shingleHashes/minhashSignature references) costs
+  // seconds of JIT warm-up alone and ~10× steady-state vs compiled code.
+  // The hot path computes the identical hashes (verified in
+  // SketchDedupSpec) in one tight loop per document: no shingle string
+  // is ever materialized, and the numHashes-member hash family re-mixes
+  // the 8-byte base hash instead of re-hashing the shingle string per
+  // seed. Hash parity rules with the expression form:
   //   token hash      = xxhash64(tok)            = hashUTF8String(tok, 42)
   //   k-shingle hash  = xxhash64(h1..hk)         = fold hashLong, seed 42
   //   <k-token doc    = aggregate(th, -1L, xxhash64(acc, h)) fold
@@ -158,12 +124,6 @@ object SketchDedup {
       val (hs, _, bk) = sketchDoc(s, k, numHashes, bands)
       (hs, bk)
     }
-
-  /** LSH band keys: hash each band of `rowsPerBand` signature slots. */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map(b =>
-      concat_ws("_", lit(b),
-        xxhash64(lit(b), concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand))))): _*)
 
   /** MinHash+LSH candidate pairs, verified with exact shingle Jaccard.
     * bands×rowsPerBand must equal numHashes; the (bands, rows) choice
@@ -517,9 +477,9 @@ object SketchDedup {
     // arbitrary, commonly ascending df), so ordering by (df, hash)
     // instead of (df, text) still yields a candidate SUPERSET of all
     // true pairs, and exact verification makes the output identical
-    // (R15Check row-identical at sf0.01/sf0.1; cache footprint 19.4 →
-    // 14.8 MiB at sf0.1 with identical wall-clock — the r15 footprint
-    // remedy for corpus-volume caches).
+    // (row-identical at sf0.01/sf0.1; cache footprint 19.4 → 14.8 MiB
+    // at sf0.1 with identical wall-clock, OPTIMIZATION_r15.md — the r15
+    // footprint remedy for corpus-volume caches).
     val ex = base.select(col("id"), explode(col("sh")).as("__s0"))
       .select(col("id"), xxhash64(col("__s0")).as("s"))
     // sh is distinct within a doc, so count(*) = document frequency.
@@ -699,15 +659,6 @@ object SketchDedup {
     * Jaccard runs on candidates only. numHashes=16 in 4 bands of 4
     * centers the S-curve near J ≈ (1/4)^(1/4) ≈ 0.71.
     */
-  /** Declarative reference form of the [[graft.plans.MinhashMd5]]
-    * signature (the kernel's parity oracle — same numHashes·|sh| md5
-    * calls, interpreted).
-    */
-  def minhashMd5SignatureHof(sh: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), j =>
-      array_min(transform(sh, s0 =>
-        md5(concat(j.cast("string"), lit(":"), s0)))))
-
   def minhashMd5Pairs(df: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 16,
                       bands: Int = 4, threshold: Double = 0.7): DataFrame = {

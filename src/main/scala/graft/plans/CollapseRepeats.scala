@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * regex engine's treatment). Null in → null out (nullIntolerant).
   * Bit-parity with the regex pair is spec-pinned (TextOpsSpec) over
   * punctuation/astral/terminator/hostile fixtures; the regex form
-  * survives as [[graft.text.Normalize.normalizeRepeatedCharsRegex]].
+  * survives in test scope as NormalizeRef.normalizeRepeatedCharsRegex.
   */
 case class CollapseRepeats(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -97,6 +96,4 @@ object HilbertKey {
     require(args.length == 2, "hilbert_key expects exactly two arguments")
     HilbertKey(args.head, args(1))
   }
-
-  private[plans] val identifier = FunctionIdentifier("hilbert_key")
 }

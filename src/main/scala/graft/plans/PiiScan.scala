@@ -364,13 +364,6 @@ object PiiScan {
     if (sb == null) s else sb.append(s, copied, s.length).toString
   }
 
-  // Standalone count entry points (PiiScanSpec drives these directly).
-  def phoneCount(s: String): Int = countOf(Phone, s)
-  def ccCount(s: String): Int = countOf(Cc, s)
-  def ibanCount(s: String): Int = countOf(Iban, s)
-  def ipCount(s: String): Int = countOf(Ip, s)
-  def ssnCount(s: String): Int = countOf(Ssn, s)
-
   /** phone_simple_hits: count of the stage-2 rough phone pattern. */
   def phoneSimpleCount(s: UTF8String): Int = countOf(PhoneSimple, s.toString)
 

@@ -1652,42 +1652,16 @@ object DocQueries {
       coalesce(col("text"), lit("")))
     val md = when(col("doc_id") % 4 === 0, scaffold)
       .otherwise(coalesce(col("text"), lit("")))
-    // the compiled linear chain — the regex form below is the parity
-    // anchor (MarkdownScanSpec fuzzes them equal; several patterns are
-    // quadratic under java.util.regex on unclosed-opener floods)
+    // the compiled linear chain — the regex form it replaced is the
+    // parity anchor in MarkdownScanSpec, which fuzzes them equal
+    // (several patterns are quadratic under java.util.regex on
+    // unclosed-opener floods)
     val out = graft.plans.MarkdownStrip(md)
     Tables.documents(s, dir).select(col("doc_id"),
       (col("doc_id") % 4 === 0).as("is_seeded"),
       length(out).cast("long").as("plain_len"),
       md5(out).as("plain_md5"))
   }
-
-  /** The java-regex form of the anchor-text measurement — the
-    * AnchorTextLen kernel's parity anchor (same caveat as
-    * [[markdownStripRegex]]).
-    */
-  def anchorExtractRegexSum(b: Column): Column =
-    aggregate(
-      regexp_extract_all(b, lit("<a(?:\\s[^>]*)?>(.*?)</a>"), lit(1)),
-      lit(0), (acc, x) => acc + length(x))
-
-  /** The java-regex form of the markdown chain — the kernel's parity
-    * anchor (MarkdownScanSpec fuzzes kernel == regex; NOT a production
-    * path: the image/link/emphasis/inline-code patterns are O(n²)
-    * under java.util.regex on unclosed-opener floods).
-    */
-  def markdownStripRegex(md: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(md, "(?s)```.*?```", ""),
-              "!\\[([^\\]]*)\\]\\(([^)]*)\\)", "$1"),
-            "\\[([^\\]]*)\\]\\(([^)]*)\\)", "$1"),
-          "\\*{1,3}([^*]+)\\*{1,3}", "$1"),
-        "`([^`]+)`", "$1"),
-      "(?m)^#{1,6}[ \\t]+", "")
 
   val markdownStripSql: String =
     """WITH d AS (SELECT doc_id,
@@ -1823,8 +1797,8 @@ object DocQueries {
     // both per-block measures run compiled linear scanners: StripTags
     // (the P2 kernel) and AnchorTextLen (the anchor pattern is O(n²)
     // under java.util.regex on `<a x><a x>…` floods before a newline —
-    // see plans/MarkdownScan; anchorExtractRegexSum below is the
-    // parity anchor)
+    // see plans/MarkdownScan; MarkdownScanSpec keeps the regex form as
+    // the parity anchor)
     val stats = transform(blocks, b => struct(
       graft.plans.StripTags(b).as("vis"),
       graft.plans.AnchorTextLen(b).as("alen")))

@@ -776,9 +776,10 @@ object RelationalQueries {
       .filter(col("text").isNotNull && length(col("text")) >= 3)
     // persisted: the exploded substr stream feeds BOTH the summary
     // aggregate and the exact-count probe join; re-deriving it costs a
-    // second 15M-row explode+substr pass that the R14Profile A/B
-    // measured at +2 s over the cache read (and r9 measured the same
-    // trade) — the substr is the expensive part, not the explode.
+    // second 15M-row explode+substr pass that the r14 A/B
+    // (OPTIMIZATION_r14.md) measured at +2 s over the cache read (and
+    // r9 measured the same trade) — the substr is the expensive part,
+    // not the explode.
     // Re-A/B'd cold-JVM isolated in r15 (VERDICT r14 item 1): 2.58 s
     // persisted vs 4.49 s without — KEPT. (The MG summary needs the
     // gram STRINGS, so the dupSpans xxhash64-fingerprint footprint fix
@@ -862,8 +863,8 @@ object RelationalQueries {
     // references to this aggregate inside ONE union plan, and a lazy
     // persist does not help there — the union's stages race, each
     // recomputing the full explode+MG pass before any of them manages
-    // to publish the cache block (R14Profile measured the query at
-    // 3 MG passes' cost). One 3-row count() up front runs the summary
+    // to publish the cache block (OPTIMIZATION_r14.md measured the
+    // query at 3 MG passes' cost). One 3-row count() up front runs the summary
     // aggregate exactly once — also the literal reading of the query's
     // own contract: "each batch is summarized ONCE". The same trick as
     // knPerplexity's rank count; the bench times it (the count runs at

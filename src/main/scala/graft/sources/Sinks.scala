@@ -58,9 +58,6 @@ object Sinks {
 
   def trainingJsonLine(df: DataFrame): DataFrame = df.select(trainingLine)
 
-  def writeTrainingJsonl(df: DataFrame, outDir: String): Unit =
-    trainingJsonLine(df).write.mode("overwrite").text(outDir)
-
   /** S5+X1: training JSONL partitioned one directory per shard. */
   def writeShardedTrainingJsonl(df: DataFrame, outDir: String): Unit =
     df.select(trainingLine, col("shard_id"))

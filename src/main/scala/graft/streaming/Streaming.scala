@@ -788,17 +788,6 @@ object Streaming {
         col("window.end").as("window_end"),
         col("event_type"), col("n_events"), col("sum_value"))
 
-  /** Sliding-window variant (windowDuration, slideDuration). */
-  def eventsSliding(events: DataFrame, window_ : String = "1 hour",
-                    slide: String = "15 minutes",
-                    watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
   /** End-to-end continuous pipeline: JSONL landing dir -> stages 2+3 ->
     * watermarked exact dedup -> stage-5 scoring -> stage-6 tokenisation
     * (all stateless, the same batch code; the tokenizer is the native

@@ -39,7 +39,7 @@ object LangId {
   private val CjkGain = 5.0
   private val CjkMinRatio = 0.05
 
-  private def letterTokens(c: Column): Column =
+  private[graft] def letterTokens(c: Column): Column =
     regexp_extract_all(lower(coalesce(c, lit(""))), lit("\\p{L}+"), lit(0))
 
   private def hitsIn(toks: Column, words: Seq[String]): Column =
@@ -48,8 +48,9 @@ object LangId {
   /** The ONE copy of the pred/score derivation over staged hit counts
     * (the isZh gate, the en > de > es > fr tie-break, the capped
     * stopword-gain score) — shared by [[detect]], [[withLangColumns]],
-    * [[withLangColumnsArr]] and [[withLangToxColumns]] so a tuning
-    * change can never silently diverge between the stagings.
+    * [[withLangToxColumns]] and the test-scope array staging
+    * (LangIdRef.withLangColumnsArr) so a tuning change can never
+    * silently diverge between the stagings.
     */
   private[text] def predScoreFrom(c: Column, n: Column, he: Column,
       hd: Column, hs: Column, hf: Column,
@@ -91,8 +92,9 @@ object LangId {
     * and the CJK codepoint count from the raw string — no lowered
     * copy, no regexp_extract_all token array, no CJK regex strip (the
     * three per-row allocations the previous WordlistHits staging still
-    * paid; that form survives as [[withLangColumnsArr]], the parity
-    * anchor). Scoring reads the counts as attributes.
+    * paid; that form survives as the parity anchor, test-scope
+    * LangIdRef.withLangColumnsArr). Scoring reads the counts as
+    * attributes.
     * Value-identical to [[detect]]: same arithmetic, same decisions.
     */
   def withLangColumns(df: org.apache.spark.sql.DataFrame, c: Column,
@@ -145,38 +147,6 @@ object LangId {
         col("__tox_n"),
         i => element_at(col("__lt_k"), 7 + i).cast("double"))
       .drop("__lt_k", "__cjk", "__he", "__hd", "__hs", "__hf", "__ln", "__tox_n")
-  }
-
-  /** The WordlistHits-over-token-array staging [[withLangColumns]]
-    * replaced — kept as the kernel's parity anchor (LangIdModelSpec /
-    * TextOpsSpec pin value-equality of pred and score). What the
-    * anchor independently reproduces is the HIT-COUNT STAGING (token
-    * array + WordlistHits vs the fused one-pass profile kernel); the
-    * scalar pred/score derivation over those counts is routed through
-    * [[predScoreFrom]] like every other staging, so a tuning change
-    * cannot silently diverge here either (ADVICE r12).
-    */
-  private[graft] def withLangColumnsArr(df: org.apache.spark.sql.DataFrame,
-      c: Column, predName: String = "lang_pred",
-      scoreName: String = "lang_score"): org.apache.spark.sql.DataFrame = {
-    val s = coalesce(c, lit(""))
-    val staged = df
-      .withColumn("__lang_toks", letterTokens(c))
-      .withColumn("__cjk", length(regexp_replace(s, "[^一-鿿]", "")))
-      .withColumn("__lang_hits",
-        graft.plans.WordlistHits(col("__lang_toks"), "langid"))
-      .withColumn("__he", element_at(col("__lang_hits"), 1))
-      .withColumn("__hd", element_at(col("__lang_hits"), 2))
-      .withColumn("__hs", element_at(col("__lang_hits"), 3))
-      .withColumn("__hf", element_at(col("__lang_hits"), 4))
-      .withColumn("__ln", size(col("__lang_toks")))
-    val (pred, score) = predScoreFrom(c, col("__ln"), col("__he"),
-      col("__hd"), col("__hs"), col("__hf"), col("__cjk"))
-    staged
-      .withColumn(predName, pred)
-      .withColumn(scoreName, score)
-      .drop("__lang_toks", "__cjk", "__lang_hits",
-        "__he", "__hd", "__hs", "__hf", "__ln")
   }
 
   // ---- pluggable real-model path ----------------------------------------

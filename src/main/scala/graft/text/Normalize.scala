@@ -29,7 +29,7 @@ object Normalize {
   }
 
   /** Control chars the reference strips: U+0000-U+001F and U+007F-U+009F. */
-  private val ControlChars = "[\\x00-\\x1F\\x7F-\\x9F]"
+  private[graft] val ControlChars = "[\\x00-\\x1F\\x7F-\\x9F]"
 
   /** P1: NFKC -> control chars to space -> collapse whitespace -> trim ->
     * NULL if empty. `applyNfkc=false` gives the ASCII-identical variant
@@ -39,36 +39,20 @@ object Normalize {
   def normalizeText(c: Column, applyNfkc: Boolean = true): Column = {
     val base = if (applyNfkc) graft.plans.NfkcNormalize(c) else c
     // one-pass kernel for the ctrl-replace + \s+ collapse + trim +
-    // nullif tail — bit-equal to the two-regex chain below
-    // (parity-pinned), which rebuilt the document twice per row
+    // nullif tail — bit-equal to the two-regex chain it replaced
+    // (test-scope NormalizeRef.normalizeTextRegex, parity-pinned), which
+    // rebuilt the document twice per row
     graft.plans.CtrlWsNormalize(base)
-  }
-
-  /** The regex form [[normalizeText]]'s scrub tail replaced — parity
-    * anchor and the oracle-SQL documentation of the semantics.
-    */
-  private[graft] def normalizeTextRegex(c: Column,
-      applyNfkc: Boolean = true): Column = {
-    val base = if (applyNfkc) graft.plans.NfkcNormalize(c) else c
-    val cleaned =
-      trim(regexp_replace(regexp_replace(base, ControlChars, " "), "\\s+", " "))
-    nullif(cleaned, lit(""))
   }
 
   /** P2: drop anything that looks like an HTML tag. Null passes
     * through. Evaluated by the one-pass [[graft.plans.StripTags]]
     * kernel — bit-equal to the `regexp_replace(c, "<[^>]+>", " ")`
-    * form below (parity-pinned; the DuckDB oracles keep running the
-    * regex verbatim), without rebuilding the document through the
-    * regex engine per row.
+    * form (test-scope NormalizeRef, parity-pinned; the DuckDB oracles
+    * keep running the regex verbatim), without rebuilding the document
+    * through the regex engine per row.
     */
   def stripHtml(c: Column): Column = graft.plans.StripTags(c)
-
-  /** The regex form [[stripHtml]] replaced — parity anchor and the
-    * oracle-SQL documentation of the semantics.
-    */
-  private[graft] def stripHtmlRegex(c: Column): Column =
-    regexp_replace(c, "<[^>]+>", " ")
 
   /** Invisible characters scraped text smuggles past every other
     * filter: zero-widths (ZWSP/ZWNJ/ZWJ/word-joiner), the BOM, soft
@@ -121,45 +105,31 @@ object Normalize {
     "subscribe to our newsletter",
     "contact us"
   )
-  private val BoilerRe = BoilerplatePatterns.mkString("(", ")|(", ")")
+  private[graft] val BoilerRe = BoilerplatePatterns.mkString("(", ")|(", ")")
 
   /** P3: drop lines whose lowercase form matches any boilerplate pattern,
     * rejoin with \n, trim. NOTE (SURVEY §2.2 P3): upstream P1 collapsed
     * newlines, so in the reference pipeline each doc is ONE line and a hit
     * anywhere blanks the whole doc — faithful by construction here.
     * Evaluated by the one-pass [[graft.plans.BoilerplateScrub]] kernel —
-    * bit-equal to the HOF chain below (parity-pinned), which ran
-    * INTERPRETED (higher-order lambdas are CodegenFallback) with a
-    * per-row split array and a per-line regex-alternation scan.
+    * bit-equal to the HOF chain it replaced (test-scope NormalizeRef,
+    * parity-pinned), which ran INTERPRETED (higher-order lambdas are
+    * CodegenFallback) with a per-row split array and a per-line
+    * regex-alternation scan.
     */
   def removeBoilerplateLines(c: Column): Column =
     graft.plans.BoilerplateScrub(c)
-
-  /** The HOF form [[removeBoilerplateLines]] replaced — parity anchor
-    * (the executable spec of P3's split/filter/join/trim semantics).
-    */
-  private[graft] def removeBoilerplateLinesHof(c: Column): Column =
-    trim(array_join(
-      filter(split(c, "\n"), l => !lower(l).rlike(BoilerRe)),
-      "\n"))
 
   /** P4: `([!?.,])\1{2,}` -> `$1$1`; `(.)\1{3,}` -> `$1$1$1`.
     * Backreference patterns — Java regex only (RE2/DuckDB can't run
     * these, so P4 is excluded from oracle-checked columns). Evaluated
     * by the one-pass [[graft.plans.CollapseRepeats]] run-length kernel
-    * — bit-equal to the sequential regex pair below (parity-pinned),
-    * without two backtracking passes + two string copies per row.
+    * — bit-equal to the sequential regex pair it replaced (test-scope
+    * NormalizeRef, parity-pinned), without two backtracking passes +
+    * two string copies per row.
     */
   def normalizeRepeatedChars(c: Column): Column =
     graft.plans.CollapseRepeats(c)
-
-  /** The backref-regex form [[normalizeRepeatedChars]] replaced —
-    * parity anchor (the executable spec of P4's semantics).
-    */
-  private[graft] def normalizeRepeatedCharsRegex(c: Column): Column =
-    regexp_replace(
-      regexp_replace(c, "([!?.,])\\1{2,}", "$1$1"),
-      "(.)\\1{3,}", "$1$1$1")
 
   /** P5: the deep-clean composition strip_html ∘ boilerplate ∘ repeats. */
   def structuralCleanup(c: Column): Column =
@@ -181,14 +151,9 @@ object Normalize {
   def canonExact(c: Column): Column =
     // one-pass kernel for lower + \s+ collapse + trim — this runs per
     // ROW inside the dedup windows' narrow projection at corpus scale;
-    // bit-equal to the regex form below (parity-pinned)
+    // bit-equal to the regex form it replaced (test-scope NormalizeRef,
+    // parity-pinned)
     graft.plans.LowerWsCanon(coalesce(c, lit("")))
-
-  /** The regex form [[canonExact]] replaced — parity anchor and the
-    * oracle-SQL documentation of the semantics.
-    */
-  private[graft] def canonExactRegex(c: Column): Column =
-    trim(regexp_replace(lower(coalesce(c, lit(""))), "\\s+", " "))
 
   /** P7: near-dup key = first `maxChars` chars of the exact canon form. */
   def canonNear(c: Column, maxChars: Int = 500): Column =

@@ -19,11 +19,10 @@ import org.apache.spark.sql.functions._
   * semantics, fused so the deep-clean stage converts each row's string
   * twice (counts + mask chain) instead of eight times, and linear time
   * where java.util.regex is super-linear (the email pattern's O(n²)
-  * '@'-free runs). The `*Regex` forms below keep the original
-  * regexp_count/regexp_replace evaluation as parity anchors:
-  * PiiScanSpec fuzzes kernel == regex over digit/separator-rich
-  * strings, and the q_pii_* oracle hashes pin the composed columns
-  * against RE2 independently.
+  * '@'-free runs). PiiScanSpec keeps the original
+  * regexp_count/regexp_replace evaluation as parity anchors and fuzzes
+  * kernel == regex over digit/separator-rich strings; the q_pii_*
+  * oracle hashes pin the composed columns against RE2 independently.
   */
 object Pii {
 
@@ -43,15 +42,11 @@ object Pii {
 
   val IbanRe = "\\b[A-Z]{2}\\d{2}[A-Z0-9]{10,30}\\b"
 
-  private def hits(c: Column, pattern: String): Column =
-    coalesce(regexp_count(c, lit(pattern)), lit(0))
-
   /** M7: stage-2 family — email/phone counts on the normalized text. */
   def emailHits(c: Column): Column =
     coalesce(graft.plans.EmailCount(c), lit(0))
   def phoneHitsSimple(c: Column): Column =
     coalesce(graft.plans.PhoneSimpleCount(c), lit(0))
-  def phoneHitsSimpleRegex(c: Column): Column = hits(c, PhoneSimpleRe)
 
   /** M8: stage-3 family counts (run on text_deep_clean). Each routes
     * through the fused [[graft.plans.PiiCounts]] kernel; identical
@@ -66,21 +61,11 @@ object Pii {
   def piiCcHits(c: Column): Column    = kcount(c, 3)
   def piiIbanHits(c: Column): Column  = kcount(c, 4)
 
-  def piiPhoneHitsRegex(c: Column): Column = hits(c, PhoneRe)
-  def piiCcHitsRegex(c: Column): Column    = hits(c, CreditCardRe)
-  def piiIbanHitsRegex(c: Column): Column  = hits(c, IbanRe)
-
   /** M8: mask chain in reference order over progressively-masked text
-    * (one fused kernel pass family; [[maskPiiRegex]] is the anchor).
+    * (one fused kernel pass family; the regexp_replace chain it replaced
+    * is PiiScanSpec's `maskPiiRegex` anchor).
     */
   def maskPii(c: Column): Column = graft.plans.PiiMaskChain(c)
-
-  def maskPiiRegex(c: Column): Column = {
-    val e = regexp_replace(c, EmailRe, "<EMAIL>")
-    val p = regexp_replace(e, PhoneRe, "<PHONE>")
-    val cc = regexp_replace(p, CreditCardRe, "<CREDIT_CARD>")
-    regexp_replace(cc, IbanRe, "<IBAN>")
-  }
 
   /** has_pii = any of the four counters > 0. */
   def hasPii(email: Column, phone: Column, cc: Column, iban: Column): Column =
@@ -96,9 +81,6 @@ object Pii {
   def piiIpHits(c: Column): Column  = kcount(c, 5)
   def piiSsnHits(c: Column): Column = kcount(c, 6)
 
-  def piiIpHitsRegex(c: Column): Column  = hits(c, IpRe)
-  def piiSsnHitsRegex(c: Column): Column = hits(c, SsnRe)
-
   /** Extended mask chain: email, then the SPECIFIC digit shapes (ip,
     * ssn), then the reference's general ones (phone, cc, iban).
     * Specific-before-general is load-bearing: PhoneRe accepts '.'
@@ -109,13 +91,4 @@ object Pii {
     * 4-type order; this chain is the beyond-ref superset.
     */
   def maskPiiExtended(c: Column): Column = graft.plans.PiiMaskChainExt(c)
-
-  def maskPiiExtendedRegex(c: Column): Column = {
-    val e = regexp_replace(c, EmailRe, "<EMAIL>")
-    val ip = regexp_replace(e, IpRe, "<IP>")
-    val ssn = regexp_replace(ip, SsnRe, "<SSN>")
-    val p = regexp_replace(ssn, PhoneRe, "<PHONE>")
-    val cc = regexp_replace(p, CreditCardRe, "<CREDIT_CARD>")
-    regexp_replace(cc, IbanRe, "<IBAN>")
-  }
 }

@@ -29,14 +29,12 @@ object TextMetrics {
   /** M2: whitespace token count; null -> 0 (reference fillna("")).
     * Counted by the string-walking [[graft.plans.TokenTextStats]]
     * kernel — no token array, no regex; bit-equal to the
-    * `size(split(trim(c), "\\s+"))` form (parity anchor below).
+    * `size(split(trim(c), "\\s+"))` form (test-scope TextMetricsRef,
+    * the parity anchor).
     */
   def wordCount(c: Column): Column =
     element_at(graft.plans.TokenTextStats(coalesce(c, lit("")), Nil), 1)
       .cast("int")
-
-  /** The split form [[wordCount]] replaced — parity anchor. */
-  private[graft] def wordCountSplit(c: Column): Column = size(tokens(c))
 
   /** M1' (compute_quality_metrics n_chars): null -> 0. */
   def nChars(c: Column): Column = coalesce(length(c), lit(0))
@@ -62,16 +60,6 @@ object TextMetrics {
       .otherwise(lit(0.0))
   }
 
-  /** The regex form [[alphaRatio]] replaced — kept for the parity spec
-    * and as the oracle-SQL documentation of the semantics.
-    */
-  private[graft] def alphaRatioRegex(c: Column): Column = {
-    val n = length(c)
-    when(n > 0,
-      length(regexp_replace(c, "[^\\p{L}]", "")).cast("double") / n.cast("double"))
-      .otherwise(lit(0.0))
-  }
-
   /** M4: 1 - unique_words/n_words; 0 when no words. Tokenized AND
     * distinct-counted by the one-pass string-walking
     * [[graft.plans.TokenTextStats]] kernel — the split+array form this
@@ -85,14 +73,6 @@ object TextMetrics {
     val n = element_at(k, 1)
     when(n > 0,
       lit(1.0) - element_at(k, 2).cast("double") / n.cast("double"))
-      .otherwise(lit(0.0))
-  }
-
-  /** The array_distinct form [[repetitionRatio]] replaced — parity anchor. */
-  private[graft] def repetitionRatioHof(c: Column): Column = {
-    val t = tokens(c)
-    when(size(t) > 0,
-      lit(1.0) - size(array_distinct(t)).cast("double") / size(t).cast("double"))
       .otherwise(lit(0.0))
   }
 
@@ -128,22 +108,6 @@ object TextMetrics {
       .otherwise(lit(0.0))
   }
 
-  /** The HOF forms the kernel versions replaced — parity anchors. */
-  private[graft] def uniqueTokenRatioHof(c: Column): Column = {
-    val t = tokens(c)
-    when(size(t) > 0, size(array_distinct(t)).cast("double") / size(t).cast("double"))
-      .otherwise(lit(0.0))
-  }
-
-  private[graft] def stopwordRatioHof(c: Column): Column = {
-    val t = tokens(c)
-    val stops = typedlit(EnStopwords)
-    when(size(t) > 0,
-      size(filter(t, tok => array_contains(stops, lower(tok)))).cast("double")
-        / size(t).cast("double"))
-      .otherwise(lit(0.0))
-  }
-
   /** M6: non-ASCII alphabetic chars / alphabetic chars; 0 if no letters.
     * Same one-pass kernel as [[alphaRatio]] (the regex form built TWO
     * filtered copies per row); parity-pinned in TextOpsSpec.
@@ -153,16 +117,6 @@ object TextMetrics {
     val total = element_at(k, 1)
     when(total > 0,
       element_at(k, 2).cast("double") / total.cast("double"))
-      .otherwise(lit(0.0))
-  }
-
-  /** The regex form [[nonLatinRatio]] replaced — parity-spec anchor. */
-  private[graft] def nonLatinRatioRegex(c: Column): Column = {
-    val letters = regexp_replace(coalesce(c, lit("")), "[^\\p{L}]", "")
-    val total = length(letters)
-    when(total > 0,
-      length(regexp_replace(letters, "[\\x00-\\x7F]", "")).cast("double")
-        / total.cast("double"))
       .otherwise(lit(0.0))
   }
 
@@ -183,7 +137,7 @@ object TextMetrics {
     * O(distinct·n)-per-row cost. coalesce mirrors the old
     * `when(size > 0, ...).otherwise(0.0)` null-array fallthrough.
     */
-  private def maxTokenFreqFromTokens(t: Column): Column =
+  private[graft] def maxTokenFreqFromTokens(t: Column): Column =
     coalesce(element_at(graft.plans.TokenDistStats(t), 2), lit(0.0))
 
   /** Shannon entropy (nats) of a doc's token distribution — the
@@ -225,7 +179,8 @@ object TextMetrics {
     // array stagings is exact because every output is an integer
     // count and each ratio is a single IEEE division of exact
     // integers — identical operands, identical bits (KernelFuzzSpec
-    // pins all four against the array forms; TextOpsSpec pins the
+    // pins all four against the array staging, test-scope
+    // TextMetricsRef.withTokenStatsArr; TextOpsSpec pins the
     // column semantics). coalesce("") keeps the tokens() null guard:
     // the kernel maps the empty string to [0,0,0,0], the same
     // zero-stats row the empty-array staging produced.
@@ -246,29 +201,5 @@ object TextMetrics {
         when(n > 0, element_at(col("__tts"), 4).cast("double") / nd)
           .otherwise(lit(0.0)))
       .drop("__tts")
-  }
-
-  /** The pre-kernel array-staged form of [[withTokenStats]], kept as
-    * the parity anchor (KernelFuzzSpec evaluates both over fuzzed
-    * strings and requires bit equality on all five columns).
-    */
-  def withTokenStatsArr(df: org.apache.spark.sql.DataFrame,
-                        c: Column): org.apache.spark.sql.DataFrame = {
-    val staged = df.withColumn("__toks", tokens(c))
-      .withColumn("__tss", graft.plans.TokenSetStats(col("__toks"), EnStopwords))
-    val t = col("__toks")
-    staged
-      .withColumn("token_count", size(t).cast("long"))
-      .withColumn("unique_tokens", element_at(col("__tss"), 1))
-      .withColumn("unique_token_ratio",
-        when(size(t) > 0,
-          element_at(col("__tss"), 1).cast("double") / size(t).cast("double"))
-          .otherwise(lit(0.0)))
-      .withColumn("stopword_ratio",
-        when(size(t) > 0,
-          element_at(col("__tss"), 2).cast("double") / size(t).cast("double"))
-          .otherwise(lit(0.0)))
-      .withColumn("max_token_freq_ratio", maxTokenFreqFromTokens(t))
-      .drop("__toks", "__tss")
   }
 }

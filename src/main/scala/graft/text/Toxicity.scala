@@ -54,16 +54,10 @@ object Toxicity {
     )
   }
 
-  /** Staged fast path: tokenize once, count all five lists in one
-    * native WordlistHits pass (hashed lookups, codegen), score from
-    * attributes. Value-identical to [[scores]] — same arithmetic over
-    * the same counts.
-    */
   /** The ONE copy of the six-column toxicity scoring arithmetic over a
     * staged (token count, hit accessor) pair — shared by
-    * [[withToxicityColumns]], [[withToxicityColumnsArr]] and
-    * [[graft.text.LangId.withLangToxColumns]] so a cutoff tune can
-    * never silently diverge between the stagings.
+    * [[withToxicityColumns]] and [[graft.text.LangId.withLangToxColumns]]
+    * so a cutoff tune can never silently diverge between the stagings.
     */
   private[text] def appendToxColumns(df: org.apache.spark.sql.DataFrame,
       n: Column, hit: Int => Column): org.apache.spark.sql.DataFrame = {
@@ -77,6 +71,12 @@ object Toxicity {
       .withColumn("sexual_explicit", least(lit(1.0), sex / n * 5.0))
   }
 
+  /** Staged fast path: one compiled [[graft.plans.TextProfileStats]]
+    * pass counts the tokens and all five lists, scores come from
+    * attributes. Value-identical to [[scores]] — same arithmetic over
+    * the same counts; the WordlistHits-over-token-array staging it
+    * replaced is the parity anchor (test-scope ToxicityRef).
+    */
   def withToxicityColumns(df: org.apache.spark.sql.DataFrame,
                           c: Column): org.apache.spark.sql.DataFrame = {
     val staged = df
@@ -87,30 +87,5 @@ object Toxicity {
     appendToxColumns(staged, col("__tox_n"),
       i => element_at(col("__tox_k"), i + 1).cast("double"))
       .drop("__tox_k", "__tox_n")
-  }
-
-  /** The WordlistHits-over-token-array staging [[withToxicityColumns]]
-    * replaced — kept as the TextProfileStats kernel's parity anchor.
-    */
-  private[graft] def withToxicityColumnsArr(df: org.apache.spark.sql.DataFrame,
-      c: Column): org.apache.spark.sql.DataFrame = {
-    val staged = df
-      .withColumn("__tox_toks", toxTokens(c))
-      .withColumn("__tox_hits",
-        graft.plans.WordlistHits(col("__tox_toks"), "toxicity"))
-      .withColumn("__tox_n",
-        greatest(lit(1), size(col("__tox_toks"))).cast("double"))
-    val n = col("__tox_n")
-    def hit(i: Int) = element_at(col("__tox_hits"), i).cast("double")
-    val (bad, ins, thr, sex, slr) = (hit(1), hit(2), hit(3), hit(4), hit(5))
-    val toxicity = least(lit(1.0), (bad + ins + thr + sex + slr) / n * 5.0)
-    staged
-      .withColumn("toxicity", toxicity)
-      .withColumn("severe_toxicity", when(toxicity >= 0.9, 1.0).otherwise(0.0))
-      .withColumn("insult", least(lit(1.0), ins / n * 5.0))
-      .withColumn("threat", least(lit(1.0), thr / n * 5.0))
-      .withColumn("identity_attack", least(lit(1.0), slr / n * 5.0))
-      .withColumn("sexual_explicit", least(lit(1.0), sex / n * 5.0))
-      .drop("__tox_toks", "__tox_hits", "__tox_n")
   }
 }

@@ -8,6 +8,7 @@ import graft.ops.{Curation, KMeans}
   * hand-computed fixtures + determinism/separation properties.
   */
 class CurationSpec extends SparkTestBase {
+  import CurationSpec._
 
   private def docsDf(texts: (Long, String)*) = {
     import spark.implicits._
@@ -74,7 +75,7 @@ class CurationSpec extends SparkTestBase {
       "top2gram_frac_q", "dup3gram_frac_q")
     val kernel = Curation.dupNgramStats(docs, "text")
       .select(cols.map(col): _*).collect().map(_.toSeq).toSet
-    val hof = Curation.dupNgramStatsHof(docs, "text")
+    val hof = dupNgramStatsHof(docs, "text")
       .select(cols.map(col): _*).collect().map(_.toSeq).toSet
     assert(kernel === hof)
   }
@@ -356,5 +357,50 @@ class CurationSpec extends SparkTestBase {
     // sub-trigram and null docs are unscorable, not dropped
     assert(out(3L) === ((0L, 0L)) && out(4L) === ((0L, 0L)))
     spark.catalog.clearCache()
+  }
+}
+
+object CurationSpec {
+  import org.apache.spark.sql.{Column, DataFrame}
+
+  /** The declarative HOF form of [[graft.ops.Curation.dupNgramStats]] —
+    * the kernel's executable spec and the shape the DuckDB oracle states.
+    */
+  def dupNgramStatsHof(df: DataFrame, textCol: String = "text"): DataFrame = {
+    val toks = col("__toks")
+    val n = size(toks)
+    def grams(k: Int): Column = {
+      // windows of k consecutive tokens, joined with a single space
+      val slices = (0 until k).map(i => slice(toks, lit(i + 1), n - lit(k - 1)))
+      zip_with(slices(0), slices.drop(1).reduceLeft((a, b) =>
+        zip_with(a, b, (x, y) => concat(x, lit(" "), y))), (x, y) => concat(x, lit(" "), y))
+    }
+    // (occurrences * non-space chars) per distinct gram
+    def weights(gramCol: Column): Column = transform(array_distinct(gramCol),
+      g => (size(filter(gramCol, x => x === g)) *
+        (length(g) - length(regexp_replace(g, "[^ ]", "")))).cast("long"))
+    def dupWeights(gramCol: Column): Column = transform(array_distinct(gramCol),
+      g => {
+        val occ = size(filter(gramCol, x => x === g))
+        when(occ > 1, (occ * (length(g) - length(regexp_replace(g, "[^ ]", ""))))
+          .cast("long")).otherwise(lit(0L))
+      })
+    val totalChars = aggregate(transform(toks, t => length(t).cast("long")),
+      lit(0L), (acc, x) => acc + x)
+    def q(numer: Column): Column =
+      when(col("__total") > 0,
+        floor(numer.cast("double") * 10000.0d / col("__total").cast("double")))
+        .otherwise(lit(0L)).cast("long")
+    df.withColumn("__toks", graft.text.TextMetrics.tokens(col(textCol)))
+      .withColumn("__total", totalChars)
+      .withColumn("__g2", when(n >= 2, grams(2)).otherwise(array().cast("array<string>")))
+      .withColumn("__g3", when(n >= 3, grams(3)).otherwise(array().cast("array<string>")))
+      .withColumn("n_words", n.cast("long"))
+      .withColumn("total_chars", col("__total"))
+      .withColumn("top2gram_frac_q",
+        q(coalesce(array_max(weights(col("__g2"))), lit(0L))))
+      .withColumn("dup3gram_frac_q",
+        q(coalesce(aggregate(dupWeights(col("__g3")), lit(0L), (a, x) => a + x), lit(0L))))
+      .drop("__toks", "__total", "__g2", "__g3")
   }
 }

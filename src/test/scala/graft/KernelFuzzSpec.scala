@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.text.{Normalize, TextMetrics}
+import graft.text.{Normalize, NormalizeRef, TextMetrics, TextMetricsRef}
 
 /** Seeded differential fuzz of the round-11 string kernels against the
   * regex/HOF forms they replaced (the ScrubFuzzSpec discipline applied
@@ -45,13 +45,13 @@ class KernelFuzzSpec extends SparkTestBase {
 
     val strCols = df.select(col("t"),
         Normalize.stripHtml(col("t")).as("st_k"),
-        Normalize.stripHtmlRegex(col("t")).as("st_r"),
+        NormalizeRef.stripHtmlRegex(col("t")).as("st_r"),
         Normalize.normalizeRepeatedChars(col("t")).as("cr_k"),
-        Normalize.normalizeRepeatedCharsRegex(col("t")).as("cr_r"),
+        NormalizeRef.normalizeRepeatedCharsRegex(col("t")).as("cr_r"),
         TextMetrics.wordCount(col("t")).as("wc_k"),
-        TextMetrics.wordCountSplit(col("t")).as("wc_s"),
+        TextMetricsRef.wordCountSplit(col("t")).as("wc_s"),
         TextMetrics.repetitionRatio(col("t")).as("rr_k"),
-        TextMetrics.repetitionRatioHof(col("t")).as("rr_h"),
+        TextMetricsRef.repetitionRatioHof(col("t")).as("rr_h"),
         graft.plans.TokenTextStats(coalesce(col("t"), lit("")), stops).as("tt"),
         graft.plans.TokenSetStats(TextMetrics.tokens(col("t")), stops).as("ts"))
       .collect()
@@ -75,7 +75,7 @@ class KernelFuzzSpec extends SparkTestBase {
       "unique_token_ratio", "stopword_ratio", "max_token_freq_ratio")
     val viaKernel = TextMetrics.withTokenStats(df, col("t"))
       .select(col("t") +: statCols.map(col): _*).collect()
-    val viaArray = TextMetrics.withTokenStatsArr(df, col("t"))
+    val viaArray = TextMetricsRef.withTokenStatsArr(df, col("t"))
       .select(col("t") +: statCols.map(col): _*).collect()
     viaKernel.zip(viaArray).foreach { case (k, a) =>
       val t = k.getString(0)
@@ -89,7 +89,7 @@ class KernelFuzzSpec extends SparkTestBase {
     }
 
     val lk = graft.text.LangId.withLangColumns(df, col("t"), "p_k", "s_k")
-    val lc = graft.text.LangId.withLangColumnsArr(lk, col("t"), "p_a", "s_a")
+    val lc = graft.text.LangIdRef.withLangColumnsArr(lk, col("t"), "p_a", "s_a")
       .select("t", "p_k", "p_a", "s_k", "s_a").collect()
     lc.foreach { r =>
       assert(r.getString(1) === r.getString(2), s"lang pred on <${r.getString(0)}>")
@@ -101,7 +101,7 @@ class KernelFuzzSpec extends SparkTestBase {
       "identity_attack", "sexual_explicit")
     val tk = graft.text.Toxicity.withToxicityColumns(df, col("t"))
       .select(col("t") +: tox.map(n => col(n).as(s"${n}_k")): _*)
-    val ta = graft.text.Toxicity.withToxicityColumnsArr(tk, col("t"))
+    val ta = graft.text.ToxicityRef.withToxicityColumnsArr(tk, col("t"))
       .select(Seq(col("t")) ++ tox.map(n => col(s"${n}_k")) ++ tox.map(col): _*)
       .collect()
     ta.foreach { r =>
@@ -119,11 +119,11 @@ class KernelFuzzSpec extends SparkTestBase {
     val df = rows.toDF("t")
     val got = df.select(col("t"),
         Normalize.normalizeText(col("t"), applyNfkc = false).as("nw_k"),
-        Normalize.normalizeTextRegex(col("t"), applyNfkc = false).as("nw_r"),
+        NormalizeRef.normalizeTextRegex(col("t"), applyNfkc = false).as("nw_r"),
         Normalize.canonExact(col("t")).as("ce_k"),
-        Normalize.canonExactRegex(col("t")).as("ce_r"),
+        NormalizeRef.canonExactRegex(col("t")).as("ce_r"),
         Normalize.removeBoilerplateLines(col("t")).as("bp_k"),
-        Normalize.removeBoilerplateLinesHof(col("t")).as("bp_h"))
+        NormalizeRef.removeBoilerplateLinesHof(col("t")).as("bp_h"))
       .collect()
     got.foreach { r =>
       val t = r.getString(0)

@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
 class MarkdownScanSpec extends SparkTestBase {
 
   import spark.implicits._
+  import MarkdownScanSpec._
 
   private val Pieces: Vector[String] = Vector(
     "```", "```scala\ncode\n```", "`", "`x`", "``", "x", "yy", " ",
@@ -39,9 +40,9 @@ class MarkdownScanSpec extends SparkTestBase {
     val df = rows.toDF("t")
     val got = df.select(col("t"),
         graft.plans.MarkdownStrip(col("t")).as("mk"),
-        graft.queries.DocQueries.markdownStripRegex(col("t")).as("mr"),
+        markdownStripRegex(col("t")).as("mr"),
         graft.plans.AnchorTextLen(col("t")).as("ak"),
-        graft.queries.DocQueries.anchorExtractRegexSum(col("t")).as("ar"))
+        anchorExtractRegexSum(col("t")).as("ar"))
       .collect()
     got.foreach { r =>
       assert(r.getString(1) === r.getString(2),
@@ -102,4 +103,33 @@ class MarkdownScanSpec extends SparkTestBase {
     val ms = (System.nanoTime() - t0) / 1e6
     assert(ms < 2000.0, f"kernel flood batch took $ms%.0f ms — lost linearity")
   }
+}
+
+/** The java-regex forms the MarkdownScan kernels replaced, kept as their
+  * parity anchors. NOT production paths: the image/link/emphasis/
+  * inline-code and anchor patterns are O(n²) under java.util.regex on
+  * unclosed-opener floods.
+  */
+object MarkdownScanSpec {
+  import org.apache.spark.sql.Column
+
+  /** [[graft.plans.MarkdownStrip]]'s chain, one regexp_replace a pass. */
+  def markdownStripRegex(md: Column): Column =
+    regexp_replace(
+      regexp_replace(
+        regexp_replace(
+          regexp_replace(
+            regexp_replace(
+              regexp_replace(md, "(?s)```.*?```", ""),
+              "!\\[([^\\]]*)\\]\\(([^)]*)\\)", "$1"),
+            "\\[([^\\]]*)\\]\\(([^)]*)\\)", "$1"),
+          "\\*{1,3}([^*]+)\\*{1,3}", "$1"),
+        "`([^`]+)`", "$1"),
+      "(?m)^#{1,6}[ \\t]+", "")
+
+  /** [[graft.plans.AnchorTextLen]]: summed length of the anchor texts. */
+  def anchorExtractRegexSum(b: Column): Column =
+    aggregate(
+      regexp_extract_all(b, lit("<a(?:\\s[^>]*)?>(.*?)</a>"), lit(1)),
+      lit(0), (acc, x) => acc + length(x))
 }

@@ -24,17 +24,22 @@ class OrchestratorSpec extends SparkTestBase {
   private def stageNames(from: Int): Seq[String] =
     Orchestrator.stages().collect { case (v, name, _) if v >= from => s"v$v:$name" }
 
+  /** The (stage, kept, dropped) rows of `dir`'s `run_summary.json`. */
+  private def summaryRows(dir: String): Seq[(String, Long, Long)] = {
+    import spark.implicits._
+    val txt = Files.readString(java.nio.file.Paths.get(s"$dir/run_summary.json"))
+    spark.read.json(Seq(txt).toDS())
+      .select(explode(col("stages")).as("s"))
+      .select("s.stage", "s.kept", "s.dropped").as[(String, Long, Long)].collect().toSeq
+  }
+
   /** `run_summary.json` must list `expected` in order, and each row's
     * kept/dropped must equal the row counts of the parquets it names
     * (dropped = -1 marks a stage without a dropped split).
     */
   private def assertSummaryMatchesParquet(dir: String, expected: Seq[String]): Unit = {
-    import spark.implicits._
-    val txt = Files.readString(java.nio.file.Paths.get(s"$dir/run_summary.json"))
-    val rows = spark.read.json(Seq(txt).toDS())
-      .select(explode(col("stages")).as("s"))
-      .select("s.stage", "s.kept", "s.dropped").as[(String, Long, Long)].collect()
-    assert(rows.map(_._1).toSeq === expected)
+    val rows = summaryRows(dir)
+    assert(rows.map(_._1) === expected)
     def rowsIn(p: String) = spark.read.parquet(p).count()
     rows.foreach { case (stage, kept, dropped) =>
       val v = stage.stripPrefix("v").takeWhile(_ != ':').toInt
@@ -146,13 +151,16 @@ class OrchestratorSpec extends SparkTestBase {
     val original = spark.read.parquet(Orchestrator.versionPath(outDir, 7))
       .select("doc_id", "quality_score", "subset", "n_tokens", "shard_id")
       .collect().map(_.toSeq).toSet
+    val firstRunRows = summaryRows(outDir)
     // wipe v5..v7, rerun from stage 5 against the surviving v4
     Orchestrator.run(spark, outDir, fromVersion = 5)
     val resumed = spark.read.parquet(Orchestrator.versionPath(outDir, 7))
       .select("doc_id", "quality_score", "subset", "n_tokens", "shard_id")
       .collect().map(_.toSeq).toSet
     assert(resumed === original)
-    assertSummaryMatchesParquet(outDir, stageNames(5))
+    // v2..v4 are still on disk, so their rows carry over unchanged
+    assertSummaryMatchesParquet(outDir, stageNames(2))
+    assert(summaryRows(outDir).take(3) === firstRunRows.take(3))
   }
 
   test("incremental run matches a from-scratch run on content columns") {

@@ -14,13 +14,14 @@ import graft.text.Pii
   * agree exactly, per pattern and for both composed mask chains, over
   * hand fixtures plus seeded fuzz biased to digits, separators,
   * parens, boundary-adjacent letters/underscores and IBAN-shaped
-  * uppercase runs. The Spark-level columns (Pii.maskPii vs
-  * Pii.maskPiiRegex etc.) are pinned on the same fuzz set so the
-  * codegen wiring is covered, not just the scan logic.
+  * uppercase runs. The Spark-level columns (Pii.maskPii vs the
+  * regexp_replace chain `maskPiiRegex` etc.) are pinned on the same
+  * fuzz set so the codegen wiring is covered, not just the scan logic.
   */
 class PiiScanSpec extends SparkTestBase {
 
   import spark.implicits._
+  import PiiScanSpec._
 
   private val PhoneP = Pattern.compile(Pii.PhoneRe)
   private val CcP = Pattern.compile(Pii.CreditCardRe)
@@ -177,15 +178,15 @@ class PiiScanSpec extends SparkTestBase {
     }
     val df = rows.toDF("t")
     val got = df.select(col("t"),
-        Pii.maskPii(col("t")).as("mk"), Pii.maskPiiRegex(col("t")).as("mr"),
+        Pii.maskPii(col("t")).as("mk"), maskPiiRegex(col("t")).as("mr"),
         Pii.maskPiiExtended(col("t")).as("ek"),
-        Pii.maskPiiExtendedRegex(col("t")).as("er"),
-        Pii.piiPhoneHits(col("t")).as("pk"), Pii.piiPhoneHitsRegex(col("t")).as("pr"),
-        Pii.piiCcHits(col("t")).as("ck"), Pii.piiCcHitsRegex(col("t")).as("cr"),
-        Pii.piiIbanHits(col("t")).as("ik"), Pii.piiIbanHitsRegex(col("t")).as("ir"),
-        Pii.piiIpHits(col("t")).as("nk"), Pii.piiIpHitsRegex(col("t")).as("nr"),
-        Pii.piiSsnHits(col("t")).as("sk"), Pii.piiSsnHitsRegex(col("t")).as("sr"),
-        Pii.phoneHitsSimple(col("t")).as("qk"), Pii.phoneHitsSimpleRegex(col("t")).as("qr"))
+        maskPiiExtendedRegex(col("t")).as("er"),
+        Pii.piiPhoneHits(col("t")).as("pk"), piiPhoneHitsRegex(col("t")).as("pr"),
+        Pii.piiCcHits(col("t")).as("ck"), piiCcHitsRegex(col("t")).as("cr"),
+        Pii.piiIbanHits(col("t")).as("ik"), piiIbanHitsRegex(col("t")).as("ir"),
+        Pii.piiIpHits(col("t")).as("nk"), piiIpHitsRegex(col("t")).as("nr"),
+        Pii.piiSsnHits(col("t")).as("sk"), piiSsnHitsRegex(col("t")).as("sr"),
+        Pii.phoneHitsSimple(col("t")).as("qk"), phoneHitsSimpleRegex(col("t")).as("qr"))
       .collect()
     got.foreach { r =>
       val t = r.getString(0)
@@ -212,5 +213,41 @@ class PiiScanSpec extends SparkTestBase {
     assert(sql.getInt(1) === 1)
     assert(sql.getInt(2) === 1)
     assert(sql.getString(3) === "<IP>")
+  }
+}
+
+/** The regexp_count/regexp_replace columns the PiiScan kernels replaced:
+  * each pattern evaluated verbatim by java.util.regex, the parity anchor
+  * for the Spark-level kernel columns.
+  */
+object PiiScanSpec {
+  import org.apache.spark.sql.Column
+
+  private def hits(c: Column, pattern: String): Column =
+    coalesce(regexp_count(c, lit(pattern)), lit(0))
+
+  def phoneHitsSimpleRegex(c: Column): Column = hits(c, Pii.PhoneSimpleRe)
+  def piiPhoneHitsRegex(c: Column): Column = hits(c, Pii.PhoneRe)
+  def piiCcHitsRegex(c: Column): Column    = hits(c, Pii.CreditCardRe)
+  def piiIbanHitsRegex(c: Column): Column  = hits(c, Pii.IbanRe)
+  def piiIpHitsRegex(c: Column): Column    = hits(c, Pii.IpRe)
+  def piiSsnHitsRegex(c: Column): Column   = hits(c, Pii.SsnRe)
+
+  /** [[Pii.maskPii]]'s chain: email, phone, cc, iban. */
+  def maskPiiRegex(c: Column): Column = {
+    val e = regexp_replace(c, Pii.EmailRe, "<EMAIL>")
+    val p = regexp_replace(e, Pii.PhoneRe, "<PHONE>")
+    val cc = regexp_replace(p, Pii.CreditCardRe, "<CREDIT_CARD>")
+    regexp_replace(cc, Pii.IbanRe, "<IBAN>")
+  }
+
+  /** [[Pii.maskPiiExtended]]'s chain: email, ip, ssn, phone, cc, iban. */
+  def maskPiiExtendedRegex(c: Column): Column = {
+    val e = regexp_replace(c, Pii.EmailRe, "<EMAIL>")
+    val ip = regexp_replace(e, Pii.IpRe, "<IP>")
+    val ssn = regexp_replace(ip, Pii.SsnRe, "<SSN>")
+    val p = regexp_replace(ssn, Pii.PhoneRe, "<PHONE>")
+    val cc = regexp_replace(p, Pii.CreditCardRe, "<CREDIT_CARD>")
+    regexp_replace(cc, Pii.IbanRe, "<IBAN>")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 
 import graft.ops.Similarity
@@ -9,6 +10,7 @@ import graft.ops.Similarity
   * the recall floors are stable pins, not flaky statistics).
   */
 class SimilaritySpec extends SparkTestBase {
+  import SimilaritySpec._
 
   private def emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
 
@@ -191,7 +193,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("multi-table LSH near-dup: exact precision, usable recall") {
     val threshold = 0.25
-    val exact = Similarity.nearDupPairsBrute(emb, threshold)
+    val exact = nearDupPairsBrute(emb, threshold)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val approx = Similarity.nearDupPairsLsh(emb, threshold, nbits = 8, tables = 8)
@@ -235,7 +237,7 @@ class SimilaritySpec extends SparkTestBase {
     val rows = Tables.documents(spark, "/root/testdata/sf0.001").limit(100)
       .select(
         graft.ops.HashedEmbed.hashedVector(toks).as("native"),
-        graft.ops.HashedEmbed.hashedVectorHof(toks).as("hof"))
+        hashedVectorHof(toks).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -442,5 +444,44 @@ class SimilaritySpec extends SparkTestBase {
     ordered.foreach { r =>
       assert(re(r.getAs[Long]("doc_id")) === r.getAs[Long]("icp_pos"))
     }
+  }
+}
+
+object SimilaritySpec {
+  import org.apache.spark.sql.functions._
+
+  /** Exact all-pairs cosine baseline the LSH recall is measured against
+    * (the cross join is quadratic; never a scale path).
+    */
+  def nearDupPairsBrute(emb: DataFrame, threshold: Double): DataFrame = {
+    val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"))
+    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"))
+    a.join(b, col("id_a") < col("id_b"))
+      .withColumn("cosine", Similarity.cosine(col("va"), col("vb")))
+      .filter(col("cosine") >= threshold)
+      .select("id_a", "id_b", "cosine")
+  }
+
+  /** Declarative reference form of [[graft.ops.HashedEmbed.hashedVector]]:
+    * ONE fold over the tokens with a dim-slot array accumulator — not dim
+    * separate folds. The naive `transform(sequence(0, dim-1), i ->
+    * aggregate(pairs, ...))` shape re-evaluates the pairs argument (and
+    * its md5 calls) once per bucket index, because a HOF's argument
+    * expression is inside the enclosing lambda's body: that is dim× the
+    * hashing work per row (measured 10.9s vs <1s on the sf0.001 bench).
+    * The inner `transform(toks, md5)` likewise pins md5 to exactly one
+    * call per token — bucket and sign both read the precomputed hex.
+    */
+  def hashedVectorHof(toks: Column,
+                      dim: Int = graft.ops.HashedEmbed.Dim): Column = {
+    val pairs = transform(transform(toks, t => md5(t)), h =>
+      struct(
+        (conv(substring(h, 1, 2), 16, 10).cast("int") % dim).cast("int").as("b"),
+        when(conv(substring(h, 3, 1), 16, 10).cast("int") % 2 === 0, lit(1.0))
+          .otherwise(lit(-1.0)).as("s")))
+    aggregate(pairs, array_repeat(lit(0.0), dim), (acc, p) =>
+      transform(acc, (x, i) =>
+        x + when(p.getField("b") === i, p.getField("s")).otherwise(lit(0.0))))
   }
 }

@@ -9,6 +9,7 @@ import graft.text.TextMetrics
   * (SketchDedup.sketchDoc) and the declarative expression form.
   */
 class SketchDedupSpec extends SparkTestBase {
+  import SketchDedupSpec._
 
   private val docs = Seq(
     "the quick brown fox jumps over the lazy dog",
@@ -24,9 +25,9 @@ class SketchDedupSpec extends SparkTestBase {
     val df = docs.toDF("text")
       .select(col("text"),
         transform(TextMetrics.tokens(col("text")), t => xxhash64(t)).as("th"))
-      .select(col("text"), SketchDedup.shingleHashes(col("th"), 3).as("hs"))
+      .select(col("text"), shingleHashes(col("th"), 3).as("hs"))
       .select(col("text"), col("hs"),
-        SketchDedup.minhashSignature(col("hs"), 16).as("sig"))
+        minhashSignature(col("hs"), 16).as("sig"))
     df.collect().foreach { r =>
       val (hs, sig, bands) = SketchDedup.sketchDoc(r.getString(0), 3, 16, 4)
       assert(hs.toSeq === r.getSeq[Long](1), s"hs mismatch for '${r.getString(0)}'")
@@ -379,7 +380,7 @@ class SketchDedupSpec extends SparkTestBase {
       val rows = df.select(col("text"), toksCol.as("toks"))
         .select(
           SketchDedup.shinglesFromTokens(col("toks"), 3).as("native"),
-          SketchDedup.shinglesFromTokensHof(col("toks"), 3).as("hof"))
+          shinglesFromTokensHof(col("toks"), 3).as("hof"))
         .collect()
       assert(rows.nonEmpty)
       rows.foreach { r =>
@@ -396,7 +397,7 @@ class SketchDedupSpec extends SparkTestBase {
       .filter(size(col("sh")) > 0)
       .select(
         graft.plans.MinhashMd5(col("sh"), 16).as("native"),
-        SketchDedup.minhashMd5SignatureHof(col("sh"), 16).as("hof"))
+        minhashMd5SignatureHof(col("sh"), 16).as("hof"))
       .collect()
     assert(docs.nonEmpty)
     docs.foreach { r =>
@@ -464,4 +465,55 @@ class SketchDedupSpec extends SparkTestBase {
       .select(SketchDedup.simhash64(col("t"))).head().getLong(0)
     assert(viaSql === viaUdf)
   }
+}
+
+/** The declarative expression forms the compiled sketch kernels replaced
+  * (interpreted: higher-order functions are CodegenFallback), kept as
+  * their parity references.
+  */
+object SketchDedupSpec {
+  import org.apache.spark.sql.Column
+
+  /** Distinct word k-shingles, [[graft.plans.WordShinglesK]]'s reference.
+    * ⚠ `toks` MUST be a bound attribute (a column produced by a previous
+    * select), not an inline expression: an inline tokenizer subtree gets
+    * copied into the `slice` lambda and re-evaluated per shingle index —
+    * O(n²) per document.
+    */
+  def shinglesFromTokensHof(toks: Column, k: Int = 3): Column =
+    when(size(toks) >= k,
+      array_distinct(transform(sequence(lit(0), size(toks) - k),
+        i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
+      .otherwise(when(size(toks) > 0, array(concat_ws(" ", toks)))
+        .otherwise(array().cast("array<string>")))
+
+  /** Shingle identities as 64-bit hashes built from per-token hashes
+    * (`tokenHashes` must be a bound attribute, same inlining hazard) —
+    * [[SketchDedup.sketchDoc]]'s shingle hashes.
+    */
+  def shingleHashes(tokenHashes: Column, k: Int = 3): Column =
+    when(size(tokenHashes) >= k,
+      array_distinct(transform(sequence(lit(0), size(tokenHashes) - k),
+        i => xxhash64((1 to k).map(d => element_at(tokenHashes, i + d)): _*))))
+      .otherwise(when(size(tokenHashes) > 0,
+        array(aggregate(tokenHashes, lit(-1L), (a, h) => xxhash64(a, h))))
+        .otherwise(array().cast("array<bigint>")))
+
+  /** MinHash signature over base-hashed shingles, each member of the
+    * hash family re-mixing the base hash as xxhash64(j, h) —
+    * [[SketchDedup.sketchDoc]]'s signature.
+    */
+  def minhashSignature(hashes: Column, numHashes: Int = 64): Column =
+    transform(sequence(lit(0), lit(numHashes - 1)), j =>
+      when(size(hashes) > 0,
+        array_min(transform(hashes, h => xxhash64(j, h))))
+        .otherwise(lit(Long.MaxValue)))
+
+  /** The [[graft.plans.MinhashMd5]] signature: the same numHashes·|sh|
+    * md5 calls, interpreted.
+    */
+  def minhashMd5SignatureHof(sh: Column, numHashes: Int): Column =
+    transform(sequence(lit(0), lit(numHashes - 1)), j =>
+      array_min(transform(sh, s0 =>
+        md5(concat(j.cast("string"), lit(":"), s0)))))
 }
