@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.{Dedup, Filters, Score, Shard}
 import graft.text.{LangId, Normalize, Pii, TextMetrics, Tokenize}
@@ -24,7 +23,8 @@ import graft.text.{LangId, Normalize, Pii, TextMetrics, Tokenize}
 object Pipeline {
 
   /** Stage 1 — ingest raw (url, text): stable ingest_seq assigned at the
-    * source (partition-order zipWithIndex, resilient to later
+    * source (partition-order zipWithIndex on internal rows,
+    * [[GraftSqlBridge.withRowIndex]], resilient to later
     * repartitioning), SHA1 doc id (with the reference's null->"nan"
     * quirk), constant source, one driver-side batch timestamp — which
     * is INJECTABLE (P11): production takes the default `Instant.now`,
@@ -32,18 +32,12 @@ object Pipeline {
     * oracle-replayable (q_pipeline_full_fixed hash-checks it).
     */
   def ingest(raw: DataFrame, source: String = "mainpipe_v1",
-             ingestTs: Option[String] = None): DataFrame = {
-    val spark = raw.sparkSession
-    val indexed = raw.rdd.zipWithIndex().map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ i)
-    }
-    val df = spark.createDataFrame(indexed,
-      StructType(raw.schema.fields :+ StructField("ingest_seq", LongType, nullable = false)))
-    df.withColumn("doc_id", Normalize.sha1DocId(col("url"), col("text")))
+             ingestTs: Option[String] = None): DataFrame =
+    GraftSqlBridge.withRowIndex(raw, "ingest_seq")
+      .withColumn("doc_id", Normalize.sha1DocId(col("url"), col("text")))
       .withColumn("source", lit(source))
       .withColumn("ingest_ts",
         lit(ingestTs.getOrElse(java.time.Instant.now.toString)))
-  }
 
   /** Stage 2 — normalize, prefilter, metrics, language, PII hits,
     * toxicity, quality rules (text_clean_and_filter.py:605-813).

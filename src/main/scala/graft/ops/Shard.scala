@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Sharding / partitioned export (SURVEY.md §2.12, W2 + X1-X3).
   *
@@ -13,8 +12,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * row order. A single-partition `Window.orderBy` would serialize the
   * whole dataset through one task at 100 TB, so the global sequence is
   * assigned with the two-pass partition-offset scheme (`zipWithIndex`):
-  * range-partition by the stable sort key, count per partition, prefix-sum
-  * the offsets on the driver (one tiny action), then number rows locally.
+  * range-partition by the stable sort key (the session's
+  * `spark.sql.shuffle.partitions` ranges, which AQE coalesces into
+  * contiguous ones), count per partition, prefix-sum the offsets on the
+  * driver (one tiny action), then number rows locally on Spark's
+  * internal rows. The pipeline plan runs once per pass: nothing probes
+  * the upstream plan for its partition count, and the manifest is one
+  * aggregate.
   */
 object Shard {
 
@@ -33,19 +37,22 @@ object Shard {
     * measure tie-broken by a key column — for a deterministic result).
     * Range partitioning uses the same tuple ordering, so ties split
     * across partition boundaries still number correctly.
+    *
+    * The range exchange takes no partition count: it starts at the
+    * session's `spark.sql.shuffle.partitions` and AQE coalesces it.
+    * Coalescing merges only adjacent ranges, so partition order is
+    * still key order. Asking `df` for its partition count instead
+    * would execute every upstream shuffle stage once just to plan, and
+    * then again for the numbering. The numbering itself
+    * ([[GraftSqlBridge.withRowIndex]]) runs this frame's plan once and
+    * stays on internal rows.
     */
   def withGlobalSeq(df: DataFrame, orderCols: Seq[String],
-                    seqName: String): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(df.rdd.getNumPartitions, 1)
-    val sorted = df.repartitionByRange(parts, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.head, orderCols.tail: _*)
-    val indexed = sorted.rdd.zipWithIndex().map { case (row, i) =>
-      Row.fromSeq(row.toSeq :+ i)
-    }
-    spark.createDataFrame(indexed,
-      StructType(sorted.schema.fields :+ StructField(seqName, LongType, nullable = false)))
-  }
+                    seqName: String): DataFrame =
+    GraftSqlBridge.withRowIndex(
+      df.repartitionByRange(orderCols.map(col): _*)
+        .sortWithinPartitions(orderCols.head, orderCols.tail: _*),
+      seqName)
 
   /** W2+X1: shard_id from the global sequence. */
   def assignShards(df: DataFrame, orderCol: String = "ingest_seq",
@@ -53,8 +60,9 @@ object Shard {
     withGlobalSeq(df, orderCol)
       .withColumn("shard_id", (col("global_seq") / docsPerShard).cast("long"))
 
-  /** X2: per-shard manifest aggregates (collected to the driver by the
-    * caller — the manifest is inherently small: one row per shard).
+  /** X2: per-shard manifest aggregates (collected to the driver by
+    * [[writeManifest]] — the manifest is inherently small: one row per
+    * shard).
     */
   def shardManifest(df: DataFrame): DataFrame =
     df.groupBy("shard_id")
@@ -74,19 +82,27 @@ object Shard {
 
   /** X2 complete manifest JSON — global section (the reference adds run
     * metadata driver-side: created_at_utc, tokenizer_name, docs_per_shard)
-    * plus the per-shard rows, assembled like metrics_summary.json. Both
-    * sections are aggregates, so the collect inside writeMetricsJson is
-    * small by construction.
+    * plus the per-shard rows, assembled like metrics_summary.json. One
+    * aggregate, one job set: the per-shard rows are collected (one row
+    * per shard, small by construction), sorted by shard_id, and the
+    * global totals are summed from them on the driver. An empty input
+    * gives 0 shards, 0 docs and 0 tokens.
     */
   def writeManifest(sharded: DataFrame, path: String,
                     tokenizerName: String, createdAtUtc: String,
                     docsPerShard: Int = DocsPerShard): Unit = {
-    val global = manifestTotals(sharded)
-      .withColumn("created_at_utc", lit(createdAtUtc))
-      .withColumn("tokenizer_name", lit(tokenizerName))
-      .withColumn("docs_per_shard", lit(docsPerShard))
-    graft.sources.Sinks.writeMetricsJson(
-      Map("global" -> global, "shards" -> shardManifest(sharded)), path)
+    val perShard = shardManifest(sharded)
+    val shards = perShard.collect().sortBy(_.getLong(0)).toSeq
+    val global = Seq(
+      "num_shards" -> shards.size.toLong,
+      "total_docs" -> shards.map(_.getLong(1)).sum,
+      "total_tokens" -> shards.collect { case r if !r.isNullAt(2) => r.getLong(2) }.sum,
+      "created_at_utc" -> createdAtUtc,
+      "tokenizer_name" -> tokenizerName,
+      "docs_per_shard" -> docsPerShard)
+    graft.sources.Sinks.writeJsonSections(Seq(
+      "global" -> Seq(global),
+      "shards" -> shards.map(r => perShard.columns.toSeq.zip(r.toSeq))), path)
   }
 
   /** Deterministic per-epoch corpus shuffle (beyond ref) — the training

@@ -31,10 +31,6 @@ object SketchDedup {
   def shinglesFromTokens(toks: Column, k: Int = 3): Column =
     graft.plans.WordShinglesK(toks, k)
 
-  /** Convenience single-expression form. */
-  def wordShingles(c: Column, k: Int = 3): Column =
-    shinglesFromTokens(TextMetrics.tokens(c), k)
-
   // ---- compiled sketch ---------------------------------------------------
   //
   // Higher-order array expressions are CodegenFallback (interpreted) in

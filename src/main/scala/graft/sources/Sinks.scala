@@ -52,11 +52,9 @@ object Sinks {
   /** S5 training layout: one JSON object per line, fields exactly in the
     * reference order (Tokenisation_JSONL_export.py:182-192).
     */
-  private def trainingLine = to_json(struct(
+  private[graft] def trainingLine = to_json(struct(
     col("input_ids"), col("attention_mask"), col("doc_id"), col("url"),
     col("subset"), col("mixture_name"), col("quality_score"))).as("value")
-
-  def trainingJsonLine(df: DataFrame): DataFrame = df.select(trainingLine)
 
   /** S5+X1: training JSONL partitioned one directory per shard. */
   def writeShardedTrainingJsonl(df: DataFrame, outDir: String): Unit =
@@ -308,7 +306,18 @@ object Sinks {
     * frames, like the reference's metrics_summary.json. Each frame must
     * already be an aggregate (a few rows at most).
     */
-  def writeMetricsJson(sections: Map[String, DataFrame], path: String): Unit = {
+  def writeMetricsJson(sections: Map[String, DataFrame], path: String): Unit =
+    writeJsonSections(sections.toSeq.map { case (name, df) =>
+      val cols = df.columns
+      name -> df.collect().toSeq.map(r => cols.indices.map(i => cols(i) -> r.get(i)))
+    }, path)
+
+  /** Driver-side JSON writer behind [[writeMetricsJson]]: one object
+    * whose sections are arrays of flat rows, each row an ordered list
+    * of (field, scalar) pairs.
+    */
+  private[graft] def writeJsonSections(
+      sections: Seq[(String, Seq[Seq[(String, Any)]])], path: String): Unit = {
     def esc(s: String): String =
       s.flatMap {
         case '"' => "\\\""
@@ -322,13 +331,10 @@ object Sinks {
       case b: java.lang.Boolean => b.toString
       case other => "\"" + esc(other.toString) + "\""
     }
-    val body = sections.map { case (name, df) =>
-      val cols = df.columns
-      val rows = df.collect().map { r =>
-        cols.indices.map(i => "\"" + esc(cols(i)) + "\": " + scalar(r.get(i)))
-          .mkString("{", ", ", "}")
-      }
-      "\"" + esc(name) + "\": " + rows.mkString("[", ", ", "]")
+    val body = sections.map { case (name, rows) =>
+      "\"" + esc(name) + "\": " + rows.map(_.map { case (k, v) =>
+        "\"" + esc(k) + "\": " + scalar(v)
+      }.mkString("{", ", ", "}")).mkString("[", ", ", "]")
     }.mkString("{", ", ", "}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), body)
   }

@@ -49,7 +49,7 @@ object Bpe {
       *
       * Agenda implementation (heap of (rank, position) claims over a
       * linked symbol list), O(L log L): the rescan-per-merge form
-      * ([[encodeWordRescan]], kept as the executable spec) is O(L) per
+      * (test-scope BpeSpec.encodeWordRescan, the executable spec) is O(L) per
       * merge and a word can need L−1 merges — O(L²), which on a
       * 200k-char single "word" (a base64 blob the whitespace tokenizer
       * cannot split) whose pairs keep merging is minutes on one row:
@@ -99,29 +99,6 @@ object Bpe {
       var k = 0
       while (k >= 0) { out += syms(k); k = next(k) }
       out.result()
-    }
-
-    /** The rescan-per-merge form — the executable spec [[encodeWord]]
-      * must match (BpeSpec randomized parity); O(L²), test-only.
-      */
-    private[graft] def encodeWordRescan(word: String): Seq[String] = {
-      if (word.isEmpty) return Seq.empty
-      var symbols = word.map(_.toString).toVector
-      var done = false
-      while (!done && symbols.length > 1) {
-        var bestIdx = -1
-        var bestRank = Int.MaxValue
-        var i = 0
-        while (i < symbols.length - 1) {
-          val r = rank.getOrElse((symbols(i), symbols(i + 1)), Int.MaxValue)
-          if (r < bestRank) { bestRank = r; bestIdx = i }
-          i += 1
-        }
-        if (bestIdx < 0) done = true
-        else symbols = (symbols.take(bestIdx) :+
-          (symbols(bestIdx) + symbols(bestIdx + 1))) ++ symbols.drop(bestIdx + 2)
-      }
-      symbols
     }
   }
 

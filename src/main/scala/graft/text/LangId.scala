@@ -42,15 +42,12 @@ object LangId {
   private[graft] def letterTokens(c: Column): Column =
     regexp_extract_all(lower(coalesce(c, lit(""))), lit("\\p{L}+"), lit(0))
 
-  private def hitsIn(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => array_contains(typedlit(words), t)))
-
   /** The ONE copy of the pred/score derivation over staged hit counts
     * (the isZh gate, the en > de > es > fr tie-break, the capped
-    * stopword-gain score) — shared by [[detect]], [[withLangColumns]],
-    * [[withLangToxColumns]] and the test-scope array staging
-    * (LangIdRef.withLangColumnsArr) so a tuning change can never
-    * silently diverge between the stagings.
+    * stopword-gain score) — shared by [[withLangColumns]],
+    * [[withLangToxColumns]] and the test-scope references
+    * (LangIdRef.detect, LangIdRef.withLangColumnsArr) so a tuning
+    * change can never silently diverge between the stagings.
     */
   private[text] def predScoreFrom(c: Column, n: Column, he: Column,
       hd: Column, hs: Column, hf: Column,
@@ -76,17 +73,6 @@ object LangId {
     (pred, score)
   }
 
-  /** Returns (lang_pred, lang_score) columns. Tie-break priority on equal
-    * stopword hits: en > de > es > fr (fixed, documented, deterministic).
-    */
-  def detect(c: Column): (Column, Column) = {
-    val s = coalesce(c, lit(""))
-    val cjk = length(regexp_replace(s, "[^一-鿿]", ""))
-    val toks = letterTokens(c)
-    predScoreFrom(c, size(toks), hitsIn(toks, En), hitsIn(toks, De),
-      hitsIn(toks, Es), hitsIn(toks, Fr), cjk)
-  }
-
   /** Staged variant: one compiled [[graft.plans.TextProfileStats]]
     * pass extracts letter-token count, all four language hit counts
     * and the CJK codepoint count from the raw string — no lowered
@@ -95,7 +81,8 @@ object LangId {
     * paid; that form survives as the parity anchor, test-scope
     * LangIdRef.withLangColumnsArr). Scoring reads the counts as
     * attributes.
-    * Value-identical to [[detect]]: same arithmetic, same decisions.
+    * Value-identical to the test-scope LangIdRef.detect (the per-column
+    * HOF form): same arithmetic, same decisions.
     */
   def withLangColumns(df: org.apache.spark.sql.DataFrame, c: Column,
                       predName: String = "lang_pred",
@@ -154,7 +141,8 @@ object LangId {
   /** The contract a real language-ID model satisfies (langdetect's
     * n-gram naive Bayes, a fastText wrapper, any JNI model): one
     * instance per executor, one call per document, `(lang, score)` out
-    * with the same ('unk', 0.0) empty/unknown convention as [[detect]].
+    * with the same ('unk', 0.0) empty/unknown convention as
+    * [[withLangColumns]].
     * Implementations hold their loaded profiles; the FACTORY is what
     * ships to executors, not the model.
     */
@@ -202,7 +190,7 @@ object LangId {
 
   /** DuckDB SQL fragments computing the identical (pred, score) pair for
     * text column `t`. Emitted into oracleSql so the word lists and the
-    * arithmetic stay mechanically in sync with `detect`.
+    * arithmetic stay mechanically in sync with `predScoreFrom`.
     */
   def duckdbExprs(t: String): (String, String) = {
     val cjk = s"length(regexp_replace($t, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))"

@@ -89,9 +89,6 @@ object TextMetrics {
     */
   def tokenCount(c: Column): Column = size(tokens(c))
 
-  def uniqueTokens(c: Column): Column =
-    element_at(graft.plans.TokenSetStats(tokens(c), Nil), 1).cast("int")
-
   def uniqueTokenRatio(c: Column): Column = {
     val t = tokens(c)
     when(size(t) > 0,

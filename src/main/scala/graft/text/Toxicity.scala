@@ -25,35 +25,6 @@ object Toxicity {
   def toxTokens(c: Column): Column =
     regexp_extract_all(lower(coalesce(c, lit(""))), lit("\\w+"), lit(0))
 
-  private def hitCount(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => array_contains(typedlit(words), t)))
-
-  /** Returns the six reference score columns, given the text column.
-    * n_tokens floor of 1 matches `max(1, len(tokens))`.
-    *
-    * ⚠ Inline HOF form: re-tokenizes once per referenced score (lambdas
-    * block subexpression elimination). Semantic reference + tests only —
-    * the pipeline and queries go through [[withToxicityColumns]].
-    */
-  def scores(c: Column): Map[String, Column] = {
-    val toks = toxTokens(c)
-    val n = greatest(lit(1), size(toks)).cast("double")
-    val bad = hitCount(toks, BadWords).cast("double")
-    val ins = hitCount(toks, InsultWords).cast("double")
-    val thr = hitCount(toks, ThreatWords).cast("double")
-    val sex = hitCount(toks, SexualWords).cast("double")
-    val slr = hitCount(toks, SlurWords).cast("double")
-    val toxicity = least(lit(1.0), (bad + ins + thr + sex + slr) / n * 5.0)
-    Map(
-      "toxicity" -> toxicity,
-      "severe_toxicity" -> when(toxicity >= 0.9, 1.0).otherwise(0.0),
-      "insult" -> least(lit(1.0), ins / n * 5.0),
-      "threat" -> least(lit(1.0), thr / n * 5.0),
-      "identity_attack" -> least(lit(1.0), slr / n * 5.0),
-      "sexual_explicit" -> least(lit(1.0), sex / n * 5.0)
-    )
-  }
-
   /** The ONE copy of the six-column toxicity scoring arithmetic over a
     * staged (token count, hit accessor) pair — shared by
     * [[withToxicityColumns]] and [[graft.text.LangId.withLangToxColumns]]
@@ -73,7 +44,8 @@ object Toxicity {
 
   /** Staged fast path: one compiled [[graft.plans.TextProfileStats]]
     * pass counts the tokens and all five lists, scores come from
-    * attributes. Value-identical to [[scores]] — same arithmetic over
+    * attributes. Value-identical to the test-scope ToxicityRef.scores
+    * (the per-column HOF form) — same arithmetic over
     * the same counts; the WordlistHits-over-token-array staging it
     * replaced is the parity anchor (test-scope ToxicityRef).
     */

@@ -31,6 +31,33 @@ object GraftSqlBridge {
                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `df` plus a non-null LongType column `name` numbering its rows
+    * 0..n-1 in partition order (`zipWithIndex`: one size job over all
+    * but the last partition, then local numbering). The rows stay
+    * internal: the index is appended by an UnsafeProjection over a
+    * JoinedRow, never through external `Row` conversion, and the
+    * upstream plan is executed once, by this call's own
+    * `queryExecution`. Every action on the result reuses that RDD
+    * lineage, so upstream shuffle outputs are read, not recomputed.
+    */
+  def withRowIndex(df: DataFrame, name: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val schema = StructType(df.schema.fields :+ StructField(name, LongType, nullable = false))
+    val rows = df.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
+      val append = UnsafeProjection.create(schema)
+      val joined = new JoinedRow
+      val index = new GenericInternalRow(1)
+      it.map { case (row, i) =>
+        index.setLong(0, i)
+        append(joined(row, index)): InternalRow
+      }
+    }
+    df.sparkSession.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+  }
+
   /** A DataFrame's analyzed logical plan. */
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

@@ -6,6 +6,7 @@ import graft.text.Bpe
   * segmentation, compression.
   */
 class BpeSpec extends SparkTestBase {
+  import BpeSpec.encodeWordRescan
 
   private val counts = Seq(
     ("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
@@ -72,7 +73,7 @@ class BpeSpec extends SparkTestBase {
           .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString.trim
       }
     words.foreach { w =>
-      assert(model.encodeWord(w) === model.encodeWordRescan(w),
+      assert(model.encodeWord(w) === encodeWordRescan(model, w),
         s"encoder diverged on '$w'")
     }
   }
@@ -122,7 +123,7 @@ class BpeSpec extends SparkTestBase {
     (0 until 300).foreach { _ =>
       val w = (0 until (1 + rng.nextInt(24)))
         .map(_ => "theianordgul".charAt(rng.nextInt(12))).mkString
-      assert(model.encodeWord(w) === model.encodeWordRescan(w),
+      assert(model.encodeWord(w) === encodeWordRescan(model, w),
         s"agenda/rescan divergence on '$w'")
       assert(model.encodeWord(w).mkString === w, s"lossy on '$w'")
     }
@@ -273,5 +274,32 @@ class BpeSpec extends SparkTestBase {
     val swapped = encOf(Seq("lower low lowest", "new newer newest", null))
     assert(swapped(0L)._1 === base(0L)._1)
     assert(swapped(0L)._2 !== base(0L)._2)
+  }
+}
+
+object BpeSpec {
+
+  /** The rescan-per-merge form of [[Bpe.Model.encodeWord]]: rescan every
+    * adjacent pair, apply the best-ranked (leftmost on ties), repeat.
+    * O(L²) per word; the executable spec the agenda encoder must match.
+    */
+  def encodeWordRescan(model: Bpe.Model, word: String): Seq[String] = {
+    if (word.isEmpty) return Seq.empty
+    var symbols = word.map(_.toString).toVector
+    var done = false
+    while (!done && symbols.length > 1) {
+      var bestIdx = -1
+      var bestRank = Int.MaxValue
+      var i = 0
+      while (i < symbols.length - 1) {
+        val r = model.rank.getOrElse((symbols(i), symbols(i + 1)), Int.MaxValue)
+        if (r < bestRank) { bestRank = r; bestIdx = i }
+        i += 1
+      }
+      if (bestIdx < 0) done = true
+      else symbols = (symbols.take(bestIdx) :+
+        (symbols(bestIdx) + symbols(bestIdx + 1))) ++ symbols.drop(bestIdx + 2)
+    }
+    symbols
   }
 }

@@ -83,13 +83,4 @@ class CosineSpec extends SparkTestBase {
     assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"),
       s"cosine must be a native expression, not a UDF:\n$p")
   }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

@@ -2,9 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.GraftSqlBridge
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.ops.Shard
+import graft.sources.Sinks
 
 /** E1 checkpointed orchestrator: per-stage materialization, drop-reason
   * side outputs, and resume-from-stage equivalence at sf0.001.
@@ -127,6 +132,48 @@ class OrchestratorSpec extends SparkTestBase {
     assert(v7.columns.contains("shard_id") && v7.columns.contains("global_seq"))
     // the summary's counts (observed on the writes) equal the parquets'
     assertSummaryMatchesParquet(outDir, stageNames(2))
+  }
+
+  /** Exports `sharded` like a training run does — sharded JSONL plus
+    * the manifest — and holds the manifest to the deliverables.
+    */
+  private def assertManifestContract(sharded: DataFrame): Unit = {
+    val out = Files.createTempDirectory("graft-export").toString
+    Sinks.writeShardedTrainingJsonl(sharded, s"$out/train")
+    Shard.writeManifest(sharded, s"$out/manifest.json", "graft-native",
+      "1970-01-01T00:00:00Z")
+    val manifest = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$out/manifest.json"))
+    val global = manifest.get("global").get(0)
+    val shards = manifest.get("shards").elements().asScala.toSeq
+    val ids = shards.map(_.get("shard_id").asLong)
+    shards.foreach { sh =>
+      val dir = java.nio.file.Paths.get(s"$out/train/shard_id=${sh.get("shard_id").asLong}")
+      assert(Files.isDirectory(dir), s"missing $dir")
+      assert(sh.get("filename").asText === f"train_shard_${sh.get("shard_id").asLong}%05d.jsonl")
+    }
+    val rows = sharded.count()
+    val lines = spark.read.text(s"$out/train").count()
+    val tokens = sharded.agg(coalesce(sum("n_tokens"), lit(0L))).head().getLong(0)
+    assert(global.get("num_shards").asLong === ids.size)
+    assert(global.get("total_docs").asLong === rows)
+    assert(global.get("total_docs").asLong === lines)
+    assert(global.get("total_tokens").isIntegralNumber)
+    assert(global.get("total_tokens").asLong === tokens)
+    assert(ids === ids.sorted)
+    assert(ids.distinct === ids)
+    assert(shards.map(_.get("num_docs").asLong).sum === rows)
+  }
+
+  test("manifest contract: v7 exported as sharded JSONL matches its manifest") {
+    val v7 = spark.read.parquet(Orchestrator.versionPath(outDir, 7))
+    assertManifestContract(v7)
+    // several shards, to hold the per-shard list to shard_id order
+    val resharded = Shard.assignShards(v7.drop("global_seq", "shard_id"), docsPerShard = 1)
+    assert(resharded.count() > 1)
+    assertManifestContract(resharded)
+    // an empty input: no shards, zero docs and zero tokens
+    assertManifestContract(v7.limit(0))
   }
 
   test("fused pipeline equals checkpointed pipeline on kept rows") {

@@ -91,7 +91,7 @@ class SinksSpec extends SparkTestBase {
   }
 
   test("S5 training JSONL: fixed field order, parseable, null-free lines") {
-    val lines = Sinks.trainingJsonLine(trainingDf).collect().map(_.getString(0))
+    val lines = SinksSpec.trainingJsonLine(trainingDf).collect().map(_.getString(0))
     assert(lines.length === 3)
     lines.foreach { l =>
       assert(l.startsWith("""{"input_ids":["""), l)
@@ -228,4 +228,13 @@ class SinksSpec extends SparkTestBase {
     assert(!spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       .contains("dynamic"))
   }
+}
+
+object SinksSpec {
+
+  /** The training JSONL line of every row, without the shard layout
+    * [[Sinks.writeShardedTrainingJsonl]] writes it in.
+    */
+  def trainingJsonLine(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.select(Sinks.trainingLine)
 }

@@ -334,7 +334,7 @@ class SketchDedupSpec extends SparkTestBase {
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute force over all pairs with the same shingle sets
     val sh = df.select(col("doc_id"),
-      SketchDedup.wordShingles(col("text"), 3).as("sh"))
+      wordShingles(col("text"), 3).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     val expected = (for {
       a <- sh.keys; b <- sh.keys if a < b
@@ -393,7 +393,7 @@ class SketchDedupSpec extends SparkTestBase {
     import spark.implicits._
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(100)
       .select(col("doc_id"),
-        SketchDedup.wordShingles(col("text"), 3).as("sh"))
+        wordShingles(col("text"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(
         graft.plans.MinhashMd5(col("sh"), 16).as("native"),
@@ -473,6 +473,10 @@ class SketchDedupSpec extends SparkTestBase {
   */
 object SketchDedupSpec {
   import org.apache.spark.sql.Column
+
+  /** Word 3-shingles straight from a text column. */
+  def wordShingles(c: Column, k: Int = 3): Column =
+    SketchDedup.shinglesFromTokens(TextMetrics.tokens(c), k)
 
   /** Distinct word k-shingles, [[graft.plans.WordShinglesK]]'s reference.
     * ⚠ `toks` MUST be a bound attribute (a column produced by a previous

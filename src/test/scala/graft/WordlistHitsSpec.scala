@@ -59,7 +59,7 @@ class WordlistHitsSpec extends SparkTestBase {
     val names = Seq("toxicity", "severe_toxicity", "insult", "threat",
       "identity_attack", "sexual_explicit")
     val inline = {
-      val sc = Toxicity.scores(col("text"))
+      val sc = graft.text.ToxicityRef.scores(col("text"))
       df.select(names.map(n => sc(n).as(n)): _*).collect().map(_.toSeq)
     }
     val staged = Toxicity.withToxicityColumns(df, col("text"))
@@ -79,14 +79,5 @@ class WordlistHitsSpec extends SparkTestBase {
       "SELECT wordlist_hits(array('the', 'der', 'the'), 'langid') AS h")
       .head().getSeq[Int](0)
     assert(got == Seq(2, 1, 0, 0))
-  }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

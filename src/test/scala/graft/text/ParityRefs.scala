@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 // The regex/HOF/array forms the compiled text kernels replaced, kept in
-// test scope as the parity references KernelFuzzSpec and TextOpsSpec
-// evaluate next to the production columns. Each is the executable spec
-// of its kernel's semantics; no production path calls them. One object
-// per main-scope source.
+// test scope as the parity references the specs (KernelFuzzSpec,
+// TextOpsSpec, HostileInputSpec, WordlistHitsSpec) evaluate next to the
+// production columns. Each is the executable spec of its kernel's
+// semantics; no production path calls them. One object per main-scope
+// source.
 
 /** References for [[Normalize]]'s kernels. */
 object NormalizeRef {
@@ -50,6 +51,12 @@ object NormalizeRef {
 /** References for [[TextMetrics]]' kernels. */
 object TextMetricsRef {
   import TextMetrics.{tokens, EnStopwords}
+
+  /** Distinct-token count through [[graft.plans.TokenSetStats]], the
+    * count half of [[TextMetrics.uniqueTokenRatio]].
+    */
+  def uniqueTokens(c: Column): Column =
+    element_at(graft.plans.TokenSetStats(tokens(c), Nil), 1).cast("int")
 
   /** The split form of [[TextMetrics.wordCount]]. */
   def wordCountSplit(c: Column): Column = size(tokens(c))
@@ -121,8 +128,23 @@ object TextMetricsRef {
   }
 }
 
-/** Reference for [[LangId.withLangColumns]] (TextProfileStats). */
+/** References for [[LangId.withLangColumns]] (TextProfileStats). */
 object LangIdRef {
+
+  private[text] def hitsIn(toks: Column, words: Seq[String]): Column =
+    size(filter(toks, t => array_contains(typedlit(words), t)))
+
+  /** The per-column HOF form: (lang_pred, lang_score) from a lowered
+    * letter-token array, one array filter per language. Tie-break
+    * priority on equal stopword hits: en > de > es > fr.
+    */
+  def detect(c: Column): (Column, Column) = {
+    val s = coalesce(c, lit(""))
+    val cjk = length(regexp_replace(s, "[^一-鿿]", ""))
+    val toks = LangId.letterTokens(c)
+    LangId.predScoreFrom(c, size(toks), hitsIn(toks, LangId.En), hitsIn(toks, LangId.De),
+      hitsIn(toks, LangId.Es), hitsIn(toks, LangId.Fr), cjk)
+  }
 
   /** The WordlistHits-over-token-array staging. What it independently
     * reproduces is the hit-count staging; the pred/score derivation over
@@ -153,8 +175,34 @@ object LangIdRef {
   }
 }
 
-/** Reference for [[Toxicity.withToxicityColumns]] (TextProfileStats). */
+/** References for [[Toxicity.withToxicityColumns]] (TextProfileStats). */
 object ToxicityRef {
+  import Toxicity._
+  import LangIdRef.hitsIn
+
+  /** The six reference score columns as inline HOF expressions over the
+    * text column (the reference arithmetic; n_tokens floor of 1 matches
+    * `max(1, len(tokens))`). Re-tokenizes once per referenced score:
+    * lambdas block subexpression elimination.
+    */
+  def scores(c: Column): Map[String, Column] = {
+    val toks = toxTokens(c)
+    val n = greatest(lit(1), size(toks)).cast("double")
+    val bad = hitsIn(toks, BadWords).cast("double")
+    val ins = hitsIn(toks, InsultWords).cast("double")
+    val thr = hitsIn(toks, ThreatWords).cast("double")
+    val sex = hitsIn(toks, SexualWords).cast("double")
+    val slr = hitsIn(toks, SlurWords).cast("double")
+    val toxicity = least(lit(1.0), (bad + ins + thr + sex + slr) / n * 5.0)
+    Map(
+      "toxicity" -> toxicity,
+      "severe_toxicity" -> when(toxicity >= 0.9, 1.0).otherwise(0.0),
+      "insult" -> least(lit(1.0), ins / n * 5.0),
+      "threat" -> least(lit(1.0), thr / n * 5.0),
+      "identity_attack" -> least(lit(1.0), slr / n * 5.0),
+      "sexual_explicit" -> least(lit(1.0), sex / n * 5.0)
+    )
+  }
 
   /** The WordlistHits-over-token-array staging. */
   def withToxicityColumnsArr(df: DataFrame, c: Column): DataFrame = {
