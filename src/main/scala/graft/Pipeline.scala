@@ -9,7 +9,9 @@ import graft.text.{LangId, Normalize, Pii, TextMetrics, Tokenize}
 /** The full reference pipeline as pure DataFrame -> DataFrame stages
   * (SURVEY.md §3 E1/E2). Each stage is a single select/withColumn chain
   * that Catalyst fuses into one codegen'd pass; the only shuffles in the
-  * whole pipeline are the two dedup windows and the shard sequencing.
+  * whole pipeline are dedup's two windows and its flag routing, all over
+  * a narrow projection (the wide rows never cross an exchange), and the
+  * shard sequencing.
   *
   * Design notes vs the reference:
   *  - Single-frame drop_reason semantics: the reference physically splits
@@ -45,11 +47,19 @@ object Pipeline {
   def cleanAndFilter(df: DataFrame, allowedLangs: Seq[String] = Seq("en"),
                      minConf: Double = 0.80,
                      applyNfkc: Boolean = true): DataFrame = {
+    // Each text kernel is staged ONCE as an attribute (the
+    // withTokenStats `__tts` precedent) and the metrics derive from it:
+    // the ratios read the kernel inside `when` branches, where codegen
+    // does not eliminate common subexpressions, so the unstaged forms
+    // compiled to 4 CharClassStats and 3 TokenTextStats call sites on
+    // text_norm (PlanSpec counts them)
     val norm = df
       .withColumn("text_norm",
         Normalize.normalizeText(col("text"), applyNfkc = applyNfkc))
+      .withColumn("__tts", TextMetrics.textTokenStats(col("text_norm")))
+      .withColumn("__ccs", TextMetrics.charClassStats(col("text_norm")))
       .withColumn("char_len", TextMetrics.charLen(col("text_norm")).cast("long"))
-      .withColumn("word_count", TextMetrics.wordCount(col("text_norm")).cast("long"))
+      .withColumn("word_count", TextMetrics.wordCountFrom(col("__tts")).cast("long"))
     val pre = Filters.applyRules(norm, Filters.prefilterRules(
       col("text"), col("text_norm"), col("char_len"), col("word_count")))
 
@@ -59,13 +69,14 @@ object Pipeline {
     // withToxicityColumns(withLangColumns(..)) composition, TextOpsSpec)
     val metered = LangId.withLangToxColumns(pre, t)
       .withColumn("n_chars", TextMetrics.nChars(t))
-      .withColumn("n_words", TextMetrics.wordCount(t).cast("long"))
-      .withColumn("alpha_ratio", TextMetrics.alphaRatio(t))
-      .withColumn("repetition_ratio", TextMetrics.repetitionRatio(t))
-      .withColumn("non_latin_ratio", TextMetrics.nonLatinRatio(t))
+      .withColumn("n_words", TextMetrics.wordCountFrom(col("__tts")).cast("long"))
+      .withColumn("alpha_ratio", TextMetrics.alphaRatioFrom(t, col("__ccs")))
+      .withColumn("repetition_ratio", TextMetrics.repetitionRatioFrom(col("__tts")))
+      .withColumn("non_latin_ratio", TextMetrics.nonLatinRatioFrom(col("__ccs")))
       .withColumn("email_hits", Pii.emailHits(t).cast("long"))
       .withColumn("phone_hits", Pii.phoneHitsSimple(t).cast("long"))
       .withColumn("model_q", lit(0.5))
+      .drop("__tts", "__ccs")
     // The F9–F20 ladder as ONE compact kernel expression instead of the
     // coalesce(CASE…)×12 chain: under whole-stage codegen the CaseWhen
     // branches are bound-variable code janino cannot method-split, and

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -95,11 +95,16 @@ object Dedup {
     * carries four text-sized columns (raw/norm/deep-clean/masked) plus
     * ~25 metrics, and the composed form drags ALL of it through two
     * window shuffles. Here both windows run over a projection of
-    * (seq, doomed, id, exact-hash, md5'd near-key) — tens of bytes per
-    * row — and the wide frame shuffles exactly once, for the flag
-    * join-back. The canon columns the output contract exposes are
-    * recomputed post-join from the text (one cheap codegen'd pass)
-    * instead of being shuffled.
+    * (partition id, seq, doomed, id, exact-hash, md5'd near-key) — tens
+    * of bytes per row — and the wide frame never crosses an exchange:
+    * the flags are routed back to the partition their wide row lives in
+    * (the partition id the first projection reads off the persisted
+    * relation) and appended there
+    * ([[org.apache.spark.sql.GraftSqlBridge.appendRouted]]). The only
+    * row-sized exchanges are the two windows and that routing, all
+    * narrow. The canon columns the output contract exposes are
+    * recomputed after the append from the text (one cheap codegen'd
+    * pass) instead of being shuffled.
     *
     * Near-window details preserved from the composed form: rows doomed
     * by earlier stages OR by the exact pass sort last (never shadow a
@@ -107,18 +112,21 @@ object Dedup {
     * disjoint from md5 hex, so no collision with real buckets) and thus
     * singleton groups, and the md5 of the 500-char near key stands in
     * for the key itself (grouping is identical up to md5 collisions,
-    * ~2^-128 per pair).
+    * ~2^-128 per pair). `seqCol` must be unique per row, as
+    * `ingest_seq` is.
     */
   def dedupStage(df: DataFrame, textCol: String = "text_pii_masked",
                  seqCol: String = "ingest_seq"): DataFrame = {
-    // The frame is consumed twice (narrow window branch + join-back), so
-    // persist at the branch point: without it the flags branch re-runs
-    // the whole upstream scalar chain — the stage-2/3 regex pipeline at
-    // pipeline scale — on a second scan (measured 7.1 s vs 4.5 s for
-    // q_pipeline_full at sf0.1). Node-local materialization, not a
-    // shuffle. The persist is placed on the INPUT frame itself, so the
-    // caller releases it with `df.unpersist()` once the result is
-    // written (Orchestrator does so after every stage).
+    // The frame is consumed twice (narrow window branch + the wide side
+    // of the append), so persist at the branch point: without it the
+    // flags branch re-runs the whole upstream scalar chain — the
+    // stage-2/3 regex pipeline at pipeline scale — on a second scan
+    // (measured 7.1 s vs 4.5 s for q_pipeline_full at sf0.1), and the
+    // partition ids the flags are routed by would name partitions of a
+    // different scan. Node-local materialization, not a shuffle. The
+    // persist is placed on the INPUT frame itself, so the caller
+    // releases it with `df.unpersist()` once the result is written
+    // (Orchestrator does so after every stage).
     //
     // Columnar-cache compression is OFF for this one persist (r14 A/B
     // at the 100x layout, min-of-3): the frame is dominated by four
@@ -152,14 +160,15 @@ object Dedup {
       if (df.columns.contains("doc_id")) col("doc_id").cast("string")
       else col(seqCol).cast("string")
     val narrow = df
-      .select(col(seqCol).as("__seq"), doomedLast(df).as("__doomed"),
-        idExpr.as("__did"), Normalize.canonExact(col(textCol)).as("__canon"))
-      .select(col("__seq"), col("__doomed"), col("__did"),
+      .select(spark_partition_id().as("__pid"), col(seqCol).as("__seq"),
+        doomedLast(df).as("__doomed"), idExpr.as("__did"),
+        Normalize.canonExact(col(textCol)).as("__canon"))
+      .select(col("__pid"), col("__seq"), col("__doomed"), col("__did"),
         Normalize.sha256Hex(col("__canon")).as("__eh"),
         substring(col("__canon"), 1, NearKeyChars).as("__nk"),
         length(col("__canon")).as("__clen"))
-      .select(col("__seq"), col("__doomed"), col("__did"), col("__eh"),
-        md5(col("__nk")).as("__nkh"),
+      .select(col("__pid"), col("__seq"), col("__doomed"), col("__did"),
+        col("__eh"), md5(col("__nk")).as("__nkh"),
         (col("__clen") >= NearDupMinLen && col("__nk") =!= "").as("__cand"))
     val we = Window.partitionBy("__eh").orderBy(col("__doomed"), col("__seq"))
     val afterExact = narrow
@@ -172,7 +181,7 @@ object Dedup {
     val flags = afterExact
       .withColumn("__rnn", row_number().over(wn))
       .withColumn("__fidn", first("__did").over(wn))
-      .select(col("__seq"),
+      .select(col("__pid"), col("__seq"),
         (col("__rne") > 1).as("__isde"),
         when(col("__rne") > 1, col("__fide")).as("__dofe"),
         (col("__cand") && col("__rnn") > 1 && !(col("__rne") > 1)).as("__isdn"),
@@ -181,7 +190,7 @@ object Dedup {
     // is_dup_exact, matching exactDedup's withColumn order, so the
     // composed and fused forms agree positionally too (parquet schema
     // diffs, select-by-index), not just by name
-    val wide = df.join(flags, col(seqCol) === col("__seq")).drop("__seq")
+    val wide = GraftSqlBridge.appendRouted(df, seqCol, flags, "__pid", "__seq")
       .withColumn("dedup_id", idExpr)
       .withColumn("exact_canon_text", Normalize.canonExact(col(textCol)))
       .withColumn("exact_hash", Normalize.sha256Hex(col("exact_canon_text")))

@@ -32,9 +32,19 @@ object TextMetrics {
     * `size(split(trim(c), "\\s+"))` form (test-scope TextMetricsRef,
     * the parity anchor).
     */
-  def wordCount(c: Column): Column =
-    element_at(graft.plans.TokenTextStats(coalesce(c, lit("")), Nil), 1)
-      .cast("int")
+  def wordCount(c: Column): Column = wordCountFrom(textTokenStats(c))
+
+  /** The [[graft.plans.TokenTextStats]] kernel behind [[wordCount]] and
+    * [[repetitionRatio]] (null -> ""). Codegen does not share a kernel
+    * call between `when` branches, so a projection that needs both
+    * stages this once as an attribute and derives them with the `From`
+    * forms (Pipeline.cleanAndFilter).
+    */
+  def textTokenStats(c: Column): Column =
+    graft.plans.TokenTextStats(coalesce(c, lit("")), Nil)
+
+  /** [[wordCount]] from a staged [[textTokenStats]]. */
+  def wordCountFrom(k: Column): Column = element_at(k, 1).cast("int")
 
   /** M1' (compute_quality_metrics n_chars): null -> 0. */
   def nChars(c: Column): Column = coalesce(length(c), lit(0))
@@ -47,16 +57,20 @@ object TextMetrics {
     * filtered-copy allocation (62% of cleanAndFilter profiled at 10×,
     * together with [[nonLatinRatio]]'s double strip).
     */
-  def alphaRatio(c: Column): Column = {
+  def alphaRatio(c: Column): Column = alphaRatioFrom(c, charClassStats(c))
+
+  /** The [[graft.plans.CharClassStats]] kernel behind [[alphaRatio]] and
+    * [[nonLatinRatio]] (null -> ""), staged like [[textTokenStats]].
+    */
+  def charClassStats(c: Column): Column =
+    graft.plans.CharClassStats(coalesce(c, lit("")))
+
+  /** [[alphaRatio]] of `c` from its staged [[charClassStats]] `k`. The
+    * when(n > 0) guard returns 0.0 for NULL input before `k` is read.
+    */
+  def alphaRatioFrom(c: Column, k: Column): Column = {
     val n = length(c)
-    // coalesce matches [[nonLatinRatio]]'s kernel argument EXACTLY so
-    // codegen subexpression elimination unifies the two CharClassStats
-    // calls into ONE string walk when both ratios are projected (they
-    // are, in stage 2) — value-identical: the when(n > 0) guard already
-    // returns 0.0 for NULL input before the kernel result is read
-    when(n > 0,
-      element_at(graft.plans.CharClassStats(coalesce(c, lit(""))), 1)
-        .cast("double") / n.cast("double"))
+    when(n > 0, element_at(k, 1).cast("double") / n.cast("double"))
       .otherwise(lit(0.0))
   }
 
@@ -65,11 +79,12 @@ object TextMetrics {
     * [[graft.plans.TokenTextStats]] kernel — the split+array form this
     * replaces built a full token array per row just to count it
     * (integer counts, so parity with the kernel-over-split form is
-    * equality, TextOpsSpec). Shares its kernel call with [[wordCount]]
-    * through codegen subexpression elimination when both are projected.
+    * equality, TextOpsSpec).
     */
-  def repetitionRatio(c: Column): Column = {
-    val k = graft.plans.TokenTextStats(coalesce(c, lit("")), Nil)
+  def repetitionRatio(c: Column): Column = repetitionRatioFrom(textTokenStats(c))
+
+  /** [[repetitionRatio]] from a staged [[textTokenStats]]. */
+  def repetitionRatioFrom(k: Column): Column = {
     val n = element_at(k, 1)
     when(n > 0,
       lit(1.0) - element_at(k, 2).cast("double") / n.cast("double"))
@@ -109,8 +124,10 @@ object TextMetrics {
     * Same one-pass kernel as [[alphaRatio]] (the regex form built TWO
     * filtered copies per row); parity-pinned in TextOpsSpec.
     */
-  def nonLatinRatio(c: Column): Column = {
-    val k = graft.plans.CharClassStats(coalesce(c, lit("")))
+  def nonLatinRatio(c: Column): Column = nonLatinRatioFrom(charClassStats(c))
+
+  /** [[nonLatinRatio]] from a staged [[charClassStats]]. */
+  def nonLatinRatioFrom(k: Column): Column = {
     val total = element_at(k, 1)
     when(total > 0,
       element_at(k, 2).cast("double") / total.cast("double"))

@@ -58,6 +58,78 @@ object GraftSqlBridge {
       .internalCreateDataFrame(rows, schema)
   }
 
+  /** `wide` with the columns of `flags` (all but `pidCol` and `flagKey`)
+    * appended to the row whose `wideKey` equals the flag row's
+    * `flagKey`, without moving a wide row. `flags(pidCol)` must be the
+    * `spark_partition_id()` of the flag row's wide row, read from the
+    * same persisted relation `wide` is: the flags are routed to those
+    * partitions with `repartitionById`, then `zipPartitions` pairs
+    * each wide partition with its own flags. Each flags partition is
+    * hashed by key — rows copied, since the shuffle reader reuses its
+    * buffer — and the values are appended by an UnsafeProjection over
+    * a JoinedRow, so rows stay internal. `wide` is read through a
+    * fresh QueryExecution, so a persist placed on it is used even if
+    * its own plan was built before the persist.
+    *
+    * The flags plan runs here, once, under its own SQL execution (its
+    * final plan reaches QueryExecutionListeners); every action on the
+    * result reads its shuffle output. Semantics are an inner join on a
+    * unique key: a null key drops the wide row, and a non-null key
+    * with no flag row, or with two, fails the task.
+    */
+  def appendRouted(wide: DataFrame, wideKey: String, flags: DataFrame,
+                   pidCol: String, flagKey: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection}
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.types.StructType
+    val session = wide.sparkSession.asInstanceOf[classic.SparkSession]
+    val wideRdd = classic.Dataset.ofRows(session, wide.queryExecution.logical)
+      .queryExecution.toRdd
+    val parts = wideRdd.getNumPartitions
+    val values = flags.schema.fields.filterNot(f => f.name == pidCol || f.name == flagKey)
+    val wideSchema = wide.schema
+    val schema = StructType(wideSchema.fields ++ values)
+    // an empty relation can plan with no partitions: nothing to route
+    if (parts == 0)
+      return session.internalCreateDataFrame(session.sparkContext.emptyRDD[InternalRow], schema)
+    val routed = flags.repartitionById(parts, functions.col(pidCol))
+      .select((flagKey +: values.map(_.name).toSeq).map(functions.col): _*)
+    val flagRdd = SQLExecution.withNewExecutionId(routed.queryExecution,
+      Some("appendRouted"))(routed.queryExecution.toRdd)
+    require(flagRdd.getNumPartitions == parts,
+      s"flags routed to ${flagRdd.getNumPartitions} partitions, wide has $parts")
+
+    val keyAt = wideSchema.fieldIndex(wideKey)
+    val keyType = wideSchema(keyAt).dataType
+    val n = wideSchema.length
+    val out = wideSchema.fields.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, f.nullable) } ++
+      values.zipWithIndex.map { case (f, j) =>
+        BoundReference(n + 1 + j, f.dataType, f.nullable) }
+    val rows = wideRdd.zipPartitions(flagRdd) { (wideIt, flagIt) =>
+      val byKey = new java.util.HashMap[Any, InternalRow]()
+      flagIt.foreach { f =>
+        if (!f.isNullAt(0)) {
+          val kept = f.copy()
+          val k = kept.get(0, keyType)
+          if (byKey.put(k, kept) != null)
+            throw new IllegalStateException(s"key $k flagged twice")
+        }
+      }
+      val append = UnsafeProjection.create(out.toSeq)
+      val joined = new JoinedRow
+      wideIt.filterNot(_.isNullAt(keyAt)).map { w =>
+        val f = byKey.get(w.get(keyAt, keyType))
+        if (f == null)
+          throw new IllegalStateException(
+            s"no flag row for key ${w.get(keyAt, keyType)}: routing lost it")
+        append(joined(w, f)): InternalRow
+      }
+    }
+    session.internalCreateDataFrame(rows, schema)
+  }
+
   /** A DataFrame's analyzed logical plan. */
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

@@ -125,6 +125,54 @@ class FiltersDedupSpec extends SparkTestBase {
         textCol = "text").columns.toSeq)
   }
 
+  test("dedupStage equals the composed form on a hard layout, AQE on and off") {
+    // Five partitions, rows out of ingest_seq order, exact and near dup
+    // groups spanning partitions, null and empty text, doomed rows:
+    // every flag routed back to its wide row must be that row's own
+    // (a flag row kept without copying aliases the shuffle reader's
+    // buffer and points dup_of at another row's keeper).
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val long = "lorem ipsum dolor sit amet consectetur " * 15
+    val pool = Seq[String](null, "", "   ", "alpha beta", "ALPHA  beta",
+      "gamma delta", long + "one", long) ++ (0 until 12).map(i => long + s"v$i")
+    val rng = new scala.util.Random(7)
+    val rows = rng.shuffle((0L until 240L).map { seq =>
+      val text = pool(rng.nextInt(pool.size))
+      val doomed = if (rng.nextInt(6) == 0) "too_short" else null
+      Row(seq, seq + 1000, text, doomed)
+    })
+    val schema = StructType(Seq(StructField("ingest_seq", LongType),
+      StructField("doc_id", LongType), StructField("text", StringType),
+      StructField("drop_reason", StringType)))
+    def canon(rows: Array[Row]) =
+      rows.map(r => r.getLong(r.fieldIndex("ingest_seq")) -> r.toSeq).toMap
+    Seq("true", "false").foreach { aqe =>
+      withSQLConf("spark.sql.adaptive.enabled" -> aqe) {
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 5), schema)
+        val fused = Dedup.dedupStage(df, textCol = "text")
+        val composed = Dedup.nearDedup(Dedup.exactDedup(df, textCol = "text"),
+          textCol = "text")
+        assert(fused.schema.map(f => (f.name, f.dataType)) ===
+          composed.schema.map(f => (f.name, f.dataType)), s"aqe=$aqe")
+        val out = fused.collect()
+        val (f, c) = (canon(out), canon(composed.collect()))
+        assert(out.length === rows.size && f.keySet === c.keySet, s"aqe=$aqe")
+        f.keys.foreach(k => assert(f(k) === c(k), s"aqe=$aqe seq $k"))
+        // the layout does exercise every case
+        def n(p: Row => Boolean) = out.count(p)
+        assert(n(r => r.getAs[Boolean]("is_dup_exact")) > 20 &&
+          n(r => r.getAs[Any]("is_dup_near") == true) > 5 &&
+          n(r => r.getAs[String]("text") == null) > 5, s"aqe=$aqe")
+        df.unpersist()
+      }
+    }
+    // an empty input plans as an RDD with no partitions at all
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(Dedup.dedupStage(empty, textCol = "text").collect().isEmpty)
+    empty.unpersist()
+  }
+
   test("Q1 quality score: pinned arithmetic from FIXTURES.md") {
     val df = Seq(
       (1.0, 500L, 1.0, false, 1.0),

@@ -219,44 +219,86 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("pipeline_full runtime: only narrow dedup shuffles, wide frame never window-shuffles") {
-    // dedupStage's narrow-shuffle form: both dedup windows run over a
-    // (seq, doomed, id, hash-key) projection — tens of bytes per row —
-    // and the wide pipeline frame (four text-sized columns + ~25
-    // metrics) reaches dedup through a persisted branch point, so the
-    // only hash-partitioned exchanges in the whole executed pipeline are
-    // the two narrow window shuffles. The flag join-back broadcasts at
-    // fixture scale (at corpus scale it degrades to ONE wide shuffle —
-    // still half the composed form's two). Pinning the FINAL adaptive
-    // plan guards the rewrite at the level that actually costs money.
-    val df = graft.queries.PipelineQueries.pipelineFull(spark, dir)
-    df.collect()
-    val finalPlan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val exchanges = """[+:]- Exchange hashpartitioning\(([^,]+)""".r
-      .findAllMatchIn(finalPlan).map(_.group(1)).toList
-    assert(exchanges.size === 2,
-      s"expected exactly the 2 narrow window shuffles, got $exchanges:\n$finalPlan")
-    assert(exchanges.exists(_.startsWith("__eh")) &&
-      exchanges.exists(_.startsWith("__nkk")),
-      s"shuffles must key on the narrow dedup projection, got $exchanges:\n$finalPlan")
-    assert(finalPlan.contains("BroadcastHashJoin"),
-      s"flag join-back must broadcast at fixture scale:\n$finalPlan")
+    // dedupStage's routed form: both dedup windows run over a narrow
+    // (pid, seq, doomed, id, hash-key) projection of the persisted
+    // pipeline frame (four text-sized columns + ~25 metrics), and the
+    // flags are routed to the partition their wide row lives in instead
+    // of being joined to it. Across EVERY execution the pipeline runs
+    // (the flags' own and the final action), the only exchanges are
+    // the two narrow windows plus that routing, none carries a text
+    // column, and nothing joins. Pinning the FINAL adaptive plans
+    // guards the rewrite at the level that actually costs money.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, ShufflePartitionIdPassThrough, SinglePartition}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.{col, length, sum}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    val (plans, shuffleBytes) =
+      try executedPlans(graft.queries.PipelineQueries.pipelineFull(spark, dir).collect())
+      finally spark.catalog.clearCache() // dedupStage's branch-point persist
+    val all = plans.flatMap(nodes)
+    val shown = plans.mkString("\n----\n")
+    val exchanges = all.collect { case e: ShuffleExchangeExec => e }
+    val keys = exchanges.map(_.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name
+      // a one-partition frame routes through a single-partition exchange
+      case _: ShufflePartitionIdPassThrough | SinglePartition => "routing"
+      case other => other.toString
+    })
+    assert(keys.sorted === Seq("__eh", "__nkk", "routing"),
+      s"expected the 2 narrow windows + the flag routing:\n$shown")
+    val textCols = Set("text", "text_norm", "text_deep_clean",
+      "text_pii_masked", "exact_canon_text", "near_key", "__canon", "__nk")
+    exchanges.foreach { e =>
+      assert(!e.output.exists(a => textCols(a.name)),
+        s"exchange carries a text column: ${e.output}:\n$shown")
+    }
+    assert(!all.exists(_.isInstanceOf[BaseJoinExec]), s"dedup joins:\n$shown")
+    // a wide row holds its text four times over (raw, norm, deep-clean,
+    // masked); all three narrow exchanges together write less than two
+    val textBytes = Tables.documents(spark, dir)
+      .agg(sum(length(col("text")))).head().getLong(0)
+    assert(shuffleBytes < 2 * textBytes,
+      s"dedup wrote $shuffleBytes shuffle bytes for $textBytes text bytes")
     // the persisted branch point prunes: the narrow branch reads only
-    // the 3 columns dedup needs, and the parquet scan only the 4 source
+    // the columns dedup needs, and the parquet scan only the source
     // columns — the scalar chain is materialized once, not re-derived
-    assert(finalPlan.linesIterator.exists(l => l.contains("InMemoryTableScan")
+    assert(shown.linesIterator.exists(l => l.contains("InMemoryTableScan")
         && l.contains("text_pii_masked") && !l.contains("text_norm")),
-      s"narrow branch must read a pruned cache projection:\n$finalPlan")
-    assert(finalPlan.contains("ReadSchema: struct<doc_id:bigint,text:string"),
-      s"parquet scan must prune to source columns:\n$finalPlan")
+      s"narrow branch must read a pruned cache projection:\n$shown")
+    assert(shown.contains("ReadSchema: struct<doc_id:bigint,text:string"),
+      s"parquet scan must prune to source columns:\n$shown")
     // the custom codegen expressions stay inlined in the fused plan
     // (r11: lang/toxicity signals moved from wordlist_hits-over-array
     // to the one-pass profile kernel; r12: the two profiles fused into
     // the single-walk text_langtox_stats)
-    val static = plan(df)
+    val static = plan(Pipeline.deepCleanAndPii(Pipeline.cleanAndFilter(
+      Pipeline.fromDocuments(Tables.documents(spark, dir)))))
     assert(static.contains("text_langtox_stats"),
       s"TextLangToxStats kernel missing:\n$static")
     assert(static.contains("nfkc"), s"NfkcNormalize missing:\n$static")
+  }
+
+  test("stage-2 text kernels compile to one call site each") {
+    // the ratios read the kernels inside `when` branches, where codegen
+    // does not share a call; cleanAndFilter stages each kernel once
+    val df = Pipeline.deepCleanAndPii(Pipeline.cleanAndFilter(
+      Pipeline.fromDocuments(Tables.documents(spark, dir))))
+    val code = df.queryExecution.executedPlan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+        w.doCodeGen()._2.body }.mkString("\n")
+    def sites(kernel: String) = code.split(java.util.regex.Pattern.quote(
+      s"graft.plans.$kernel$$.MODULE$$.stats("), -1).length - 1
+    assert(sites("CharClassStats") === 1, code)
+    // one on text_norm (stage 2), one on text_deep_clean (stage 3)
+    assert(sites("TokenTextStats") === 2, code)
   }
 
   test("robots gate: rule arrays broadcast, zero corpus-side exchange") {

@@ -1,6 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session, cheap). */
@@ -29,5 +37,56 @@ abstract class SparkTestBase extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs `body` and returns the executed (final, under AQE) plan of
+    * every SQL execution that reported to QueryExecutionListeners
+    * while it ran — actions, plus the named executions the engine
+    * runs itself (GraftSqlBridge.appendRouted) — and the shuffle bytes
+    * its tasks wrote. Events arrive asynchronously: waits until no job
+    * is open and no event arrived for three polls.
+    */
+  protected def executedPlans(body: => Unit): (Seq[SparkPlan], Long) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val shuffleBytes = new AtomicLong
+    val openJobs = new AtomicLong
+    val events = new AtomicLong
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); events.incrementAndGet()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        events.incrementAndGet()
+    }
+    val sl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        openJobs.incrementAndGet(); events.incrementAndGet()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        openJobs.decrementAndGet(); events.incrementAndGet()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        if (t.taskMetrics != null)
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        events.incrementAndGet()
+      }
+    }
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(sl)
+    try {
+      body
+      var last = -1L
+      var quiet = 0
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((quiet < 3 || openJobs.get() != 0) && System.nanoTime() < deadline) {
+        Thread.sleep(200)
+        val n = events.get()
+        if (n == last) quiet += 1 else { quiet = 0; last = n }
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(sl)
+      spark.listenerManager.unregister(qel)
+    }
+    (plans.asScala.toSeq, shuffleBytes.get())
   }
 }
