@@ -10,8 +10,8 @@ object Bench {
     val spark = Sizing.session(sfDir)
     // Untimed steady-state warm-up (JIT + codegen + parquet footers) on
     // the smallest SF. Different data dir -> timed runs below get no
-    // cached-plan/data reuse; clearCache drops any persisted sketches so
-    // every timed query builds its own state from scratch.
+    // cached-plan/data reuse, and each query's persists are released
+    // with its scope, so every timed query builds its own state.
     // Optional name filter for perf iteration: run (and warm) only the
     // listed queries (comma-separated). The graded run leaves it unset.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -23,10 +23,11 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (warmDir.nonEmpty && new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case NonFatal(_) => }
+        Persisted.owned {
+          try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
+          catch { case NonFatal(_) => }
+        }
       }
-      spark.catalog.clearCache()
     }
     // Untimed first-touch of the bench-scale tables (file listing,
     // footers, page cache) so the first timed query doesn't absorb IO
@@ -68,21 +69,19 @@ object Bench {
     // (their format is the contract), but it is reported on stderr as it
     // happens and listed on the FAILED_QUERIES line.
     val failed = collection.mutable.LinkedHashSet.empty[String]
+    // The query's persists are released by its scope AFTER the clock
+    // stops: it pays its own persists and none accumulate across the run.
     def timeOne(name: String): Unit = {
       val fn = selected(name)
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failed += name
+      val d = Persisted.owned {
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+        }
+        (System.nanoTime() - t0) / 1e9
       }
-      val d = (System.nanoTime() - t0) / 1e9
-      // sketch/overlap queries persist intermediates they cannot
-      // safely release themselves (Verify does the same); dropping
-      // them AFTER the clock stops keeps each query's timing honest
-      // (it pays its own persist) without cached frames accumulating
-      // across the run
-      spark.catalog.clearCache()
       timings(name) = timings.get(name).fold(d)(math.min(_, d))
     }
     (1 to repeat).foreach { _ => names.foreach(timeOne) }
@@ -95,21 +94,15 @@ object Bench {
     // bounded tail on a multi-pass run.
     if (repeat > 1 && names.size > 12) {
       // Settle the JVM first: after ~190 queries the heap carries every
-      // suite's garbage (codegen classes, broadcast remnants, spilled
-      // cache blocks), and a re-time that inherits that pressure can
-      // still read ~2.5x the fresh-JVM number (observed on
-      // q_quality_classifier: 3.5 s mid-suite vs 1.3 s isolated).
-      // Dropping leaked persistent RDDs and forcing a full GC before
-      // each isolated sample brings the re-time environment as close to
-      // a fresh JVM as one process allows.
-      def settle(): Unit = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
-      }
+      // suite's garbage (codegen classes, broadcast remnants), and a
+      // re-time that inherits that pressure can still read ~2.5x the
+      // fresh-JVM number (observed on q_quality_classifier: 3.5 s
+      // mid-suite vs 1.3 s isolated). A full GC before each isolated
+      // sample brings the re-time environment as close to a fresh JVM
+      // as one process allows.
       val slowest = names.sortBy(n => -timings(n)).take(12)
-      slowest.foreach { n => settle(); timeOne(n) }
-      slowest.foreach { n => settle(); timeOne(n) }
+      slowest.foreach { n => System.gc(); timeOne(n) }
+      slowest.foreach { n => System.gc(); timeOne(n) }
     }
     val results = names.map(n => n -> timings(n)).toMap
     // The driver captures only the LAST 2000 chars of stdout and sbt

@@ -109,12 +109,11 @@ object Orchestrator {
     * one (stage, kept, dropped) row per stage, and returns the last
     * read-back.
     *
-    * Cache ownership: the only persist a stage transform leaves behind
-    * is [[graft.ops.Dedup.dedupStage]]'s branch point, which it places
-    * on its input frame; every other persist is released inside its
-    * stage. So releasing each stage's input once the stage is written
-    * releases everything the run created, and frames the caller cached
-    * in the same session are left alone.
+    * Cache ownership ([[Persisted]]): each stage runs in its own
+    * [[Persisted.owned]] scope around its checkpoint writes, which
+    * releases what the stage transform registered (such as
+    * [[graft.ops.Dedup.dedupStage]]'s branch point) once the stage is
+    * written; frames the caller cached are left alone.
     */
   private def runStages(spark: SparkSession, outDir: String,
                         firstVersion: Int, dropPii: Boolean,
@@ -123,9 +122,8 @@ object Orchestrator {
     var cur = readVersion(spark, outDir, firstVersion - 1, inputSchema)
     val counts = earlier ++
       stages(dropPii).filter(_._1 >= firstVersion).map { case (v, name, fn) =>
-        val (kept, dropped, schema) =
-          try writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v))
-          finally cur.unpersist(blocking = false)
+        val (kept, dropped, schema) = Persisted.owned(
+          writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v)))
         cur = readVersion(spark, outDir, v, Some(schema))
         (s"v$v:$name", kept, dropped)
       }
@@ -214,23 +212,17 @@ object Orchestrator {
     // persist before each kept(): same pushdown-inlining rationale as
     // [[writeSplit]] — the stage-2 chain must not be substituted into
     // the filter condition (janino limit) or computed twice. The caches
-    // are only live inputs to the v3 write, so they are released right
-    // after it, like writeSplit's.
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // are only live inputs to the v3 write, whose scope releases them.
     val rowLocal: DataFrame => DataFrame = df => {
-      val s2 = Pipeline.cleanAndFilter(df).persist(StorageLevel.MEMORY_AND_DISK)
-      persisted += s2
-      val s3 = Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      persisted += s3
-      Filters.kept(s3)
+      val s2 = Persisted(Pipeline.cleanAndFilter(df))
+      Filters.kept(Persisted(Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)))
     }
-    val merged =
-      graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal)
-    val v3Rows =
-      try writeCounted(merged, versionPath(outDir, 3))
-      finally persisted.foreach(_.unpersist(blocking = false))
-    runStages(spark, outDir, 4, dropPii, Some(merged.schema),
+    val (v3Rows, v3Schema) = Persisted.owned {
+      val merged =
+        graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal)
+      (writeCounted(merged, versionPath(outDir, 3)), merged.schema)
+    }
+    runStages(spark, outDir, 4, dropPii, Some(v3Schema),
       Seq(("v3:incremental_prefix", v3Rows, -1L)))
   }
 

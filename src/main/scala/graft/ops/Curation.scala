@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text.TextMetrics
+import graft.Persisted
 
 /** Corpus-curation signals beyond the reference's own filter set — the
   * published heuristics a production pretraining pipeline layers on top
@@ -200,14 +201,12 @@ object Curation {
                textCol: String = "text"): DataFrame = {
     // the count table is at most |sources|·256 rows but feeds three
     // marginal branches — cached so the corpus explode runs once, not
-    // once per branch (released by the caller's clearCache, like the
-    // sketch persists)
-    val counts = df
+    // once per branch
+    val counts = Persisted(df
       .select(col(sourceCol), explode(TextMetrics.tokens(col(textCol))).as("__tok"))
       .withColumn("__bucket", dsirBucket(col("__tok")))
       .groupBy(sourceCol, "__bucket")
-      .agg(count(lit(1)).as("__cs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("__cs")))
     val srcTot = counts.groupBy(sourceCol).agg(sum("__cs").as("__ns"))
     val corpus = counts.groupBy("__bucket").agg(sum("__cs").as("__cc"))
     val corpusTot = corpus.agg(sum("__cc").as("__nc"))
@@ -357,18 +356,16 @@ object Curation {
     // identical modulo a 64-bit collision between two spans of one
     // corpus (p ≈ n²/2⁶⁵; ~1e-5 at the sf0.1 volume — row equality at
     // sf0.01/sf0.1 in OPTIMIZATION_r15.md, and the DuckDB oracle, which
-    // replays exact strings, re-verifies the hash).
-    val spans = df
+    // replays exact strings, re-verifies the hash). The span table feeds
+    // the span-frequency aggregate AND the per-doc join: persist, or the
+    // tokenize+explode+span-hash build runs twice.
+    val spans = Persisted(df
       .withColumn("__toks", TextMetrics.tokens(col(textCol)))
       .select(col(idCol), explode(
         when(size(col("__toks")) >= n,
           transform(sequence(lit(0), size(col("__toks")) - n),
             i => xxhash64(array_join(slice(col("__toks"), i + 1, lit(n)), " "))))
-          .otherwise(array().cast("array<long>"))).as("span"))
-      // feeds the span-frequency aggregate AND the per-doc join: persist
-      // or the tokenize+explode+span-hash build runs twice (released
-      // by the caller's clearCache, like the sketch persists)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise(array().cast("array<long>"))).as("span")))
     val dup = spans.groupBy("span")
       .agg(countDistinct(col(idCol)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -415,10 +412,9 @@ object Curation {
     // ONE tokenize pass: the persisted (id, token-array) projection
     // feeds both the position explode and the gram build — tokenize is
     // the regex-heavy corpus cost, and grams/toks re-deriving it
-    // independently would pay it twice (caller's clearCache releases)
-    val base = df
-      .select(col(idCol), TextMetrics.tokens(col(textCol)).as("__toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // independently would pay it twice
+    val base = Persisted(df
+      .select(col(idCol), TextMetrics.tokens(col(textCol)).as("__toks")))
     val toks = base
       .select(col(idCol), posexplode(col("__toks")).as(Seq("pos", "tok")))
     // Gram strings are FINGERPRINTED to xxhash64 at build (r15, same
@@ -430,20 +426,18 @@ object Curation {
     // (cold-JVM interleaved min-of-3). Identical results modulo a
     // 64-bit collision (p ≈ n²/2⁶⁵; row equality at sf0.01/sf0.1 in
     // OPTIMIZATION_r15.md, oracle hash re-verified).
-    val grams = base
+    // Persisted like dupSpans' span table: the gram frame feeds BOTH
+    // the duplicate-frequency aggregate and the marked-position join
+    // (r15 cold-JVM A/B: dropping it costs +0.3 s at sf0.1 even with
+    // the hashed stream). The first thing to drop if executor memory is
+    // the constraint (re-derivation is one extra pass over the cached
+    // token arrays).
+    val grams = Persisted(base
       .select(col(idCol), posexplode(
         when(size(col("__toks")) >= n,
           transform(sequence(lit(0), size(col("__toks")) - n),
             i => xxhash64(array_join(slice(col("__toks"), i + 1, lit(n)), " "))))
-          .otherwise(array().cast("array<long>"))).as(Seq("gpos", "gram")))
-      // persisted like dupSpans' span table: the gram frame feeds BOTH
-      // the duplicate-frequency aggregate and the marked-position join
-      // (r15 cold-JVM A/B: dropping it costs +0.3 s at sf0.1 even with
-      // the hashed stream). Node-local MEMORY_AND_DISK, released by
-      // the caller's clearCache; the first thing to drop if executor
-      // memory is the constraint (re-derivation is one extra pass over
-      // the cached token arrays).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise(array().cast("array<long>"))).as(Seq("gpos", "gram"))))
     val dup = grams.groupBy("gram")
       .agg(countDistinct(col(idCol)).as("__nd"))
       .filter(col("__nd") >= minDocs)
@@ -541,18 +535,16 @@ object Curation {
   def sourceOverlap(df: DataFrame, sourceCol: String = "source",
                     textCol: String = "text",
                     shingleSize: Int = 3): DataFrame = {
-    val grouped = df
+    // feeds the sizes aggregate + the pair explode — persist so the
+    // corpus tokenize/explode/group runs once, not per branch
+    val grouped = Persisted(df
       .filter(trim(coalesce(col(textCol), lit(""))) =!= "")
       .select(col(sourceCol).as("src"),
         explode(SketchDedup.shinglesFromTokens(
           TextMetrics.tokens(col(textCol)), shingleSize)).as("sh"))
       .groupBy(xxhash64(col("sh")).as("gh"))
       .agg(sort_array(collect_set(col("src"))).as("srcs"))
-      .select(col("srcs"))
-      // feeds the sizes aggregate + the pair explode — persist so the
-      // corpus tokenize/explode/group runs once, not per branch
-      // (released by the caller's clearCache, like the sketch persists)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("srcs")))
     val sizes = grouped.select(explode(col("srcs")).as("src"))
       .groupBy("src").agg(count(lit(1)).as("n_sh"))
     // all (a < b) pairs of the sorted source set, generated in-row —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text.TextMetrics
+import graft.Persisted
 
 /** Benchmark decontamination — the pretraining-pipeline op the reference
   * lacks but every production corpus build runs: flag training documents
@@ -126,10 +127,8 @@ object Decontaminate {
     // persist BEFORE the cross join: without it Catalyst inlines the
     // vector projection into the join output and re-tokenizes+rehashes
     // each corpus doc once per BENCHMARK row (measured 39.5 s vs ~1 s
-    // at sf0.1 — the textAnnTopK persist rationale; released by the
-    // caller's clearCache like the sketch persists)
-    val corpusVecs = vecs(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // at sf0.1 — the textAnnTopK persist rationale)
+    val corpusVecs = Persisted(vecs(corpus))
     corpusVecs
       .crossJoin(broadcast(bench))
       .withColumn("cos", Similarity.cosine(col("v"), col("bv")))
@@ -180,8 +179,7 @@ object Decontaminate {
       .toDF("bv", "t", "bucket")
     // persisted for the same re-tokenize reason as the exact form (two
     // consumers: the banded probe + the report's id spine)
-    val corpusVecs = vecs(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpusVecs = Persisted(vecs(corpus))
     val maxes = corpusVecs
       .select(col("id"), col("v"),
         posexplode(graft.plans.RpLshBuckets(col("v"), tables, nbits)))

@@ -114,6 +114,10 @@ object Dedup {
     * for the key itself (grouping is identical up to md5 collisions,
     * ~2^-128 per pair). `seqCol` must be unique per row, as
     * `ingest_seq` is.
+    *
+    * Cache: the input is the persisted branch point, registered with the
+    * caller's [[graft.Persisted.owned]] scope; outside a scope (the fused
+    * [[graft.Pipeline.run]]) it lives as a plain persist.
     */
   def dedupStage(df: DataFrame, textCol: String = "text_pii_masked",
                  seqCol: String = "ingest_seq"): DataFrame = {
@@ -123,10 +127,8 @@ object Dedup {
     // stage-2/3 regex pipeline at pipeline scale — on a second scan
     // (measured 7.1 s vs 4.5 s for q_pipeline_full at sf0.1), and the
     // partition ids the flags are routed by would name partitions of a
-    // different scan. Node-local materialization, not a shuffle. The
-    // persist is placed on the INPUT frame itself, so the caller
-    // releases it with `df.unpersist()` once the result is written
-    // (Orchestrator does so after every stage).
+    // different scan. Node-local materialization, not a shuffle, placed
+    // on the INPUT frame itself; a frame the caller cached keeps its cache.
     //
     // Columnar-cache compression is OFF for this one persist (r14 A/B
     // at the 100x layout, min-of-3): the frame is dominated by four
@@ -150,7 +152,7 @@ object Dedup {
     Dedup.ConfLock.synchronized {
       val prevComp = spark.conf.getOption(compKey)
       spark.conf.set(compKey, "false")
-      try df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try graft.Persisted(df)
       finally prevComp match {
         case Some(v) => spark.conf.set(compKey, v)
         case None => spark.conf.unset(compKey)
@@ -294,17 +296,15 @@ object Dedup {
     * aggregates: per-batch totals directly, and min-batch-per-hash →
     * per-batch first-sighting counts. The final join touches two
     * batch-keyed slivers (rows = number of batches). Nothing
-    * corpus-sized is ever joined or broadcast. (The persist is released
-    * by the caller's clearCache, like the sketch caches.)
+    * corpus-sized is ever joined or broadcast.
     */
   def noveltyCurve(df: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text",
                    batchSize: Int = 100): DataFrame = {
-    val counts = df.select(
+    val counts = graft.Persisted(df.select(
         floor(col(idCol) / batchSize).cast("long").as("batch"),
         md5(coalesce(col(textCol), lit(""))).as("__h"))
-      .groupBy("__h", "batch").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("__h", "batch").agg(count(lit(1)).as("n")))
     val totals = counts.groupBy("batch").agg(sum("n").as("n_docs"))
     val novel = counts.groupBy("__h").agg(min("batch").as("batch"))
       .groupBy("batch").agg(count(lit(1)).as("n_novel"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.Persisted
 
 /** Duplicate-cluster construction: connected components over near-dup
   * pair edges (from [[SketchDedup]] MinHash/SimHash/Jaccard pair
@@ -47,7 +48,9 @@ object DupClusters {
     // The edge list often hides an expensive generator plan (LSH / Jaccard
     // self-join); persist it so the size probe doesn't evaluate that plan
     // a second time for the collect (local) / edges union (distributed).
-    pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    // A cache the caller already holds on `pairs` is used and left alone.
+    val mine = pairs.storageLevel == StorageLevel.NONE
+    if (mine) pairs.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val nEdges = pairs.count()
       if (nEdges <= smallGraphEdges)
@@ -55,7 +58,7 @@ object DupClusters {
       else connectedComponentsDistributed(pairs, idA, idB, maxIter)
       // both paths finish materialized (driver rows / localCheckpoint),
       // so releasing the input here cannot re-trigger the generator
-    } finally pairs.unpersist(blocking = false)
+    } finally if (mine) pairs.unpersist(blocking = false)
   }
 
   /** Driver union-find with path compression for small edge lists. */
@@ -87,28 +90,15 @@ object DupClusters {
   /** Distributed pointer-jumping label propagation (see object doc). */
   private def connectedComponentsDistributed(pairs: DataFrame, idA: String,
                                              idB: String, maxIter: Int): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
     // localCheckpoint persists at the RDD layer, where Dataset.unpersist
-    // can't reach — without explicit cleanup every round's checkpoint
-    // blocks accumulate until GC-driven ContextCleaner gets around to
-    // them. Track the RDD ids each checkpoint registers and free the
-    // previous round's once the next is materialized. (Diffing
-    // getPersistentRDDs assumes no concurrent persists on this session —
-    // fine inside one driver-side loop.)
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = df.localCheckpoint() // eager: materializes AND pins plan depth
-      (cp, sc.getPersistentRDDs.keySet.diff(before).toSet)
-    }
-    def freeRdds(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+    // can't reach. Each round frees the previous round's checkpoint once
+    // the next is materialized; the last round's, which the returned
+    // labels read, belongs to the caller's scope (graft.Persisted).
+    val edges = Persisted(pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
-    var (labels, labelRddIds) = checkpointTracked(
+    var labels = Persisted.checkpoint( // materializes AND pins plan depth
       edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
 
@@ -126,14 +116,13 @@ object DupClusters {
       // pointer jump: label(label(id)) — labels only ever shrink, so the
       // looked-up label is always <= the current one when present
       val jump = stepped.select(col("id").as("j_id"), col("label").as("j_label"))
-      val (jumped, newIds) = checkpointTracked(
+      val jumped = Persisted.checkpoint(
         stepped.join(jump, col("label") === col("j_id"), "left")
           .select(col("id"), col("old_label"),
             least(col("label"), coalesce(col("j_label"), col("label"))).as("label")))
       val changed = jumped.filter(col("label") =!= col("old_label")).count()
-      freeRdds(labelRddIds) // jumped is materialized; last round's blocks can go
+      Persisted.dropCheckpoint(labels) // jumped is materialized
       labels = jumped.select("id", "label")
-      labelRddIds = newIds
       converged = changed == 0
       iter += 1
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text.TextMetrics
+import graft.Persisted
 
 /** Model-free text embeddings via the feature-hashing trick
   * (Weinberger et al. 2009): bucket = md5-hash of the token into
@@ -92,16 +93,14 @@ object HashedEmbed {
   def textNearDup(df: DataFrame, idCol: String = "doc_id",
                   textCol: String = "text", threshold: Double = 0.9,
                   nbits: Int = 8, tables: Int = 8, dim: Int = Dim): DataFrame = {
-    val vecs = Skew.ensureParallelism(
+    // banding reads the vectors twice (both join sides) and the verify
+    // joins twice more: persist so the text is hashed once per doc
+    val vecs = Persisted(Skew.ensureParallelism(
         df.select(col(idCol).cast("long").as("vec_id"), col(textCol).as("__t")))
       .select(col("vec_id"),
         hashedVector(TextMetrics.tokens(col("__t")), dim).as("embedding"))
       .filter(aggregate(transform(col("embedding"), x => x * x),
-        lit(0.0), (a, x) => a + x) > 0.0)
-      // banding reads the vectors twice (both join sides) and the
-      // verify joins twice more: persist so the text is hashed once
-      // per doc (released by the caller's clearCache)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        lit(0.0), (a, x) => a + x) > 0.0))
     Similarity.nearDupPairsRpLsh(vecs, threshold, nbits, tables)
   }
 
@@ -117,15 +116,13 @@ object HashedEmbed {
   def textAnnTopK(df: DataFrame, idCol: String = "doc_id",
                   textCol: String = "text", nQueries: Int = 5,
                   k: Int = 5, dim: Int = Dim): DataFrame = {
-    val vecs = df.select(col(idCol).cast("long").as("vec_id"),
+    // feeds both the query side and the corpus side of the scored
+    // join — persist so tokenize+hash runs once per doc, not twice
+    val vecs = Persisted(df.select(col(idCol).cast("long").as("vec_id"),
         hashedVector(TextMetrics.tokens(col(textCol)), dim).as("v"))
       .withColumn("__n2",
         aggregate(transform(col("v"), x => x * x), lit(0.0), (a, x) => a + x))
-      .filter(col("__n2") > 0.0)
-      // feeds both the query side and the corpus side of the scored
-      // join — persist so tokenize+hash runs once per doc, not twice
-      // (released by the caller's clearCache, like the sketch persists)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("__n2") > 0.0))
     val q = vecs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val scored = vecs

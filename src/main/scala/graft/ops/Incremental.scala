@@ -40,16 +40,11 @@ object Incremental {
         md5(coalesce(col(textCol), lit(""))).as("fingerprint"))
     // the diff feeds BOTH union branches: persist the (id, status)
     // sliver — ids only, never text — or each branch re-scans and
-    // re-fingerprints both snapshots. RDD-level persist (the Pack
-    // convention), NOT catalog-level: the blocks' lifetime then
-    // follows the result frame's lineage and ContextCleaner releases
-    // them once the caller drops it — a library caller (the
-    // production incrementalRun CLI never calls clearCache) cannot
-    // accumulate pinned cache entries across calls.
+    // re-fingerprints both snapshots.
     val diffed = SnapshotDiff.diff(fps(prev), fps(cur), idCol)
       .select(col(idCol), col("status"))
     val d = cur.sparkSession.createDataFrame(
-      diffed.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      graft.Persisted(diffed.rdd),
       diffed.schema)
     val todo = d.filter(col("status").isin("added", "changed"))
       .select(idCol)

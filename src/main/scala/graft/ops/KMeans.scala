@@ -97,23 +97,24 @@ object KMeans {
         .select(col("id"), col("best.cluster").as("cluster"),
           expr(s"best.__dist div $Quant").as("dist_q"), col("qv"))
 
-    var cents = centroidsOf(
-      base.withColumn("cluster", pmod(col("id"), lit(k)).cast("int")))
-    var assigned = assign(cents)
-    for (i <- 2 to iters) {
+    try {
+      var cents = centroidsOf(
+        base.withColumn("cluster", pmod(col("id"), lit(k)).cast("int")))
+      var assigned = assign(cents)
+      for (i <- 2 to iters) {
+        cents = centroidsOf(assigned)
+        assigned = assign(cents)
+      }
       cents = centroidsOf(assigned)
-      assigned = assign(cents)
-    }
-    cents = centroidsOf(assigned)
-    // materialize the final assignment BEFORE releasing the cached
-    // input: the returned frame is lazy, and without this every caller
-    // evaluation would recompute the whole assignment subtree uncached
-    // (semDedup references it three times). localCheckpoint also pins
-    // plan depth, like the connected-components loop.
-    val out = assigned.select(col("id").as(idCol), col("cluster"),
-      col("dist_q")).localCheckpoint()
-    base.unpersist(blocking = false)
-    (out, cents)
+      // materialize the final assignment BEFORE releasing the cached
+      // input: the returned frame is lazy, and without this every caller
+      // evaluation would recompute the whole assignment subtree uncached
+      // (semDedup references it three times). localCheckpoint also pins
+      // plan depth, like the connected-components loop; its blocks
+      // belong to the caller's scope.
+      (graft.Persisted.checkpoint(assigned.select(col("id").as(idCol),
+        col("cluster"), col("dist_q"))), cents)
+    } finally base.unpersist(blocking = false)
   }
 
   /** The collected fast path — every step mirrors the distributed one

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.Persisted
 
 /** Sequence packing — the training-side op downstream of sharding: a
   * pretraining loader concatenates every document's tokens into one
@@ -50,18 +51,12 @@ object Pack {
     // real pipeline (curation budget stage at the 100x layout:
     // 81.2 -> 67.9 s, q_curation_e2e 218.7 -> 197.5 s min-of-3); a
     // cheap-scan upstream (q_budget_select at 10x) measures flat — the
-    // cache write-out roughly prices one extra scan. RDD-level persist
-    // (not catalog/DataFrame-level) so the blocks' lifetime follows
-    // the RESULT frame's: ContextCleaner unpersists automatically once
-    // the caller drops the returned DataFrame (whose lineage is the
-    // only reference) — a library caller can't accumulate cache
-    // entries across calls the way a catalog persist would without an
-    // external clearCache.
+    // cache write-out roughly prices one extra scan. RDD-level persist:
+    // the passes below are RDD operations over Rows.
     val sorted = df.repartitionByRange(parts, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
     val valIdx = sorted.schema.fieldIndex(valCol)
-    val rdd = sorted.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = Persisted(sorted.rdd)
     // pass 1: one partial sum per partition -> driver prefix sum
     val partSums = rdd
       .mapPartitionsWithIndex { (i, it) =>
@@ -107,13 +102,11 @@ object Pack {
     val parts = math.max(df.rdd.getNumPartitions, 1)
     val all = col(groupCol) +: orderCols
     // persisted for the same two-pass reason as withRunningTotalOrdered
-    // (and at the RDD level for the same ContextCleaner lifecycle)
     val sorted = df.repartitionByRange(parts, all: _*)
       .sortWithinPartitions(all: _*)
     val valIdx = sorted.schema.fieldIndex(valCol)
     val grpIdx = sorted.schema.fieldIndex(groupCol)
-    val rdd = sorted.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = Persisted(sorted.rdd)
     // pass 1: per-partition per-group partials (insertion-ordered —
     // groups are contiguous runs within a sorted partition)
     val partGroupSums = rdd.mapPartitionsWithIndex { (i, it) =>
@@ -191,8 +184,8 @@ object Pack {
     * parity-pinned in PackSpec.
     *
     * When skew IS detected the input is persisted inside the helper
-    * (released by the caller's clearCache, like every multi-consumer
-    * frame in the engine): the two branch filters then partition ONE
+    * (released by the consuming scope, see [[graft.Persisted]]): the
+    * two branch filters then partition ONE
     * materialized frame, so even a non-deterministic upstream (sample,
     * uuid, a directory being rewritten mid-read) cannot drop or
     * duplicate rows across the union. The routing scan itself is a
@@ -224,7 +217,7 @@ object Pack {
     val probe = bigKeysOf(df).limit(inListMax + 1).collect().map(_.get(0)).toSeq
     if (probe.isEmpty) windowed(df)
     else {
-      val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cached = Persisted(df)
       val (smallIn, bigIn) =
         if (probe.size <= inListMax) {
           val isBig = col(groupCol).isInCollection(probe)
@@ -237,8 +230,7 @@ object Pack {
           // through the anti join to the window path, same as the
           // predicate shape. Persisted: both joins consume it, and it is
           // at most rows/skewThreshold rows.
-          val keys = bigKeysOf(cached)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val keys = Persisted(bigKeysOf(cached))
           (cached.join(broadcast(keys), Seq(groupCol), "left_anti"),
             cached.join(broadcast(keys), Seq(groupCol), "left_semi"))
         }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Persisted
 
 /** Weighted PageRank over an edge list — the host-authority prior a
   * web-scale corpus build uses as a quality signal (crawl frontier
@@ -42,9 +42,8 @@ object PageRank {
     // pin it, because its subtree would otherwise be re-evaluated for
     // the node census AND once per appearance of `share` in the final
     // unrolled plan.
-    val e = edges.select(col("src"), col("dst"),
-      col("weight").cast("long").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = Persisted(edges.select(col("src"), col("dst"),
+      col("weight").cast("long").as("w")))
     // materialize the edge cache BEFORE the node census: the census is
     // a union whose two branches both scan `e`, and against a cache
     // that is only marked-not-materialized those two branches RACE —
@@ -53,9 +52,8 @@ object PageRank {
     // 6.6 s vs 1.8 s for the join itself, OPTIMIZATION_r14.md). One
     // count() runs the expensive subtree exactly once.
     e.count()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = Persisted(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     if (n == 0) {
       // empty graph: empty result, not a driver-side division by zero
@@ -64,10 +62,9 @@ object PageRank {
       return nodes.withColumn("rank_q", lit(0L))
     }
     val outW = e.groupBy("src").agg(sum("w").as("ww"))
-    val share = e.join(outW, Seq("src"))
+    val share = Persisted(e.join(outW, Seq("src"))
       .select(col("src"), col("dst"),
-        expr(s"(w * ${Quant}L) div ww").as("share_q"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        expr(s"(w * ${Quant}L) div ww").as("share_q")))
     share.count() // materialize before the per-round fan-out …
     e.unpersist(blocking = false) // … after which the raw edges are dead
     val teleQ = (Quant - dampingQ) / n

@@ -135,7 +135,7 @@ object Pq {
         // past the gate: the original distributed per-subspace loop
         val staged = vecs
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val out = (0 until m).flatMap { mi =>
+        try (0 until m).flatMap { mi =>
           val (_, cents) = KMeans.lloyd(
             staged.select(col("vec_id"),
               slice(col("__vec"), lit(mi * sub + 1), lit(sub)).as("embedding")),
@@ -143,9 +143,7 @@ object Pq {
           cents.collect().sortBy(_.getInt(0)).zipWithIndex.map { case (r, code) =>
             (mi, code, r.getSeq[Long](1).map(_.toDouble / KMeans.Quant))
           }
-        }
-        staged.unpersist(blocking = false)
-        out
+        } finally staged.unpersist(blocking = false)
       }
     rows.toDF("m_idx", "code", "cv")
   }

@@ -223,11 +223,10 @@ object Report {
     */
   def sketchDistinct(df: DataFrame, keyCol: String,
                      groupCol: String): DataFrame = {
-    val perGroup = df
+    val perGroup = graft.Persisted(df
       .groupBy(col(groupCol).cast("string").as("group"))
       .agg(hll_sketch_agg(col(keyCol)).as("sk"),
-        count(lit(1)).as("n_rows"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).as("n_rows")))
     val per = perGroup.select(col("group"), col("n_rows"),
       hll_sketch_estimate(col("sk")).as("n_distinct_est"))
     val all = perGroup

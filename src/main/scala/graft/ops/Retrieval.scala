@@ -51,16 +51,14 @@ object Retrieval {
     // and once for corpus stats, dominated this operator's runtime).
     // The persisted frame is corpus-length but NARROW — (id, dl,
     // ≤|query terms| matched tokens) — never the token arrays
-    // themselves; released by the caller's clearCache like the sketch
-    // persists.
-    val perDoc = df
+    // themselves.
+    val perDoc = graft.Persisted(df
       .withColumn("__toks", TextMetrics.tokens(col(textCol)))
       .select(col(idCol), size(col("__toks")).cast("long").as("dl"),
         // compiled hash-probe keep (duplicates preserved for tf) — the
         // interpreted filter+isin lambda this replaces paid a per-token
         // frame corpus-wide (graft.plans.TokensInSet parity spec)
-        graft.plans.TokensInSet(col("__toks"), allTerms).as("__qt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        graft.plans.TokensInSet(col("__toks"), allTerms).as("__qt")))
 
     // (doc, dl, term) for query-term hits only — explode of the
     // pre-filtered sliver array, never the full token stream. Two

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Persisted
 
 /** Quality scoring + mixture assignment (SURVEY.md §2.10, Q1/Q2).
   *
@@ -132,13 +133,13 @@ object Score {
       .select(col("id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     // cb is vocab²-bounded but feeds two branches (the marginal and the
     // scoring join) — persist so the corpus-wide explode aggregates once
-    // (released by the caller's clearCache, like sourceKl's counts).
+    // (the two branches' plans differ in inferred filters, so exchange
+    // reuse cannot share the shuffle).
     // The start-marginal joins into cb on w1 — a cheap shuffle of the
     // counts table, NOT a broadcast: distinct first tokens are
     // vocab-sized, and web-scale vocabularies (urls, numbers, typos)
     // outgrow any broadcast budget.
-    val cb = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cb = Persisted(bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")))
     val cs = cb.groupBy("w1").agg(sum("cb").as("cs"))
     val scored = bi
       .join(cb.join(cs, Seq("w1")), Seq("w1", "w2"))
@@ -169,23 +170,20 @@ object Score {
     * a sliver BEFORE the two unigram enrich joins (counts-table keyed
     * — never a corpus shuffle). PMI is quantized `floor(·*1e4)` per
     * pair, the established log-parity contract with the oracle.
-    * Both count tables persist (each feeds its total + a join);
-    * released by the caller's clearCache, same contract as
+    * Both count tables persist (each feeds its total + a join), like
     * [[bigramLogprobs]]'s `cb`.
     */
   def pmiCollocations(df: DataFrame, textCol: String,
                       minCount: Int = 5): DataFrame = {
     val toksDf = df
       .withColumn("__toks", graft.text.TextMetrics.tokens(col(textCol)))
-    val uni = toksDf.select(explode(col("__toks")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val uni = Persisted(toksDf.select(explode(col("__toks")).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("c1")))
     val n1 = uni.agg(sum("c1").as("__n1"))
-    val cb = toksDf
+    val cb = Persisted(toksDf
       .select(explode(ngramStructs(col("__toks"), 2)).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val n2 = cb.agg(sum("c12").as("__n2"))
     cb.filter(col("c12") >= minCount)
       .join(uni.select(col("tok").as("w1"), col("c1").as("c1a")), Seq("w1"))
@@ -248,9 +246,8 @@ object Score {
     // cb2 rows) — one tiny agg instead of a second pass over the
     // persisted bigram type table; n1r (vocab-sized) persists for its
     // two consumers (the t2 action + the scoring-chain join).
-    val n1r = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-      .groupBy(col("w2").as("w3")).agg(count(lit(1)).as("n1r"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n1r = Persisted(bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
+      .groupBy(col("w2").as("w3")).agg(count(lit(1)).as("n1r")))
     val t2 = n1r.agg(sum("n1r")).collect()(0).getLong(0).toDouble
     // association pinned to mirror the oracle SQL token-for-token
     val p2 = (greatest(col("n1p23").cast("double") - discount, lit(0.0))
@@ -340,9 +337,8 @@ object Score {
       .select(col("id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     // pair counts feed two consumers (the type-total action + the
     // window chain) — persist so the corpus-wide explode aggregates
-    // once (released by the caller's clearCache, like bigramLogprobs)
-    val cb = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // once
+    val cb = Persisted(bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb")))
     // |bigram types| — ONE driver long off the (vocab²-bounded) type
     // table, inlined as a literal so the oracle's CROSS JOIN total and
     // this plan see the identical double

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.{Curation, KMeans}
+import graft.Persisted
 
 /** Published corpus-curation heuristics as standalone oracle-checked
   * queries: Gopher quality rules, Gopher/RefinedWeb repetition signals,
@@ -654,10 +655,9 @@ object CurationQueries {
           .as("text"))
       .withColumn("label", lit(1))
     val pos = docs.withColumn("label", lit(0))
-    val feat = pos.unionByName(neg).select(col("doc_id"), col("label"),
+    val feat = Persisted(pos.unionByName(neg).select(col("doc_id"), col("label"),
       Classifier.features(TextMetrics.tokens(col("text")), ClassifierDim)
-        .cast("array<long>").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .cast("array<long>").as("x")))
     val isTrain = pmod(col("doc_id"), lit(10)) < 7
     // the train split is a corpus FRACTION, not a fixed-size sliver, so
     // it goes through the size-gated front door: collected only below
@@ -755,15 +755,13 @@ object CurationQueries {
     // the scored sliver (4 longs/doc) feeds THREE consumers — the
     // tertile count, the two-pass rank, and the unscorable union —
     // so persist it or the whole KN scoring DAG runs three times
-    // (released by the caller's clearCache, like the op's pair table)
-    val scored = Score.knBigramLogprobs(
+    val scored = Persisted(Score.knBigramLogprobs(
       Tables.documents(s, dir), "doc_id", "text")
       .withColumn("ppl_q",
         when(col("n_bigrams") > 0,
           floor((-col("kn_lp_sum_q")).cast("double")
             / col("n_bigrams").cast("double")))
-          .otherwise(lit(0L)).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise(lit(0L)).cast("long")))
     val pos = scored.filter(col("n_bigrams") > 0)
     val n = pos.count()
     val ranked = Shard.withGlobalSeq(pos, Seq("ppl_q", "doc_id"), "__rk")

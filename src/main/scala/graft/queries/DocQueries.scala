@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{Dedup, Filters, Score}
 import graft.text.{LangId, Normalize, Pii, TextMetrics, Toxicity, TrigramLangModel}
+import graft.Persisted
 
 /** Pipeline operators exposed as standalone queries over the `documents`
   * table, each paired with DuckDB oracle SQL (SURVEY.md §5.4).
@@ -1412,15 +1413,14 @@ object DocQueries {
     // measured at the 100x layout: q_curation_e2e 194.0 -> 132.5 s
     // min-of-3 — the assembled chain now beats its own budget-only
     // prefix because every stage reuses the cached gates/dd)
-    val gates = docs.select("doc_id").join(g, Seq("doc_id"))
-      .join(c, Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val gates = Persisted(docs.select("doc_id").join(g, Seq("doc_id"))
+      .join(c, Seq("doc_id")))
     val survivors = gates
       .filter(col("gopher_reason").isNull && col("c4_reason").isNull)
       .select("doc_id")
-    val dd = Dedup.exactDedup(docs.join(survivors, Seq("doc_id")), textCol = "text")
-      .select(col("doc_id"), col("is_dup_exact"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dd = Persisted(
+      Dedup.exactDedup(docs.join(survivors, Seq("doc_id")), textCol = "text")
+        .select(col("doc_id"), col("is_dup_exact")))
     val scored = qualityScore(s, dir)
       .select("doc_id", "token_count", "quality_score")
       .join(dd.filter(!col("is_dup_exact")).select("doc_id"), Seq("doc_id"))

@@ -635,8 +635,7 @@ object MultimodalQueries {
     * that EXISTS but fails to open (corrupt footer, permissions) also
     * degrades, but logs a WARN first so an operator sees the amortized
     * stage silently re-decoding (ADVICE r12). Persisted — every
-    * consumer fans out over it (band projections + verify sides);
-    * released by the caller's clearCache.
+    * consumer fans out over it (band projections + verify sides).
     */
   private def sigSlice(s: SparkSession, dir: String, modality: String,
                        chunks: Int): DataFrame = {
@@ -677,10 +676,9 @@ object MultimodalQueries {
         }
       }
       .getOrElse(mediaSignatures(s, dir))
-    src.filter(col("modality") === modality)
+    graft.Persisted(src.filter(col("modality") === modality)
       .select(col("media_id") +:
-        (0 until chunks).map(j => col(s"c$j").cast("int").as(s"c$j")): _*)
-      .persist()
+        (0 until chunks).map(j => col(s"c$j").cast("int").as(s"c$j")): _*))
   }
 
   def mediaNearDup(s: SparkSession, dir: String): DataFrame =

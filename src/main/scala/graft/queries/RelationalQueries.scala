@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.Shard
+import graft.Persisted
 
 /** Second relational batch (SURVEY.md §7 step 7, round 2): subquery
   * decorrelation, CUBE grouping sets, pivot/unpivot reshaping, set
@@ -633,9 +634,8 @@ object RelationalQueries {
     */
   def cmsFreq(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.CountMin
-    val toks = Tables.documents(s, dir)
-      .select(explode(graft.text.TextMetrics.tokens(col("text"))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = Persisted(Tables.documents(s, dir)
+      .select(explode(graft.text.TextMetrics.tokens(col("text"))).as("tok")))
     val sk = CountMin.sketch(toks, "tok")
     val probes = toks
       .filter(substring(md5(col("tok")), 1, 1).isin("0", "1", "2", "3"))
@@ -784,11 +784,10 @@ object RelationalQueries {
     // persisted vs 4.49 s without — KEPT. (The MG summary needs the
     // gram STRINGS, so the dupSpans xxhash64-fingerprint footprint fix
     // cannot apply here; the cache stays the documented trade.)
-    val grams = docs
+    val grams = Persisted(docs
       .select(col("text"),
         explode(sequence(lit(1), length(col("text")) - 2)).as("i"))
-      .select(col("text").substr(col("i"), lit(3)).as("tg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("text").substr(col("i"), lit(3)).as("tg")))
     val retained = grams.agg(HeavyHitters.mgTopK(k)(col("tg")).as("hh"))
       .select(explode(col("hh.items")).as("it"))
       .select(col("it.tok").as("tg"), col("it.est").as("est"))
@@ -853,11 +852,10 @@ object RelationalQueries {
     // persisted for the same two-consumer reason as q_heavy_hitters
     // (summary pass + exact-count probe); see the A/B note there
     // (r15 cold-JVM re-A/B: 3.71 s persisted vs 5.56 s without — KEPT)
-    val grams = docs
+    val grams = Persisted(docs
       .select(pmod(col("doc_id"), lit(3)).as("batch"), col("text"),
         explode(sequence(lit(1), length(col("text")) - 2)).as("i"))
-      .select(col("batch"), col("text").substr(col("i"), lit(3)).as("tg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("batch"), col("text").substr(col("i"), lit(3)).as("tg")))
     // The ≤3k-row per-batch SUMMARY table is persisted AND eagerly
     // materialized: the three batchSummary filters below are three
     // references to this aggregate inside ONE union plan, and a lazy
@@ -869,11 +867,10 @@ object RelationalQueries {
     // own contract: "each batch is summarized ONCE". The same trick as
     // knPerplexity's rank count; the bench times it (the count runs at
     // DataFrame-build time, inside the timed region).
-    val perBatch = grams.groupBy("batch")
+    val perBatch = Persisted(grams.groupBy("batch")
       .agg(HeavyHitters.mgTopK(k)(col("tg")).as("hh"))
       .select(col("batch"), explode(col("hh.items")).as("it"))
-      .select(col("batch"), col("it.tok").as("tok"), col("it.est").as("est"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("batch"), col("it.tok").as("tok"), col("it.est").as("est")))
     perBatch.count()
     def batchSummary(b: Int) =
       perBatch.filter(col("batch") === b).select(col("tok"), col("est"))

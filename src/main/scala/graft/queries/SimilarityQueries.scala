@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ops.{Decontaminate, SketchDedup, Similarity}
+import graft.Persisted
 
 /** Similarity-search and sketch-dedup queries over the embeddings and
   * documents tables (builder brief: dedup + ANN as first-class ops).
@@ -618,9 +619,9 @@ object SimilarityQueries {
     // verify join); in production it is a parquet-backed state table
     // (cheap to scan twice, never re-sketched), but here it is computed
     // in-query — persist it or the 16-digest md5 sketch of the corpus
-    // half runs once per reference (caller's clearCache releases)
-    val corpusState = SketchDedup.minhashMd5SketchTable(corpus, "doc_id", "text")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // half runs once per reference
+    val corpusState =
+      Persisted(SketchDedup.minhashMd5SketchTable(corpus, "doc_id", "text"))
     val r = SketchDedup.incrementalFromSketches(batch,
       SketchDedup.minhashMd5SketchTable(batch, "doc_id", "text"),
       corpusState,
@@ -1254,8 +1255,8 @@ object SimilarityQueries {
       .select(col("doc_id"), col("icp_pos"))
     // consumed four times (both sides of both adjacency self-joins):
     // persist, or the ordering's two-pass numbering re-runs per consumer
-    val withPos = graft.ops.Shard.withGlobalSeq(
-      vecs.join(ordered, Seq("doc_id")), "doc_id", "base_pos").persist()
+    val withPos = Persisted(graft.ops.Shard.withGlobalSeq(
+      vecs.join(ordered, Seq("doc_id")), "doc_id", "base_pos"))
     def adjSum(posCol: String): DataFrame =
       withPos.as("f").join(withPos.as("g"),
           col(s"f.$posCol") + 1 === col(s"g.$posCol"))

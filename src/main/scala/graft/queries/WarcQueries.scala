@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sources.Warc
 import graft.text.Normalize
+import graft.Persisted
 
 /** WARC ingest queries — the Common Crawl container, oracle-checked.
   *
@@ -418,9 +419,8 @@ object WarcQueries {
     // chain is ONE shuffle-free pass; persisted because consumed twice
     // (winners + final), and recomputing means re-parsing every gzip
     // member
-    val canon = Robots.gate(withUrl, rules)
-      .withColumn("__canon", md5(Normalize.canonExact(col("clean_text"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val canon = Persisted(Robots.gate(withUrl, rules)
+      .withColumn("__canon", md5(Normalize.canonExact(col("clean_text")))))
     val winners = canon.filter(col("allowed"))
       .groupBy("__canon").agg(min(col("doc_id")).as("__winner"))
     canon.join(winners, Seq("__canon"), "left")
@@ -848,17 +848,17 @@ object WarcQueries {
           array(lit("/doc/"), lit("/private/"), lit("/page/"), lit("/doc/x")),
           (col("doc_id") % 4).cast("int") + 1),
         col("doc_id").cast("string")).as("path"))
-    // persisted at the RDD level (ContextCleaner lifecycle): the gated
-    // frame feeds THREE consumers — the allowed branch (whose hybrid
-    // scheduler additionally runs a routing count-agg before its own
-    // pass) and the blocked branch — and its upstream is the whole
+    // persisted at the RDD level: the gated frame feeds THREE
+    // consumers — the allowed branch (whose hybrid scheduler
+    // additionally runs a routing count-agg before its own pass) and
+    // the blocked branch — and its upstream is the whole
     // collapse-window + robots-join chain; without the persist that
     // chain executes once per consumer (Pack's hybrid scaladoc:
     // "callers with an expensive upstream persist it first")
     val gated = {
       val g = Robots.gate(urls, fixtureRules(s))
       g.sparkSession.createDataFrame(
-        g.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        Persisted(g.rdd),
         g.schema)
     }
     val allowed = gated.filter(col("allowed"))

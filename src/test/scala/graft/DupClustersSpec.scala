@@ -15,21 +15,30 @@ class DupClustersSpec extends SparkTestBase {
     import spark.implicits._
     // components: {1,2,3,4} (a chain 1-2-3-4), {10,11}, {20,21,22} (star)
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
-      (20L, 21L), (20L, 22L)).toDF("id_a", "id_b")
+      (20L, 21L), (20L, 22L)).toDF("id_a", "id_b").persist()
     val got = DupClusters.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
+    // the op releases only what it persisted, never the caller's cache
+    assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "connected components evicted the caller's cached pairs")
+    pairs.unpersist(blocking = true)
   }
 
   test("connected components converge on a long chain (distributed path)") {
     import spark.implicits._
     val chain = (0L until 40L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("id_a", "id_b")
-    // force the pointer-jumping path (smallGraphEdges = 0)
-    val got = DupClusters.connectedComponents(chain, smallGraphEdges = 0L).collect()
+    // force the pointer-jumping path (smallGraphEdges = 0); every
+    // round's checkpoint is gone once the caller's scope ends
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = Persisted.owned(
+      DupClusters.connectedComponents(chain, smallGraphEdges = 0L).collect())
     assert(got.length == 40)
     assert(got.forall(_.getLong(1) == 0L), "all labels must reach the min id")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "connected components left checkpoint blocks behind")
   }
 
   test("property: random graphs match a driver-side union-find") {

@@ -19,14 +19,14 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      val txt =
+      val txt = Persisted.owned {
         try fn(spark, dir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         catch { case NonFatal(e) => s"ERROR: ${e.getMessage}" }
+      }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
         txt.getBytes("UTF-8"))
-      spark.catalog.clearCache()
       println(s"dumped $n")
     }
     spark.stop()

@@ -240,9 +240,8 @@ class PlanSpec extends SparkTestBase {
       case q: QueryStageExec => q +: nodes(q.plan)
       case o => o +: o.children.flatMap(nodes)
     }
-    val (plans, shuffleBytes) =
-      try executedPlans(graft.queries.PipelineQueries.pipelineFull(spark, dir).collect())
-      finally spark.catalog.clearCache() // dedupStage's branch-point persist
+    val (plans, shuffleBytes) = Persisted.owned(
+      executedPlans(graft.queries.PipelineQueries.pipelineFull(spark, dir).collect()))
     val all = plans.flatMap(nodes)
     val shown = plans.mkString("\n----\n")
     val exchanges = all.collect { case e: ShuffleExchangeExec => e }

@@ -1,5 +1,8 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
@@ -44,7 +47,7 @@ class PlanSweepSpec extends SparkTestBase {
   test("no query in the contract plans a cartesian product or an unpartitioned window") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val errs =
+        Persisted.owned {
           try {
             val p = fn(spark, dir).queryExecution.sparkPlan
             val carts = p.collect { case c: CartesianProductExec => c }
@@ -57,14 +60,41 @@ class PlanSweepSpec extends SparkTestBase {
             (if (carts.nonEmpty) Seq(s"$name: CartesianProduct") else Nil) ++
               badWindows.map(k => s"$name: $k (single-reducer global sort)")
           } catch {
-            case e: Throwable => Seq(s"$name: failed to plan: ${e.getMessage}")
+            case NonFatal(e) => Seq(s"$name: failed to plan: ${e.getMessage}")
           }
-        // sketch/retrieval queries persist intermediates during
-        // construction; release per query like Verify does
-        spark.catalog.clearCache()
-        errs
+        }
     }
     assert(offenders.isEmpty,
       s"scale-killer plan shapes found:\n${offenders.mkString("\n")}")
+  }
+
+  test("every contract query releases what it persists") {
+    // Each query runs to the noop sink inside its own Persisted.owned
+    // scope, as Bench and Verify run it. Afterwards the session must
+    // hold no cached plan and no persistent RDD. A leak stays pinned,
+    // so only the query after which a leak first shows is named.
+    val sc = spark.sparkContext
+    var plansLeaked = false
+    val seenRdds = collection.mutable.Set.empty[Int]
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        val failed =
+          try {
+            Persisted.owned(
+              fn(spark, dir).write.mode("overwrite").format("noop").save())
+            Nil
+          } catch {
+            case NonFatal(e) => Seq(s"$name: failed: ${e.getMessage}")
+          }
+        val plans =
+          if (plansLeaked || GraftSqlBridge.noCachedPlans(spark)) Nil
+          else { plansLeaked = true; Seq(s"$name: left a cached plan") }
+        val rdds = sc.getPersistentRDDs.values.filter(r => seenRdds.add(r.id))
+          .map(r => s"$name: left persistent RDD ${r.id} " +
+            s"(${r.toString.linesIterator.next().take(100)})")
+        failed ++ plans ++ rdds
+    }
+    assert(offenders.isEmpty,
+      s"queries left cached state behind:\n${offenders.mkString("\n")}")
   }
 }

@@ -191,6 +191,33 @@ class SimilaritySpec extends SparkTestBase {
     assert(got === want, "fused codebooks diverged from per-subspace Lloyd")
   }
 
+  test("distributed Lloyd releases its cache on failure and with its scope") {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.functions.{array, lit, udf}
+    val badVector = udf { (id: Long) =>
+      if (id > 1) throw new IllegalStateException(s"bad vector $id")
+      Seq(1.0, 2.0)
+    }
+    val emb = spark.range(8)
+      .select(col("id").as("vec_id"), badVector(col("id")).as("embedding"))
+    spark.catalog.clearCache()
+    intercept[Exception](graft.ops.KMeans.lloyd(emb, k = 2, iters = 2, localGate = 0))
+    assert(GraftSqlBridge.noCachedPlans(spark),
+      "a failed Lloyd run left its input cached")
+    // on success the returned assignment is a checkpoint that the
+    // caller's scope releases
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val good = spark.range(8).select(col("id").as("vec_id"),
+      array(col("id").cast("double"), lit(1.0)).as("embedding"))
+    Persisted.owned {
+      val (assigned, _) = graft.ops.KMeans.lloyd(good, k = 2, iters = 2, localGate = 0)
+      assert(assigned.count() === 8)
+    }
+    assert(GraftSqlBridge.noCachedPlans(spark) && sc.getPersistentRDDs.keySet == before,
+      "a Lloyd run left cached state behind its caller's scope")
+  }
+
   test("multi-table LSH near-dup: exact precision, usable recall") {
     val threshold = 0.25
     val exact = nearDupPairsBrute(emb, threshold)

@@ -168,7 +168,8 @@ class SkewStressSpec extends SparkTestBase
       .withColumn("drop_reason", lit(null).cast("string"))
       .withColumn("text_pii_masked", col("text"))
       .withColumn("ingest_seq", col("doc_id"))
-    val profile = taskProfile { Dedup.dedupStage(prepped).rdd.count() }
+    val profile =
+      Persisted.owned(taskProfile { Dedup.dedupStage(prepped).rdd.count() })
     val hotGroup = 1000L // the near-identical block
     val fairShare = NDocs / 4L
     val bound = hotGroup + fairShare + 500L
@@ -178,6 +179,5 @@ class SkewStressSpec extends SparkTestBase
       assert(worst <= bound,
         s"dedup window task read $worst records (> group+fair-share bound $bound)")
     }
-    spark.catalog.clearCache() // dedupStage persists its input
   }
 }
