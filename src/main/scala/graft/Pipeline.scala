@@ -161,6 +161,11 @@ object Pipeline {
   /** Stages 2-6 fused into one lazy DAG (the fast path; per-stage parquet
     * checkpointing is the caller's choice, matching the reference's
     * resumable mode).
+    *
+    * Dedup's branch-point persist of the pre-dedup frame is registered
+    * with the caller's [[Persisted.owned]] scope, released when the
+    * scope's action is done. Outside a scope it stays cached for the
+    * session's life, so run the action on this frame inside one.
     */
   def run(raw: DataFrame): DataFrame =
     tokenise(score(dedup(deepCleanAndPii(cleanAndFilter(raw)))))

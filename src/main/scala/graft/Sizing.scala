@@ -46,7 +46,7 @@ object Sizing {
     * the core count.
     */
   def shufflePartitions(dir: String): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(parsePartitions).getOrElse {
+    envPositiveInt("SPARK_GRAFT_SHUFFLE_PARTS").getOrElse {
       val bytes = sizeOf(new java.io.File(dir))
       math.min(Cap.toLong, math.max(Floor.toLong,
         bytes / BytesPerPartition + 1)).toInt
@@ -59,7 +59,7 @@ object Sizing {
     * and PlanDump.
     */
   def session(dataDir: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = envPositiveInt("SPARK_GRAFT_CPUS").getOrElse(4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions(dataDir))
@@ -70,13 +70,19 @@ object Sizing {
     spark
   }
 
-  /** A `SPARK_GRAFT_SHUFFLE_PARTS` value as a partition count: a
-    * malformed, zero or negative value fails here, naming the variable,
-    * instead of as a bare NumberFormatException or a Spark conf error
-    * far from its cause.
+  /** The environment variable `name` as a positive integer, `None` when
+    * unset. A malformed, zero or negative value fails here, naming the
+    * variable, instead of as a bare NumberFormatException, a Spark
+    * master-URL or conf error far from its cause, or a silent clamp.
     */
-  private[graft] def parsePartitions(value: String): Int =
+  private[graft] def envPositiveInt(name: String): Option[Int] =
+    sys.env.get(name).map(positiveInt(name, _))
+
+  /** `value` of the variable `name` as a positive integer, or an
+    * IllegalArgumentException naming the variable.
+    */
+  private[graft] def positiveInt(name: String, value: String): Int =
     value.trim.toIntOption.filter(_ > 0).getOrElse(
       throw new IllegalArgumentException(
-        s"SPARK_GRAFT_SHUFFLE_PARTS must be a positive integer, got '$value'"))
+        s"$name must be a positive integer, got '$value'"))
 }

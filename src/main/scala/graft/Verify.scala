@@ -6,18 +6,13 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional name filter for iteration (comma-separated); the graded
+    // driver run leaves it unset and dumps everything.
+    val selected = SparkEntry.selected("SPARK_GRAFT_VERIFY_ONLY")
     // the same session as Bench (graft.Sizing), so the oracle verifies
     // results under the benched plan shape
     val spark = Sizing.session(sfDir)
     new java.io.File(outDir).mkdirs()
-    // Optional name filter for iteration (comma-separated); the graded
-    // driver run leaves it unset and dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     selected.foreach { case (name, fn) =>
       Persisted.owned {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
@@ -66,14 +66,4 @@ object AudioSig {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(AudioSig(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[AudioSig].getCanonicalName, null, "audio_sig",
-    "_FUNC_(bytes) - Perceptual energy-delta signature of a decodable audio payload, NULL when undecodable.",
-    "", "", "", "misc_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "audio_sig expects exactly one argument")
-    AudioSig(args.head)
-  }
 }

@@ -101,20 +101,4 @@ object CdcChunks {
   /** Column-API entry point over a string column. */
   def apply(text: Column, k: Int): Column =
     GraftSqlBridge.column(CdcChunks(GraftSqlBridge.expression(text), k))
-
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[CdcChunks].getCanonicalName, null, "cdc_chunks",
-      "_FUNC_(text, k) - Content-defined chunks: array of (start, len, md5) split at rolling-hash boundaries.",
-      "", "", "", "array_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "cdc_chunks expects (text, k)")
-    val k = args(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"cdc_chunks k must be an int literal, got $other")
-    }
-    CdcChunks(args.head, k)
-  }
 }

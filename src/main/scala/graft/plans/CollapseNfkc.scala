@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * NFKC(NFKC(x)) = NFKC(x)) and saves a full string pass per extra
   * application.
   *
-  * Registered by [[GraftSparkExtensions]] via injectOptimizerRule —
+  * Registered by [[GraftSparkExtensions]] and [[GraftFunctions.register]] —
   * demonstration of the engine's optimizer-extension surface (SURVEY §7
   * step 8).
   */

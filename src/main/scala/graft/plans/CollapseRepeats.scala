@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -84,15 +84,4 @@ object CollapseRepeats {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(CollapseRepeats(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[CollapseRepeats].getCanonicalName, null, "collapse_repeats",
-    "_FUNC_(str) - collapse repeated punctuation (>=3 to 2) and other" +
-      " repeated codepoints (>=4 to 3), line terminators untouched.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "collapse_repeats takes one argument")
-    CollapseRepeats(args.head)
-  }
 }

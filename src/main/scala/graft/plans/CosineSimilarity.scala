@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftSqlBridge
@@ -68,14 +68,4 @@ object CosineSimilarity {
   def apply(a: Column, b: Column): Column =
     GraftSqlBridge.column(CosineSimilarity(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[CosineSimilarity].getCanonicalName, null, "cosine_sim",
-    "_FUNC_(a, b) - Cosine similarity of two double arrays (left-to-right fold).",
-    "", "", "", "misc_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "cosine_sim expects exactly two arguments")
-    CosineSimilarity(args.head, args(1))
-  }
 }

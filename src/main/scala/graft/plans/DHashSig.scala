@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
@@ -61,14 +61,4 @@ object DHashSig {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(DHashSig(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[DHashSig].getCanonicalName, null, "dhash_sig",
-    "_FUNC_(bytes) - Perceptual dHash signature of a decodable image payload, NULL when undecodable.",
-    "", "", "", "misc_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "dhash_sig expects exactly one argument")
-    DHashSig(args.head)
-  }
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -71,14 +71,4 @@ object DeflateLength {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(DeflateLength(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[DeflateLength].getCanonicalName, null, "deflate_len",
-    "_FUNC_(str) - Returns the DEFLATE-compressed byte length of str.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "deflate_len expects exactly one argument")
-    DeflateLength(args.head)
-  }
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -104,14 +104,4 @@ object DeflateStoredLength {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(DeflateStoredLength(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[DeflateStoredLength].getCanonicalName, null, "deflate_stored_len",
-    "_FUNC_(str) - Returns the zlib stored-block (level 0) compressed byte length of str.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "deflate_stored_len expects exactly one argument")
-    DeflateStoredLength(args.head)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftSqlBridge
@@ -64,14 +64,4 @@ object DotProduct {
   def apply(a: Column, b: Column): Column =
     GraftSqlBridge.column(DotProduct(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[DotProduct].getCanonicalName, null, "dot_product",
-    "_FUNC_(a, b) - Inner product of two double arrays (left-to-right fold).",
-    "", "", "", "misc_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "dot_product expects exactly two arguments")
-    DotProduct(args.head, args(1))
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
@@ -160,16 +160,6 @@ case class EmailCount(child: Expression)
 object EmailCount {
   def apply(c: Column): Column =
     GraftSqlBridge.column(EmailCount(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[EmailCount].getCanonicalName, null, "email_hits",
-    "_FUNC_(str) - Count of email matches (reference PII pattern), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "email_hits expects exactly one argument")
-    EmailCount(args.head)
-  }
 }
 
 /** `email_mask(str)` — linear-time replacement of reference-pattern
@@ -200,14 +190,4 @@ object EmailMask {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(EmailMask(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[EmailMask].getCanonicalName, null, "email_mask",
-    "_FUNC_(str) - Replace email matches (reference PII pattern) with <EMAIL>, linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "email_mask expects exactly one argument")
-    EmailMask(args.head)
-  }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.charset.{CharacterCodingException, CodingErrorAction, StandardCharsets}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -125,14 +125,4 @@ object FixMojibake {
   /** Column-API entry point: `FixMojibake(col("text"))`. */
   def apply(c: Column): Column =
     GraftSqlBridge.column(FixMojibake(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[FixMojibake].getCanonicalName, null, "fix_mojibake",
-    "_FUNC_(str) - Repairs UTF-8-read-as-Latin-1/cp1252 mojibake, up to 3 nested layers; clean text passes through unchanged.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "fix_mojibake expects exactly one argument")
-    FixMojibake(args.head)
-  }
 }

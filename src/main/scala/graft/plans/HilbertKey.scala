@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -85,15 +85,5 @@ object HilbertKey {
     GraftSqlBridge.column(HilbertKey(
       GraftSqlBridge.expression(coalesce(x.cast("long"), lit(0L))),
       GraftSqlBridge.expression(coalesce(y.cast("long"), lit(0L)))))
-  }
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[HilbertKey].getCanonicalName, null, "hilbert_key",
-    "_FUNC_(x, y) - Hilbert-curve index of (x, y), 16 bits per dimension.",
-    "", "", "", "misc_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "hilbert_key expects exactly two arguments")
-    HilbertKey(args.head, args(1))
   }
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -61,14 +61,4 @@ object L2SqDistance {
   def apply(a: Column, b: Column): Column =
     GraftSqlBridge.column(L2SqDistance(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[L2SqDistance].getCanonicalName, null, "l2sq",
-    "_FUNC_(a, b) - Squared L2 distance of two double arrays (left-to-right fold).",
-    "", "", "", "misc_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "l2sq expects exactly two arguments")
-    L2SqDistance(args.head, args(1))
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
@@ -291,16 +291,6 @@ case class MarkdownStrip(child: Expression)
 object MarkdownStrip {
   def apply(c: Column): Column =
     GraftSqlBridge.column(MarkdownStrip(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[MarkdownStrip].getCanonicalName, null, "markdown_strip",
-    "_FUNC_(str) - Normalize markdown to visible text (fences, images, links, emphasis, inline code, headers), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "markdown_strip expects exactly one argument")
-    MarkdownStrip(args.head)
-  }
 }
 
 /** `anchor_text_len(str)` — total anchor-text length of the HTML `<a>`
@@ -328,14 +318,4 @@ case class AnchorTextLen(child: Expression)
 object AnchorTextLen {
   def apply(c: Column): Column =
     GraftSqlBridge.column(AnchorTextLen(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[AnchorTextLen].getCanonicalName, null, "anchor_text_len",
-    "_FUNC_(str) - Total <a> anchor-text length (content-extraction link density), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "anchor_text_len expects exactly one argument")
-    AnchorTextLen(args.head)
-  }
 }

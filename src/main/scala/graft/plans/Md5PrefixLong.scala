@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -80,25 +80,4 @@ object Md5PrefixLong {
   def apply(c: Column, prefix: String, hexLen: Int): Column =
     GraftSqlBridge.column(
       Md5PrefixLong(GraftSqlBridge.expression(c), prefix, hexLen))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[Md5PrefixLong].getCanonicalName, null, "md5_prefix_long",
-    "_FUNC_(str, prefix, hexLen) - Returns the first hexLen hex digits " +
-      "of md5(prefix || str) as a BIGINT.",
-    "", "", "", "hash_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 3,
-      "md5_prefix_long expects (str, prefix literal, hexLen literal)")
-    val prefix = args(1) match {
-      case Literal(s: UTF8String, StringType) => s.toString
-      case other => sys.error(s"md5_prefix_long prefix must be a string literal, got $other")
-    }
-    val hexLen = args(2) match {
-      case Literal(i: Int, _) => i
-      case Literal(l: Long, _) => l.toInt
-      case other => sys.error(s"md5_prefix_long hexLen must be an int literal, got $other")
-    }
-    Md5PrefixLong(args.head, prefix, hexLen)
-  }
 }

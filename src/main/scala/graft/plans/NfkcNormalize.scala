@@ -4,7 +4,7 @@ import java.text.Normalizer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -51,14 +51,4 @@ object NfkcNormalize {
   /** Column-API entry point: `nfkc(col("text"))`. */
   def apply(c: Column): Column =
     GraftSqlBridge.column(NfkcNormalize(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[NfkcNormalize].getCanonicalName, null, "nfkc",
-    "_FUNC_(str) - Returns str normalized to Unicode NFKC form.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "nfkc expects exactly one argument")
-    NfkcNormalize(args.head)
-  }
 }

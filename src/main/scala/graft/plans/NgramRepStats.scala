@@ -112,15 +112,4 @@ object NgramRepStats {
   /** Column-API entry point over an array<string> token column. */
   def apply(toks: Column): Column =
     GraftSqlBridge.column(NgramRepStats(GraftSqlBridge.expression(toks)))
-
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[NgramRepStats].getCanonicalName, null, "ngram_rep_stats",
-      "_FUNC_(tokens) - Repetition n-gram stats: (n_words, total_chars, top 2-gram weight, duplicated 3-gram weight).",
-      "", "", "", "struct_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "ngram_rep_stats expects (tokens)")
-    NgramRepStats(args.head)
-  }
 }

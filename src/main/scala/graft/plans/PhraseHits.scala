@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -140,21 +140,4 @@ object PhraseHits {
 
   def apply(c: Column, profile: String): Column =
     GraftSqlBridge.column(PhraseHits(GraftSqlBridge.expression(c), profile))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[PhraseHits].getCanonicalName, null, "phrase_hits",
-    "_FUNC_(str, profile) - Counts phrase-list hits in one Aho-Corasick pass.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "phrase_hits expects (str, profile-literal)")
-    val profile = args(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: UTF8String, _) =>
-        v.toString
-      case other =>
-        throw new IllegalArgumentException(
-          s"phrase_hits profile must be a string literal, got $other")
-    }
-    PhraseHits(args.head, profile)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
@@ -486,16 +486,6 @@ case class PiiCounts(child: Expression)
 object PiiCounts {
   def apply(c: Column): Column =
     GraftSqlBridge.column(PiiCounts(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[PiiCounts].getCanonicalName, null, "pii_counts",
-    "_FUNC_(str) - [email, phone, cc, iban, ip, ssn] PII match counts (reference patterns), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "pii_counts expects exactly one argument")
-    PiiCounts(args.head)
-  }
 }
 
 /** `pii_mask(str)` — the reference's ordered PII mask chain
@@ -521,16 +511,6 @@ case class PiiMaskChain(child: Expression)
 object PiiMaskChain {
   def apply(c: Column): Column =
     GraftSqlBridge.column(PiiMaskChain(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[PiiMaskChain].getCanonicalName, null, "pii_mask",
-    "_FUNC_(str) - Mask PII in reference order (email, phone, cc, iban), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "pii_mask expects exactly one argument")
-    PiiMaskChain(args.head)
-  }
 }
 
 /** `pii_mask_ext(str)` — the extended chain email→ip→ssn→phone→cc→iban. */
@@ -554,16 +534,6 @@ case class PiiMaskChainExt(child: Expression)
 object PiiMaskChainExt {
   def apply(c: Column): Column =
     GraftSqlBridge.column(PiiMaskChainExt(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[PiiMaskChainExt].getCanonicalName, null, "pii_mask_ext",
-    "_FUNC_(str) - Mask PII in extended order (email, ip, ssn, phone, cc, iban), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "pii_mask_ext expects exactly one argument")
-    PiiMaskChainExt(args.head)
-  }
 }
 
 /** `pii_scan(str)` — struct(counts: [email, phone, cc, iban, ip, ssn],
@@ -595,16 +565,6 @@ case class PiiScanFused(child: Expression)
 object PiiScanFused {
   def apply(c: Column): Column =
     GraftSqlBridge.column(PiiScanFused(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[PiiScanFused].getCanonicalName, null, "pii_scan",
-    "_FUNC_(str) - struct(counts: [email, phone, cc, iban, ip, ssn] PII match counts, masked: reference mask chain), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "pii_scan expects exactly one argument")
-    PiiScanFused(args.head)
-  }
 }
 
 /** `phone_simple_hits(str)` — count of the stage-2 rough phone pattern. */
@@ -629,14 +589,4 @@ case class PhoneSimpleCount(child: Expression)
 object PhoneSimpleCount {
   def apply(c: Column): Column =
     GraftSqlBridge.column(PhoneSimpleCount(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[PhoneSimpleCount].getCanonicalName, null, "phone_simple_hits",
-    "_FUNC_(str) - Count of rough phone-shape matches (stage-2 pattern), linear time.",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "phone_simple_hits expects exactly one argument")
-    PhoneSimpleCount(args.head)
-  }
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -100,14 +100,4 @@ object Simhash64 {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(Simhash64(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[Simhash64].getCanonicalName, null, "simhash64",
-    "_FUNC_(str) - Returns the 64-bit SimHash of str over whitespace tokens.",
-    "", "", "", "hash_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "simhash64 expects exactly one argument")
-    Simhash64(args.head)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -69,15 +69,4 @@ object StripTags {
 
   def apply(c: Column): Column =
     GraftSqlBridge.column(StripTags(GraftSqlBridge.expression(c)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[StripTags].getCanonicalName, null, "strip_tags",
-    "_FUNC_(str) - replace every <...> tag span with one space" +
-      " (regexp_replace(str, '<[^>]+>', ' ') semantics).",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "strip_tags takes one argument")
-    StripTags(args.head)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
@@ -192,17 +192,6 @@ object TextProfileStats {
   def apply(str: Column, profile: String): Column =
     GraftSqlBridge.column(
       TextProfileStats(GraftSqlBridge.expression(str), profile))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[TextProfileStats].getCanonicalName, null, "text_profile_stats",
-    "_FUNC_(str) - [token count, per-wordlist hits...] language/toxicity" +
-      " signals of a string (langid profile appends CJK codepoints).",
-    "", "", "", "string_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "text_profile_stats takes one argument")
-    TextProfileStats(args.head, "langid")
-  }
 }
 
 /** The fused two-profile form — see [[TextProfileStats.statsBoth]]. */

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
@@ -97,14 +97,4 @@ object TokenDistStats {
   /** Column-API entry point over a token array column. */
   def apply(toks: Column): Column =
     GraftSqlBridge.column(TokenDistStats(GraftSqlBridge.expression(toks)))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[TokenDistStats].getCanonicalName, null, "token_dist_stats",
-    "_FUNC_(arr) - [shannon entropy (nats), max token frequency ratio] of a token array.",
-    "", "", "", "array_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "token_dist_stats expects exactly one argument")
-    TokenDistStats(args.head)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
@@ -82,14 +82,4 @@ object TokenSetStats {
   def apply(toks: Column, words: Seq[String]): Column =
     GraftSqlBridge.column(
       TokenSetStats(GraftSqlBridge.expression(toks), words))
-
-  private[plans] val info = new ExpressionInfo(
-    classOf[TokenSetStats].getCanonicalName, null, "token_set_stats",
-    "_FUNC_(arr) - [distinct token count, stopword count] of a token array.",
-    "", "", "", "array_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "token_set_stats takes one argument")
-    TokenSetStats(args.head, graft.text.TextMetrics.EnStopwords)
-  }
 }

@@ -171,15 +171,4 @@ object TokenizeText {
   /** Column-API entry point over a string column. */
   def apply(text: Column): Column =
     GraftSqlBridge.column(TokenizeText(GraftSqlBridge.expression(text)))
-
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[TokenizeText].getCanonicalName, null, "tokenize_text",
-      "_FUNC_(text) - GPT-2-style pre-tokenization: struct(input_ids, attention_mask, n_tokens).",
-      "", "", "", "struct_funcs", "4.0.0", "", "scala_udf")
-
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "tokenize_text expects (text)")
-    TokenizeText(args.head)
-  }
 }

@@ -108,23 +108,4 @@ object WinnowSelect {
   /** Column-API entry point over a string column. */
   def apply(text: Column, k: Int, w: Int): Column =
     GraftSqlBridge.column(WinnowSelect(GraftSqlBridge.expression(text), k, w))
-
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[WinnowSelect].getCanonicalName, null, "winnow_sels",
-      "_FUNC_(text, k, w) - Winnowing fingerprint selection: per-window minimum md5 of character k-grams.",
-      "", "", "", "array_funcs", "4.0.0", "", "scala_udf")
-
-  /** SQL builder: k and w must be foldable int literals (they size the
-    * kernel's buffers; they cannot vary per row).
-    */
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 3, "winnow_sels expects (text, k, w)")
-    def lit(e: Expression, name: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"winnow_sels $name must be an int literal, got $other")
-    }
-    WinnowSelect(args.head, lit(args(1), "k"), lit(args(2), "w"))
-  }
 }

@@ -94,24 +94,4 @@ object WordlistHits {
   /** Column-API entry point over a string-array column. */
   def apply(toks: Column, profile: String): Column =
     GraftSqlBridge.column(WordlistHits(GraftSqlBridge.expression(toks), profile))
-
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[WordlistHits].getCanonicalName, null, "wordlist_hits",
-      "_FUNC_(tokens, profile) - Per-wordlist hit counts for a named profile ('langid', 'toxicity').",
-      "", "", "", "array_funcs", "4.0.0", "", "scala_udf")
-
-  /** SQL builder: the profile argument must be a foldable string literal
-    * (wordlists compile into the kernel; they cannot vary per row).
-    */
-  private[plans] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "wordlist_hits expects (tokens, profile)")
-    val profile = args(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, _) =>
-        s.toString
-      case other => throw new IllegalArgumentException(
-        s"wordlist_hits profile must be a string literal, got $other")
-    }
-    WordlistHits(args.head, profile)
-  }
 }

@@ -80,21 +80,15 @@ object Sinks {
     * the delta; this lands it without rewriting the corpus). Spark's
     * static overwrite mode would truncate the whole table first; the
     * dynamic mode scopes the overwrite to the incoming partitions, so
-    * an upsert costs O(delta), not O(corpus). The conf is set per-write
-    * and restored (it is session-global in Spark).
+    * an upsert costs O(delta), not O(corpus). The mode is a write
+    * option, which takes precedence over the session-global
+    * `spark.sql.sources.partitionOverwriteMode`, so the session conf is
+    * never touched.
     */
   def upsertPartitions(df: DataFrame, outDir: String,
-                       partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(outDir)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+                       partitionCols: Seq[String]): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(outDir)
 
   /** ORC sink/scan pair (beyond ref: second columnar interchange format
     * — some warehouse stacks are ORC-native). Same writer contract as
