@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Filters
 import graft.sources.Sinks
@@ -48,7 +47,9 @@ object Orchestrator {
     * row counts, observed on the two writes themselves — no read-back —
     * and the kept frame's schema, so the next stage reads the file back
     * without a schema-inference job.
-    * The stage frame is PERSISTED across the two writes: without it
+    * Both writes read the stage frame's rows through one
+    * [[Persisted.rows]] branch point, which the stage's
+    * [[Persisted.owned]] scope in [[runStages]] releases. Without it
     * (a) the whole scalar chain runs twice (once per write), and (b)
     * Catalyst pushes each `drop_reason`-filter down through the stage's
     * projections, substituting the FULL expression chain into the filter
@@ -56,17 +57,16 @@ object Orchestrator {
     * ~50× into one Filter, janino dies on the generated method
     * (InternalCompilerException, 6× per round-11 test run) and the
     * write silently runs interpreted. Filtering the materialized
-    * columns instead costs one local spill of a frame this mode is
+    * rows instead costs one local spill of a frame this mode is
     * already writing to parquet twice — cheap against the 40:1
     * text-processing-vs-IO profile (BASELINE.md) it de-duplicates.
     */
   private def writeSplit(out: DataFrame, keptPath: String,
                          droppedPath: String): (Long, Long, StructType) = {
-    val mat = out.persist(StorageLevel.MEMORY_AND_DISK)
-    val kept = Filters.kept(mat)
-    try (writeCounted(kept, keptPath),
-      writeCounted(Filters.dropped(mat), droppedPath), kept.schema)
-    finally mat.unpersist(blocking = false)
+    val rows = Persisted.rows(out)
+    val kept = Filters.kept(rows)
+    (writeCounted(kept, keptPath), writeCounted(Filters.dropped(rows), droppedPath),
+      kept.schema)
   }
 
   /** Read a checkpoint back. With the writer's schema the read plans
@@ -111,9 +111,9 @@ object Orchestrator {
     *
     * Cache ownership ([[Persisted]]): each stage runs in its own
     * [[Persisted.owned]] scope around its checkpoint writes, which
-    * releases what the stage transform registered (such as
-    * [[graft.ops.Dedup.dedupStage]]'s branch point) once the stage is
-    * written; frames the caller cached are left alone.
+    * releases what the stage registered ([[writeSplit]]'s branch point
+    * and [[graft.ops.Dedup.dedupStage]]'s) once the stage is written;
+    * frames the caller cached are left alone.
     */
   private def runStages(spark: SparkSession, outDir: String,
                         firstVersion: Int, dropPii: Boolean,
@@ -209,13 +209,14 @@ object Orchestrator {
     val ingested = Pipeline.ingest(rawCur)
     ingested.write.mode("overwrite").parquet(versionPath(outDir, 1))
     val curV1 = readVersion(spark, outDir, 1, Some(ingested.schema))
-    // persist before each kept(): same pushdown-inlining rationale as
-    // [[writeSplit]] — the stage-2 chain must not be substituted into
-    // the filter condition (janino limit) or computed twice. The caches
-    // are only live inputs to the v3 write, whose scope releases them.
+    // a branch point before each kept(): same pushdown-inlining
+    // rationale as [[writeSplit]] — the stage-2 chain must not be
+    // substituted into the filter condition (janino limit) or computed
+    // twice. The rows are only live inputs to the v3 write, whose scope
+    // releases them.
     val rowLocal: DataFrame => DataFrame = df => {
-      val s2 = Persisted(Pipeline.cleanAndFilter(df))
-      Filters.kept(Persisted(Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)))
+      val s2 = Persisted.rows(Pipeline.cleanAndFilter(df))
+      Filters.kept(Persisted.rows(Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)))
     }
     val (v3Rows, v3Schema) = Persisted.owned {
       val merged =

@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -46,6 +46,18 @@ object Persisted {
     }
     rdd
   }
+
+  /** A branch point: `df`'s internal rows, computed once, copied and
+    * persisted through the RDD form of [[apply]], as a frame over them.
+    * The readers of the result read those rows; none of them reaches
+    * back into `df`'s plan, so a filter is never pushed into its
+    * projections and its upstream chain never runs a second time. A
+    * frame that is already cached is returned unchanged.
+    */
+  def rows(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else GraftSqlBridge.fromInternalRows(df.sparkSession,
+      apply(df.queryExecution.toRdd.map(_.copy())), df.schema)
 
   /** `df.localCheckpoint()` (eager), whose blocks the innermost scope
     * releases. Reading the result after that fails, so only a frame

@@ -162,10 +162,12 @@ object Pipeline {
     * checkpointing is the caller's choice, matching the reference's
     * resumable mode).
     *
-    * Dedup's branch-point persist of the pre-dedup frame is registered
-    * with the caller's [[Persisted.owned]] scope, released when the
-    * scope's action is done. Outside a scope it stays cached for the
-    * session's life, so run the action on this frame inside one.
+    * Dedup reads the pre-dedup frame through a [[Persisted.rows]]
+    * branch point, registered with the caller's [[Persisted.owned]]
+    * scope and released when the scope's action is done. Outside a
+    * scope it leaves no cached plan: the rows are an RDD persist that
+    * the ContextCleaner drops once the frames reading them are
+    * unreachable.
     */
   def run(raw: DataFrame): DataFrame =
     tokenise(score(dedup(deepCleanAndPii(cleanAndFilter(raw)))))

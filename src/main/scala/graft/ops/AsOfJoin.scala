@@ -51,7 +51,8 @@ object AsOfJoin {
     * The right side is re-aliased behind fresh expression ids so the
     * operator's two outputs stay disjoint even when both sides derive
     * from the same scan (the analyzer dedups built-in joins, not custom
-    * nodes).
+    * nodes). The session gains [[graft.plans.AsofJoinStrategy]] if it
+    * lacks it, and nothing else: no SQL function, no optimizer rule.
     */
   def asofBackwardNative(left: DataFrame, right: DataFrame, keyCol: String,
                          tsCol: String, payloadCols: Seq[String]): DataFrame = {
@@ -59,7 +60,7 @@ object AsOfJoin {
     require(!payloadCols.exists(left.columns.contains),
       s"payload columns ${payloadCols.mkString(",")} collide with left side")
     val spark = left.sparkSession
-    graft.plans.GraftFunctions.register(spark) // idempotent; adds the strategy
+    graft.plans.GraftFunctions.planAsofJoins(spark)
     val r = right.select(
       col(keyCol).as("__asof_k") +: col(tsCol).as("__asof_t") +:
         payloadCols.map(c => col(c).as(c)): _*)

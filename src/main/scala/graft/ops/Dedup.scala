@@ -24,11 +24,6 @@ import graft.text.Normalize
   */
 object Dedup {
 
-  /** Serializes the session-conf save/restore window around the
-    * compression-off branch persist (see dedupStage).
-    */
-  private[ops] object ConfLock
-
   val NearDupMinLen = 200
   val NearKeyChars = 500
 
@@ -98,8 +93,8 @@ object Dedup {
     * (partition id, seq, doomed, id, exact-hash, md5'd near-key) — tens
     * of bytes per row — and the wide frame never crosses an exchange:
     * the flags are routed back to the partition their wide row lives in
-    * (the partition id the first projection reads off the persisted
-    * relation) and appended there
+    * (the partition id the first projection reads off the branch
+    * point) and appended there
     * ([[org.apache.spark.sql.GraftSqlBridge.appendRouted]]). The only
     * row-sized exchanges are the two windows and that routing, all
     * narrow. The canon columns the output contract exposes are
@@ -115,53 +110,25 @@ object Dedup {
     * ~2^-128 per pair). `seqCol` must be unique per row, as
     * `ingest_seq` is.
     *
-    * Cache: the input is the persisted branch point, registered with the
-    * caller's [[graft.Persisted.owned]] scope; outside a scope (the fused
-    * [[graft.Pipeline.run]]) it lives as a plain persist.
+    * Cache: both sides read one [[graft.Persisted.rows]] branch point,
+    * released by the caller's [[graft.Persisted.owned]] scope (outside
+    * one, see [[graft.Pipeline.run]]).
     */
   def dedupStage(df: DataFrame, textCol: String = "text_pii_masked",
                  seqCol: String = "ingest_seq"): DataFrame = {
-    // The frame is consumed twice (narrow window branch + the wide side
-    // of the append), so persist at the branch point: without it the
-    // flags branch re-runs the whole upstream scalar chain — the
-    // stage-2/3 regex pipeline at pipeline scale — on a second scan
+    // The frame is read twice (the narrow window branch and the wide
+    // side of the append), so both read one branch point: without it the
+    // flags branch re-runs the whole upstream scalar chain (the
+    // stage-2/3 regex pipeline at pipeline scale) on a second scan
     // (measured 7.1 s vs 4.5 s for q_pipeline_full at sf0.1), and the
     // partition ids the flags are routed by would name partitions of a
-    // different scan. Node-local materialization, not a shuffle, placed
-    // on the INPUT frame itself; a frame the caller cached keeps its cache.
-    //
-    // Columnar-cache compression is OFF for this one persist (r14 A/B
-    // at the 100x layout, min-of-3): the frame is dominated by four
-    // high-entropy text columns the lightweight columnar codecs barely
-    // shrink — 65.9 MiB compressed vs 72.2 MiB raw at the 10x layout, a
-    // 1.10x footprint — while encode+2-consumer-decode costs 4.3 s of
-    // the 12.9 s dedup prefix (45.4 -> 41.2 s for the s3+dedup chain).
-    // Network bytes at the 1000-executor shape are unchanged either way
-    // (the cache is node-local); a 10% bigger spill is the right price
-    // for dropping one compress and two decompress passes over ~2 KB/row.
-    // The conf is captured by CacheManager at persist() time, so the
-    // save/restore scopes it to exactly this cache.
-    val compKey = "spark.sql.inMemoryColumnarStorage.compressed"
-    val spark = df.sparkSession
-    // The set→persist→restore window mutates session-global conf; the
-    // JVM-wide lock makes it atomic so two queries building concurrently
-    // in one session can never interleave their save/restore pairs (the
-    // r14 hygiene finding). Callers that capture this conf for their own
-    // persists must build under the same lock — today query build is
-    // single-threaded (Orchestrator), so this is belt-and-braces.
-    Dedup.ConfLock.synchronized {
-      val prevComp = spark.conf.getOption(compKey)
-      spark.conf.set(compKey, "false")
-      try graft.Persisted(df)
-      finally prevComp match {
-        case Some(v) => spark.conf.set(compKey, v)
-        case None => spark.conf.unset(compKey)
-      }
-    }
+    // different scan. Node-local materialization, not a shuffle; a frame
+    // the caller cached is read through its own cache.
+    val rows = graft.Persisted.rows(df)
     val idExpr =
       if (df.columns.contains("doc_id")) col("doc_id").cast("string")
       else col(seqCol).cast("string")
-    val narrow = df
+    val narrow = rows
       .select(spark_partition_id().as("__pid"), col(seqCol).as("__seq"),
         doomedLast(df).as("__doomed"), idExpr.as("__did"),
         Normalize.canonExact(col(textCol)).as("__canon"))
@@ -192,7 +159,7 @@ object Dedup {
     // is_dup_exact, matching exactDedup's withColumn order, so the
     // composed and fused forms agree positionally too (parquet schema
     // diffs, select-by-index), not just by name
-    val wide = GraftSqlBridge.appendRouted(df, seqCol, flags, "__pid", "__seq")
+    val wide = GraftSqlBridge.appendRouted(rows, seqCol, flags, "__pid", "__seq")
       .withColumn("dedup_id", idExpr)
       .withColumn("exact_canon_text", Normalize.canonExact(col(textCol)))
       .withColumn("exact_hash", Normalize.sha256Hex(col("exact_canon_text")))

@@ -184,8 +184,14 @@ object GraftFunctions {
     if (!spark.experimental.extraOptimizations.contains(CollapseNfkc))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ CollapseNfkc
+    planAsofJoins(spark)
+  }
+
+  /** Adds [[AsofJoinStrategy]] to the session's planner strategies,
+    * once: all a plan holding an [[AsofJoinPlan]] needs to execute.
+    */
+  def planAsofJoins(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsofJoinStrategy
-  }
 }

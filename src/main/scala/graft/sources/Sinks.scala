@@ -306,28 +306,32 @@ object Sinks {
       name -> df.collect().toSeq.map(r => cols.indices.map(i => cols(i) -> r.get(i)))
     }, path)
 
+  /** `s` as a quoted JSON string: quote, backslash and every control
+    * character below U+0020 escaped, so any text parses back unchanged.
+    */
+  private[graft] def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   /** Driver-side JSON writer behind [[writeMetricsJson]]: one object
     * whose sections are arrays of flat rows, each row an ordered list
     * of (field, scalar) pairs.
     */
   private[graft] def writeJsonSections(
       sections: Seq[(String, Seq[Seq[(String, Any)]])], path: String): Unit = {
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
     def scalar(v: Any): String = v match {
       case null => "null"
       case n: java.lang.Number => n.toString
       case b: java.lang.Boolean => b.toString
-      case other => "\"" + esc(other.toString) + "\""
+      case other => jsonString(other.toString)
     }
     val body = sections.map { case (name, rows) =>
-      "\"" + esc(name) + "\": " + rows.map(_.map { case (k, v) =>
-        "\"" + esc(k) + "\": " + scalar(v)
+      jsonString(name) + ": " + rows.map(_.map { case (k, v) =>
+        jsonString(k) + ": " + scalar(v)
       }.mkString("{", ", ", "}")).mkString("[", ", ", "]")
     }.mkString("{", ", ", "}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), body)

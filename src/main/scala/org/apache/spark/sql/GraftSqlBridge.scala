@@ -31,6 +31,15 @@ object GraftSqlBridge {
                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A frame over internal rows `rows` of schema `schema`, planned as a
+    * `LogicalRDD` leaf: actions read `rows`, so nothing above the leaf
+    * reaches into the plan that produced them.
+    */
+  def fromInternalRows(spark: SparkSession,
+                       rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                       schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** `df` plus a non-null LongType column `name` numbering its rows
     * 0..n-1 in partition order (`zipWithIndex`: one size job over all
     * but the last partition, then local numbering). The rows stay
@@ -54,8 +63,7 @@ object GraftSqlBridge {
         append(joined(row, index)): InternalRow
       }
     }
-    df.sparkSession.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rows, schema)
+    fromInternalRows(df.sparkSession, rows, schema)
   }
 
   /** `wide` with the columns of `flags` (all but `pidCol` and `flagKey`)
@@ -92,7 +100,7 @@ object GraftSqlBridge {
     val schema = StructType(wideSchema.fields ++ values)
     // an empty relation can plan with no partitions: nothing to route
     if (parts == 0)
-      return session.internalCreateDataFrame(session.sparkContext.emptyRDD[InternalRow], schema)
+      return fromInternalRows(session, session.sparkContext.emptyRDD[InternalRow], schema)
     val routed = flags.repartitionById(parts, functions.col(pidCol))
       .select((flagKey +: values.map(_.name).toSeq).map(functions.col): _*)
     val flagRdd = SQLExecution.withNewExecutionId(routed.queryExecution,
@@ -127,7 +135,7 @@ object GraftSqlBridge {
         append(joined(w, f)): InternalRow
       }
     }
-    session.internalCreateDataFrame(rows, schema)
+    fromInternalRows(session, rows, schema)
   }
 
   /** A DataFrame's analyzed logical plan. */

@@ -134,6 +134,24 @@ class AsOfJoinSpec extends SparkTestBase {
     assert(!p.contains("Window"), s"window resurfaced:\n$p")
   }
 
+  test("native exec adds only its planner strategy to the session") {
+    val s = spark.newSession()
+    import s.implicits._
+    val l = Seq((1L, 7L, ts(10)), (2L, 7L, ts(1)), (3L, 8L, ts(30)))
+      .toDF("event_id", "user_id", "ts")
+    val r = Seq((7L, ts(5), 1.0), (7L, ts(9), 2.0)).toDF("user_id", "ts", "pay")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "pay").collect().map(_.toSeq).toSet
+    val native = AsOfJoin.asofBackwardNative(l, r, "user_id", "ts", Seq("pay"))
+    assert(rows(native) === rows(AsOfJoin.asofBackward(l, r, "user_id", "ts", Seq("pay"))))
+    assert(native.queryExecution.executedPlan.toString.contains("AsofJoin"))
+    AsOfJoin.asofBackwardNative(l, r, "user_id", "ts", Seq("pay"))
+    assert(s.experimental.extraStrategies === Seq(graft.plans.AsofJoinStrategy))
+    assert(!s.experimental.extraOptimizations.contains(graft.plans.CollapseNfkc))
+    val e = intercept[org.apache.spark.sql.AnalysisException](s.sql("SELECT nfkc('x')"))
+    assert(e.getMessage.contains("UNRESOLVED_ROUTINE"), e.getMessage)
+  }
+
   test("rejects colliding payload column names") {
     import spark.implicits._
     val l = Seq((1L, 1L, ts(0), 5.0)).toDF("event_id", "user_id", "ts", "v")

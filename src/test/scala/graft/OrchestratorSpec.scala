@@ -194,6 +194,24 @@ class OrchestratorSpec extends SparkTestBase {
     assert(fused === checkpointed)
   }
 
+  test("fused run: no cached plan outside a scope, no persistent RDD inside one") {
+    val sc = spark.sparkContext
+    def fused() = Pipeline.run(Pipeline.ingest(
+      Pipeline.fromDocuments(Tables.documents(spark, sfDir)).select("url", "text")))
+      .write.mode("overwrite").format("noop").save()
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    fused()
+    assert(GraftSqlBridge.noCachedPlans(spark),
+      "the fused run left its dedup branch point in the CacheManager")
+    // outside a scope the branch point is a plain RDD persist; drop it
+    // so this test leaves the session as it found it
+    sc.getPersistentRDDs.foreach { case (id, r) => if (!before(id)) r.unpersist(blocking = true) }
+    Persisted.owned(fused())
+    assert(sc.getPersistentRDDs.keySet -- before === Set.empty,
+      "the scope left a persistent RDD")
+  }
+
   test("resume from stage 5 reproduces the original v7 exactly") {
     val original = spark.read.parquet(Orchestrator.versionPath(outDir, 7))
       .select("doc_id", "quality_score", "subset", "n_tokens", "shard_id")

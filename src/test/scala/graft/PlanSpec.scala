@@ -240,8 +240,9 @@ class PlanSpec extends SparkTestBase {
       case q: QueryStageExec => q +: nodes(q.plan)
       case o => o +: o.children.flatMap(nodes)
     }
-    val (plans, shuffleBytes) = Persisted.owned(
+    val (plans, tasks) = Persisted.owned(
       executedPlans(graft.queries.PipelineQueries.pipelineFull(spark, dir).collect()))
+    val shuffleBytes = tasks.map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
     val all = plans.flatMap(nodes)
     val shown = plans.mkString("\n----\n")
     val exchanges = all.collect { case e: ShuffleExchangeExec => e }
@@ -266,20 +267,23 @@ class PlanSpec extends SparkTestBase {
       .agg(sum(length(col("text")))).head().getLong(0)
     assert(shuffleBytes < 2 * textBytes,
       s"dedup wrote $shuffleBytes shuffle bytes for $textBytes text bytes")
-    // the persisted branch point prunes: the narrow branch reads only
-    // the columns dedup needs, and the parquet scan only the source
-    // columns — the scalar chain is materialized once, not re-derived
-    assert(shown.linesIterator.exists(l => l.contains("InMemoryTableScan")
-        && l.contains("text_pii_masked") && !l.contains("text_norm")),
-      s"narrow branch must read a pruned cache projection:\n$shown")
-    assert(shown.contains("ReadSchema: struct<doc_id:bigint,text:string"),
-      s"parquet scan must prune to source columns:\n$shown")
+    // the scalar chain runs once: the tasks that ran the documents scan
+    // (those reporting its "scan time") read each document once. The
+    // wide side reads the branch point's stored rows instead, in tasks
+    // that run no scan.
+    val docs = Tables.documents(spark, dir).count()
+    val scanned = tasks.filter(_.taskInfo.accumulables.exists(_.name.contains("scan time")))
+    assert(scanned.map(_.taskMetrics.inputMetrics.recordsRead).sum === docs,
+      s"the documents must be scanned once:\n$shown")
     // the custom codegen expressions stay inlined in the fused plan
     // (r11: lang/toxicity signals moved from wordlist_hits-over-array
     // to the one-pass profile kernel; r12: the two profiles fused into
     // the single-walk text_langtox_stats)
     val static = plan(Pipeline.deepCleanAndPii(Pipeline.cleanAndFilter(
       Pipeline.fromDocuments(Tables.documents(spark, dir)))))
+    // the stage-2/3 scan reads only the source columns
+    assert(static.contains("ReadSchema: struct<doc_id:bigint,text:string"),
+      s"parquet scan must prune to source columns:\n$static")
     assert(static.contains("text_langtox_stats"),
       s"TextLangToxStats kernel missing:\n$static")
     assert(static.contains("nfkc"), s"NfkcNormalize missing:\n$static")
@@ -535,10 +539,11 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("hashed embed: shuffle-free single scan; text ANN window-free") {
-    val p = plan(graft.queries.SimilarityQueries.hashedEmbed(spark, dir))
+    // building either query persists; the scope releases it
+    val p = Persisted.owned(plan(graft.queries.SimilarityQueries.hashedEmbed(spark, dir)))
     assert(!p.contains("Exchange"), s"embedder must not shuffle:\n$p")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(p).size === 1, p)
-    val pa = plan(graft.queries.SimilarityQueries.textAnn(spark, dir))
+    val pa = Persisted.owned(plan(graft.queries.SimilarityQueries.textAnn(spark, dir)))
     assert(!pa.contains(") Window"), s"per-query window in text ANN:\n$pa")
     assert(pa.contains("partial_topkscored"),
       s"text ANN must rank through the bounded heap:\n$pa")

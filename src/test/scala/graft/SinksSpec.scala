@@ -228,6 +228,14 @@ class SinksSpec extends SparkTestBase {
     assert(!spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       .contains("dynamic"))
   }
+
+  test("jsonString: every oracle SQL text and every control character parse back unchanged") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val hard = (0 until 0x20).map(_.toChar).mkString + "\"q\" \\ \u00e9 \ud83d\ude00"
+    (hard +: SparkEntry.oracleSql.toSeq.flatMap { case (k, v) => Seq(k, v) }).foreach { s =>
+      assert(mapper.readValue(Sinks.jsonString(s), classOf[String]) === s)
+    }
+  }
 }
 
 object SinksSpec {

@@ -123,8 +123,8 @@ class SkewStressSpec extends SparkTestBase
     // window was optimized away), while rdd materialization needs
     // every output column.
     val routed = taskProfile {
-      Sampling.budgetSelectPerGroup(df, "lang", "doc_id", "score", "toks",
-        budgetPerGroup = 1000L, skewThreshold = 500L).rdd.count()
+      Persisted.owned(Sampling.budgetSelectPerGroup(df, "lang", "doc_id", "score",
+        "toks", budgetPerGroup = 1000L, skewThreshold = 500L).rdd.count())
     }
     val routedShares = maxShares(routed, floor = 4000L)
     assert(routedShares.nonEmpty, s"no corpus-scale shuffle stage seen: $routed")
@@ -135,8 +135,8 @@ class SkewStressSpec extends SparkTestBase
     }
     // contrast: the pure window path concentrates the corpus in one task
     val windowed = taskProfile {
-      Sampling.budgetSelectPerGroup(df, "lang", "doc_id", "score", "toks",
-        budgetPerGroup = 1000L, skewThreshold = 1000000L).rdd.count()
+      Persisted.owned(Sampling.budgetSelectPerGroup(df, "lang", "doc_id", "score",
+        "toks", budgetPerGroup = 1000L, skewThreshold = 1000000L).rdd.count())
     }
     val windowShares = maxShares(windowed, floor = 4000L)
     assert(windowShares.exists(_._2 >= 0.9),

@@ -42,13 +42,13 @@ abstract class SparkTestBase extends AnyFunSuite {
   /** Runs `body` and returns the executed (final, under AQE) plan of
     * every SQL execution that reported to QueryExecutionListeners
     * while it ran — actions, plus the named executions the engine
-    * runs itself (GraftSqlBridge.appendRouted) — and the shuffle bytes
-    * its tasks wrote. Events arrive asynchronously: waits until no job
-    * is open and no event arrived for three polls.
+    * runs itself (GraftSqlBridge.appendRouted) — and the end event of
+    * every task that ran meanwhile (its metrics and accumulator updates). Events arrive asynchronously:
+    * waits until no job is open and no event arrived for three polls.
     */
-  protected def executedPlans(body: => Unit): (Seq[SparkPlan], Long) = {
+  protected def executedPlans(body: => Unit): (Seq[SparkPlan], Seq[SparkListenerTaskEnd]) = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val shuffleBytes = new AtomicLong
+    val tasks = new ConcurrentLinkedQueue[SparkListenerTaskEnd]()
     val openJobs = new AtomicLong
     val events = new AtomicLong
     val qel = new QueryExecutionListener {
@@ -66,8 +66,7 @@ abstract class SparkTestBase extends AnyFunSuite {
         openJobs.decrementAndGet(); events.incrementAndGet()
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null)
-          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        if (t.taskMetrics != null) tasks.add(t)
         events.incrementAndGet()
       }
     }
@@ -87,6 +86,6 @@ abstract class SparkTestBase extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(sl)
       spark.listenerManager.unregister(qel)
     }
-    (plans.asScala.toSeq, shuffleBytes.get())
+    (plans.asScala.toSeq, tasks.asScala.toSeq)
   }
 }
