@@ -10,8 +10,9 @@ import graft.text.{LangId, Normalize, Pii, TextMetrics, Tokenize}
   * (SURVEY.md §3 E1/E2). Each stage is a single select/withColumn chain
   * that Catalyst fuses into one codegen'd pass; the only shuffles in the
   * whole pipeline are dedup's two windows and its flag routing, all over
-  * a narrow projection (the wide rows never cross an exchange), and the
-  * shard sequencing.
+  * a narrow projection (the wide rows never cross an exchange). The
+  * shard sequencing numbers the rows where they lie, since they reach it
+  * in `ingest_seq` order.
   *
   * Design notes vs the reference:
   *  - Single-frame drop_reason semantics: the reference physically splits

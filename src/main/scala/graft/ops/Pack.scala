@@ -16,12 +16,12 @@ import graft.Persisted
   *
   * Scale design: the layout is a global exclusive prefix sum of token
   * counts in stable doc order. A `Window.orderBy` without partitioning
-  * moves the whole corpus through ONE task; instead the same two-pass
-  * partition-offset scheme as [[Shard.withGlobalSeq]]: range-partition by
-  * the order key, per-partition token sums (one long per partition to
-  * the driver), prefix-sum those offsets, then number rows locally. Two
-  * passes over the sorted data, O(#partitions) driver state, no
-  * single-reducer hotspot.
+  * moves the whole corpus through ONE task; instead the two-pass
+  * partition-offset scheme of [[Shard.withGlobalSeq]]'s range path:
+  * range-partition by the order key, per-partition token sums (one long
+  * per partition to the driver), prefix-sum those offsets, then number
+  * rows locally. Two passes over the sorted data, O(#partitions) driver
+  * state, no single-reducer hotspot.
   */
 object Pack {
 

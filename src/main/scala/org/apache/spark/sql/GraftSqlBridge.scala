@@ -41,25 +41,41 @@ object GraftSqlBridge {
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** `df` plus a non-null LongType column `name` numbering its rows
-    * 0..n-1 in partition order (`zipWithIndex`: one size job over all
-    * but the last partition, then local numbering). The rows stay
-    * internal: the index is appended by an UnsafeProjection over a
-    * JoinedRow, never through external `Row` conversion, and the
-    * upstream plan is executed once, by this call's own
-    * `queryExecution`. Every action on the result reuses that RDD
-    * lineage, so upstream shuffle outputs are read, not recomputed.
+    * 0..n-1 in partition order, with `zipWithIndex`'s offsets: one size
+    * job over all but the last partition, then the start-offset form
+    * below.
     */
   def withRowIndex(df: DataFrame, name: String): DataFrame = {
+    val rows = df.queryExecution.toRdd
+    val n = rows.getNumPartitions
+    val starts =
+      if (n <= 1) Array.fill(n)(0L)
+      else rows.sparkContext.runJob(rows, org.apache.spark.util.Utils.getIteratorSize _,
+        0 until n - 1).scanLeft(0L)(_ + _)
+    withRowIndex(df, name, starts)
+  }
+
+  /** `df` plus a non-null LongType column `name`: row i of partition p
+    * gets `starts(p) + i`. The rows stay internal: the index is
+    * appended by an UnsafeProjection over a JoinedRow, never through
+    * external `Row` conversion, and the upstream plan is executed by
+    * this call's own `queryExecution`. Every action on the result
+    * reuses that RDD lineage, so upstream shuffle outputs are read, not
+    * recomputed.
+    */
+  def withRowIndex(df: DataFrame, name: String, starts: Array[Long]): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(df.schema.fields :+ StructField(name, LongType, nullable = false))
-    val rows = df.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
+    val rows = df.queryExecution.toRdd.mapPartitionsWithIndex { (p, it) =>
       val append = UnsafeProjection.create(schema)
       val joined = new JoinedRow
       val index = new GenericInternalRow(1)
-      it.map { case (row, i) =>
+      var i = starts(p)
+      it.map { row =>
         index.setLong(0, i)
+        i += 1
         append(joined(row, index)): InternalRow
       }
     }

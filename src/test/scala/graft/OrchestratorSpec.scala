@@ -194,6 +194,42 @@ class OrchestratorSpec extends SparkTestBase {
     assert(fused === checkpointed)
   }
 
+  test("fused deliverables in a scope: no range exchange, no persistent RDD left") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Files.createTempDirectory("graft-fused-export").toString
+    val (plans, _) = executedPlans(Persisted.owned {
+      val sharded = Pipeline.shard(Pipeline.run(Pipeline.ingest(
+        Pipeline.fromDocuments(Tables.documents(spark, sfDir)).select("url", "text"))))
+      Sinks.writeShardedTrainingJsonl(sharded, s"$out/train")
+      Shard.writeManifest(sharded, s"$out/manifest.json", "graft-native",
+        "1970-01-01T00:00:00Z")
+    })
+    assert(plans.nonEmpty)
+    assert(rangeExchanges(plans).isEmpty, plans.mkString("\n----\n"))
+    assert(sc.getPersistentRDDs.keySet -- before === Set.empty,
+      "the scope left a persistent RDD")
+  }
+
+  test("checkpointed stage 7: no range exchange, no persistent RDD left, same v7") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-orch-v7").toString
+    val v6 = java.nio.file.Paths.get(Orchestrator.versionPath(outDir, 6))
+    Files.walk(v6).iterator().asScala.foreach { f =>
+      Files.copy(f, java.nio.file.Paths.get(Orchestrator.versionPath(dir, 6))
+        .resolve(v6.relativize(f).toString))
+    }
+    val before = sc.getPersistentRDDs.keySet
+    val (plans, _) = executedPlans(Orchestrator.run(spark, dir, fromVersion = 7))
+    assert(plans.nonEmpty)
+    assert(rangeExchanges(plans).isEmpty, plans.mkString("\n----\n"))
+    assert(sc.getPersistentRDDs.keySet -- before === Set.empty,
+      "stage 7 left a persistent RDD")
+    def v7(d: String) = spark.read.parquet(Orchestrator.versionPath(d, 7))
+      .select("doc_id", "global_seq", "shard_id").collect().map(_.toSeq).toSet
+    assert(v7(dir) === v7(outDir))
+  }
+
   test("fused run: no cached plan outside a scope, no persistent RDD inside one") {
     val sc = spark.sparkContext
     def fused() = Pipeline.run(Pipeline.ingest(

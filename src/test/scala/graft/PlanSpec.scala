@@ -230,20 +230,13 @@ class PlanSpec extends SparkTestBase {
     // guards the rewrite at the level that actually costs money.
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, ShufflePartitionIdPassThrough, SinglePartition}
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.{col, length, sum}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case o => o +: o.children.flatMap(nodes)
-    }
     val (plans, tasks) = Persisted.owned(
       executedPlans(graft.queries.PipelineQueries.pipelineFull(spark, dir).collect()))
     val shuffleBytes = tasks.map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
-    val all = plans.flatMap(nodes)
+    val all = plans.flatMap(planNodes)
     val shown = plans.mkString("\n----\n")
     val exchanges = all.collect { case e: ShuffleExchangeExec => e }
     val keys = exchanges.map(_.outputPartitioning match {

@@ -8,6 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +41,21 @@ abstract class SparkTestBase extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Every node of `p`, looking through adaptive plans (their current,
+    * after execution final, plan) and query stages.
+    */
+  protected def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case o => o +: o.children.flatMap(planNodes)
+  }
+
+  /** The range-partitioning exchanges among every node of `plans`. */
+  protected def rangeExchanges(plans: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
+    plans.flatMap(planNodes).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
 
   /** Runs `body` and returns the executed (final, under AQE) plan of
     * every SQL execution that reported to QueryExecutionListeners
