@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.functions.{col, count, count_if, lit}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Filters
@@ -43,30 +50,72 @@ object Orchestrator {
   def droppedPath(outDir: String, v: Int): String =
     s"$outDir/dropped_v$v.parquet"
 
-  /** Write one stage's kept/dropped split and return the (kept, dropped)
-    * row counts, observed on the two writes themselves — no read-back —
-    * and the kept frame's schema, so the next stage reads the file back
-    * without a schema-inference job.
-    * Both writes read the stage frame's rows through one
-    * [[Persisted.rows]] branch point, which the stage's
-    * [[Persisted.owned]] scope in [[runStages]] releases. Without it
-    * (a) the whole scalar chain runs twice (once per write), and (b)
-    * Catalyst pushes each `drop_reason`-filter down through the stage's
-    * projections, substituting the FULL expression chain into the filter
-    * condition — at stage 2 that inlines the nfkc/profile/reason tree
-    * ~50× into one Filter, janino dies on the generated method
-    * (InternalCompilerException, 6× per round-11 test run) and the
-    * write silently runs interpreted. Filtering the materialized
-    * rows instead costs one local spill of a frame this mode is
-    * already writing to parquet twice — cheap against the 40:1
-    * text-processing-vs-IO profile (BASELINE.md) it de-duplicates.
+  /** Write stage `v`'s output `out` as `mainpipe_vN` (its kept rows)
+    * and `dropped_vN` (the rest) in one write job, and return the
+    * (kept, dropped) row counts, observed by that job itself — no
+    * read-back — and the schema both files hold, so the next stage
+    * reads the kept file back without a schema-inference job.
+    *
+    * The job writes `out` with a boolean split column,
+    * `drop_reason IS NULL`, by `partitionBy` into one staging directory
+    * beside the checkpoints, sorted within partitions by (split,
+    * `ingest_seq`): that ordering satisfies the local sort a
+    * partitioned write plans, and it keeps every file in `ingest_seq`
+    * order, which stage 7's in-order probe ([[graft.ops.Shard]]) reads
+    * back. The two partition directories are then renamed into place,
+    * the old checkpoints removed first and the dropped side published
+    * first, so a `mainpipe_vN` on disk always has its own `dropped_vN`.
+    * A split with no rows (the dropped side of most later stages)
+    * gets a zero-row parquet written on the driver.
+    *
+    * Nothing stores the stage frame: its chain runs once, inside the
+    * write's tasks. No filter may sit over the chain: Catalyst would
+    * push a `drop_reason` filter into the stage's projections, and the
+    * stage-2 expression tree, inlined ~50× into its condition,
+    * overflows janino's method limit.
     */
-  private def writeSplit(out: DataFrame, keptPath: String,
-                         droppedPath: String): (Long, Long, StructType) = {
-    val rows = Persisted.rows(out)
-    val kept = Filters.kept(rows)
-    (writeCounted(kept, keptPath), writeCounted(Filters.dropped(rows), droppedPath),
-      kept.schema)
+  private def writeSplit(out: DataFrame, outDir: String, v: Int): (Long, Long, StructType) = {
+    val staging = new Path(s"$outDir/_mainpipe_v$v.parquet.staging")
+    val kept = col(SplitCol)
+    val split = Observation()
+    out.withColumn(SplitCol, col("drop_reason").isNull)
+      .observe(split, count_if(kept).as("kept"), count_if(!kept).as("dropped"))
+      .sortWithinPartitions(kept, col("ingest_seq"))
+      .write.mode("overwrite").partitionBy(SplitCol).parquet(staging.toString)
+    val conf = out.sparkSession.sparkContext.hadoopConfiguration
+    val fs = staging.getFileSystem(conf)
+    val targets = Seq(false -> new Path(droppedPath(outDir, v)),
+      true -> new Path(versionPath(outDir, v)))
+    // delete kept first and publish it last: no mainpipe_vN ever sits
+    // beside another write's dropped_vN, or beside none
+    targets.reverse.foreach { case (_, dest) => fs.delete(dest, true) }
+    targets.foreach { case (side, dest) =>
+      val written = new Path(staging, s"$SplitCol=$side")
+      if (fs.exists(written)) {
+        if (!fs.rename(written, dest)) throw new java.io.IOException(s"rename $written -> $dest failed")
+      } else writeEmptyParquet(dest, out.schema, conf)
+    }
+    fs.delete(staging, true)
+    (split.get("kept").asInstanceOf[Long], split.get("dropped").asInstanceOf[Long], out.schema)
+  }
+
+  /** The split column of [[writeSplit]]'s staging write. */
+  private val SplitCol = "__kept"
+
+  /** A parquet directory `dir` holding one file with no rows and
+    * `schema`, written on the driver: parquet's schema from Spark's own
+    * converter, and the Spark schema in the footer key Spark's writer
+    * sets, so a read without a schema sees the same fields a written
+    * split has.
+    */
+  private def writeEmptyParquet(dir: Path, schema: StructType, conf: Configuration): Unit = {
+    val file = new Path(dir, s"part-00000-${java.util.UUID.randomUUID}-c000.parquet")
+    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(file, conf),
+      new SparkToParquetSchemaConverter(SQLConf.get).convert(schema),
+      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE,
+      ParquetWriter.MAX_PADDING_SIZE_DEFAULT, null, ParquetProperties.builder().build())
+    w.start()
+    w.end(java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", schema.json))
   }
 
   /** Read a checkpoint back. With the writer's schema the read plans
@@ -110,10 +159,10 @@ object Orchestrator {
     * read-back.
     *
     * Cache ownership ([[Persisted]]): each stage runs in its own
-    * [[Persisted.owned]] scope around its checkpoint writes, which
-    * releases what the stage registered ([[writeSplit]]'s branch point
-    * and [[graft.ops.Dedup.dedupStage]]'s) once the stage is written;
-    * frames the caller cached are left alone.
+    * [[Persisted.owned]] scope around its checkpoint write, which
+    * releases what the stage registered (the branch points of
+    * [[graft.ops.Dedup.dedupStage]] and stage 7's numbering) once the
+    * stage is written; frames the caller cached are left alone.
     */
   private def runStages(spark: SparkSession, outDir: String,
                         firstVersion: Int, dropPii: Boolean,
@@ -122,8 +171,7 @@ object Orchestrator {
     var cur = readVersion(spark, outDir, firstVersion - 1, inputSchema)
     val counts = earlier ++
       stages(dropPii).filter(_._1 >= firstVersion).map { case (v, name, fn) =>
-        val (kept, dropped, schema) = Persisted.owned(
-          writeSplit(fn(cur), versionPath(outDir, v), droppedPath(outDir, v)))
+        val (kept, dropped, schema) = Persisted.owned(writeSplit(fn(cur), outDir, v))
         cur = readVersion(spark, outDir, v, Some(schema))
         (s"v$v:$name", kept, dropped)
       }
@@ -209,11 +257,10 @@ object Orchestrator {
     val ingested = Pipeline.ingest(rawCur)
     ingested.write.mode("overwrite").parquet(versionPath(outDir, 1))
     val curV1 = readVersion(spark, outDir, 1, Some(ingested.schema))
-    // a branch point before each kept(): same pushdown-inlining
-    // rationale as [[writeSplit]] — the stage-2 chain must not be
-    // substituted into the filter condition (janino limit) or computed
-    // twice. The rows are only live inputs to the v3 write, whose scope
-    // releases them.
+    // a branch point before each kept(): the stage-2 chain must not be
+    // substituted into the filter condition (inlined ~50×, it overflows
+    // janino's method limit) or computed twice. The rows are only live
+    // inputs to the v3 write, whose scope releases them.
     val rowLocal: DataFrame => DataFrame = df => {
       val s2 = Persisted.rows(Pipeline.cleanAndFilter(df))
       Filters.kept(Persisted.rows(Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)))

@@ -88,11 +88,19 @@ object Pq {
     * before returning.
     */
   def codebooksLloyd(emb: DataFrame, m: Int = 16, dim: Int = 64,
-                     k: Int = 10, iters: Int = 3): DataFrame =
+                     k: Int = 10, iters: Int = 3,
+                     localBytes: Long = LocalBytes): DataFrame =
     lloydCodebooksOver(
       emb.select(col("vec_id"),
         normalized(asDouble(col("embedding"))).as("__vec")),
-      m, dim, k, iters)
+      m, dim, k, iters, localBytes)
+
+  /** Driver budget of [[lloydCodebooksOver]]'s single probe, in bytes of
+    * the full quantized vectors it collects (8 per component): 32 MiB,
+    * [[KMeans.LocalGate]] vectors at dim 64. Wider vectors fit fewer
+    * rows (5,461 at dim 768); past the budget the fits run per subspace.
+    */
+  val LocalBytes: Long = KMeans.LocalGate.toLong * 64 * 8
 
   /** Per-subspace Lloyd training over an ALREADY-PREPARED vector column
     * `__vec` (no normalization — the residual path quantizes centered
@@ -100,7 +108,8 @@ object Pq {
     * [[codebooksLloyd]] and [[ivfPqResidualTopK]].
     */
   private def lloydCodebooksOver(vecs: DataFrame, m: Int, dim: Int,
-                                 k: Int, iters: Int): DataFrame = {
+                                 k: Int, iters: Int,
+                                 localBytes: Long = LocalBytes): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val sub = dim / m
@@ -112,14 +121,16 @@ object Pq {
     // slicing (elementwise floor), the local core is the same code the
     // per-subspace path would reach, and centroids were already sorted
     // by cluster id before re-indexing — bit-identical (PqSpec pins it
-    // against the per-subspace composition).
+    // against the per-subspace composition). The probe is gated on the
+    // bytes it brings to the driver, not on rows alone.
+    val gate = math.min(KMeans.LocalGate.toLong, localBytes / (dim.toLong * 8)).toInt
     val qv = transform(col("__vec"),
       x => floor(x * KMeans.Quant.toDouble).cast("long"))
     val probe = vecs.select(col("vec_id").as("id"), qv.as("qv"))
-      .limit(KMeans.LocalGate + 1)
+      .limit(gate + 1)
       .as[(Long, Seq[Long])].collect()
     val rows =
-      if (probe.length <= KMeans.LocalGate) {
+      if (probe.length <= gate) {
         (0 until m).flatMap { mi =>
           val sliced = probe.map { case (id, v) =>
             (id, v.slice(mi * sub, mi * sub + sub)) }

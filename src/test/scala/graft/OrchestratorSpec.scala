@@ -237,7 +237,10 @@ class OrchestratorSpec extends SparkTestBase {
       .write.mode("overwrite").format("noop").save()
     spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet
-    fused()
+    // scopes are per thread: a fresh one runs outside this test's scope
+    val outside = new Thread(() => fused())
+    outside.start()
+    outside.join()
     assert(GraftSqlBridge.noCachedPlans(spark),
       "the fused run left its dedup branch point in the CacheManager")
     // outside a scope the branch point is a plain RDD persist; drop it
@@ -246,6 +249,51 @@ class OrchestratorSpec extends SparkTestBase {
     Persisted.owned(fused())
     assert(sc.getPersistentRDDs.keySet -- before === Set.empty,
       "the scope left a persistent RDD")
+  }
+
+  /** The data files of each checkpoint directory in `dir`. */
+  private def checkpointFiles(dir: String): Map[String, Set[String]] =
+    new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .map(d => d.getName -> d.list().filter(_.startsWith("part-")).toSet).toMap
+
+  test("each boundary is one compiled write job, and a re-run replaces both splits") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-orch-split").toString
+    def run() = Orchestrator.run(spark, dir, raw = Some(
+      Pipeline.fromDocuments(Tables.documents(spark, sfDir)).select("url", "text")))
+    val before = sc.getPersistentRDDs.keySet
+    // no interpreted fallback: a janino failure in any write throws
+    val (plans, _) = withSQLConf("spark.sql.codegen.fallback" -> "false")(
+      executedPlans(run()))
+    assert(sc.getPersistentRDDs.keySet -- before === Set.empty,
+      "the run left a persistent RDD")
+    // a write plan names the checkpoint it reads and, higher, the one it writes
+    val Checkpoint = """(mainpipe|dropped)_v(\d+)\.parquet""".r
+    val writesPerStage = plans.map(_.toString)
+      .filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+      .flatMap(p => Checkpoint.findAllMatchIn(p).map(_.group(2).toInt).maxOption)
+      .groupBy(identity).map { case (v, ws) => v -> ws.size }
+    assert((2 to 7).map(v => v -> writesPerStage.getOrElse(v, 0)) === (2 to 7).map(_ -> 1),
+      writesPerStage)
+    assert(new java.io.File(dir).list().filter(_.contains("staging")).isEmpty)
+    // an empty dropped split reads back, without a schema, with kept's fields
+    val emptyDropped = summaryRows(dir).collect {
+      case (stage, _, 0L) => stage.stripPrefix("v").takeWhile(_ != ':').toInt }
+    assert(emptyDropped.contains(7), emptyDropped)
+    emptyDropped.foreach { v =>
+      val dropped = spark.read.parquet(Orchestrator.droppedPath(dir, v))
+      assert(dropped.count() === 0, s"v$v")
+      assert(dropped.schema === spark.read.parquet(Orchestrator.versionPath(dir, v)).schema,
+        s"v$v")
+    }
+    val first = checkpointFiles(dir)
+    run()
+    val second = checkpointFiles(dir)
+    assert(second.keySet === first.keySet)
+    second.foreach { case (d, files) =>
+      assert(files.nonEmpty && (files & first(d)).isEmpty, s"$d kept files of the first run")
+    }
+    assertSummaryMatchesParquet(dir, stageNames(2))
   }
 
   test("resume from stage 5 reproduces the original v7 exactly") {

@@ -136,6 +136,14 @@ class PackSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  test("the hybrid tests leave no persistent RDD behind") {
+    // each test body runs in its own Persisted.owned scope, which
+    // releases the two-pass path's sorted rows once the test ends
+    val left = spark.sparkContext.getPersistentRDDs.values
+      .filter(_.toString.contains("Pack.scala"))
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
   test("pack layout: boundaries, straddles, zero-token docs") {
     import spark.implicits._
     // capacity 10: doc layouts chosen to pin every edge case

@@ -186,9 +186,21 @@ class SimilaritySpec extends SparkTestBase {
         (mi, code, r.getSeq[Long](1).map(_.toDouble / KMeans.Quant))
       }
     }.toSet
-    val got = Pq.codebooksLloyd(emb, m, dim, k, iters).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSet
+    def trained(localBytes: Long) = {
+      var got = Set.empty[(Int, Int, Seq[Double])]
+      val (plans, _) = executedPlans {
+        got = Pq.codebooksLloyd(emb, m, dim, k, iters, localBytes).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSet
+      }
+      (got, plans.size)
+    }
+    val (got, localRuns) = trained(Pq.LocalBytes)
     assert(got === want, "fused codebooks diverged from per-subspace Lloyd")
+    // one vector short of the byte budget: the per-subspace fallback
+    // runs (at least one more execution per subspace), same codebooks
+    val (fallback, fallbackRuns) = trained((emb.count() - 1) * dim * 8)
+    assert(fallbackRuns >= localRuns + m, s"$fallbackRuns vs $localRuns executions")
+    assert(fallback === want, "per-subspace fallback diverged from the local path")
   }
 
   test("distributed Lloyd releases its cache on failure and with its scope") {

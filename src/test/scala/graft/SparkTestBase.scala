@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session, cheap). */
@@ -32,8 +33,14 @@ object TestSpark {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** Every test body runs in its own [[Persisted.owned]] scope, so no
+    * spec's persists outlive its test.
+    */
+  override def withFixture(test: NoArgTest): Outcome =
+    Persisted.owned(super.withFixture(test))
+
   /** Runs `f` with the session confs `pairs` set, then restores them. */
-  protected def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
+  protected def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
     val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try f finally old.foreach {
