@@ -7,11 +7,10 @@ import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
-import org.apache.spark.sql.functions.{col, count, count_if, lit}
+import org.apache.spark.sql.functions.{col, count_if}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Filters
 import graft.sources.Sinks
 
 /** Checkpointed pipeline orchestrator (SURVEY.md §3 E1): the reference's
@@ -127,16 +126,6 @@ object Orchestrator {
     schema.fold(spark.read)(spark.read.schema(_))
       .parquet(versionPath(outDir, v))
 
-  /** Overwrite `path` with `df`; the row count comes from a
-    * `Dataset.observe` metric collected by the write job itself.
-    */
-  private def writeCounted(df: DataFrame, path: String): Long = {
-    val written = Observation()
-    df.observe(written, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(path)
-    written.get("rows").asInstanceOf[Long]
-  }
-
   /** Ordered stage table: (version, name, transform). Stage v consumes
     * kept rows of v-1. Versions match the reference's file numbering.
     */
@@ -148,7 +137,7 @@ object Orchestrator {
     (6, "tokenise", df => Pipeline.tokenise(df)),
     (7, "shard", df => Pipeline.shard(df)))
 
-  /** The stage runner behind [[run]] and [[incrementalRun]]: stages
+  /** The stage runner behind [[run]]: stages
     * [firstVersion..7] over `mainpipe_v{firstVersion-1}.parquet` in
     * `outDir` (read with `inputSchema` when the caller just wrote it),
     * each split-written by [[writeSplit]] and read back as the next
@@ -228,50 +217,6 @@ object Orchestrator {
     }
     runStages(spark, outDir, math.max(fromVersion, 2), dropPii, v1Schema,
       summaryRowsBelow(outDir, fromVersion))
-  }
-
-  /** Incremental run over a previous completed run's outputs — the
-    * reference's cost profile makes the split obvious: text processing
-    * (stages 2–3) dominated its wall clock ~40:1 over dedup, and those
-    * stages are row-local, so they run through
-    * [[graft.ops.Incremental.processDelta]] against the previous v1/v3
-    * parquets (unchanged docs carry forward, only the crawl delta pays
-    * the scalar pipeline), while the genuinely corpus-global stages
-    * (dedup → shard) re-run in full over the merged v3 — cheap by that
-    * same profile.
-    *
-    * Provenance semantics: carried-forward rows keep their ORIGINAL
-    * ingest_seq, so established documents keep winning keep-first dedup
-    * against newly-arrived duplicates; order-derived artifacts
-    * (shard_id) therefore follow this run's seq interleaving, not a
-    * from-scratch run's. v2 and the per-stage dropped audits of the
-    * delta prefix are not materialized in this mode (the trade for not
-    * rescanning the corpus); run the full mode when audits are needed.
-    * The summary's `v3:incremental_prefix` row holds the merged v3's
-    * row count, with -1 for its (unmaterialized) dropped rows.
-    */
-  def incrementalRun(spark: SparkSession, prevDir: String, outDir: String,
-                     rawCur: DataFrame, dropPii: Boolean = false): DataFrame = {
-    val prevV1 = spark.read.parquet(versionPath(prevDir, 1))
-    val prevV3 = spark.read.parquet(versionPath(prevDir, 3))
-    val ingested = Pipeline.ingest(rawCur)
-    ingested.write.mode("overwrite").parquet(versionPath(outDir, 1))
-    val curV1 = readVersion(spark, outDir, 1, Some(ingested.schema))
-    // a branch point before each kept(): the stage-2 chain must not be
-    // substituted into the filter condition (inlined ~50×, it overflows
-    // janino's method limit) or computed twice. The rows are only live
-    // inputs to the v3 write, whose scope releases them.
-    val rowLocal: DataFrame => DataFrame = df => {
-      val s2 = Persisted.rows(Pipeline.cleanAndFilter(df))
-      Filters.kept(Persisted.rows(Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)))
-    }
-    val (v3Rows, v3Schema) = Persisted.owned {
-      val merged =
-        graft.ops.Incremental.processDelta(curV1, prevV1, prevV3, rowLocal)
-      (writeCounted(merged, versionPath(outDir, 3)), merged.schema)
-    }
-    runStages(spark, outDir, 4, dropPii, Some(v3Schema),
-      Seq(("v3:incremental_prefix", v3Rows, -1L)))
   }
 
   /** CLI parity with the reference's `python run_pipeline.py` entry:

@@ -15,8 +15,8 @@ import org.apache.spark.storage.StorageLevel
   * reads the cache) persists through `Persisted(...)`. The entry point
   * that runs the action wraps it in [[owned]], which releases everything
   * its body registered once the action is done, also when it throws.
-  * Scopes are per thread: query building runs on the driver thread, and
-  * a streaming `foreachBatch` body runs on a thread of its own. Outside
+  * Scopes are per thread, so a body on another thread registers with
+  * that thread's scope, not the caller's. Outside
   * any scope a persist lives as a plain `persist` does, until the frame
   * is unpersisted or the session ends.
   */

@@ -61,4 +61,7 @@ object Tables {
 
   def embeddings(s: SparkSession, d: String): DataFrame =
     load(s, d, "embeddings")
+
+  /** The width of every `embeddings.embedding` vector in the test data. */
+  val EmbeddingDim = 64
 }

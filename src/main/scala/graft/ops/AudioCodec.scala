@@ -212,57 +212,4 @@ object AudioCodec {
     }
     out
   }
-
-  // ---- feature extraction ------------------------------------------------
-
-  /** Content-derived audio feature vector from decoded samples — the
-    * audio sibling of [[Multimodal.pixelFeatures]]: duration, RMS,
-    * peak, zero-crossing rate, and an 8-bin RMS-energy histogram over
-    * fixed 1024-frame windows (fractions). `dim` ≠ 13 truncates or
-    * zero-pads, keeping the fixed-width embedding contract.
-    */
-  def audioFeatures(a: DecodedAudio, dim: Int): Array[Float] = {
-    val mono = new Array[Float](a.nFrames)
-    var f = 0
-    while (f < a.nFrames) {
-      var c = 0
-      var s = 0.0f
-      while (c < a.channels) { s += a.samples(f * a.channels + c); c += 1 }
-      mono(f) = s / a.channels
-      f += 1
-    }
-    var sumSq = 0.0
-    var peak = 0.0f
-    var crossings = 0L
-    var i = 0
-    while (i < mono.length) {
-      val v = mono(i)
-      sumSq += v.toDouble * v
-      val av = math.abs(v)
-      if (av > peak) peak = av
-      if (i > 0 && ((mono(i - 1) >= 0) != (v >= 0))) crossings += 1
-      i += 1
-    }
-    val rms = math.sqrt(sumSq / mono.length).toFloat
-    val zcr = if (mono.length > 1) crossings.toFloat / (mono.length - 1) else 0.0f
-    val hist = new Array[Long](8)
-    var w = 0
-    var nWindows = 0
-    while (w < mono.length) {
-      val end = math.min(mono.length, w + 1024)
-      var ss = 0.0
-      var j = w
-      while (j < end) { ss += mono(j).toDouble * mono(j); j += 1 }
-      val wr = math.sqrt(ss / (end - w))
-      hist(math.min((wr * 8).toInt, 7)) += 1
-      nWindows += 1
-      w += 1024
-    }
-    val base = Array(
-      a.nFrames.toFloat / a.sampleRate, // duration s
-      a.channels.toFloat, a.sampleRate.toFloat,
-      rms, peak, zcr) ++
-      hist.map(h => if (nWindows > 0) h.toFloat / nWindows else 0.0f)
-    java.util.Arrays.copyOf(base, dim)
-  }
 }

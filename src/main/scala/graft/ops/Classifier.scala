@@ -68,7 +68,6 @@ object Classifier {
 
   /** A fitted linear model: score(x) = sigmoid(w·x + b). */
   final case class LogisticModel(weights: Array[Double], bias: Double) {
-    def dim: Int = weights.length
     /** Columnar inference over an array<double> feature column: one
       * codegen dot product against the weight literal per row.
       */
@@ -82,68 +81,10 @@ object Classifier {
   def features(toks: Column, dim: Int): Column =
     HashedEmbed.hashedVector(toks, dim)
 
-  // -------------------------------------------------------------------
-  // Model persistence: train once, score many runs later. The engine's
-  // whole training story is BIT-reproducibility, so the serialized form
-  // must be too — weights are written as hex IEEE-754 bit patterns
-  // (doubleToLongBits), not decimal strings, making round-trips exact by
-  // construction and corrupt files loud (parse failures raise, matching
-  // the Bpe.loadMerges/loadVocabJson contract, instead of silently
-  // drifting a filter threshold on 100 TB of scoring).
-  // -------------------------------------------------------------------
-
-  private val ModelHeader = "graft-logistic-v1"
-
-  /** One-line textual form: `graft-logistic-v1 <dim> <biasHex> <wHex>*`. */
-  def modelToString(m: LogisticModel): String = {
-    val sb = new StringBuilder(ModelHeader)
-    sb.append(' ').append(m.dim)
-    sb.append(' ').append(java.lang.Long.toHexString(
-      java.lang.Double.doubleToRawLongBits(m.bias)))
-    var i = 0
-    while (i < m.dim) {
-      sb.append(' ').append(java.lang.Long.toHexString(
-        java.lang.Double.doubleToRawLongBits(m.weights(i))))
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** Strict inverse of [[modelToString]]; raises on any corruption. */
-  def modelFromString(s: String): LogisticModel = {
-    def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"modelFromString: $msg")
-    val parts = s.trim.split("\\s+")
-    if (parts.length < 3 || parts(0) != ModelHeader)
-      fail(s"expected '$ModelHeader <dim> <biasHex> <wHex>*'")
-    val dim =
-      try parts(1).toInt
-      catch { case _: NumberFormatException => fail(s"bad dim '${parts(1)}'") }
-    if (dim < 0 || parts.length != dim + 3)
-      fail(s"dim $dim but ${parts.length - 3} weight fields")
-    def bits(h: String): Double =
-      try java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(h, 16))
-      catch { case _: NumberFormatException => fail(s"bad hex '$h'") }
-    val w = new Array[Double](dim)
-    var i = 0
-    while (i < dim) { w(i) = bits(parts(i + 3)); i += 1 }
-    LogisticModel(w, bits(parts(2)))
-  }
-
   private def sigmoid(z: Double): Double =
     if (z >= 0) 1.0 / (1.0 + math.exp(-z))
     else { val e = math.exp(z); e / (1.0 + e) }
 
-  /** Fit L2-regularized logistic regression by full-batch GD.
-    *
-    * @param df       training rows
-    * @param featCol  array<double> column of length `dim` (e.g. [[features]])
-    * @param labelCol 0/1 label column (anything castable to double)
-    * @param iters    gradient steps (fixed count — no data-dependent
-    *                 stopping, part of the determinism contract)
-    * @param lr       learning rate
-    * @param l2       L2 penalty on weights (bias unpenalized)
-    */
   /** Row-count gate for the local fast path: at or below this many
     * training rows the feature matrix is collected once and all
     * `iters` gradient steps run on the driver — saving `iters` job
@@ -160,14 +101,21 @@ object Classifier {
     */
   val LocalTrainGate = 65536L
 
-  // test seam: ClassifierSpec drops the gate to 0 to force the
-  // distributed path on a small fixture and pin local == distributed
-  private def localGate: Long =
-    java.lang.Long.getLong("graft.classifier.localGate", LocalTrainGate)
-
+  /** Fit L2-regularized logistic regression by full-batch GD.
+    *
+    * @param df       training rows
+    * @param featCol  array<double> column of length `dim` (e.g. [[features]])
+    * @param labelCol 0/1 label column (anything castable to double)
+    * @param iters    gradient steps (fixed count — no data-dependent
+    *                 stopping, part of the determinism contract)
+    * @param lr       learning rate
+    * @param l2       L2 penalty on weights (bias unpenalized)
+    * @param localGate training-row count at or below which the local
+    *                 fast path runs ([[LocalTrainGate]])
+    */
   def trainLogistic(df: DataFrame, featCol: String, labelCol: String,
       dim: Int, iters: Int = 50, lr: Double = 0.5,
-      l2: Double = 1e-4): LogisticModel = {
+      l2: Double = 1e-4, localGate: Long = LocalTrainGate): LogisticModel = {
     val spark = df.sparkSession
     val data = df.select(col(featCol), col(labelCol).cast("double"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -345,7 +293,7 @@ object Classifier {
     * construction — every per-row contribution is already an exact
     * long and long addition is associative, so driver-order and
     * tree-order sums agree to the last bit (ClassifierSpec pins
-    * local == distributed under the test seam).
+    * local == distributed with `localGate = 0`).
     *
     * This front door is what makes the graded twin safe to point at a
     * corpus-derived split: the round-14 1000x plan sweep caught the
@@ -356,7 +304,8 @@ object Classifier {
     * about everywhere else.
     */
   def trainFixedPoint(df: DataFrame, featCol: String, labelCol: String,
-                      dim: Int, iters: Int, lrDen: Long): Array[Long] = {
+                      dim: Int, iters: Int, lrDen: Long,
+                      localGate: Long = LocalTrainGate): Array[Long] = {
     val spark = df.sparkSession
     val data = df.select(col(featCol).cast("array<long>"),
         col(labelCol).cast("int"))
@@ -427,18 +376,5 @@ object Classifier {
       .otherwise(-floor(-margin.cast("double") / 4.0))
       .cast("long")
     greatest(lit(0L), least(lit(FpScale), lit(500000L) + q))
-  }
-
-  /** Mean logistic loss of a model over a labeled frame — one
-    * aggregation, used by the spec to assert training monotonicity.
-    */
-  def logLoss(df: DataFrame, featCol: String, labelCol: String,
-      model: LogisticModel): Double = {
-    val p = model.scoreCol(col(featCol))
-    val y = col(labelCol).cast("double")
-    // clamp away from {0,1} so the log is finite
-    val pc = least(greatest(p, lit(1e-12)), lit(1.0 - 1e-12))
-    df.select(avg(-(y * log(pc) + (lit(1.0) - y) * log(lit(1.0) - pc))))
-      .head().getDouble(0)
   }
 }

@@ -271,8 +271,8 @@ object Curation {
 
   /** The corpus boilerplate-line table: lines occurring in >= `minDocs`
     * distinct documents. Computed once over the corpus and reusable —
-    * the streaming scrub joins new batches against this table without
-    * ever recounting history (graft.streaming.Streaming.scrubBoilerplate).
+    * a later batch can be scrubbed against this table without
+    * recounting history.
     */
   def frequentLines(df: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", segLen: Int = LineDedupSegLen,

@@ -35,7 +35,7 @@ object Dedup {
     * flags on kept rows — the doomed rows' own flags are audit-only
     * (their drop_reason is already set, first-match-wins preserves it).
     */
-  private def doomedLast(df: DataFrame) =
+  private[graft] def doomedLast(df: DataFrame) =
     if (df.columns.contains("drop_reason")) col("drop_reason").isNotNull
     else lit(false)
 
@@ -59,33 +59,9 @@ object Dedup {
     Filters.applyRules(withFlags, Seq(col("is_dup_exact") -> "exact_duplicate"))
   }
 
-  /** D2: near-dup pass over the output of `exactDedup`. */
-  def nearDedup(df: DataFrame, textCol: String = "text_pii_masked",
-                seqCol: String = "ingest_seq"): DataFrame = {
-    val keyed = df.withColumn("near_key",
-      Normalize.canonNear(col(textCol), NearKeyChars))
-    val isCandidate =
-      (length(col("exact_canon_text")) >= NearDupMinLen) && (col("near_key") =!= "")
-
-    val cand = keyed.filter(isCandidate)
-    val rest = keyed.filter(!isCandidate)
-      .withColumn("is_dup_near", lit(false))
-
-    val w = Window.partitionBy("near_key").orderBy(doomedLast(df), col(seqCol))
-    val candFlagged = cand
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__first_id", first("dedup_id").over(w))
-      .withColumn("is_dup_near", col("__rn") > 1 && !col("is_dup_exact"))
-      .withColumn("dup_of",
-        coalesce(col("dup_of"), when(col("is_dup_near"), col("__first_id"))))
-      .drop("__rn", "__first_id")
-
-    val unioned = candFlagged.unionByName(rest)
-    Filters.applyRules(unioned, Seq(col("is_dup_near") -> "near_duplicate"))
-  }
-
   /** D1∘D2 composition, reference stage-4 semantics — value-identical to
-    * `nearDedup(exactDedup(df))` (parity-pinned in FiltersDedupSpec) but
+    * `nearDedup(exactDedup(df))` (the composed form FiltersDedupSpec keeps
+    * as its parity reference) but
     * with the narrow-shuffle shape: by dedup time the pipeline frame
     * carries four text-sized columns (raw/norm/deep-clean/masked) plus
     * ~25 metrics, and the composed form drags ALL of it through two
@@ -174,50 +150,6 @@ object Dedup {
         coalesce(col("dup_of"), when(col("is_dup_near"), col("__fidn"))))
       .drop("__isde", "__dofe", "__isdn", "__fidn")
     Filters.applyRules(near, Seq(col("is_dup_near") -> "near_duplicate"))
-  }
-
-  /** Incremental exact dedup — the daily-ingest shape at corpus scale:
-    * dedup a NEW batch against the running corpus without re-windowing
-    * history. Within-batch keep-first runs as the usual window; rows
-    * whose hash already exists in `seenHashes` (the running corpus
-    * state) are marked duplicates via a left join — the historical
-    * corpus contributes only its distinct hash set, never re-shuffles
-    * its rows.
-    *
-    * dup_of lineage: if the state table carries the kept row's
-    * `dedup_id` alongside `exact_hash`, cross-batch duplicates point at
-    * the true (corpus) keeper — including a batch-first row that loses
-    * to history. With a hash-only state table, dup_of stays batch-local
-    * (cross-batch dups get null), so keep the id column in the state.
-    * Callers append `result.filter(!is_dup_exact)
-    * .select("exact_hash", "dedup_id")` to the state (both sides
-    * hash-partition on exact_hash, so the append is shuffle-free when
-    * the state table is bucketed on the hash).
-    */
-  def incrementalExactDedup(batch: DataFrame, seenHashes: DataFrame,
-                            textCol: String = "text_pii_masked",
-                            seqCol: String = "ingest_seq"): DataFrame = {
-    val flagged = exactDedup(batch, textCol, seqCol)
-    val seen =
-      if (seenHashes.columns.contains("dedup_id"))
-        seenHashes.groupBy(col("exact_hash").as("__seen_hash"))
-          .agg(min("dedup_id").as("__seen_id"))
-      else
-        seenHashes.select(col("exact_hash").as("__seen_hash")).distinct()
-          .withColumn("__seen_id", lit(null).cast("string"))
-    flagged
-      .join(seen, col("exact_hash") === col("__seen_hash"), "left")
-      .withColumn("is_dup_exact",
-        col("is_dup_exact") || col("__seen_hash").isNotNull)
-      // the corpus keeper predates everything in the batch, so it wins
-      // the lineage pointer over the within-batch first occurrence
-      .withColumn("dup_of",
-        when(col("__seen_hash").isNotNull && col("__seen_id").isNotNull,
-          col("__seen_id")).otherwise(col("dup_of")))
-      .withColumn("drop_reason",
-        when(col("drop_reason").isNull && col("__seen_hash").isNotNull,
-          "exact_duplicate").otherwise(col("drop_reason")))
-      .drop("__seen_hash", "__seen_id")
   }
 
   /** Within-document repeated-segment removal, keeping each segment's

@@ -3,19 +3,15 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Source-drift detection over tumbling windows — ONE fold arithmetic,
-  * two execution forms:
+/** Source-drift detection over tumbling windows:
   *
   *  - [[DriftMath.step]] is the integer EWMA / EW-variance recurrence
   *    (quantized ×10⁴ means, α = 1/4 shift-divides, double-computed
   *    clamped squared deviation, 3σ alert after warm-up);
-  *  - `graft.streaming.Streaming.driftMonitor` folds it continuously
-  *    inside one stateful operator;
-  *  - [[Drift.sourceDrift]] is the BATCH twin over the events table,
+  *  - [[Drift.sourceDrift]] folds it in batch over the events table,
   *    and its DuckDB oracle replays the identical recurrence as a
-  *    recursive CTE (`q_source_drift`) — which makes the shared fold
-  *    arithmetic hash-checked, and the streaming monitor covered by
-  *    the oracle transitively through the shared code path.
+  *    recursive CTE (`q_source_drift`), which makes the fold
+  *    arithmetic hash-checked.
   *
   * Scale shape of the batch form: the per-event aggregation is a keyed
   * (source, window) shuffle with map-side partials — corpus-scale work

@@ -25,8 +25,7 @@ object Filters {
       coalesce(existing +: rules.map { case (p, r) => when(p, lit(r)) }: _*))
   }
 
-  def kept(df: DataFrame): DataFrame    = df.filter(col("drop_reason").isNull)
-  def dropped(df: DataFrame): DataFrame = df.filter(col("drop_reason").isNotNull)
+  def kept(df: DataFrame): DataFrame = df.filter(col("drop_reason").isNull)
 
   /** Null-like strings (behavioral data, text_clean_and_filter.py:150-160). */
   val NullLike: Seq[String] = Seq("nan", "none", "null", "n/a", "null value")

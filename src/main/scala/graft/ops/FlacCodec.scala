@@ -46,16 +46,6 @@ object FlacCodec {
     b != null && b.length >= 4 &&
       b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C'
 
-  /** Normalized-float adapter into the [[AudioCodec]] feature path. */
-  def toAudio(d: DecodedFlac): AudioCodec.DecodedAudio = {
-    val scale = 1.0f / (1 << (d.bitsPerSample - 1))
-    val out = new Array[Float](d.samples.length)
-    var i = 0
-    while (i < out.length) { out(i) = d.samples(i) * scale; i += 1 }
-    AudioCodec.DecodedAudio(d.sampleRate, d.channels, d.bitsPerSample,
-      d.nFrames, out)
-  }
-
   // ---- bit IO (MSB-first; FLAC has no byte stuffing) ---------------------
 
   private final class Truncated extends Exception

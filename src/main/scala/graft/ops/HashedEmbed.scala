@@ -7,9 +7,10 @@ import graft.text.TextMetrics
 import graft.Persisted
 
 /** Model-free text embeddings via the feature-hashing trick
-  * (Weinberger et al. 2009): bucket = md5-hash of the token into
-  * `dim` slots, a second hash bit gives the ±1 sign that keeps
-  * collisions unbiased, component = signed token count. No
+  * (Weinberger et al. 2009): bucket = the token's first two md5 hex
+  * chars mod `dim`, the third hex char's parity gives the ±1 sign
+  * (even → +1) that keeps collisions unbiased, component = signed
+  * token count. No
   * vocabulary, no model, no fitting — the embedder is a pure
   * projection, so the entire text corpus acquires a vector column in
   * the same codegen pass as any other scalar stage, and every
@@ -32,18 +33,6 @@ import graft.Persisted
 object HashedEmbed {
 
   val Dim = 64
-
-  /** Bucket in [0, dim): first two md5 hex chars mod dim — the
-    * engine-portable hash the DSIR features use (no shared integer
-    * hash seed needed; oracle parses the hex by position).
-    */
-  def bucket(t: Column, dim: Int = Dim): Column =
-    (conv(substring(md5(t), 1, 2), 16, 10).cast("int") % dim).cast("int")
-
-  /** Unbiased ±1 sign from the third md5 hex char's parity. */
-  def sign(t: Column): Column =
-    when(conv(substring(md5(t), 3, 1), 16, 10).cast("int") % 2 === 0, lit(1.0))
-      .otherwise(lit(-1.0))
 
   /** The signed-count vector as array<double> (integer-valued), via
     * the compiled one-pass kernel [[graft.plans.HashedSignedCount]] —

@@ -181,13 +181,6 @@ object HeavyHitters {
       val c = capacityFor(k)
       new MgState(new Array[String](c), new Array[Long](c), 0)
     }
-
-    /** Build a state from explicit contents (spec surface). */
-    def apply(m: Map[String, Long]): MgState = {
-      val s = empty(math.max(1, m.size))
-      m.foreach { case (t, c) => s.add(t, c) }
-      s
-    }
   }
 
   /** Finished summary, descending by est (ties by tok) so the exploded

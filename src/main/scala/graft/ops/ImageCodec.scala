@@ -365,49 +365,6 @@ object ImageCodec {
     out.toByteArray
   }
 
-  /** Spec fixture: PNG with an explicit filter type per scanline
-    * (forward-filtered here, so decode must invert it) — exercises the
-    * Sub/Up/Average/Paeth unfilter paths that filter-0 round-trips
-    * never touch.
-    */
-  private[graft] def encodePngWithFilters(w: Int, h: Int, rgb: Array[Byte],
-                                          filters: Array[Int]): Array[Byte] = {
-    require(rgb.length == w * h * 3 && filters.length == h)
-    val stride = w * 3
-    val raw = new Array[Byte]((stride + 1) * h)
-    var y = 0
-    while (y < h) {
-      val f = filters(y)
-      raw(y * (stride + 1)) = f.toByte
-      var x = 0
-      while (x < stride) {
-        val cur = rgb(y * stride + x) & 0xff
-        val a = if (x >= 3) rgb(y * stride + x - 3) & 0xff else 0
-        val b = if (y > 0) rgb((y - 1) * stride + x) & 0xff else 0
-        val c = if (x >= 3 && y > 0) rgb((y - 1) * stride + x - 3) & 0xff else 0
-        val enc = f match {
-          case 0 => cur
-          case 1 => cur - a
-          case 2 => cur - b
-          case 3 => cur - (a + b) / 2
-          case 4 => cur - paeth(a, b, c)
-        }
-        raw(y * (stride + 1) + 1 + x) = (enc & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    val out = new ByteArrayOutputStream()
-    out.write(PngSig, 0, 8)
-    val ihdr = new Array[Byte](13)
-    writeBe32(ihdr, 0, w); writeBe32(ihdr, 4, h)
-    ihdr(8) = 8; ihdr(9) = 2
-    writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "IDAT", deflate(raw))
-    writeChunk(out, "IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
   /** Minimal valid 24-bpp bottom-up BMP. */
   def encodeBmp(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
     require(rgb.length == w * h * 3, "rgb must be w*h*3 bytes")

@@ -3,64 +3,20 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Incremental corpus processing over [[SnapshotDiff]] — the
+/** Incremental corpus maintenance over [[SnapshotDiff]] — the
   * operational answer to "the crawl grew 1%, don't reprocess 100 TB":
-  * recompute the per-document pipeline only for added + changed
-  * documents, carry the previous run's rows forward for unchanged ones,
-  * and let removed documents fall out.
-  *
-  * Soundness contract: `process` must be row-local (metrics, scoring,
-  * masking, tokenisation — any per-doc projection), so a document's
-  * output depends only on its own content; then carry-forward equals
-  * recompute by construction (IncrementalSpec asserts the equality).
-  * Corpus-global operators — dedup windows, document-frequency stats,
-  * vocabulary builds — must re-run through the Orchestrator instead;
-  * composing them here would silently serve stale global state.
-  *
-  * Scale shape: one co-keyed full-outer join for the diff, two
-  * semi-joins keyed on the id to split work. The unchanged majority
-  * never re-reads its text and never enters `process`'s plan; the
-  * recompute side is delta-sized. With both snapshot tables bucketed on
-  * the id every exchange disappears.
+  * merge a change set into the next corpus snapshot and track distinct
+  * counts across batches without rescanning history.
   */
 object Incremental {
-
-  /** Per-doc output for the current snapshot, recomputing only the
-    * delta. `prev` is the previous corpus snapshot (id + textCol),
-    * `prevOut` the previous run's `process` output keyed by the same
-    * id. Content identity is md5(textCol) — the same fingerprint
-    * convention as the snapshot-diff query surface.
-    */
-  def processDelta(cur: DataFrame, prev: DataFrame, prevOut: DataFrame,
-                   process: DataFrame => DataFrame,
-                   idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    def fps(df: DataFrame): DataFrame =
-      df.select(col(idCol),
-        md5(coalesce(col(textCol), lit(""))).as("fingerprint"))
-    // the diff feeds BOTH union branches: persist the (id, status)
-    // sliver — ids only, never text — or each branch re-scans and
-    // re-fingerprints both snapshots.
-    val diffed = SnapshotDiff.diff(fps(prev), fps(cur), idCol)
-      .select(col(idCol), col("status"))
-    val d = cur.sparkSession.createDataFrame(
-      graft.Persisted(diffed.rdd),
-      diffed.schema)
-    val todo = d.filter(col("status").isin("added", "changed"))
-      .select(idCol)
-    val keep = d.filter(col("status") === "unchanged").select(idCol)
-    process(cur.join(todo, Seq(idCol), "left_semi"))
-      .unionByName(prevOut.join(keep, Seq(idCol), "left_semi"))
-  }
 
   /** Snapshot MERGE — the copy-on-write upsert/delete that produces the
     * NEXT corpus snapshot from the current one plus a change set (what
     * Delta/Iceberg `MERGE INTO` does, as plain relational algebra):
     * rows named by `deletes` fall out, rows named by `upserts` are
     * replaced wholesale, everything else carries forward untouched.
-    * Feeding the result and the old snapshot to [[SnapshotDiff.diff]] /
-    * [[processDelta]] closes the loop: merge → diff → delta-only
-    * reprocess.
+    * Feeding the result and the old snapshot to [[SnapshotDiff.diff]]
+    * closes the loop: merge → diff.
     *
     * Scale shape: two LEFT-ANTI joins keyed on the id plus a union —
     * the unchanged majority is never rewritten row-by-row, never
@@ -71,7 +27,7 @@ object Incremental {
     *
     * Contract: `upserts` is keyed by the id. A duplicated upsert id
     * would silently emit a duplicate-id snapshot (which then fans out
-    * through every later diff / processDelta id-join), so — like
+    * through every later diff id-join), so — like
     * Delta/Iceberg `MERGE INTO` on a multi-matching source — the merge
     * FAILS on one instead; a NULL upsert id fails too (a null-keyed
     * row can never be replaced or deleted later — the id anti-joins

@@ -50,7 +50,25 @@ object KMeans {
     */
   val LocalGate = 65536
 
-  def lloyd(emb: DataFrame, k: Int, iters: Int,
+  /** Driver budget of a local probe, in bytes of the full quantized
+    * vectors it collects (8 per component): 32 MiB, [[LocalGate]]
+    * vectors at dim 64. Wider vectors fit fewer rows (5,461 at dim
+    * 768). [[lloyd]] and [[graft.ops.Pq]]'s fused codebook probe both
+    * read it.
+    */
+  val LocalBytes: Long = LocalGate.toLong * 64 * 8
+
+  /** The rows a local probe of `dim`-wide vectors may collect: the row
+    * gate, capped by the byte budget.
+    */
+  def probeRows(localGate: Int, dim: Int, localBytes: Long = LocalBytes): Int =
+    math.min(localGate.toLong, localBytes / (dim.toLong * 8)).toInt
+
+  /** @param dim       the vector width; it sizes the local probe against
+    *                  [[LocalBytes]]
+    * @param localGate  the probe's row gate; 0 forces the distributed path
+    */
+  def lloyd(emb: DataFrame, k: Int, iters: Int, dim: Int,
             idCol: String = "vec_id", vecCol: String = "embedding",
             localGate: Int = LocalGate)
       : (DataFrame, DataFrame) = {
@@ -60,14 +78,15 @@ object KMeans {
     val qv = transform(col(vecCol).cast("array<double>"),
       x => floor(x * Quant.toDouble).cast("long"))
 
-    if (localGate > 0) {
+    val gate = probeRows(localGate, dim)
+    if (gate > 0) {
       // one bounded job: if the input fits the gate, everything folds
       // on the driver; otherwise fall through to the distributed path
-      // (the limit probe is wasted but bounded)
+      // (the limit probe is wasted but bounded by the byte budget)
       val probe = emb.select(col(idCol).as("id"), qv.as("qv"))
-        .limit(localGate + 1)
+        .limit(gate + 1)
         .as[(Long, Seq[Long])].collect()
-      if (probe.length <= localGate)
+      if (probe.length <= gate)
         return lloydLocal(spark, probe, k, iters, idCol)
     }
 

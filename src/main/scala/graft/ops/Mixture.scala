@@ -6,31 +6,9 @@ import org.apache.spark.sql.functions._
 /** Mixture construction (beyond the reference's constant mixture_name:
   * scoring_and_mixture.py:138 tags but never samples). A real
   * pretraining run samples each subset/source at a target weight —
-  * this is the distributed form of that step.
+  * this computes those weights.
   */
 object Mixture {
-
-  /** Stratified sample: keep each stratum of `strataCol` at its
-    * configured fraction (missing strata keep 0). Seeded Bernoulli
-    * sampling per row — deterministic for a fixed seed AND fixed row
-    * content, independent of partitioning: the keep decision hashes the
-    * row's id column, not RNG stream position (stream-position sampling
-    * changes results whenever partitioning changes — useless for
-    * reproducible corpus builds at scale).
-    */
-  def stratifiedSample(df: DataFrame, strataCol: String, idCol: String,
-                       fractions: Map[String, Double],
-                       seed: Long = 42L): DataFrame = {
-    require(fractions.values.forall(f => f >= 0.0 && f <= 1.0),
-      "fractions must be in [0,1]")
-    val fracExpr = fractions.foldLeft(lit(0.0)) { case (acc, (k, f)) =>
-      when(col(strataCol) === k, lit(f)).otherwise(acc)
-    }
-    // uniform in [0,1) from a salted 64-bit hash of the id
-    val u = (pmod(xxhash64(col(idCol), lit(seed)), lit(1000000000L)).cast("double")
-      / lit(1000000000.0))
-    df.filter(u < fracExpr)
-  }
 
   /** Temperature-scaled mixture weights (the multilingual-sampling rule
     * from the XLM-R / mT5 line of work): stratum i gets weight
@@ -55,26 +33,5 @@ object Mixture {
       // floor, not round: HALF_UP (Spark) vs half-even drift across engines
       .withColumn("docs_alloc", floor(col("weight") * budgetDocs).cast("long"))
       .drop("pw", "__tot")
-  }
-
-  /** Repeat-and-sample up-weighting: integer-part full copies plus a
-    * fractional stratified sample — the standard way to give a
-    * high-quality subset an effective weight > 1 epoch.
-    */
-  def upweight(df: DataFrame, strataCol: String, idCol: String,
-               weights: Map[String, Double], seed: Long = 42L): DataFrame = {
-    require(weights.values.forall(_ >= 0.0), "weights must be >= 0")
-    val copiesExpr = weights.foldLeft(lit(0)) { case (acc, (k, w)) =>
-      when(col(strataCol) === k, lit(w.toInt)).otherwise(acc)
-    }
-    val fullCopies = df
-      .withColumn("__copies", copiesExpr)
-      .filter(col("__copies") > 0)
-      .withColumn("epoch", explode(sequence(lit(1), col("__copies"))))
-      .drop("__copies")
-    val fractional = stratifiedSample(df, strataCol, idCol,
-      weights.map { case (k, w) => k -> (w - w.toInt) }, seed)
-      .withColumn("epoch", lit(0))
-    fullCopies.unionByName(fractional)
   }
 }

@@ -671,38 +671,6 @@ object Multimodal {
       }
   }
 
-  // ---- decode: real codec first, stub fallback ---------------------------
-
-  /** Real image decode through [[ImageCodec]] (PNG/BMP/PPM, JVM-pure):
-    * actual dims and a checksum of the DECODED PIXELS — two payloads
-    * that encode the same pixels differently (PNG vs BMP of one image)
-    * produce the same checksum, which no byte-level hash can do. Falls
-    * back to [[decodeImageStub]] outside the codec's scope.
-    */
-  private[graft] def decodeImage(content: Array[Byte], width: Int,
-                                 height: Int): (Int, Int, Long) =
-    ImageCodec.decode(content) match {
-      case Some(img) =>
-        val checksum = XXH64.hashUnsafeBytes(img.pixels,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-          img.pixels.length, 42L)
-        (img.width, img.height, checksum)
-      case None => decodeImageStub(content, width, height)
-    }
-
-  /** STUB image decode: the fallback for payloads outside the codec's
-    * scope (e.g. JPEG — a real deployment hands them to a codec
-    * library). Returns the declared dims and a deterministic checksum so
-    * downstream plumbing (schema, nullability, batch shape) is exercised
-    * end-to-end regardless of payload format.
-    */
-  private[graft] def decodeImageStub(content: Array[Byte], width: Int,
-                                     height: Int): (Int, Int, Long) = {
-    val checksum = XXH64.hashUnsafeBytes(content,
-      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, content.length, 42L)
-    (width, height, checksum)
-  }
-
   /** Content-derived feature vector from decoded pixels — the
     * deterministic stand-in for a vision model forward pass that a real
     * deployment swaps in, except the INPUT is now genuinely the image:

@@ -89,18 +89,11 @@ object Pq {
     */
   def codebooksLloyd(emb: DataFrame, m: Int = 16, dim: Int = 64,
                      k: Int = 10, iters: Int = 3,
-                     localBytes: Long = LocalBytes): DataFrame =
+                     localBytes: Long = KMeans.LocalBytes): DataFrame =
     lloydCodebooksOver(
       emb.select(col("vec_id"),
         normalized(asDouble(col("embedding"))).as("__vec")),
       m, dim, k, iters, localBytes)
-
-  /** Driver budget of [[lloydCodebooksOver]]'s single probe, in bytes of
-    * the full quantized vectors it collects (8 per component): 32 MiB,
-    * [[KMeans.LocalGate]] vectors at dim 64. Wider vectors fit fewer
-    * rows (5,461 at dim 768); past the budget the fits run per subspace.
-    */
-  val LocalBytes: Long = KMeans.LocalGate.toLong * 64 * 8
 
   /** Per-subspace Lloyd training over an ALREADY-PREPARED vector column
     * `__vec` (no normalization — the residual path quantizes centered
@@ -109,7 +102,7 @@ object Pq {
     */
   private def lloydCodebooksOver(vecs: DataFrame, m: Int, dim: Int,
                                  k: Int, iters: Int,
-                                 localBytes: Long = LocalBytes): DataFrame = {
+                                 localBytes: Long = KMeans.LocalBytes): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val sub = dim / m
@@ -122,8 +115,9 @@ object Pq {
     // per-subspace path would reach, and centroids were already sorted
     // by cluster id before re-indexing — bit-identical (PqSpec pins it
     // against the per-subspace composition). The probe is gated on the
-    // bytes it brings to the driver, not on rows alone.
-    val gate = math.min(KMeans.LocalGate.toLong, localBytes / (dim.toLong * 8)).toInt
+    // bytes it brings to the driver ([[KMeans.LocalBytes]]), not on rows
+    // alone; past the budget the fits run per subspace.
+    val gate = KMeans.probeRows(KMeans.LocalGate, dim, localBytes)
     val qv = transform(col("__vec"),
       x => floor(x * KMeans.Quant.toDouble).cast("long"))
     val probe = vecs.select(col("vec_id").as("id"), qv.as("qv"))
@@ -150,7 +144,7 @@ object Pq {
           val (_, cents) = KMeans.lloyd(
             staged.select(col("vec_id"),
               slice(col("__vec"), lit(mi * sub + 1), lit(sub)).as("embedding")),
-            k, iters)
+            k, iters, sub)
           cents.collect().sortBy(_.getInt(0)).zipWithIndex.map { case (r, code) =>
             (mi, code, r.getSeq[Long](1).map(_.toDouble / KMeans.Quant))
           }
@@ -158,34 +152,6 @@ object Pq {
       }
     rows.toDF("m_idx", "code", "cv")
   }
-
-  /** Total quantized reconstruction error of a codebook over the corpus
-    * (Σ per vector per subspace of the best squared distance, in 1e-4
-    * ticks summed as integers — order-proof). The PQ quality report:
-    * lower is a strictly better quantizer; SimilaritySpec uses it to
-    * prove trained codebooks beat the label-mean stand-in.
-    */
-  def reconstructionErrorQ(emb: DataFrame, cb: DataFrame,
-                           m: Int = 16, dim: Int = 64): Long = {
-    val sub = dim / m
-    val cbl = codebookLiteral(collectCodebook(cb, m))
-    val perVec = (0 until m).map { mi =>
-      floor(array_min(transform(element_at(cbl, mi + 1), c =>
-        struct(l2sq(subVec(col("__vn"), lit(mi), sub), c.getField("cv")).as("dist"),
-          c.getField("code").as("code"))))
-        .getField("dist") * 1e4).cast("long")
-    }.reduce(_ + _)
-    emb.select(normalized(asDouble(col("embedding"))).as("__vn"))
-      .select(perVec.as("e"))
-      .agg(coalesce(sum("e"), lit(0L))) // empty corpus → 0, not a null NPE
-      .collect()(0).getLong(0)
-  }
-
-  /** Encode against an explicit codebook table (label-mean or
-    * [[codebooksLloyd]] — same (m_idx, code, cv) schema).
-    */
-  def encode(emb: DataFrame, cb: DataFrame, m: Int, dim: Int): DataFrame =
-    encodeWith(emb, collectCodebook(cb, m), m, dim)
 
   /** The codebook table collected and validated once on the driver —
     * per subspace, codes sorted ascending with their centroid vectors.
@@ -466,7 +432,7 @@ object Pq {
     val (_, coarseCents) = KMeans.lloyd(
       emb.select(col("vec_id"),
         normalized(asDouble(col("embedding"))).as("embedding")),
-      coarseK, iters)
+      coarseK, iters, dim)
     val centRows = coarseCents.collect().sortBy(_.getInt(0)).zipWithIndex
       .map { case (r, label) =>
         (label, r.getSeq[Long](1).map(_.toDouble / KMeans.Quant)) }.toSeq

@@ -110,27 +110,6 @@ object Report {
     one.select(explode(rows).as("m")).select("m.*")
   }
 
-  /** A2 at 100 TB: exact `percentile` buffers every value in the
-    * aggregation state (fine for one small describe at test scale,
-    * memory-unbounded on a trillion rows); approx_percentile's
-    * KLL-style sketch is the scale path — bounded state at a chosen
-    * accuracy. Sketch internals are engine-defined, so this form is
-    * spec-checked against [[describeCol]] (RelationalSpec), not
-    * oracle-hashed. stddev here is the streaming moment aggregate —
-    * fine when nothing hashes the bits.
-    */
-  def describeColApprox(df: DataFrame, c: String, accuracy: Int = 10000): DataFrame =
-    df.agg(
-        count(col(c)).as("n"),
-        min(col(c)).as("min"),
-        max(col(c)).as("max"),
-        avg(col(c)).as("mean"),
-        stddev_samp(col(c)).as("std"),
-        expr(s"approx_percentile($c, array(0.25, 0.5, 0.75), $accuracy)").as("_q"))
-      .select(col("n"), col("min"), col("max"), col("mean"), col("std"),
-        col("_q").getItem(0).as("p25"), col("_q").getItem(1).as("median"),
-        col("_q").getItem(2).as("p75"))
-
   /** A3: boolean/scalar sums over flag columns (replaces the reference's
     * mutable global counters with side-effect-free aggregation).
     */
@@ -153,10 +132,6 @@ object Report {
       .withColumn("max_token_freq_ratio",
         col("max_freq").cast("double") / col("n_tokens").cast("double"))
 
-  /** A5: subset distribution. */
-  def subsetCounts(df: DataFrame): DataFrame =
-    df.groupBy("subset").agg(count(lit(1)).as("n"))
-
   /** H1: fixed-width histogram of a numeric column (bucket floor(c/w)). */
   def histogram(df: DataFrame, c: String, width: Double): DataFrame =
     df.filter(col(c).isNotNull)
@@ -174,8 +149,8 @@ object Report {
     * the three distinct-aggregates expand into one grouped pass each —
     * a report query, run once per corpus build, not per stage. At
     * extreme cardinalities swap `countDistinct` for
-    * `approx_count_distinct` (HLL++, bounded state) — the same trade
-    * [[describeColApprox]] documents for percentiles.
+    * `approx_count_distinct` (HLL++, bounded state), as
+    * `approx_percentile` is for percentiles.
     */
   def dataCard(df: DataFrame, textCol: String = "text",
                sourceCol: String = "source",

@@ -8,186 +8,19 @@ import org.apache.spark.sql.functions._
   * runs before anything else: drop documents whose URL the origin's
   * robots.txt disallowed for your agent.
   *
-  * Two layers:
-  *  - [[parse]] / [[matches]] / [[isAllowed]]: a spec-faithful
-  *    evaluator (group selection by longest user-agent match with `*`
-  *    fallback; longest-match rule precedence; allow wins ties; `*`
-  *    wildcards and `$` end-anchor; empty-pattern rules ignored) for
-  *    per-document use against raw robots.txt payloads — e.g. the
-  *    `robotstxt` records a crawl snapshot ships.
-  *  - [[gate]]: the DISTRIBUTED shape — rules already extracted to a
-  *    (host, rule_path, allow) table (robots files are a per-host dim
-  *    table, thousands of rows where the crawl has billions). The dim
-  *    collapses to ONE rule-array row per host, that array broadcasts,
-  *    and the RFC longest-match/allow-ties verdict is an in-row
-  *    `filter`/`transform`/`array_max` fold — ZERO Exchange on the
-  *    corpus side (no prefix-join fan-out, no verdict groupBy, no
-  *    join-back), fully declarative, Catalyst-optimizable, and
-  *    replayable in SQL — which is what makes
-  *    [[graft.queries.WarcQueries]]'s robots gate oracle-checkable.
-  *    Wildcard rules are the rare case in real robots data; route
-  *    hosts that use them through [[isAllowed]].
+  * [[gate]] is the DISTRIBUTED shape — rules already extracted to a
+  * (host, rule_path, allow) table (robots files are a per-host dim
+  * table, thousands of rows where the crawl has billions). The dim
+  * collapses to ONE rule-array row per host, that array broadcasts, and
+  * the RFC longest-match/allow-ties verdict is an in-row
+  * `filter`/`transform`/`array_max` fold — ZERO Exchange on the corpus
+  * side (no prefix-join fan-out, no verdict groupBy, no join-back),
+  * fully declarative, Catalyst-optimizable, and replayable in SQL —
+  * which is what makes [[graft.queries.WarcQueries]]'s robots gate
+  * oracle-checkable. Rules are literal prefixes; RFC 9309's `*`
+  * wildcards and `$` anchor are not evaluated.
   */
 object Robots {
-
-  /** One access rule: `allow=false` is `Disallow`. */
-  final case class Rule(pattern: String, allow: Boolean)
-
-  /** Caps: a hostile robots.txt cannot inflate state (RFC 9309 itself
-    * requires parsers to accept at least 500 KiB; we stop there).
-    */
-  val MaxRules: Int = 4096
-  val MaxBytes: Int = 512 * 1024
-
-  /** Parse a robots.txt body into the rule list for `agent`: groups
-    * are runs of `User-agent:` lines followed by rules; matching is by
-    * PRODUCT TOKEN (the agent string up to the first `/`, so
-    * `graftbot/1.2` matches a `User-agent: graftbot` group but a
-    * `User-agent: bot` group does NOT capture every agent containing
-    * "bot"), `*` is the fallback, multiple user-agent lines naming the
-    * same group share its rules, and — per RFC 9309 §2.2.1 — rules
-    * from ALL groups matching the selected agent are COMBINED (a
-    * second `User-agent: *` group later in the file adds to the
-    * first, in document order). Unknown directives are ignored;
-    * malformed input yields whatever rules parse — never throws.
-    */
-  def parse(robotsTxt: String, agent: String): Seq[Rule] = {
-    val groups = parseGroups(robotsTxt, agent)
-    val best = groups.iterator.map(_._1).foldLeft(-1)(math.max)
-    if (best < 0) Nil
-    else groups.iterator.filter(_._1 == best).flatMap(_._2).toList
-  }
-
-  /** The `Crawl-delay` of the group(s) matching `agent` (seconds; a
-    * de-facto directive RFC 9309 leaves unstandardized but most
-    * robots.txt files carry): among the groups at the selected
-    * specificity, the first parseable value in document order.
-    * None when absent/unmatched/malformed — callers fall back to
-    * their own politeness default (see
-    * [[graft.queries.WarcQueries.crawlSchedule]] for the scheduling
-    * shape the value feeds).
-    */
-  def crawlDelay(robotsTxt: String, agent: String): Option[Double] = {
-    val groups = parseGroups(robotsTxt, agent)
-    val best = groups.iterator.map(_._1).foldLeft(-1)(math.max)
-    if (best < 0) None
-    else groups.iterator.filter(_._1 == best).flatMap(_._3).nextOption()
-  }
-
-  /** Shared group collector: one (specificity, rules, crawl-delay)
-    * tuple per group; specificity = -1 group does not apply, 0 = the
-    * `*` group, >0 = exact product-token match.
-    */
-  private def parseGroups(robotsTxt: String,
-      agent: String): Seq[(Int, List[Rule], Option[Double])] = {
-    if (robotsTxt == null) return Nil
-    val body =
-      if (robotsTxt.length > MaxBytes) robotsTxt.substring(0, MaxBytes)
-      else robotsTxt
-    val agentTok =
-      Option(agent).getOrElse("*").toLowerCase.takeWhile(_ != '/').trim
-    val groups =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, List[Rule], Option[Double])]
-    var curSpec = -1
-    var curRules = List.empty[Rule]
-    var curDelay: Option[Double] = None
-    var nRules = 0
-    var inAgentRun = false
-    var groupOpen = false
-    def closeGroup(): Unit = {
-      if (groupOpen) groups += ((curSpec, curRules.reverse, curDelay))
-      curSpec = -1; curRules = Nil; curDelay = None; groupOpen = false
-    }
-    body.split("\r?\n").iterator.takeWhile(_ => nRules < MaxRules)
-      .foreach { raw =>
-        val line = raw.takeWhile(_ != '#').trim
-        val i = line.indexOf(':')
-        if (i > 0) {
-          val key = line.substring(0, i).trim.toLowerCase
-          val value = line.substring(i + 1).trim
-          key match {
-            case "user-agent" =>
-              if (!inAgentRun) { closeGroup(); inAgentRun = true; groupOpen = true }
-              val tok = value.toLowerCase.takeWhile(_ != '/').trim
-              val spec =
-                if (tok == "*") 0
-                else if (tok.nonEmpty && tok == agentTok) tok.length
-                else -1
-              if (spec > curSpec) curSpec = spec
-            case "allow" | "disallow" =>
-              inAgentRun = false
-              // empty pattern = no rule (an empty Disallow allows all)
-              if (value.nonEmpty && groupOpen && curSpec >= 0) {
-                curRules ::= Rule(value, key == "allow")
-                nRules += 1
-              }
-            case "crawl-delay" =>
-              inAgentRun = false
-              if (groupOpen && curSpec >= 0 && curDelay.isEmpty)
-                curDelay = value.toDoubleOption.filter(d => d >= 0 && d.isFinite)
-            case _ => inAgentRun = false
-          }
-        }
-      }
-    closeGroup()
-    groups.toSeq
-  }
-
-  /** RFC 9309 pattern match: literal except `*` (any run, including
-    * empty) and a trailing `$` (end anchor). Greedy two-pointer walk —
-    * linear in `path` per star, no regex, no backtracking blowup.
-    */
-  def matches(pattern: String, path: String): Boolean = {
-    if (pattern == null || path == null) return false
-    val anchored = pattern.endsWith("$")
-    val pat = if (anchored) pattern.dropRight(1) else pattern
-    val segs = pat.split("\\*", -1)
-    var pos = 0
-    var first = true
-    for (seg <- segs.dropRight(1)) {
-      if (first) {
-        if (!path.startsWith(seg, pos)) return false
-        pos += seg.length
-        first = false
-      } else if (seg.nonEmpty) {
-        val j = path.indexOf(seg, pos)
-        if (j < 0) return false
-        pos = j + seg.length
-      }
-    }
-    val last = segs.last
-    if (first) {
-      // no stars at all: plain prefix (or exact when anchored)
-      if (anchored) path == pat else path.startsWith(pat)
-    } else if (anchored) {
-      last.isEmpty || (path.endsWith(last) &&
-        path.length - last.length >= pos)
-    } else {
-      last.isEmpty || path.indexOf(last, pos) >= 0
-    }
-  }
-
-  /** Longest-match evaluation (RFC 9309 §2.2.2): among the agent's
-    * rules whose pattern matches the path, the longest pattern wins;
-    * an allow/disallow tie at the same length resolves to ALLOW; no
-    * matching rule means allowed.
-    */
-  def isAllowed(rules: Seq[Rule], path: String): Boolean = {
-    var bestLen = -1
-    var allow = true
-    rules.foreach { r =>
-      if (r.pattern.length >= bestLen && matches(r.pattern, path)) {
-        if (r.pattern.length > bestLen) {
-          bestLen = r.pattern.length; allow = r.allow
-        } else if (r.allow) allow = true // tie -> allow wins
-      }
-    }
-    allow
-  }
-
-  /** One-call convenience: parse + evaluate. */
-  def isAllowed(robotsTxt: String, agent: String, path: String): Boolean =
-    isAllowed(parse(robotsTxt, agent), path)
 
   /** Distributed robots gate over literal-prefix rules: `urls`
     * (…, hostCol, pathCol) gated against `rules`
@@ -205,7 +38,6 @@ object Robots {
     * no per-URL groupBy to collapse it, no join-back; the only
     * shuffle in the plan is the dim-sized rule collapse. Callers keep
     * every corpus column through the gate (no re-join on a row id).
-    * Wildcard-using hosts (rare) go through [[isAllowed]].
     */
   def gate(urls: DataFrame, rules: DataFrame, hostCol: String = "host",
       pathCol: String = "path"): DataFrame = {

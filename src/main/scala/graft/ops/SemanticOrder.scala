@@ -24,7 +24,7 @@ import graft.text.TextMetrics
   *     everything downstream is exact arithmetic);
   *  2. two deterministic ±1 random-hyperplane projections collapse the
   *     vector to a 2-D semantic plane (Johnson–Lindenstrauss flavored;
-  *     signs from md5 parity, the [[HashedEmbed.sign]] convention, so
+  *     signs from md5 parity, the [[HashedEmbed]] sign convention, so
   *     any engine can replay them);
   *  3. min-max quantize each axis to the 16-bit grid (ONE tiny global
   *     agg, broadcast back — 4 longs, not a shuffle of the corpus);
@@ -45,7 +45,7 @@ object SemanticOrder {
   val Dim = 64
 
   /** ±1 hyperplane component for axis/index: parity of md5 hex char 3
-    * of "icp:axis:i" — even → +1 (exactly HashedEmbed.sign's
+    * of "icp:axis:i" — even → +1 (exactly HashedEmbed's sign
     * convention, over a seed string any engine can rebuild).
     */
   private[graft] def hyperplane(axis: String, dim: Int): Seq[Double] =

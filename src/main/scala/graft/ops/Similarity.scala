@@ -20,12 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Left-to-right fold dot product over two double arrays (expression
-    * form; interpreted — kept for SQL-surface composability and tests).
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** Native codegen'd cosine (graft.plans.CosineSimilarity): reads the
     * unsafe array buffers in place — no Seq boxing, no SerDe, and the
     * surrounding filter/window stays in the same whole-stage-codegen

@@ -154,26 +154,26 @@ object SketchDedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Result of [[incrementalMinhash]]: the flagged batch, the batch's
-    * own sketch table (reusable — append the kept rows to the corpus
-    * state instead of re-sketching), and `release()` for the internal
-    * persist once both frames have been consumed. The sketch cache MUST
-    * be released by the caller — a per-micro-batch leak otherwise.
+  /** Result of [[incrementalFromSketches]]: the flagged batch and the
+    * batch's own sketch table (reusable — append the kept rows to the
+    * corpus state instead of re-sketching). The sketch table is
+    * persisted through [[graft.Persisted]], so the caller's scope
+    * releases it.
     */
-  final case class IncrementalNearDup(flagged: DataFrame, sketches: DataFrame) {
-    def release(): Unit = sketches.unpersist(blocking = false)
-  }
+  final case class IncrementalNearDup(flagged: DataFrame, sketches: DataFrame)
 
-  /** Incremental MinHash+LSH: flag near-duplicates of a NEW batch,
+  /** Incremental near-dup flagging: flag near-duplicates of a NEW batch,
     * both within the batch and against a persistent corpus sketch
-    * table — the production shape of continuous corpus growth (the
-    * near-dup twin of [[Dedup.incrementalExactDedup]], which likewise
-    * dedups the batch internally before consulting history). The corpus
-    * side is the banded state (id, hs, bands — [[sketchTable]] layout)
-    * written by earlier runs; history is NEVER re-sketched and never
-    * re-shuffled beyond the band-key join:
+    * table — the production shape of continuous corpus growth. Both
+    * sides are already (id, hs, bands) tables, so the same
+    * candidate/verify logic serves the XXH64 production sketch
+    * ([[sketchTable]]) AND the md5-hex oracle sketch
+    * ([[minhashMd5SketchTable]]) — hs element type only has to support
+    * equality (array_intersect), band keys only equality (join). The
+    * corpus side is the banded state written by earlier runs; history is
+    * NEVER re-sketched and never re-shuffled beyond the band-key join:
     *
-    *  1. sketch the new batch once (compiled pass, persisted, exposed),
+    *  1. persist the batch's sketches once (exposed as `sketches`),
     *  2. intra-batch: banded self-join + exact-Jaccard verify,
     *     keep-first by id → `is_dup_near_batch`, `batch_dup_of` (lowest
     *     matching smaller id; chains flag every later member — run
@@ -181,23 +181,6 @@ object SketchDedup {
     *  3. corpus: new band keys ⋈ corpus band keys, verify, →
     *     `is_dup_near_corpus`, `near_dup_of` (lowest corpus id),
     *  4. append `sketches` rows for docs with NEITHER flag to the state.
-    */
-  def incrementalMinhash(batch: DataFrame, corpusSketches: DataFrame,
-                         idCol: String, textCol: String,
-                         numHashes: Int = 64, bands: Int = 16,
-                         threshold: Double = 0.7,
-                         shingleSize: Int = 3): IncrementalNearDup = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    incrementalFromSketches(batch,
-      sketchTable(batch, idCol, textCol, numHashes, bands, shingleSize),
-      corpusSketches, idCol, threshold)
-  }
-
-  /** The sketch-agnostic core of [[incrementalMinhash]]: both sides are
-    * already (id, hs, bands) tables, so the same candidate/verify logic
-    * serves the XXH64 production sketch AND the md5-hex oracle sketch
-    * ([[minhashMd5SketchTable]]) — hs element type only has to support
-    * equality (array_intersect), band keys only equality (join).
     */
   def incrementalFromSketches(batch: DataFrame, batchSketches: DataFrame,
                               corpusSketches: DataFrame, idCol: String,
@@ -242,7 +225,7 @@ object SketchDedup {
   }
 
   /** Per-doc sketch state rows (id, hs, bands) — what
-    * [[incrementalMinhash]] reads as the corpus side and what each run
+    * [[incrementalFromSketches]] reads as the corpus side and what each run
     * appends for its kept docs.
     */
   def sketchTable(df: DataFrame, idCol: String, textCol: String,
@@ -280,44 +263,6 @@ object SketchDedup {
           concat(b.cast("string"), lit(":"),
             concat_ws("", slice(col("sig"), b * rows + 1, lit(rows)))))
           .as("bands"))
-  }
-
-  /** 64-bit SimHash over whitespace tokens (FNV-1a token hashes) —
-    * the executable SPEC form; the production path compiles the same
-    * function as the codegen kernel [[graft.plans.Simhash64]]
-    * (SketchDedupSpec pins them bit-identical — the nfkc/tokenize
-    * differential-baseline pattern).
-    */
-  val simhash64 = udf { (s: String) =>
-    if (s == null) 0L
-    else {
-      val toks = s.trim.split("\\s+").filter(_.nonEmpty)
-      if (toks.isEmpty) 0L
-      else {
-        val counts = new Array[Int](64)
-        toks.foreach { t =>
-          var h = 0xcbf29ce484222325L // FNV-1a 64 offset basis
-          var i = 0
-          while (i < t.length) {
-            h ^= t.charAt(i).toLong
-            h *= 0x100000001b3L
-            i += 1
-          }
-          var bit = 0
-          while (bit < 64) {
-            if (((h >>> bit) & 1L) == 1L) counts(bit) += 1 else counts(bit) -= 1
-            bit += 1
-          }
-        }
-        var sig = 0L
-        var bit = 0
-        while (bit < 64) {
-          if (counts(bit) > 0) sig |= (1L << bit)
-          bit += 1
-        }
-        sig
-      }
-    }
   }
 
   /** Hamming distance between two 64-bit sketches. */

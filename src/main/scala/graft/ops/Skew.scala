@@ -1,15 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-/** Skew mitigation helpers (SURVEY.md §2.9 scale note; builder brief:
-  * "salting for skew, AQE for runtime re-plan").
-  *
-  * AQE's skew-join splitting handles sort-merge joins on its own; these
-  * helpers cover the cases AQE does not: broadcast-ineligible hot-key
-  * equi-joins against a mid-size build side, and hot-key windows/aggs
-  * where one key floods a single partition.
+/** Parallelism helper for per-row-expensive stages (SURVEY.md §2.9
+  * scale note). AQE's skew-join splitting handles sort-merge joins on
+  * its own.
   */
 object Skew {
 
@@ -32,45 +27,4 @@ object Skew {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
-
-  /** Salted equi-join: the probe side gets a per-row salt derived from a
-    * uniformly-distributed hash of the whole row (deterministic given
-    * row content — safe under task retry); the build side is replicated
-    * `salts` times. The hot key's rows land on `salts` partitions
-    * instead of one. Build-side cost: |build| × salts rows shuffled —
-    * pick salts ≈ (hot key rows / target partition rows).
-    */
-  def saltedJoin(probe: DataFrame, build: DataFrame, key: String,
-                 salts: Int = 16, joinType: String = "inner"): DataFrame = {
-    require(salts > 0)
-    val saltedProbe = probe.withColumn("__salt",
-      pmod(xxhash64(struct(probe.columns.toIndexedSeq.map(col): _*)), lit(salts.toLong)))
-    val saltedBuild = build.withColumn("__salt",
-      explode(sequence(lit(0L), lit(salts.toLong - 1))))
-    saltedProbe.join(saltedBuild, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
-  /** Two-phase salted aggregation for algebraic aggregates over a hot
-    * key: phase 1 aggregates (key, salt) — spreading the hot key over
-    * `salts` reducers — phase 2 merges per key. (Spark's map-side
-    * partial aggregation usually makes this unnecessary for groupBy;
-    * it matters when upstream partitioning already concentrated the
-    * key, e.g. after a keyed shuffle.)
-    */
-  def saltedSumCount(df: DataFrame, key: String, valueCol: String,
-                     salts: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)), lit(salts.toLong)))
-    salted.groupBy(col(key), col("__salt"))
-      .agg(sum(valueCol).as("__s"), count(lit(1)).as("__n"))
-      .groupBy(col(key))
-      .agg(sum("__s").as(s"sum_$valueCol"), sum("__n").as("n_rows"))
-  }
-
-  /** Null-safe key extraction with the degenerate-key guard used by the
-    * dedup windows: nulls and empties never enter a keyed shuffle (they
-    * would all land on one partition).
-    */
-  def nonDegenerate(c: Column): Column =
-    when(c.isNull || trim(c.cast("string")) === "", lit(null)).otherwise(c)
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * shuffle once on the same key (no broadcast: snapshots are
   * corpus-sized), ids are unique per side so the join can't amplify
   * skew, and the classification is a projection on top. At 100 TB,
-  * bucket both snapshot tables by id at write time
-  * ([[graft.sources.Bucketing]]) and the exchanges disappear entirely.
+  * bucketing both snapshot tables by id at write time
+  * (`DataFrameWriter.bucketBy`) makes the exchanges disappear.
   */
 object SnapshotDiff {
 

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,10 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * a WAV and a FLAC of the same recording produce IDENTICAL
   * signatures (energy comparisons are also invariant under any
   * uniform amplitude scale, since every frame's Σs² scales by the
-  * same s²) — the cross-container dedup a byte hash cannot see,
-  * pinned in StreamingSpec. The equality key for streaming
-  * `dropDuplicatesWithinWatermark`; near-miss pairs stay with the
-  * batch banding (q_audio_neardup).
+  * same s²) — the cross-container dedup a byte hash cannot see. An
+  * exact equality key; near-miss pairs go through the banding of
+  * q_audio_neardup.
   */
 case class AudioSig(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
@@ -63,7 +60,4 @@ object AudioSig {
       UTF8String.fromString(s"${ch(0)}:${ch(1)}:${ch(2)}:${ch(3)}")
     }
   }
-
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(AudioSig(GraftSqlBridge.expression(c)))
 }

@@ -9,7 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** P3 boilerplate-line removal as ONE native pass — the compiled
   * replacement for `trim(array_join(filter(split(c, "\n"),
-  * l => !lower(l).rlike(BoilerRe)), "\n"))`: higher-order lambdas are
+  * l => !lower(l).rlike(boilerRe)), "\n"))` (boilerRe: the
+  * [[graft.text.Normalize.BoilerplatePatterns]] alternation; test-scope
+  * NormalizeRef keeps that form): higher-order lambdas are
   * CodegenFallback, so the old form ran INTERPRETED (per-row array
   * allocation from split, a closure call and a regex-alternation scan
   * per line) inside the deep-clean stage's otherwise fully codegen'd

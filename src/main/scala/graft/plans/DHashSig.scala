@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,10 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * The equality-keyed form of the perceptual family: identical pixels
   * yield identical signatures REGARDLESS of container or encoder (a
   * QOI and a PNG of the same image collide — the cross-format dedup a
-  * byte hash cannot see), which is what a streaming
-  * `dropDuplicatesWithinWatermark` or a batch groupBy needs as its
-  * bounded-state key. Near-miss pairs (hamming 1–3) stay with the
-  * batch banding machinery (q_media_neardup).
+  * byte hash cannot see), which is what a groupBy needs as its key.
+  * Near-miss pairs (hamming 1–3) stay with the batch banding machinery
+  * (q_media_neardup).
   */
 case class DHashSig(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
@@ -58,7 +55,4 @@ object DHashSig {
         UTF8String.fromString(s"${ch(0)}:${ch(1)}:${ch(2)}:${ch(3)}")
       case _ => null
     }
-
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(DHashSig(GraftSqlBridge.expression(c)))
 }

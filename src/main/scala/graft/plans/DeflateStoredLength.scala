@@ -21,11 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The JDK's own Deflater at level 0 is deliberately NOT used: its
   * stored-block sizing follows internal buffer strides (measured: 6
   * blocks for 200 kB where the format needs 4), which is valid DEFLATE
-  * but not replayable arithmetic. [[DeflateStoredLength.encode]] is
-  * this engine's own spec-exact encoder; DeflateSpec proves every
-  * encoding inflates back byte-identically through java.util.zip
-  * .Inflater (which also verifies the Adler-32), and that this kernel
-  * equals encode(_).length exactly.
+  * but not replayable arithmetic. DeflateSpec keeps a spec-exact
+  * stored encoder, proves every encoding inflates back byte-identically
+  * through java.util.zip.Inflater (which also verifies the Adler-32),
+  * and that this kernel equals its output length exactly.
   */
 case class DeflateStoredLength(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
@@ -60,46 +59,6 @@ object DeflateStoredLength {
     val n = s.numBytes()
     val blocks = math.max(1, (n + MaxBlock - 1) / MaxBlock)
     2 + 5 * blocks + n + 4
-  }
-
-  /** The actual spec-exact encoder the kernel's arithmetic describes —
-    * emits a VALID zlib stream (header 0x78 0x01: CM=8, CINFO=7,
-    * FCHECK making the 16-bit header ≡ 0 mod 31, level-0 FLEVEL;
-    * final-flagged stored blocks; big-endian Adler-32) that
-    * java.util.zip.Inflater round-trips. Used by DeflateSpec to tie
-    * the arithmetic to the format; production queries only need the
-    * length.
-    */
-  def encode(in: Array[Byte]): Array[Byte] = {
-    val n = in.length
-    val blocks = math.max(1, (n + MaxBlock - 1) / MaxBlock)
-    val out = new Array[Byte](2 + 5 * blocks + n + 4)
-    out(0) = 0x78.toByte
-    out(1) = 0x01.toByte
-    var pos = 2
-    var off = 0
-    var b = 0
-    while (b < blocks) {
-      val len = math.min(n - off, MaxBlock)
-      val last = b == blocks - 1
-      out(pos) = if (last) 1.toByte else 0.toByte // BFINAL, BTYPE=00
-      out(pos + 1) = (len & 0xff).toByte
-      out(pos + 2) = ((len >> 8) & 0xff).toByte
-      out(pos + 3) = (~len & 0xff).toByte
-      out(pos + 4) = ((~len >> 8) & 0xff).toByte
-      System.arraycopy(in, off, out, pos + 5, len)
-      pos += 5 + len
-      off += len
-      b += 1
-    }
-    val adler = new java.util.zip.Adler32
-    adler.update(in, 0, n)
-    val a = adler.getValue
-    out(pos) = ((a >> 24) & 0xff).toByte
-    out(pos + 1) = ((a >> 16) & 0xff).toByte
-    out(pos + 2) = ((a >> 8) & 0xff).toByte
-    out(pos + 3) = (a & 0xff).toByte
-    out
   }
 
   def apply(c: Column): Column =

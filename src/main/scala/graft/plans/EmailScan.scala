@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (deep_clean_and_pii.py:266-334 — the pattern IS the operator
   * contract and is not changed here; only the evaluation engine is).
   *
-  * Why this kernel exists: the tools/RegexAudit harness measured the
+  * Why this kernel exists: the test-scope graft.tools.RegexAudit
+  * harness (behind RegexLinearitySpec) measured the
   * pattern under Spark's backtracking java.util.regex engine as the
   * engine's ONE super-linear regex — O(n²) on any long run of
   * local-part-class characters with no '@' (minified JS, base64 blobs,
@@ -187,7 +188,4 @@ case class EmailMask(child: Expression)
 
 object EmailMask {
   val Placeholder: UTF8String = UTF8String.fromString("<EMAIL>")
-
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(EmailMask(GraftSqlBridge.expression(c)))
 }

@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** NFKC unicode normalisation as a native Catalyst expression
   * (SURVEY.md §2.14: the one scalar op Spark has no built-in for).
   *
-  * Unlike the UDF form (graft.text.Normalize.nfkc), this participates in
+  * Unlike a UDF form (test-scope NormalizeRef.nfkc, its differential
+  * baseline), this participates in
   * whole-stage codegen: the generated code calls a static JVM method
   * directly — no SerDe boundary, no codegen-span break, and the
   * already-normalized fast path returns the input UTF8String without

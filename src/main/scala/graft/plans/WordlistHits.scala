@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -90,8 +88,4 @@ object WordlistHits {
     }
     new GenericArrayData(counts)
   }
-
-  /** Column-API entry point over a string-array column. */
-  def apply(toks: Column, profile: String): Column =
-    GraftSqlBridge.column(WordlistHits(GraftSqlBridge.expression(toks), profile))
 }

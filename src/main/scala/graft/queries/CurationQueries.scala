@@ -148,7 +148,7 @@ object CurationQueries {
     */
   def kmeansTrain(s: SparkSession, dir: String): DataFrame = {
     val (assigned, cents) = KMeans.lloyd(Tables.embeddings(s, dir),
-      k = KmK, iters = KmIters)
+      k = KmK, iters = KmIters, dim = Tables.EmbeddingDim)
     assigned.groupBy("cluster")
       .agg(count(lit(1)).as("n_members"), sum("dist_q").as("inertia_q"))
       .join(cents, Seq("cluster"))
@@ -214,7 +214,7 @@ object CurationQueries {
     */
   def semDedup(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val (assigned, _) = KMeans.lloyd(emb, k = KmK, iters = KmIters)
+    val (assigned, _) = KMeans.lloyd(emb, k = KmK, iters = KmIters, dim = Tables.EmbeddingDim)
     val clustered = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .join(assigned.select("vec_id", "cluster"), Seq("vec_id"))

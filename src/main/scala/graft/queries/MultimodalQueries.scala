@@ -391,15 +391,9 @@ object MultimodalQueries {
   /** ALL perceptual signatures from ONE decode pass (VERDICT r11 #5):
     * the image dHash, audio energy-delta and video frame-sampled dHash
     * tables unified as (modality, media_id, c0..c11) — image/audio
-    * carry their 4 chunks (c4..c11 = 0), video all 12. This is the
-    * stage a production pipeline MATERIALIZES next to the corpus so
-    * the four near-dup consumers (flat image/audio/video + incremental)
-    * never re-decode history: [[writeMediaSignatures]] writes it to a
-    * corpus-keyed parquet under the configured store, and [[sigSlice]]
-    * makes every consumer read that table when present (compute-inline
-    * otherwise — results are bit-identical either way, which is what
-    * keeps the four pair queries hash-checked independently of the
-    * staging). Banding keys on each modality's REAL chunk columns
+    * carry their 4 chunks (c4..c11 = 0), video all 12. The four near-dup
+    * consumers (flat image/audio/video + incremental) read it through
+    * [[sigSlice]]. Banding keys on each modality's REAL chunk columns
     * only, so the zero padding never enters a join.
     */
   def mediaSignatures(s: SparkSession, dir: String): DataFrame = {
@@ -412,274 +406,15 @@ object MultimodalQueries {
       .unionByName(wide(videoSigsRaw(s, dir), "video", 12))
   }
 
-  /** Corpus CONTENT stamp — an MD5 over the sorted per-file
-    * (name, length, mtime) listing of the documents table, through the
-    * Hadoop FS API so hdfs:// and s3a:// stores resolve like local
-    * paths. Folded into the store key so a regenerated corpus at the
-    * SAME path can never be served stale signatures — the key changes,
-    * the lookup misses, and consumers fall back to inline decode
-    * (re-materialize to re-amortize). The per-file NAME digest is what
-    * defeats filesystem mtime granularity (ADVICE r12): a rewrite
-    * within the same mtime tick with an identical total length still
-    * changes the stamp, because Spark's part files carry a fresh write
-    * UUID in their names (and any other writer changes lengths or
-    * names too).
-    */
-  private def corpusStamp(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(path)
-    val entries: Array[String] =
-      if (st.isDirectory)
-        fs.listStatus(path)
-          .map(c => s"${c.getPath.getName}:${c.getLen}:${c.getModificationTime}")
-          .sorted
-      else Array(s"${path.getName}:${st.getLen}:${st.getModificationTime}")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    entries.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Corpus-keyed location of the materialized signature table under
-    * `base`: keyed by corpus path AND content stamp, so distinct
-    * corpora, test fixtures, and REGENERATIONS of the same path never
-    * collide.
-    */
-  def mediaSigPath(s: SparkSession, base: String, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|${corpusStamp(s, dir)}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"$base/media_sigs_$key.parquet"
-  }
-
-  /** Materialize the signature stage for `dir` under `base`; returns
-    * the written path (the one [[sigSlice]] discovers). Retention: the
-    * store is content-keyed, so every corpus REGENERATION writes a new
-    * generation and the superseded one becomes garbage nothing reads —
-    * a long-lived deployment runs [[pruneMediaSignatures]] after
-    * materializing to keep the store from accreting one parquet tree
-    * per corpus version (VERDICT r12 #6).
-    */
-  def writeMediaSignatures(s: SparkSession, dir: String,
-                           base: String): String = {
-    val p = mediaSigPath(s, base, dir)
-    mediaSignatures(s, dir).write.mode("overwrite").parquet(p)
-    // owner manifest (ADVICE r13): the store key is an MD5, so a
-    // generation's owning corpus cannot be recovered from its name —
-    // this sidecar records it for [[pruneMediaSignatures]], which only
-    // deletes generations it can positively attribute to a corpus it
-    // manages. Underscore prefix: Spark's parquet reader ignores it.
-    val ownerPath = new org.apache.hadoop.fs.Path(s"$p/_owner")
-    val fs = ownerPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(ownerPath, true)
-    try out.write(dir.getBytes("UTF-8")) finally out.close()
-    p
-  }
-
-  /** Retention guard for the signature store: deletes store generations
-    * under `base` that are not the CURRENT content-keyed generation of
-    * any corpus in `liveDirs` and are older than `graceMs` (the grace
-    * window keeps a just-superseded generation around long enough for
-    * in-flight readers that resolved their key before the corpus was
-    * regenerated). Returns the deleted paths.
-    *
-    * Deletion requires POSITIVE attribution: each generation carries an
-    * `_owner` sidecar naming its corpus dir
-    * ([[writeMediaSignatures]] writes it — the key is an MD5, so the
-    * owner cannot be recovered from the name alone), and the prune only
-    * deletes generations whose owner is one of `liveDirs` (a superseded
-    * generation of a corpus this prune manages). A generation owned by
-    * a corpus NOT in `liveDirs` is another deployment's store — an
-    * incomplete retention config must not silently delete it (ADVICE
-    * r13) — and a generation with no readable `_owner` is
-    * unattributable; both are skipped with a WARN naming the owner (or
-    * its absence), so the operator of that corpus gets a signal instead
-    * of a silent re-decode. The trade: retired corpora's generations
-    * now linger until an operator removes them (or lists the retired
-    * dir here) — accretion over accidental deletion. Only
-    * `media_sigs_*.parquet` entries are touched; anything else under
-    * `base` is left alone.
-    *
-    * Fail-safe: if ANY live dir's current key cannot be resolved
-    * (retired path still in the retention config, transient FS error),
-    * that dir's live generation is indistinguishable from garbage — so
-    * the prune WARNs and deletes NOTHING rather than risk deleting a
-    * live store (accretion is recoverable; a deleted live generation
-    * means silent re-decode until re-materialized).
-    */
-  def pruneMediaSignatures(s: SparkSession, base: String,
-                           liveDirs: Seq[String],
-                           graceMs: Long = 24L * 3600 * 1000): Seq[String] = {
-    val resolved = liveDirs.map { d =>
-      d -> scala.util.Try(
-        new org.apache.hadoop.fs.Path(mediaSigPath(s, base, d)).getName)
-    }
-    val unresolved = resolved.collect { case (d, scala.util.Failure(e)) => (d, e) }
-    if (unresolved.nonEmpty) {
-      val log = org.slf4j.LoggerFactory.getLogger(getClass)
-      unresolved.foreach { case (d, e) =>
-        log.warn(s"pruneMediaSignatures: cannot resolve the current " +
-          s"store key of live dir $d (${e.getClass.getSimpleName}: " +
-          s"${e.getMessage}); skipping the prune entirely (fail-safe)")
-      }
-      return Seq.empty
-    }
-    val keep = resolved.collect { case (_, scala.util.Success(n)) => n }.toSet
-    val live = liveDirs.toSet
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(basePath)) Seq.empty
-    else {
-      val log = org.slf4j.LoggerFactory.getLogger(getClass)
-      val now = System.currentTimeMillis()
-      def ownerOf(gen: org.apache.hadoop.fs.Path): Option[String] =
-        scala.util.Try {
-          val in = fs.open(new org.apache.hadoop.fs.Path(gen, "_owner"))
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val tmp = new Array[Byte](4096)
-            var n = in.read(tmp)
-            while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-            new String(buf.toByteArray, "UTF-8")
-          } finally in.close()
-        }.toOption
-      fs.listStatus(basePath).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith("media_sigs_") && n.endsWith(".parquet") &&
-            !keep(n) && (now - st.getModificationTime >= graceMs)
-        }
-        .flatMap { st =>
-          ownerOf(st.getPath) match {
-            case Some(owner) if live(owner) =>
-              fs.delete(st.getPath, true)
-              log.info(s"pruneMediaSignatures: deleted superseded " +
-                s"generation ${st.getPath} (owner corpus: $owner)")
-              Some(st.getPath.toString)
-            case Some(owner) =>
-              log.warn(s"pruneMediaSignatures: ${st.getPath} belongs to " +
-                s"corpus $owner, which is not in this prune's liveDirs — " +
-                "skipping (add the dir to the retention config to manage " +
-                "its generations here)")
-              None
-            case None =>
-              log.warn(s"pruneMediaSignatures: ${st.getPath} has no " +
-                "readable _owner manifest (pre-manifest generation or " +
-                "foreign artifact) — skipping; remove it manually if it " +
-                "is garbage")
-              None
-          }
-        }
-    }
-  }
-
-  /** The signature store base, if configured: the system property wins
-    * (tests), else the env var (production runs / bench A-B).
-    */
-  private def sigStoreBase: Option[String] =
-    sys.props.get("graft.media.sigs.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_MEDIA_SIGS"))
-      .filter(_.nonEmpty)
-
-  /** Driver-local store-resolution counters behind [[sigStoreReport]]:
-    * each [[sigSlice]] call records how it resolved — `hit` (read the
-    * materialized table), `miss` (clean cold path: no table for this
-    * corpus stamp), `probe_failure` (the existence probe itself threw —
-    * transient FS error) or `open_failure` (a table exists but failed
-    * to open). Keyed by corpus dir; counters only move when a store
-    * base is configured (unconfigured runs are inline by design, not a
-    * fallback). Resolution happens on the driver (plan construction),
-    * so driver-local state is the complete picture, cluster or not.
-    */
-  private val sigStoreCounts = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.atomic.LongAdder]()
-
-  private def recordSigStore(dir: String, outcome: String): Unit =
-    sigStoreCounts
-      .computeIfAbsent((dir, outcome),
-        _ => new java.util.concurrent.atomic.LongAdder)
-      .increment()
-
-  /** One-row observability report for the signature store (VERDICT r13
-    * #6): whether a store is configured for this session and, for
-    * `dir`, how many sigSlice resolutions hit the materialized table vs
-    * fell back to inline decode — and WHY (clean miss vs probe/open
-    * failure) — since JVM start. A production run reads this next to
-    * its near-dup reports to tell amortized from re-decoded work
-    * without grepping logs: hits with zero fallbacks is the warm steady
-    * state; climbing misses mean re-materialize; probe/open failures
-    * mean the store itself is unhealthy.
-    */
-  def sigStoreReport(s: SparkSession, dir: String): DataFrame = {
-    def n(outcome: String): Long =
-      Option(sigStoreCounts.get((dir, outcome))).map(_.sum()).getOrElse(0L)
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("corpus", StringType, nullable = false),
-      StructField("store_configured", BooleanType, nullable = false),
-      StructField("store_hits", LongType, nullable = false),
-      StructField("store_misses", LongType, nullable = false),
-      StructField("probe_failures", LongType, nullable = false),
-      StructField("open_failures", LongType, nullable = false)))
-    val row = org.apache.spark.sql.Row(dir, sigStoreBase.isDefined,
-      n("hit"), n("miss"), n("probe_failure"), n("open_failure"))
-    s.createDataFrame(java.util.Arrays.asList(row), schema)
-  }
-
-  /** One modality's (media_id, c0..c{chunks-1}) slice, from the
-    * materialized table when one exists for this corpus AND content
-    * stamp, else computed inline. Existence goes through the Hadoop FS
-    * of the store path (java.io.File would silently miss on hdfs/s3a).
-    * A clean store MISS (no table for this corpus stamp) degrades to
-    * inline decode silently — that is the designed cold path; a store
-    * that EXISTS but fails to open (corrupt footer, permissions) also
-    * degrades, but logs a WARN first so an operator sees the amortized
-    * stage silently re-decoding (ADVICE r12). Persisted — every
-    * consumer fans out over it (band projections + verify sides).
+  /** One modality's (media_id, c0..c{chunks-1}) slice of
+    * [[mediaSignatures]]. Persisted — every consumer fans out over it
+    * (band projections + verify sides).
     */
   private def sigSlice(s: SparkSession, dir: String, modality: String,
-                       chunks: Int): DataFrame = {
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    val src = sigStoreBase
-      .flatMap { base =>
-        // the probe Try covers key derivation too (corpusStamp lists the
-        // corpus FS): a TRANSIENT failure anywhere in resolution is a
-        // probe_failure, WARNed like an open failure — never a silent
-        // degrade to re-decode (ADVICE r13), unlike the clean miss
-        // below, which is the designed cold path
-        scala.util.Try {
-          val p = new org.apache.hadoop.fs.Path(mediaSigPath(s, base, dir))
-          (p, p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-        } match {
-          case scala.util.Failure(e) =>
-            log.warn(s"media signature store probe under $base for $dir " +
-              s"failed (${e.getClass.getSimpleName}: ${e.getMessage}); " +
-              "falling back to inline decode")
-            recordSigStore(dir, "probe_failure")
-            None
-          case scala.util.Success((_, false)) =>
-            recordSigStore(dir, "miss")
-            None
-          case scala.util.Success((p, true)) =>
-            scala.util.Try(s.read.parquet(p.toString)) match {
-              case scala.util.Success(df) =>
-                recordSigStore(dir, "hit")
-                Some(df)
-              case scala.util.Failure(e) =>
-                log.warn(
-                  s"media signature store at $p exists but failed to open " +
-                    s"(${e.getClass.getSimpleName}: ${e.getMessage}); " +
-                    "falling back to inline decode")
-                recordSigStore(dir, "open_failure")
-                None
-            }
-        }
-      }
-      .getOrElse(mediaSignatures(s, dir))
-    graft.Persisted(src.filter(col("modality") === modality)
+                       chunks: Int): DataFrame =
+    graft.Persisted(mediaSignatures(s, dir).filter(col("modality") === modality)
       .select(col("media_id") +:
         (0 until chunks).map(j => col(s"c$j").cast("int").as(s"c$j")): _*))
-  }
 
   def mediaNearDup(s: SparkSession, dir: String): DataFrame =
     Multimodal.hammingPairs(sigSlice(s, dir, "image", 4))

@@ -940,8 +940,8 @@ object RelationalQueries {
   // ---- q_zorder_key: Morton clustering key ------------------------------
 
   /** The Z-order (Morton) clustering key over (n_chars, doc_id mod
-    * 2¹⁶) — the sort key graft.sources.Layout.writeZOrdered lays files
-    * out by. Pure bit arithmetic, so the key itself is oracle-exact;
+    * 2¹⁶) — the sort key a Z-clustered layout range-partitions files
+    * by. Pure bit arithmetic, so the key itself is oracle-exact;
     * the pruning effect of the layout is pinned by LayoutSpec (fewer
     * files intersect a 2-D box predicate than under a linear sort).
     */
@@ -1002,13 +1002,11 @@ object RelationalQueries {
 
   // ---- q_source_drift: batch EWMA drift report --------------------------
 
-  /** Per-event-type hourly drift report (graft.ops.Drift.sourceDrift) —
-    * the batch twin of the streaming drift monitor, sharing its exact
-    * integer fold (graft.ops.DriftMath). The oracle replays the same
-    * recurrence as a DuckDB RECURSIVE CTE, so the quantized
-    * EWMA/EW-variance/alert trajectory is hash-checked end to end —
-    * and the streaming monitor is covered transitively through the
-    * shared arithmetic. The quarter-step folds use exact BIGINT floor
+  /** Per-event-type hourly drift report (graft.ops.Drift.sourceDrift)
+    * over the exact integer fold of graft.ops.DriftMath. The oracle
+    * replays the same recurrence as a DuckDB RECURSIVE CTE, so the
+    * quantized EWMA/EW-variance/alert trajectory is hash-checked end to
+    * end. The quarter-step folds use exact BIGINT floor
     * division on BOTH sides (math.floorDiv in Scala, the
     * `(x - nonneg-mod) // 4` identity in SQL): floor(x/4.0) through
     * doubles rounds once |x| exceeds 2^53, and the dd clamp admits

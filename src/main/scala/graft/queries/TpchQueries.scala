@@ -394,9 +394,8 @@ object TpchQueries {
       | sum(CAST(floor(value * 10000.0) AS BIGINT)) OVER (PARTITION BY user_id ORDER BY ts, event_id) / 10000.0 AS running_value
       |FROM events""".stripMargin
 
-  /** q_tumbling: hourly tumbling-window aggregation over the event stream
-    * table (the batch twin of the Structured Streaming query in
-    * graft.streaming.Streams).
+  /** q_tumbling: hourly tumbling-window aggregation over the events
+    * table.
     */
   def eventsHourly(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
@@ -444,11 +443,10 @@ object TpchQueries {
 
   /** q_session_window: the same 30-minute gap sessions as [[sessionize]],
     * through Spark's native `session_window` aggregate instead of the
-    * lag/cumsum window pair — the operator the streaming path uses
-    * unchanged (merge condition: an event at or within gapDuration of
-    * the session's last event extends it — the exact-gap event MERGES,
-    * verified against the operator, so the oracle's island break is
-    * strict `>`; window end = last event + gap). Bounds emitted as
+    * lag/cumsum window pair (merge condition: an event at or within
+    * gapDuration of the session's last event extends it — the exact-gap
+    * event MERGES, verified against the operator, so the oracle's island
+    * break is strict `>`; window end = last event + gap). Bounds emitted as
     * epoch MICROS bigints: both engines truncate the nano source to µs
     * identically, and integer output sidesteps any timestamp rendering
     * drift.

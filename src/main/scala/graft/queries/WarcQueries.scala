@@ -26,8 +26,8 @@ import graft.Persisted
   *
   * Scale note: the groupBy that assembles multi-record blobs exists
   * only to FABRICATE archive files from row-wise fixtures inside a
-  * read-only graded query. The production 100 TB path is
-  * [[graft.sources.Warc.readWarcFiles]]: one streamed parse per file,
+  * read-only graded query. At 100 TB the file is the parallelism unit:
+  * one streamed parse ([[graft.sources.Warc.parseStream]]) per file,
   * no shuffle anywhere between the archive bytes and the record rows.
   */
 object WarcQueries {
@@ -257,8 +257,8 @@ object WarcQueries {
     * scan's `numFiles` metric). The pruned sliver then fetches its
     * records (the payload join — index-driven record lookup, exactly
     * how a CDX consumer avoids scanning every archive at 100 TB; cf.
-    * the file-as-parallelism-unit framing in
-    * [[graft.sources.Warc.readWarcFiles]]). The sliver side
+    * the file-as-parallelism-unit framing in [[graft.sources.Warc]]).
+    * The sliver side
     * broadcasts, so the fetch adds zero corpus shuffle.
     *
     * At 100 TB the same layout decision holds: SURT/host as the
@@ -693,8 +693,8 @@ object WarcQueries {
     * Scale shape: the digest index is per-URL state; the join is the
     * one keyed shuffle (or a broadcast when the recrawl slice is a
     * delta), the verdict and encoding are per-row, and the archive
-    * assembly is the fixture's groupBy (production writes stream
-    * per-partition through writeWarcFiles).
+    * assembly is the fixture's groupBy (a production writer streams
+    * one archive per partition).
     */
   def warcRevisit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

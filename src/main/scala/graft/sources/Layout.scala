@@ -1,11 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Storage-layout optimization: Z-order (Morton) clustering and parquet
-  * bloom filters — the two levers that decide how much of a 100 TB
-  * table a selective scan actually reads.
+/** Storage-layout optimization: the Z-order (Morton) clustering key —
+  * the lever that decides how much of a 100 TB table a 2-D box
+  * predicate actually reads.
   *
   * Z-ordering interleaves the bits of several dimension keys into one
   * sort key, so sorting by it co-locates rows that are close in EVERY
@@ -49,73 +49,4 @@ object Layout {
     (0 until bits).map { i =>
       s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})"
     }.mkString(" + ")
-
-  /** Write `df` Z-clustered on (xCol, yCol): range-partitioned and
-    * sorted by the Morton key, so every output file covers a compact
-    * 2-D box. `files` controls layout granularity (more files = finer
-    * pruning, more metadata — the usual OPTIMIZE trade).
-    */
-  def writeZOrdered(df: DataFrame, outDir: String, xCol: String,
-                    yCol: String, files: Int = 16): Unit =
-    df.withColumn("__z", zValue(col(xCol), col(yCol)))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
-
-  /** Compaction plan for a small-file table: first-fit-decreasing bin
-    * packing of file sizes into merge groups near `targetBytes` — the
-    * maintenance pass that keeps a long-lived corpus table's file count
-    * (and therefore driver listing/planning cost) bounded as
-    * incremental batches accrete. Deterministic: files sort by
-    * (size desc, name) and bins fill in creation order, so the same
-    * listing always yields the same plan. Only groups that actually
-    * merge (≥ 2 files) are returned: files already ≥ target and
-    * leftover smalls that fit no bin would be 1-file-in → 1-file-out
-    * rewrites — rewriting them buys nothing, so the plan omits them.
-    * Pure planning — the caller executes each group with a coalesce(1)
-    * read-rewrite, so the planner never touches data.
-    */
-  def planCompaction(files: Seq[(String, Long)],
-                     targetBytes: Long): Seq[Seq[String]] = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val sorted = files.sortBy { case (name, size) => (-size, name) }
-    val bins = scala.collection.mutable.ArrayBuffer.empty[
-      (scala.collection.mutable.ArrayBuffer[String], Long)]
-    sorted.foreach { case (name, size) =>
-      // an oversized file opens a bin already at/over target, which no
-      // later file can join: tot + size > targetBytes for any size > 0,
-      // and the tot < targetBytes conjunct blocks the remaining case (a
-      // ZERO-byte file "joining" an at-target bin and promoting an
-      // already-compact file into a pointless rewrite group)
-      val i = bins.indexWhere { case (_, tot) =>
-        tot + size <= targetBytes && tot < targetBytes
-      }
-      if (i >= 0) {
-        val (members, tot) = bins(i)
-        members += name
-        bins(i) = (members, tot + size)
-      } else bins += ((scala.collection.mutable.ArrayBuffer(name), size))
-    }
-    bins.collect { case (members, _) if members.length > 1 =>
-      members.toSeq
-    }.toSeq
-  }
-
-  /** Parquet bloom filters on point-lookup columns (dedup keys, ids):
-    * split-level membership pruning for equality predicates that
-    * min/max statistics cannot serve (hash-like columns have useless
-    * ranges). One writer option per column — the reader side needs
-    * nothing, parquet-mr consults the filter during row-group pruning.
-    */
-  def writeWithBloom(df: DataFrame, outDir: String,
-                     bloomCols: Seq[String],
-                     expectedNdv: Long = 100000L): Unit = {
-    val w = df.write.mode("overwrite")
-    val configured = bloomCols.foldLeft(w) { (wr, c) =>
-      wr.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", expectedNdv.toString)
-    }
-    configured.parquet(outDir)
-  }
 }

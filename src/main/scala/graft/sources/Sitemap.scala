@@ -40,14 +40,6 @@ object Sitemap {
     regexp_extract_all(coalesce(xml, lit("")),
       lit("(?s)<url\\b[^>]*>(.*?)</url>"), lit(1))
 
-  /** The child-sitemap locations of a `<sitemapindex>` document. */
-  def sitemapLocs(xml: Column): Column =
-    transform(
-      regexp_extract_all(coalesce(xml, lit("")),
-        lit("(?s)<sitemap\\b[^>]*>.*?<loc>\\s*(.*?)\\s*</loc>.*?</sitemap>"),
-        lit(1)),
-      l => unescapeXml(l))
-
   private def field(entry: Column, tag: String): Column =
     regexp_extract(entry, s"(?s)<$tag>\\s*(.*?)\\s*</$tag>", 1)
 

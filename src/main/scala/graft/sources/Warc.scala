@@ -4,8 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException,
   InputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** WARC (Web ARChive, ISO 28500) reader/writer — the container Common
   * Crawl and every serious web-scale pretraining corpus ships in.
   *
@@ -21,11 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * snapshot is ~100k independent files — the parallelism unit is the
   * FILE (per-record gzip members are not block-splittable), which at
   * 1000 executors means ~100 files per core with zero shuffle anywhere
-  * in the ingest path. [[readWarcFiles]] streams each file through a
-  * constant-memory incremental parser ([[parseStream]]): records flow
-  * out as iterator rows, the file is never materialised as one array,
-  * and per-RECORD caps (header bytes, payload bytes) bound memory
-  * regardless of file size. Malformed input never throws — parsing
+  * in the ingest path. [[parseStream]] is a constant-memory incremental
+  * parser: records flow out as iterator rows, and per-RECORD caps
+  * (header bytes, payload bytes) bound memory regardless of file size. Malformed input never throws — parsing
   * stops at the first structural violation and yields the records
   * before it, matching the codec family's malformed→None contract.
   */
@@ -127,7 +123,7 @@ object Warc {
     b.length >= 2 && b(0) == 0x1f.toByte && b(1) == 0x8b.toByte
 
   /** Incremental record iterator over a stream — the constant-memory
-    * core both [[parseAll]] and [[readWarcFiles]] share. Stops (without
+    * core of [[parseAll]]. Stops (without
     * throwing) at EOF or the first structural violation: a non-WARC
     * version line, a header block over [[MaxHeaderBytes]], a missing or
     * unparseable Content-Length, a length over [[MaxPayloadBytes]], or
@@ -252,106 +248,5 @@ object Warc {
       .getOrElse("")
     val body = java.util.Arrays.copyOfRange(payload, split + 4, payload.length)
     Some(HttpResponse(status, ct, body))
-  }
-
-  // ---- file-level reader ---------------------------------------------------
-
-  /** Read `.warc` / `.warc.gz` files into a DataFrame of records —
-    * the crawl-snapshot ingest entry point.
-    *
-    * Scale shape: `binaryFiles` gives one PortableDataStream per file
-    * (per-record gzip members are not block-splittable, so the FILE is
-    * the parallelism unit, exactly how Common Crawl is consumed at
-    * 100 TB: ~100k files fan out across executors). Each stream is
-    * parsed incrementally — constant memory per task regardless of file
-    * size; records flow out as rows; no shuffle.
-    */
-  def readWarcFiles(spark: SparkSession, path: String,
-      minPartitions: Int = 0): DataFrame = {
-    import spark.implicits._
-    val parts = if (minPartitions > 0) minPartitions
-      else spark.sparkContext.defaultParallelism
-    spark.sparkContext.binaryFiles(path, parts)
-      .flatMap { case (file, pds) =>
-        val raw = pds.open()
-        val in: InputStream =
-          if (file.endsWith(".gz")) new GZIPInputStream(raw) else raw
-        // One closeable chain per file; the iterator closes it at EOF,
-        // and the completion listener covers every other exit — a
-        // downstream limit()/take() or a task abort would otherwise
-        // leak the FS handle on long-running executors (close is
-        // idempotent, so double-close is harmless).
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-          try in.close() catch { case _: Exception => () }
-        }
-        new Iterator[(String, WarcRecord)] {
-          private val it = parseStream(in)
-          private var closed = false
-          override def hasNext: Boolean = {
-            val h = it.hasNext
-            if (!h && !closed) { closed = true; in.close() }
-            h
-          }
-          override def next(): (String, WarcRecord) = (file, it.next())
-        }
-      }
-      .map { case (file, r) =>
-        (file, r.warcType, r.recordId, r.warcDate, r.targetUri,
-          r.contentType, r.contentLength, r.payload)
-      }
-      .toDF("file", "warc_type", "record_id", "warc_date", "target_uri",
-        "content_type", "content_length", "payload")
-  }
-
-  /** Write one `.warc.gz` per partition (records in partition order,
-    * one gzip member per record — the Common Crawl layout). Export-side
-    * counterpart of [[readWarcFiles]]; each task streams its partition
-    * through one output file, so driver memory is untouched and file
-    * count = partition count (size-tune upstream with
-    * repartition/coalesce, exactly like any other sink).
-    *
-    * Task-commit protocol: bytes go to an attempt-unique temp path and
-    * rename into place on success, so a speculative sibling or
-    * overlapping retry can never INTERLEAVE with the winner's file; a
-    * losing/killed attempt's temp is deleted. Unlike
-    * [[Sinks.writeTokenBin]] (whose parquet index names the winning
-    * attempt's file exactly, so attempts may differ), this sink is
-    * read back by GLOB — the rename-overwrite race means the surviving
-    * bytes are SOME complete attempt's output, which is only
-    * record-set-identical across attempts when the upstream
-    * partition's row order is deterministic (record order within the
-    * file may differ; readers treating archives as unordered record
-    * bags — every consumer here — are unaffected).
-    */
-  def writeWarcFiles(records: org.apache.spark.sql.Dataset[WarcRecord],
-      outDir: String): Unit = {
-    Sinks.cleanShardDir(outDir, ".warc.gz")
-    records.foreachPartition { it: Iterator[WarcRecord] =>
-      if (it.hasNext) {
-        val tc = org.apache.spark.TaskContext.get()
-        val pid = if (tc != null) tc.partitionId()
-          else org.apache.spark.TaskContext.getPartitionId()
-        val attempt = if (tc != null) tc.taskAttemptId() else 0L
-        val fin = new org.apache.hadoop.fs.Path(outDir, f"part-$pid%05d.warc.gz")
-        val tmp = new org.apache.hadoop.fs.Path(outDir,
-          f".part-$pid%05d.warc.gz.attempt-$attempt.tmp")
-        val fs = fin.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        var committed = false
-        if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-          if (!committed) {
-            try fs.delete(tmp, false) catch { case _: Exception => () }
-          }
-        }
-        val out = fs.create(tmp, true)
-        try it.foreach(r => out.write(encodeGzipMember(r)))
-        finally out.close()
-        if (!fs.rename(tmp, fin)) {
-          if (fs.exists(fin)) fs.delete(tmp, false)
-          else throw new java.io.IOException(s"commit rename failed: $tmp -> $fin")
-        }
-        committed = true
-      }
-    }
   }
 }

@@ -34,15 +34,6 @@ object Bpe {
     @transient lazy val rank: Map[(String, String), Int] =
       merges.zipWithIndex.toMap
 
-    /** Vocabulary: single characters seen in merges plus every merge
-      * output, ids in deterministic order (merge outputs after chars).
-      */
-    @transient lazy val vocab: Seq[String] = {
-      val chars = merges.flatMap { case (a, b) => Seq(a, b) }
-        .flatMap(s => s.map(_.toString)).distinct.sorted
-      (chars ++ merges.map { case (a, b) => a + b }).distinct
-    }
-
     /** Encode one word: start from characters, repeatedly apply the
       * best-ranked adjacent merge — leftmost on rank ties — until none
       * applies (HF inference rule).
@@ -100,111 +91,6 @@ object Bpe {
       while (k >= 0) { out += syms(k); k = next(k) }
       out.result()
     }
-  }
-
-  /** Load a HuggingFace/GPT-2-format `merges.txt` into a [[Model]] —
-    * the drop-in slot SURVEY §7 reserves: a deployment WITH vocabulary
-    * access (this container has none — zero egress) drops its
-    * tokenizer's merges file here and [[Model.encodeWord]]'s agenda
-    * inference applies those merges under the exact HF rule
-    * (best-ranked adjacent pair, leftmost on ties), making the
-    * trained-BPE surface bit-compatible with the external tokenizer's
-    * merge semantics. Format, per the published tokenizer layout: an
-    * optional `#version:` header, then one merge per line as two
-    * space-separated symbols, rank = line order. Blank lines and
-    * trailing whitespace tolerated; a line without exactly two symbols
-    * is a corrupt file and raises (silently skipping would shift every
-    * later rank and mis-tokenize everything downstream).
-    */
-  def loadMerges(lines: IterableOnce[String]): Model = {
-    val merges = lines.iterator.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#version"))
-      .map { l =>
-        l.split(" ") match {
-          case Array(a, b) if a.nonEmpty && b.nonEmpty => (a, b)
-          case _ => throw new IllegalArgumentException(
-            s"loadMerges: malformed merge line '$l' (want 'sym1 sym2')")
-        }
-      }.toVector
-    Model(merges)
-  }
-
-  /** Parse a HuggingFace-format `vocab.json` (one flat JSON object,
-    * token → integer id) into the id map the exporter needs to emit
-    * the external tokenizer's ids. Scope: the flat string→int object
-    * the published tokenizer files actually use — string escapes
-    * (\uXXXX, \n, \", \\, ...) are handled; nested values are not a
-    * vocab file and raise.
-    */
-  def loadVocabJson(json: String): Map[String, Int] = {
-    val s = json
-    var i = 0
-    def ws(): Unit = { while (i < s.length && s.charAt(i).isWhitespace) i += 1 }
-    def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"loadVocabJson: $msg at offset $i")
-    def expect(c: Char): Unit = {
-      ws(); if (i >= s.length || s.charAt(i) != c) fail(s"expected '$c'"); i += 1
-    }
-    def parseString(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (i < s.length && s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
-          if (i + 1 >= s.length) fail("dangling escape")
-          s.charAt(i + 1) match {
-            case 'u' =>
-              if (i + 6 > s.length) fail("short \\u escape")
-              // per-char hex check: Integer.parseInt would accept a
-              // leading sign ("\u-1ff") and wrap through .toChar
-              var hex = 0
-              var j = i + 2
-              while (j < i + 6) {
-                val d = Character.digit(s.charAt(j), 16)
-                if (d < 0) fail("non-hex \\u escape digits")
-                hex = (hex << 4) | d
-                j += 1
-              }
-              sb.append(hex.toChar)
-              i += 6
-            case 'n' => sb.append('\n'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 'b' => sb.append('\b'); i += 2
-            case 'f' => sb.append('\f'); i += 2
-            case '/' => sb.append('/'); i += 2
-            case '"' => sb.append('"'); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case other => fail(s"unsupported escape \\$other")
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      expect('"')
-      sb.result()
-    }
-    def parseInt(): Int = {
-      ws()
-      val start = i
-      if (i < s.length && s.charAt(i) == '-') i += 1
-      while (i < s.length && s.charAt(i).isDigit) i += 1
-      if (i == start) fail("expected an integer id")
-      try s.substring(start, i).toInt
-      catch { case _: NumberFormatException => fail("integer id out of Int range") }
-    }
-    ws(); expect('{'); ws()
-    val out = Map.newBuilder[String, Int]
-    if (i < s.length && s.charAt(i) != '}') {
-      var more = true
-      while (more) {
-        val k = parseString(); expect(':'); val v = parseInt()
-        out += (k -> v)
-        ws()
-        if (i < s.length && s.charAt(i) == ',') { i += 1; ws() }
-        else more = false
-      }
-    }
-    expect('}')
-    out.result()
   }
 
   /** Distributed pass: (word, n) truncated to the `maxWords` most

@@ -39,9 +39,6 @@ object LangId {
   private val CjkGain = 5.0
   private val CjkMinRatio = 0.05
 
-  private[graft] def letterTokens(c: Column): Column =
-    regexp_extract_all(lower(coalesce(c, lit(""))), lit("\\p{L}+"), lit(0))
-
   /** The ONE copy of the pred/score derivation over staged hit counts
     * (the isZh gate, the en > de > es > fr tie-break, the capped
     * stopword-gain score) — shared by [[withLangColumns]],

@@ -18,19 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Normalize {
 
-  /** NFKC unicode normalisation. No native Spark function exists; the
-    * JVM's java.text.Normalizer is the standard public implementation.
-    * The UDF form is kept as a differential-test baseline; the pipeline
-    * uses the codegen'd Catalyst expression graft.plans.NfkcNormalize.
-    */
-  val nfkc = udf { (s: String) =>
-    if (s == null) null
-    else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC)
-  }
-
-  /** Control chars the reference strips: U+0000-U+001F and U+007F-U+009F. */
-  private[graft] val ControlChars = "[\\x00-\\x1F\\x7F-\\x9F]"
-
   /** P1: NFKC -> control chars to space -> collapse whitespace -> trim ->
     * NULL if empty. `applyNfkc=false` gives the ASCII-identical variant
     * used in oracle-checked queries (DuckDB has no NFKC; the synthetic
@@ -105,7 +92,6 @@ object Normalize {
     "subscribe to our newsletter",
     "contact us"
   )
-  private[graft] val BoilerRe = BoilerplatePatterns.mkString("(", ")|(", ")")
 
   /** P3: drop lines whose lowercase form matches any boilerplate pattern,
     * rejoin with \n, trim. NOTE (SURVEY §2.2 P3): upstream P1 collapsed

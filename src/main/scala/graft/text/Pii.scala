@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
 object Pii {
 
   /** The engine's one super-linear pattern under java.util.regex (see
-    * [[graft.plans.EmailScan]] and tools/RegexAudit).
+    * [[graft.plans.EmailScan]] and the test-scope graft.tools.RegexAudit
+    * harness behind RegexLinearitySpec).
     */
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 

@@ -112,14 +112,6 @@ object TextMetrics {
       .otherwise(lit(0.0))
   }
 
-  def stopwordRatio(c: Column): Column = {
-    val t = tokens(c)
-    when(size(t) > 0,
-      element_at(graft.plans.TokenSetStats(t, EnStopwords), 2).cast("double")
-        / size(t).cast("double"))
-      .otherwise(lit(0.0))
-  }
-
   /** M6: non-ASCII alphabetic chars / alphabetic chars; 0 if no letters.
     * Same one-pass kernel as [[alphaRatio]] (the regex form built TWO
     * filtered copies per row); parity-pinned in TextOpsSpec.
@@ -133,26 +125,6 @@ object TextMetrics {
       element_at(k, 2).cast("double") / total.cast("double"))
       .otherwise(lit(0.0))
   }
-
-  /** A4 (small-doc default form): max single-token frequency / token count.
-    * O(unique·n) per row via higher-order functions — fine at the
-    * reference's <=5000-word docs; the explode+groupBy variant for truly
-    * huge docs is Report.maxTokenFreqExploded.
-    * ⚠ single-expression form: the split subtree sits inside the filter
-    * lambda and re-evaluates per distinct token. Hot paths go through
-    * [[withTokenStats]], which stages the token array as an attribute.
-    */
-  def maxTokenFreqRatio(c: Column): Column = maxTokenFreqFromTokens(tokens(c))
-
-  /** Max token frequency ratio via the compiled one-pass kernel
-    * ([[graft.plans.TokenDistStats]]) — bit-equal to the interpreted
-    * `array_max(transform(array_distinct...))` chain it replaced
-    * (int max over counts is order-free), without that chain's
-    * O(distinct·n)-per-row cost. coalesce mirrors the old
-    * `when(size > 0, ...).otherwise(0.0)` null-array fallthrough.
-    */
-  private[graft] def maxTokenFreqFromTokens(t: Column): Column =
-    coalesce(element_at(graft.plans.TokenDistStats(t), 2), lit(0.0))
 
   /** Shannon entropy (nats) of a doc's token distribution — the
     * repetition/diversity quality signal: near 0 for "spam spam spam",

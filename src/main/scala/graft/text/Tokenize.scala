@@ -1,7 +1,6 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Tokenisation (SURVEY.md §2.3 T1).
   *
@@ -16,40 +15,14 @@ import org.apache.spark.sql.functions._
   * runs, leading space attached) and a stable 50k id space.
   *
   * DIVERGENCE (documented): ids are not GPT-2 BPE ids; n_tokens counts
-  * pre-tokens, not BPE merges. Swap `encode` for a real BPE when a
-  * vocab ships.
+  * pre-tokens, not BPE merges. Swap the [[native]] kernel for a real
+  * BPE when a vocab ships. Token ids are `floorMod(token.hashCode,
+  * VocabSize) + IdOffset`.
   */
 object Tokenize {
 
   val VocabSize = 50000
   val IdOffset = 256
-
-  /** GPT-2-style pre-tokenization pattern (public knowledge: the GPT-2
-    * paper's regex, simplified to Java syntax without unicode captures).
-    */
-  private val PreToken =
-    "'(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+(?!\\S)|\\s+".r
-
-  /** Deterministic id: stable across JVMs (String.hashCode is
-    * spec-defined) and mapped into [IdOffset, IdOffset + VocabSize).
-    */
-  private def tokenId(tok: String): Int =
-    math.floorMod(tok.hashCode, VocabSize) + IdOffset
-
-  def encode(text: String): Seq[Int] =
-    if (text == null || text.isEmpty) Seq.empty
-    else PreToken.findAllIn(text).filterNot(_.forall(_.isWhitespace))
-      .map(tokenId).toSeq
-
-  /** UDF returning struct<input_ids, attention_mask, n_tokens>. Kept as
-    * the executable grammar spec — hot paths use [[native]], the
-    * one-pass scanner kernel ([[graft.plans.TokenizeText]]), which a
-    * parity spec holds id-identical to this form.
-    */
-  val tokenize = udf { (s: String) =>
-    val ids = encode(s)
-    (ids, Seq.fill(ids.length)(1), ids.length)
-  }
 
   /** Native kernel form: struct<input_ids, attention_mask, n_tokens>. */
   def native(c: Column): Column = graft.plans.TokenizeText(c)

@@ -21,10 +21,6 @@ object Toxicity {
   val SexualWords = Seq("sex", "porn", "nude", "naked")
   val SlurWords   = Seq("nigger", "nigga", "faggot", "retard")
 
-  /** `\w+` tokens of the lowercased text (reference tokenization). */
-  def toxTokens(c: Column): Column =
-    regexp_extract_all(lower(coalesce(c, lit(""))), lit("\\w+"), lit(0))
-
   /** The ONE copy of the six-column toxicity scoring arithmetic over a
     * staged (token count, hit accessor) pair — shared by
     * [[withToxicityColumns]] and [[graft.text.LangId.withLangToxColumns]]

@@ -166,40 +166,6 @@ object TrigramLangModel {
     sb.toString
   }
 
-  /** Rank-ordered n-gram profile, n ∈ {1, 2, 3} — Cavnar & Trenkle's
-    * actual design uses a range of n-gram lengths, and the short grams
-    * are what carry CJK: two Chinese sentences on different topics
-    * share almost no exact character TRIgram, but share function
-    * characters (的/了/は/の) as unigrams. Top-`k` by count, count ties
-    * broken lexicographically (determinism across JVMs); grams that
-    * are all padding ('_') are excluded.
-    */
-  private[graft] def profile(text: String, k: Int): Vector[String] = {
-    val s = normalize(text)
-    val counts = new java.util.HashMap[String, Int]()
-    var n = 1
-    while (n <= 3) {
-      var i = 0
-      while (i + n <= s.length) {
-        val g = s.substring(i, i + n)
-        if (!allPad(g)) counts.merge(g, 1, Integer.sum _)
-        i += 1
-      }
-      n += 1
-    }
-    import scala.jdk.CollectionConverters._
-    counts.asScala.toVector
-      .sortBy { case (g, c) => (-c, g) }
-      .take(k)
-      .map(_._1)
-  }
-
-  private def allPad(g: String): Boolean = {
-    var i = 0
-    while (i < g.length) { if (g.charAt(i) != '_') return false; i += 1 }
-    true
-  }
-
   // -------------------------------------------------------------------
   // Hot-path gram representation: a 1..3-gram packs its UTF-16 units
   // into one long (bits 48/32/16, zero-padded). UNSIGNED long order is
@@ -208,7 +174,7 @@ object TrigramLangModel {
   // prefix therefore sorts first, matching String#compareTo — so the
   // (-count, gram) profile tie-break is preserved bit-for-bit while
   // gram counting drops all substring allocation and string hashing
-  // ([[profile]], the String form, stays as the executable spec; a
+  // (the String form stays in test scope as the executable spec; a
   // parity test holds the two equal on multilingual + surrogate
   // inputs). Surrogate halves are packed like any other unit, which is
   // precisely String order too.
@@ -289,8 +255,15 @@ object TrigramLangModel {
   private val PadGram2 = PadGram1 | ('_'.toLong << 32)
   private val PadGram3 = PadGram2 | ('_'.toLong << 16)
 
-  /** Packed-gram profile: identical content and order to [[profile]]
-    * (the parity-tested claim), ~an order of magnitude cheaper.
+  /** Rank-ordered n-gram profile, n ∈ {1, 2, 3}, as packed grams —
+    * Cavnar & Trenkle's actual design uses a range of n-gram lengths,
+    * and the short grams are what carry CJK: two Chinese sentences on
+    * different topics share almost no exact character TRIgram, but
+    * share function characters (的/了/は/の) as unigrams. Top-`k` by
+    * count, count ties broken lexicographically (determinism across
+    * JVMs); grams that are all padding ('_') are excluded. Content and
+    * order equal the String-gram form LangIdModelSpec keeps as its
+    * reference, at ~an order of magnitude less cost.
     */
   private[graft] def profileL(text: String, k: Int): Array[Long] = {
     val s = normalize(text)

@@ -157,27 +157,4 @@ object GraftSqlBridge {
   /** A DataFrame's analyzed logical plan. */
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
-
-  /** True when the session's CacheManager holds no cached plans —
-    * lets specs pin "this library call released every DataFrame-level
-    * persist it took" (RDD-level persists are lifecycle-managed by
-    * ContextCleaner and excluded on purpose: their release is
-    * GC-driven, so asserting on them would be flaky).
-    */
-  def noCachedPlans(spark: SparkSession): Boolean =
-    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
-
-  /** Force-compile a WholeStageCodegenExec node's generated source.
-    * At runtime a janino failure only logs a WARN and silently falls
-    * back to interpreted evaluation; routed through this, it THROWS —
-    * which lets PlanSpec pin "the stage-2 projection actually
-    * codegens" as a hard test instead of a log grep (the VERDICT r11
-    * finding: the fused drop-reason projection fell back interpreted
-    * on the graded chain's hottest map stage).
-    */
-  def compileWholeStage(
-      ws: org.apache.spark.sql.execution.WholeStageCodegenExec): Unit = {
-    val (_, code) = ws.doCodeGen()
-    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compile(code)
-  }
 }

@@ -155,17 +155,4 @@ class AudioCodecSpec extends AnyFunSuite {
       assert(AudioCodec.decode(wav.take(50)).exists(_.nFrames == 6 / ch))
     }
   }
-
-  test("audio features: bounded, deterministic, silence vs tone separate") {
-    val tone = AudioCodec.decode(AudioCodec.encodeWav16(8000, 1, sine(4096, 1))).get
-    val silence = AudioCodec.decode(
-      AudioCodec.encodeWav16(8000, 1, new Array[Float](4096))).get
-    val ft = AudioCodec.audioFeatures(tone, 13)
-    val fs = AudioCodec.audioFeatures(silence, 13)
-    assert(ft.length === 13 && fs.length === 13)
-    assert(ft(3) > fs(3), "tone RMS above silence")
-    assert(ft(0) === 4096.0f / 8000.0f, "duration")
-    assert(ft.sameElements(AudioCodec.audioFeatures(tone, 13)), "deterministic")
-    assert(ft(5) >= 0.0f && ft(5) <= 1.0f, "zcr bounded")
-  }
 }

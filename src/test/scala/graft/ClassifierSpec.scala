@@ -48,12 +48,12 @@ class ClassifierSpec extends SparkTestBase {
   test("training strictly reduces logistic loss") {
     val train = fixture(200).filter(col("id") % 10 < 7)
     val m0 = Classifier.LogisticModel(new Array[Double](Dim), 0.0)
-    val l0 = Classifier.logLoss(train, "x", "label", m0)
+    val l0 = ClassifierSpec.logLoss(train, "x", "label", m0)
     val m10 = Classifier.trainLogistic(train, "x", "label", Dim, iters = 10)
-    val l10 = Classifier.logLoss(train, "x", "label", m10)
+    val l10 = ClassifierSpec.logLoss(train, "x", "label", m10)
     val m30 = Classifier.trainLogistic(train, "x", "label", Dim, iters = 30)
-    val l30 = Classifier.logLoss(train, "x", "label", m30)
-    assert(l0 === Classifier.logLoss(train, "x", "label", m0)) // loss is pure
+    val l30 = ClassifierSpec.logLoss(train, "x", "label", m30)
+    assert(l0 === ClassifierSpec.logLoss(train, "x", "label", m0)) // loss is pure
     assert(l10 < l0, s"10 iters should beat init: $l10 vs $l0")
     assert(l30 < l10, s"30 iters should beat 10: $l30 vs $l10")
   }
@@ -79,17 +79,14 @@ class ClassifierSpec extends SparkTestBase {
     // IN-partition row sums would already differ).
     // Gate dropped to 0 so the fixture actually exercises the
     // DISTRIBUTED path (the default gate would take the local one).
-    System.setProperty("graft.classifier.localGate", "0")
-    try {
-      val base = fixture(200).filter(col("id") % 10 < 7)
-      val p2 = base.repartition(2, col("id"))
-      val p13 = base.repartition(13, col("id"))
-      val a = Classifier.trainLogistic(p2, "x", "label", Dim, iters = 15)
-      val b = Classifier.trainLogistic(p13, "x", "label", Dim, iters = 15)
-      assert(a.bias === b.bias)
-      assert(a.weights.toSeq === b.weights.toSeq,
-        "2-partition and 13-partition training must agree bit-for-bit")
-    } finally System.clearProperty("graft.classifier.localGate")
+    val base = fixture(200).filter(col("id") % 10 < 7)
+    val p2 = base.repartition(2, col("id"))
+    val p13 = base.repartition(13, col("id"))
+    val a = Classifier.trainLogistic(p2, "x", "label", Dim, iters = 15, localGate = 0)
+    val b = Classifier.trainLogistic(p13, "x", "label", Dim, iters = 15, localGate = 0)
+    assert(a.bias === b.bias)
+    assert(a.weights.toSeq === b.weights.toSeq,
+      "2-partition and 13-partition training must agree bit-for-bit")
   }
 
   test("size-gated local fast path is bit-identical to the distributed path") {
@@ -100,10 +97,7 @@ class ClassifierSpec extends SparkTestBase {
     val base = fixture(200).filter(col("id") % 10 < 7)
       .repartition(5, col("id"))
     val local = Classifier.trainLogistic(base, "x", "label", Dim, iters = 15)
-    System.setProperty("graft.classifier.localGate", "0")
-    val dist =
-      try Classifier.trainLogistic(base, "x", "label", Dim, iters = 15)
-      finally System.clearProperty("graft.classifier.localGate")
+    val dist = Classifier.trainLogistic(base, "x", "label", Dim, iters = 15, localGate = 0)
     assert(local.bias === dist.bias)
     assert(local.weights.toSeq === dist.weights.toSeq,
       "local and distributed training must agree bit-for-bit")
@@ -123,41 +117,10 @@ class ClassifierSpec extends SparkTestBase {
     intercept[ArithmeticException] {
       Classifier.trainLogistic(hostile, "x", "label", 4, iters = 1)
     }
-    System.setProperty("graft.classifier.localGate", "0")
-    try intercept[org.apache.spark.SparkException] {
+    intercept[org.apache.spark.SparkException] {
       // distributed: the executor-side addExact surfaces wrapped in
       // Spark's task-failure envelope
-      Classifier.trainLogistic(hostile, "x", "label", 4, iters = 1)
-    } finally System.clearProperty("graft.classifier.localGate")
-  }
-
-  test("model persistence round-trips bit-exactly and rejects corruption") {
-    val train = fixture(120).filter(col("id") % 10 < 7)
-    val m = Classifier.trainLogistic(train, "x", "label", Dim, iters = 10)
-    val s = Classifier.modelToString(m)
-    val back = Classifier.modelFromString(s)
-    // hex IEEE bit patterns make equality exact, not approximate —
-    // including negative zero and subnormals a decimal form could fold
-    assert(back.bias === m.bias)
-    assert(back.weights.toSeq === m.weights.toSeq)
-    assert(java.lang.Double.doubleToRawLongBits(back.bias) ===
-      java.lang.Double.doubleToRawLongBits(m.bias))
-    // special values survive
-    val odd = Classifier.LogisticModel(
-      Array(-0.0, Double.MinPositiveValue, 1.5e308), -3.25)
-    val oddBack = Classifier.modelFromString(Classifier.modelToString(odd))
-    assert(oddBack.weights.map(java.lang.Double.doubleToRawLongBits).toSeq ===
-      odd.weights.map(java.lang.Double.doubleToRawLongBits).toSeq)
-    // corruption raises instead of silently drifting the filter
-    intercept[IllegalArgumentException] { Classifier.modelFromString("") }
-    intercept[IllegalArgumentException] {
-      Classifier.modelFromString("wrong-header 1 0 0")
-    }
-    intercept[IllegalArgumentException] {
-      Classifier.modelFromString(s + " deadbeef") // extra weight field
-    }
-    intercept[IllegalArgumentException] {
-      Classifier.modelFromString(s.replaceFirst(" [0-9a-f]+$", " zz"))
+      Classifier.trainLogistic(hostile, "x", "label", 4, iters = 1, localGate = 0)
     }
   }
 
@@ -294,7 +257,7 @@ class ClassifierSpec extends SparkTestBase {
   test("fixed-point DataFrame front door: distributed path bit-identical to local") {
     // same property as the libm trainer's gate pin: per-row integer
     // contributions make the gradient sum order- and topology-free, so
-    // the treeAggregate path (forced via the test seam) must reproduce
+    // the treeAggregate path (forced by `localGate = 0`) must reproduce
     // the collected-sliver path to the last bit — what makes the front
     // door safe to point at a corpus-fraction split at scale
     import spark.implicits._
@@ -303,10 +266,7 @@ class ClassifierSpec extends SparkTestBase {
     }
     val df = rows.toDF("id", "x", "label").repartition(7, col("id"))
     val local = Classifier.trainFixedPoint(df, "x", "label", 8, 10, 16L)
-    System.setProperty("graft.classifier.localGate", "0")
-    val dist =
-      try Classifier.trainFixedPoint(df, "x", "label", 8, 10, 16L)
-      finally System.clearProperty("graft.classifier.localGate")
+    val dist = Classifier.trainFixedPoint(df, "x", "label", 8, 10, 16L, localGate = 0)
     assert(local.toSeq === dist.toSeq)
     // and both agree with the job-free array form on the same rows
     val arr = Classifier.trainFixedPoint(
@@ -321,5 +281,22 @@ class ClassifierSpec extends SparkTestBase {
       Classifier.trainFixedPoint(
         rows.map { case (x, y) => (x, y) }, 4, 3, 16L)
     }
+  }
+}
+
+object ClassifierSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Mean logistic loss of a model over a labeled frame — one
+    * aggregation, to assert training monotonicity.
+    */
+  def logLoss(df: DataFrame, featCol: String, labelCol: String,
+      model: Classifier.LogisticModel): Double = {
+    val p = model.scoreCol(col(featCol))
+    val y = col(labelCol).cast("double")
+    // clamp away from {0,1} so the log is finite
+    val pc = least(greatest(p, lit(1e-12)), lit(1.0 - 1e-12))
+    df.select(avg(-(y * log(pc) + (lit(1.0) - y) * log(lit(1.0) - pc))))
+      .head().getDouble(0)
   }
 }

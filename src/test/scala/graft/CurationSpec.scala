@@ -113,7 +113,7 @@ class CurationSpec extends SparkTestBase {
       (2L, Array(0.0f, 0.2f)), (3L, Array(10.2f, 9.9f)),
       (4L, Array(0.2f, 0.1f)), (5L, Array(9.9f, 10.0f)))
     val df = vecs.toDF("vec_id", "embedding")
-    val (a1, c1) = KMeans.lloyd(df, k = 2, iters = 3)
+    val (a1, c1) = KMeans.lloyd(df, k = 2, iters = 3, dim = 2)
     val assign = a1.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(Set(assign(0L), assign(2L), assign(4L)).size === 1)
     assert(Set(assign(1L), assign(3L), assign(5L)).size === 1)
@@ -125,7 +125,7 @@ class CurationSpec extends SparkTestBase {
     assert(math.abs(cents(lowCluster).head) < 300000L)
     assert(cents(1 - lowCluster).head > 9000000L)
     // determinism: identical second run
-    val (a2, c2) = KMeans.lloyd(df, k = 2, iters = 3)
+    val (a2, c2) = KMeans.lloyd(df, k = 2, iters = 3, dim = 2)
     assert(a2.collect().map(_.toSeq).toSet === a1.collect().map(_.toSeq).toSet)
     assert(c2.collect().map(_.toSeq).toSet === c1.collect().map(_.toSeq).toSet)
   }
@@ -140,11 +140,32 @@ class CurationSpec extends SparkTestBase {
         (c * 4 + rnd.nextGaussian() * 0.7 + d * 0.1).toFloat))
     }
     val df = vecs.toDF("vec_id", "embedding").repartition(7)
-    val (aL, cL) = KMeans.lloyd(df, k = 4, iters = 3) // gated -> local
-    val (aD, cD) = KMeans.lloyd(df, k = 4, iters = 3, localGate = 0) // forced distributed
-    assert(aL.collect().map(_.toSeq).toSet === aD.collect().map(_.toSeq).toSet)
-    assert(cL.collect().map(r => (r.getInt(0), r.getSeq[Long](1))).toMap ===
-      cD.collect().map(r => (r.getInt(0), r.getSeq[Long](1))).toMap)
+    // the default call equals the forced distributed run; returns the
+    // SQL executions the default call took
+    def pin(df: org.apache.spark.sql.DataFrame, dim: Int, iters: Int): Int = {
+      var gated: (Set[Seq[Any]], Map[Int, Seq[Long]]) = null
+      val (plans, _) = executedPlans {
+        val (a, c) = KMeans.lloyd(df, k = 4, iters = iters, dim = dim)
+        gated = (a.collect().map(_.toSeq).toSet,
+          c.collect().map(r => (r.getInt(0), r.getSeq[Long](1))).toMap)
+      }
+      val (aD, cD) = KMeans.lloyd(df, k = 4, iters = iters, dim = dim, localGate = 0)
+      assert(gated._1 === aD.collect().map(_.toSeq).toSet)
+      assert(gated._2 === cD.collect().map(r => (r.getInt(0), r.getSeq[Long](1))).toMap)
+      plans.size
+    }
+    val localRuns = pin(df, dim = 5, iters = 3) // gated -> local: probe + collects
+    // wide vectors: 5,500 rows pass the 65,536-row gate, but at dim 768
+    // they are 33.8 MB of quantized components, over the 32 MiB byte
+    // budget, so the default call must take the distributed path: at
+    // least one centroid collect per round on top of the probe
+    val wide = spark.range(5500).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(767)), d =>
+        (pmod(col("id") * 31 + d * 7, lit(97)) / 97.0 + pmod(col("id"), lit(3)) * 4.0)
+          .cast("float")).as("embedding"))
+    val wideRuns = pin(wide, dim = 768, iters = 2)
+    assert(wideRuns >= localRuns + 3,
+      s"$wideRuns vs $localRuns executions: the wide input took the local path")
   }
 
   test("kmeans lloyd: inertia never increases across an extra round") {
@@ -156,7 +177,7 @@ class CurationSpec extends SparkTestBase {
     }
     val df = vecs.toDF("vec_id", "embedding")
     def inertia(iters: Int): Long =
-      KMeans.lloyd(df, k = 2, iters = iters)._1
+      KMeans.lloyd(df, k = 2, iters = iters, dim = 4)._1
         .agg(sum("dist_q")).collect().head.getLong(0)
     assert(inertia(3) <= inertia(1))
   }

@@ -59,7 +59,7 @@ class DeflateSpec extends SparkTestBase {
   test("stored encoder emits valid zlib: Inflater round-trips byte-identically") {
     storedFixtures.foreach { s =>
       val in = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val enc = DeflateStoredLength.encode(in)
+      val enc = DeflateSpec.encode(in)
       val inf = new java.util.zip.Inflater() // zlib-wrapped: verifies Adler-32
       inf.setInput(enc)
       val out = new Array[Byte](in.length + 1)
@@ -77,7 +77,7 @@ class DeflateSpec extends SparkTestBase {
       .select(DeflateStoredLength(col("t")).as("n"))
       .collect().map(_.getInt(0))
     val want = storedFixtures.map(s =>
-      DeflateStoredLength.encode(
+      DeflateSpec.encode(
         s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).length)
     assert(got.toSeq === want)
     // the closed form the oracle replays: 2 + 5*ceil(n/65535) + n + 4
@@ -107,5 +107,48 @@ class DeflateSpec extends SparkTestBase {
     val nullRow = Seq(Option.empty[String]).toDF("t")
       .select(DeflateLength(col("t"))).collect().head
     assert(nullRow.isNullAt(0))
+  }
+}
+
+object DeflateSpec {
+  private val MaxBlock = 65535
+
+  /** The spec-exact encoder [[DeflateStoredLength]]'s arithmetic
+    * describes — emits a VALID zlib stream (header 0x78 0x01: CM=8,
+    * CINFO=7, FCHECK making the 16-bit header ≡ 0 mod 31, level-0
+    * FLEVEL; final-flagged stored blocks; big-endian Adler-32) that
+    * java.util.zip.Inflater round-trips. It ties the arithmetic to the
+    * format; production queries only need the length.
+    */
+  def encode(in: Array[Byte]): Array[Byte] = {
+    val n = in.length
+    val blocks = math.max(1, (n + MaxBlock - 1) / MaxBlock)
+    val out = new Array[Byte](2 + 5 * blocks + n + 4)
+    out(0) = 0x78.toByte
+    out(1) = 0x01.toByte
+    var pos = 2
+    var off = 0
+    var b = 0
+    while (b < blocks) {
+      val len = math.min(n - off, MaxBlock)
+      val last = b == blocks - 1
+      out(pos) = if (last) 1.toByte else 0.toByte // BFINAL, BTYPE=00
+      out(pos + 1) = (len & 0xff).toByte
+      out(pos + 2) = ((len >> 8) & 0xff).toByte
+      out(pos + 3) = (~len & 0xff).toByte
+      out(pos + 4) = ((~len >> 8) & 0xff).toByte
+      System.arraycopy(in, off, out, pos + 5, len)
+      pos += 5 + len
+      off += len
+      b += 1
+    }
+    val adler = new java.util.zip.Adler32
+    adler.update(in, 0, n)
+    val a = adler.getValue
+    out(pos) = ((a >> 24) & 0xff).toByte
+    out(pos + 1) = ((a >> 16) & 0xff).toByte
+    out(pos + 2) = ((a >> 8) & 0xff).toByte
+    out(pos + 3) = (a & 0xff).toByte
+    out
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.util.regex.Pattern
 
+import org.apache.spark.sql.TestSqlBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -97,7 +98,7 @@ class EmailScanSpec extends SparkTestBase {
     val rows = df.select(
       graft.plans.EmailCount(col("text")).as("kc"),
       regexp_count(col("text"), lit(Pii.EmailRe)).as("rc"),
-      graft.plans.EmailMask(col("text")).as("km"),
+      TestSqlBridge.kernel(col("text"))(graft.plans.EmailMask(_)).as("km"),
       regexp_replace(col("text"), Pii.EmailRe, "<EMAIL>").as("rm")).collect()
     rows.foreach { r =>
       assert(r.getInt(0) === r.getInt(1))
@@ -108,7 +109,7 @@ class EmailScanSpec extends SparkTestBase {
   test("null flows through (null-intolerant expression, no NPE)") {
     import spark.implicits._
     val df = Seq[Option[String]](None, Some("a@b.cc")).toDF("text")
-    val rows = df.select(graft.plans.EmailMask(col("text")).as("m"),
+    val rows = df.select(TestSqlBridge.kernel(col("text"))(graft.plans.EmailMask(_)).as("m"),
       graft.plans.EmailCount(col("text")).as("c")).collect()
     assert(rows.exists(r => r.isNullAt(0) && r.isNullAt(1)))
     assert(rows.exists(r => !r.isNullAt(0) && r.getString(0) == "<EMAIL>"))

@@ -40,7 +40,7 @@ class FiltersDedupSpec extends SparkTestBase {
       .withColumn("word_count", TextMetrics.wordCount(col("text_norm")))
     val out = Filters.applyRules(df, Filters.prefilterRules(
       col("text"), col("text_norm"), col("char_len"), col("word_count"))).cache()
-    assert(Filters.kept(out).count() + Filters.dropped(out).count() == df.count())
+    assert(Filters.kept(out).count() + out.filter(col("drop_reason").isNotNull).count() == df.count())
   }
 
   test("D1 exact dedup: keep first by ingest_seq, later rows point at it") {
@@ -110,7 +110,7 @@ class FiltersDedupSpec extends SparkTestBase {
       df.select(cols.map(col): _*).collect()
         .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
     val fused = canon(Dedup.dedupStage(docs, textCol = "text"))
-    val composed = canon(Dedup.nearDedup(
+    val composed = canon(FiltersDedupSpec.nearDedup(
       Dedup.exactDedup(docs, textCol = "text"), textCol = "text"))
     assert(fused.keySet === composed.keySet)
     fused.keySet.foreach { id =>
@@ -121,7 +121,7 @@ class FiltersDedupSpec extends SparkTestBase {
     // schema parity is positional, not just by-name: positional
     // consumers (parquet schema diffs, select-by-index) see one order
     assert(Dedup.dedupStage(docs, textCol = "text").columns.toSeq ===
-      Dedup.nearDedup(Dedup.exactDedup(docs, textCol = "text"),
+      FiltersDedupSpec.nearDedup(Dedup.exactDedup(docs, textCol = "text"),
         textCol = "text").columns.toSeq)
   }
 
@@ -151,7 +151,7 @@ class FiltersDedupSpec extends SparkTestBase {
       withSQLConf("spark.sql.adaptive.enabled" -> aqe) {
         val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 5), schema)
         val fused = Dedup.dedupStage(df, textCol = "text")
-        val composed = Dedup.nearDedup(Dedup.exactDedup(df, textCol = "text"),
+        val composed = FiltersDedupSpec.nearDedup(Dedup.exactDedup(df, textCol = "text"),
           textCol = "text")
         assert(fused.schema.map(f => (f.name, f.dataType)) ===
           composed.schema.map(f => (f.name, f.dataType)), s"aqe=$aqe")
@@ -189,34 +189,6 @@ class FiltersDedupSpec extends SparkTestBase {
     val out = Seq(0.8, 0.7999999).toDF("q")
       .select(Score.subset(col("q"))).as[String].collect()
     assert(out(0) == "high_quality" && out(1) == "rest")
-  }
-
-  test("incremental exact dedup: cross-batch dups flagged, history never re-windowed") {
-    import spark.implicits._
-    val batch1 = Seq((1L, "day one document alpha"), (2L, "day one document beta"))
-      .toDF("ingest_seq", "text_pii_masked")
-    val day1 = Dedup.exactDedup(batch1)
-    val seen = day1.filter(!col("is_dup_exact")).select("exact_hash")
-
-    val batch2 = Seq(
-      (10L, "day one document alpha"),   // dup of history
-      (11L, "fresh document gamma"),     // new
-      (12L, "fresh document gamma"),     // within-batch dup
-      (13L, "day one DOCUMENT   beta")   // dup of history via canon (case/ws)
-    ).toDF("ingest_seq", "text_pii_masked")
-
-    val flagged = Dedup.incrementalExactDedup(batch2, seen)
-      .select("ingest_seq", "is_dup_exact", "drop_reason").collect()
-      .map(r => r.getLong(0) -> (r.getBoolean(1), Option(r.getString(2)))).toMap
-
-    assert(flagged(10L) == (true, Some("exact_duplicate")))
-    assert(flagged(11L) == (false, None))
-    assert(flagged(12L) == (true, Some("exact_duplicate")))
-    assert(flagged(13L) == (true, Some("exact_duplicate")))
-    // appending the new survivors grows the state by exactly one hash
-    val day2Seen = Dedup.incrementalExactDedup(batch2, seen)
-      .filter(!col("is_dup_exact")).select("exact_hash")
-    assert(seen.union(day2Seen).distinct().count() == seen.count() + 1)
   }
 
   test("DropReasonStage2 kernel == applyRules(langRules)+applyRules(" +
@@ -283,5 +255,40 @@ class FiltersDedupSpec extends SparkTestBase {
       restore("spark.sql.codegen.wholeStage", ws)
       restore("spark.sql.codegen.factoryMode", mode)
     }
+  }
+}
+
+/** The composed stage-4 form [[Dedup.dedupStage]] replaced, kept as its
+  * parity reference: `nearDedup(exactDedup(df))` is the reference's
+  * D1∘D2 with two wide window shuffles.
+  */
+object FiltersDedupSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.Window
+  import Dedup.{doomedLast, NearDupMinLen, NearKeyChars}
+
+  /** D2: near-dup pass over the output of [[Dedup.exactDedup]]. */
+  def nearDedup(df: DataFrame, textCol: String = "text_pii_masked",
+                seqCol: String = "ingest_seq"): DataFrame = {
+    val keyed = df.withColumn("near_key",
+      Normalize.canonNear(col(textCol), NearKeyChars))
+    val isCandidate =
+      (length(col("exact_canon_text")) >= NearDupMinLen) && (col("near_key") =!= "")
+
+    val cand = keyed.filter(isCandidate)
+    val rest = keyed.filter(!isCandidate)
+      .withColumn("is_dup_near", lit(false))
+
+    val w = Window.partitionBy("near_key").orderBy(doomedLast(df), col(seqCol))
+    val candFlagged = cand
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("__first_id", first("dedup_id").over(w))
+      .withColumn("is_dup_near", col("__rn") > 1 && !col("is_dup_exact"))
+      .withColumn("dup_of",
+        coalesce(col("dup_of"), when(col("is_dup_near"), col("__first_id"))))
+      .drop("__rn", "__first_id")
+
+    val unioned = candFlagged.unionByName(rest)
+    Filters.applyRules(unioned, Seq(col("is_dup_near") -> "near_duplicate"))
   }
 }

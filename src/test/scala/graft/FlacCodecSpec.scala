@@ -113,15 +113,4 @@ class FlacCodecSpec extends AnyFunSuite {
     assert(FlacCodec.decode(bomb).isEmpty,
       "36-bit total-samples bomb must be rejected before allocation")
   }
-
-  test("toAudio adapter normalizes by bit depth into the feature path") {
-    val x = Array[Int](16384, -32768, 0, 8192)
-    val enc = FlacCodec.encodeFlac16(8000, 1, x)
-    val a = FlacCodec.toAudio(FlacCodec.decode(enc).get)
-    assert(a.samples.toSeq === Seq(0.5f, -1.0f, 0.0f, 0.25f))
-    assert(a.sampleRate === 8000 && a.channels === 1 && a.nFrames === 4)
-    // and the existing WAV feature extractor consumes it unchanged
-    val f = graft.ops.AudioCodec.audioFeatures(a, dim = 8)
-    assert(f.length === 8)
-  }
 }

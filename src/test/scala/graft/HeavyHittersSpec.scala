@@ -34,14 +34,14 @@ class HeavyHittersSpec extends SparkTestBase {
   /** Assert every MG guarantee against exact counts, with the tight
     * (n - R)/(k+1) undercount bound.
     */
-  private def assertGuarantees(s: MgState, xs: Seq[String], k: Int,
+  private def assertGuarantees(m: Map[String, Long], xs: Seq[String], k: Int,
                                label: String): Unit = {
     val exact = exactCounts(xs)
     val n = xs.size.toLong
-    val r = s.m.values.sum
-    assert(s.m.size <= k, s"$label: ${s.m.size} counters > k=$k")
+    val r = m.values.sum
+    assert(m.size <= k, s"$label: ${m.size} counters > k=$k")
     val maxErr = (n - r).toDouble / (k + 1)
-    s.m.foreach { case (t, est) =>
+    m.foreach { case (t, est) =>
       val tru = exact.getOrElse(t, 0L)
       assert(est <= tru, s"$label: $t overcounted ($est > $tru)")
       assert(tru - est <= maxErr,
@@ -49,7 +49,7 @@ class HeavyHittersSpec extends SparkTestBase {
     }
     val thresh = n.toDouble / (k + 1)
     exact.filter(_._2 > thresh).keys.foreach { t =>
-      assert(s.m.contains(t), s"$label: heavy item $t (cnt=${exact(t)} > " +
+      assert(m.contains(t), s"$label: heavy item $t (cnt=${exact(t)} > " +
         s"$thresh) missing from the summary")
     }
   }
@@ -58,7 +58,7 @@ class HeavyHittersSpec extends SparkTestBase {
     val agg = new HeavyHitters.MisraGries(K)
     val xs = zipfStream
     val s = xs.foldLeft(agg.zero)(agg.reduce)
-    assertGuarantees(s, xs, K, "serial")
+    assertGuarantees(s.m, xs, K, "serial")
     // genuinely trimmed: the universe (400) is far above K
     assert(s.m.size <= K && exactCounts(xs).size > 10 * K)
   }
@@ -78,9 +78,9 @@ class HeavyHittersSpec extends SparkTestBase {
         val (l, r) = cs.splitAt(cs.size / 2)
         agg.merge(tree(l), tree(r))
     }
-    assertGuarantees(leftFold, xs, K, "left-fold")
-    assertGuarantees(rightFold, xs, K, "right-fold")
-    assertGuarantees(tree(chunks), xs, K, "balanced-tree")
+    assertGuarantees(leftFold.m, xs, K, "left-fold")
+    assertGuarantees(rightFold.m, xs, K, "right-fold")
+    assertGuarantees(tree(chunks).m, xs, K, "balanced-tree")
   }
 
   test("universe at or below k: the summary is exact") {
@@ -157,7 +157,7 @@ class HeavyHittersSpec extends SparkTestBase {
     val state = batches.tail.foldLeft(toDf(batches.head))((acc, b) =>
       HeavyHitters.mergeSummaries(acc, toDf(b), K))
       .as[(String, Long)].collect().toMap
-    assertGuarantees(MgState(state), xs, K, "batch-fold")
+    assertGuarantees(state, xs, K, "batch-fold")
   }
 
   test("compact Kryo form roundtrips exactly and stays operable") {

@@ -1,56 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 import graft.ops.{Incremental, SnapshotDiff}
-import graft.text.TextMetrics
 
-/** Incremental processing: carry-forward equals full recompute, and the
-  * delta side really only touches the delta.
+/** Incremental maintenance: a snapshot merge replaces, deletes and
+  * carries forward exactly, and fails on ambiguous ids.
   */
 class IncrementalSpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def mkDocs(rows: Seq[(Long, String)]): DataFrame =
-    rows.toDF("doc_id", "text")
-
-  private def canon(df: DataFrame): Seq[Row] =
-    df.collect().sortBy(_.getLong(0)).toSeq
-
-  test("incremental output equals full recompute across add/change/remove") {
-    val prev = mkDocs((0L until 50L).map(i => (i, s"doc $i body text")))
-    // 0-9 removed; 10-39 unchanged; 40-49 changed; 50-54 added
-    val cur = mkDocs(
-      (10L until 40L).map(i => (i, s"doc $i body text")) ++
-        (40L until 50L).map(i => (i, s"doc $i REVISED body")) ++
-        (50L until 55L).map(i => (i, s"doc $i brand new")))
-
-    val processed = spark.sparkContext.longAccumulator("processed")
-    def process(acc: Option[LongAccumulator])(df: DataFrame): DataFrame = {
-      val staged = acc match {
-        case Some(a) => df.map { r => a.add(1); r.getLong(0) -> r.getString(1) }
-          .toDF("doc_id", "text")
-        case None => df
-      }
-      staged.select(col("doc_id"),
-        TextMetrics.charLen(col("text")).cast("long").as("n_chars"),
-        TextMetrics.wordCount(col("text")).cast("long").as("n_words"),
-        md5(col("text")).as("text_md5"))
-    }
-
-    val prevOut = process(None)(prev)
-    val inc = Incremental.processDelta(cur, prev, prevOut,
-      process(Some(processed)))
-    val full = process(None)(cur)
-    val incRows = canon(inc) // single action — the accumulator counts one run
-    assert(incRows === canon(full))
-    // ids: exactly the current snapshot, nothing from removed docs
-    assert(incRows.map(_.getLong(0)).toSeq === (10L until 55L).toSeq)
-    // the delta side processed ONLY changed+added rows (10 + 5)
-    assert(processed.value === 15L)
-  }
 
   test("applyDelta: upserts replace, deletes fall out, merge->diff closes") {
     import spark.implicits._

@@ -4,10 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Layout
 
-/** Storage-layout pins: the Morton key's bit interleave, the pruning
+/** Storage-layout pins: the Morton key's bit interleave and the pruning
   * payoff of Z-clustering (fewer files intersect a 2-D box predicate
-  * than under a linear sort — the entire point of the layout), and the
-  * parquet bloom-filter writer option landing in the footers.
+  * than under a linear sort — the entire point of the layout).
   */
 class LayoutSpec extends SparkTestBase {
 
@@ -45,7 +44,12 @@ class LayoutSpec extends SparkTestBase {
       yield (x * 1024L, y * 1024L)
     val df = pts.toDF("x", "y")
     val base = java.nio.file.Files.createTempDirectory("layout").toString
-    Layout.writeZOrdered(df, s"$base/zorder", "x", "y", files = 16)
+    // Z-clustered: range-partitioned and sorted by the Morton key
+    df.withColumn("__z", Layout.zValue(col("x"), col("y")))
+      .repartitionByRange(16, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
+      .write.mode("overwrite").parquet(s"$base/zorder")
     df.repartitionByRange(16, col("x")) // linear: leading-column stripes
       .sortWithinPartitions("x")
       .write.mode("overwrite").parquet(s"$base/linear")
@@ -74,56 +78,5 @@ class LayoutSpec extends SparkTestBase {
       s"z-order should prune harder: z=$zHits linear=$linHits")
     // and the layout loses no rows
     assert(spark.read.parquet(s"$base/zorder").count() === pts.length)
-  }
-
-  test("compaction plan: FFD bins near target, big files stay alone") {
-    val files = Seq(("a", 90L), ("b", 60L), ("c", 40L), ("d", 30L),
-      ("e", 30L), ("f", 10L), ("g", 200L))
-    val plan = Layout.planCompaction(files, targetBytes = 100L)
-    // every group actually merges: no 1-file-in -> 1-file-out rewrites
-    assert(plan.forall(_.length > 1), s"no-op singleton group in $plan")
-    // the oversized file is NOT in the plan (rewriting it buys nothing)
-    assert(!plan.flatten.contains("g"))
-    // each small file appears at most once across groups
-    val planned = plan.flatten
-    assert(planned.distinct === planned)
-    // no merge group exceeds the target
-    val sizes = files.toMap
-    plan.foreach { bin =>
-      assert(bin.map(sizes).sum <= 100L, s"overfull bin $bin")
-    }
-    // deterministic: same listing (any order) -> same plan
-    assert(Layout.planCompaction(files.reverse, 100L) === plan)
-    // the six small files pack into three near-target groups
-    assert(plan === Seq(Seq("a", "f"), Seq("b", "c"), Seq("d", "e")))
-    // a lone unmatched small file is also a no-op, not a group
-    assert(Layout.planCompaction(Seq(("x", 90L)), 100L) === Seq())
-    // a zero-byte file cannot promote an already-at-target file into a
-    // pointless rewrite group (tot < target guards the size = 0 case)
-    assert(Layout.planCompaction(Seq(("big", 100L), ("empty", 0L)), 100L)
-      === Seq())
-  }
-
-  test("bloom filter option lands in the parquet footers") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("bloom").toString
-    val df = (0 until 2000).map(i => (i.toLong, s"doc_$i")).toDF("id", "h")
-    Layout.writeWithBloom(df.repartition(2), s"$base/t", Seq("h"),
-      expectedNdv = 2000L)
-    val file = new java.io.File(s"$base/t").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.getAbsolutePath), conf))
-    try {
-      val cols = reader.getFooter.getBlocks.get(0).getColumns
-      val byName = (0 until cols.size()).map(cols.get)
-        .map(c => c.getPath.toDotString -> c).toMap
-      assert(byName("h").getBloomFilterOffset > 0,
-        "bloom filter missing for column h")
-      assert(byName("id").getBloomFilterOffset <= 0,
-        "bloom filter must be per-column opt-in")
-    } finally reader.close()
   }
 }

@@ -1,16 +1,7 @@
 package graft
 
-import graft.ops.Mixture
-
-/** Mixture sampling: deterministic, partition-independent, weight-true. */
+/** Mixture weights: temperature scaling and document allocation. */
 class MixtureSpec extends SparkTestBase {
-
-  private def docs = {
-    import spark.implicits._
-    (1 to 2000).map { i =>
-      (i.toLong, if (i % 4 == 0) "rest" else "high_quality")
-    }.toDF("doc_id", "subset")
-  }
 
   test("temperature weights: alpha=1 is natural, alpha->0 flattens, sums to 1") {
     import spark.implicits._
@@ -36,35 +27,5 @@ class MixtureSpec extends SparkTestBase {
     val alloc = Mixture.temperatureWeights(df, "src", "chars", 0.3, 1000L)
       .agg(org.apache.spark.sql.functions.sum("docs_alloc")).collect()(0).getLong(0)
     assert(alloc <= 1000L)
-  }
-
-  test("stratified sample hits configured fractions and is deterministic") {
-    val frac = Map("high_quality" -> 0.8, "rest" -> 0.1)
-    val s1 = Mixture.stratifiedSample(docs, "subset", "doc_id", frac)
-    val s2 = Mixture.stratifiedSample(docs.repartition(7), "subset", "doc_id", frac)
-    val ids1 = s1.select("doc_id").collect().map(_.getLong(0)).toSet
-    val ids2 = s2.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids1 === ids2, "sample must not depend on partitioning")
-    val byStratum = s1.groupBy("subset").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(math.abs(byStratum("high_quality") - 1500 * 0.8) < 1500 * 0.1)
-    assert(math.abs(byStratum.getOrElse("rest", 0L) - 500 * 0.1) < 500 * 0.15 + 10)
-    // different seed -> different sample
-    val s3 = Mixture.stratifiedSample(docs, "subset", "doc_id", frac, seed = 7L)
-    assert(s3.select("doc_id").collect().map(_.getLong(0)).toSet !== ids1)
-  }
-
-  test("upweight: integer copies plus fractional remainder") {
-    val up = Mixture.upweight(docs, "subset", "doc_id",
-      Map("high_quality" -> 2.5, "rest" -> 0.5))
-    val counts = up.groupBy("subset").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // high_quality: 2 full copies of 1500 + ~0.5*1500
-    assert(counts("high_quality") >= 3400 && counts("high_quality") <= 4000,
-      counts.toString)
-    // rest: no full copy, ~0.5*500
-    assert(counts("rest") >= 150 && counts("rest") <= 350, counts.toString)
-    // full copies carry epoch >= 1, fractional rows epoch 0
-    assert(up.filter(org.apache.spark.sql.functions.col("epoch") === 0).count() > 0)
   }
 }

@@ -70,13 +70,6 @@ class MultimodalSpec extends SparkTestBase {
     }
   }
 
-  test("decode stub returns declared dims and a stable checksum") {
-    val (w, h, c1) = Multimodal.decodeImageStub("payload".getBytes, 64, 48)
-    val (_, _, c2) = Multimodal.decodeImageStub("payload".getBytes, 64, 48)
-    assert((w, h) === (64, 48))
-    assert(c1 === c2)
-  }
-
   // ---- real codec --------------------------------------------------------
 
   // 3x2 RGB test card: distinct channel values in every pixel so any
@@ -102,7 +95,7 @@ class MultimodalSpec extends SparkTestBase {
     val rgb = Array.tabulate(3 * 5 * 3)(i => ((i * 37 + 11) % 251).toByte)
     for (firstRow <- Seq(2, 4)) { // Up and Paeth with no row above
       val filters = Array(firstRow, 1, 2, 3, 4)
-      val payload = ImageCodec.encodePngWithFilters(3, 5, rgb, filters)
+      val payload = MultimodalSpec.encodePngWithFilters(3, 5, rgb, filters)
       val img = ImageCodec.decode(payload).getOrElse(fail("no decode"))
       assert(img.pixels.toSeq === rgb.toSeq, s"filters=${filters.toSeq}")
     }
@@ -142,20 +135,6 @@ class MultimodalSpec extends SparkTestBase {
     val bmp = ImageCodec.encodeBmp(3, 2, rgb3x2)
     bmp(28) = 8 // 8-bpp palette BMP: out of scope
     assert(ImageCodec.decode(bmp).isEmpty)
-  }
-
-  test("decodeImage: pixel checksum is representation-independent") {
-    // the same pixels through different encodings must checksum equal —
-    // impossible for any byte-level hash of the payload
-    val viaPng = Multimodal.decodeImage(ImageCodec.encodePng(3, 2, rgb3x2), 0, 0)
-    val viaBmp = Multimodal.decodeImage(ImageCodec.encodeBmp(3, 2, rgb3x2), 0, 0)
-    val viaPpm = Multimodal.decodeImage(ImageCodec.encodePpm(3, 2, rgb3x2), 0, 0)
-    assert(viaPng === ((3, 2, viaPng._3)))
-    assert(viaPng === viaBmp)
-    assert(viaBmp === viaPpm)
-    // and the stub fallback reports the declared dims instead
-    val stub = Multimodal.decodeImage("jpegish garbage".getBytes, 64, 48)
-    assert((stub._1, stub._2) === ((64, 48)))
   }
 
   test("extractFeatures: image payloads embed from pixels, flagged decoded") {
@@ -344,160 +323,6 @@ class MultimodalSpec extends SparkTestBase {
     }
   }
 
-  test("one-decode signature stage: materialized store serves all four " +
-    "near-dup consumers with bit-identical results") {
-    import spark.implicits._
-    val mkText = (seed: Int) =>
-      (0 until 500).map(i => ('a' + (i * seed + seed) % 26).toChar).mkString
-    val dirPath = java.nio.file.Files.createTempDirectory("sigstage").toString
-    // ids covering all three modalities with twins (id%5==0): 0 image,
-    // 10 audio (+twin), 5 video (+twin), 4/7 audio, 2/8 video
-    Seq(0L, 2L, 4L, 5L, 7L, 8L, 10L).map(id => (id, mkText(3 + id.toInt)))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dirPath/documents.parquet")
-    def snapshot() = Map(
-      "media" -> graft.queries.MultimodalQueries.mediaNearDup(spark, dirPath)
-        .collect().map(_.toSeq).toSet,
-      "audio" -> graft.queries.MultimodalQueries.audioNearDup(spark, dirPath)
-        .collect().map(_.toSeq).toSet,
-      "video" -> graft.queries.MultimodalQueries.videoNearDup(spark, dirPath)
-        .collect().map(_.toSeq).toSet,
-      "incr" -> graft.queries.MultimodalQueries.incrMediaNearDup(spark, dirPath)
-        .collect().map(_.toSeq).toSet)
-    val inline = snapshot()
-    // inline-by-design mode (no store configured): the observability
-    // report says so and no fallback counters move — unconfigured is
-    // not a fallback
-    val rep0 = graft.queries.MultimodalQueries
-      .sigStoreReport(spark, dirPath).collect().head
-    assert(!rep0.getBoolean(1), "store must report unconfigured")
-    assert((2 to 5).forall(rep0.getLong(_) == 0L), rep0.toString)
-    spark.catalog.clearCache()
-    val store = java.nio.file.Files.createTempDirectory("sigstore").toString
-    val written = graft.queries.MultimodalQueries
-      .writeMediaSignatures(spark, dirPath, store)
-    assert(new java.io.File(written).exists)
-    // sanity: the store actually covers every modality
-    val mods = spark.read.parquet(written).select("modality")
-      .distinct().collect().map(_.getString(0)).toSet
-    assert(mods === Set("image", "audio", "video"))
-    System.setProperty("graft.media.sigs.dir", store)
-    try {
-      val staged = snapshot()
-      assert(staged === inline,
-        "staged signature reads must be bit-identical to inline decode")
-      // staged mode: all four consumers resolved from the store — the
-      // report counts 4 hits and zero fallbacks of any kind
-      val rep1 = graft.queries.MultimodalQueries
-        .sigStoreReport(spark, dirPath).collect().head
-      assert(rep1.getBoolean(1), "store must report as configured")
-      assert(rep1.getLong(2) === 4L, s"4 staged reads must count as hits: $rep1")
-      assert(rep1.getLong(3) === 0L && rep1.getLong(4) === 0L &&
-        rep1.getLong(5) === 0L, rep1.toString)
-      // staleness guard: regenerating the corpus at the SAME path must
-      // change the content-stamped store key, so the old materialization
-      // can never be served for the new data. No mtime-tick sleep: the
-      // stamp digests per-file NAMES (fresh write UUIDs every rewrite),
-      // so even a same-instant same-length rewrite re-keys.
-      Seq((0L, mkText(3)), (10L, mkText(5)))
-        .toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$dirPath/documents.parquet")
-      val newKey = graft.queries.MultimodalQueries
-        .mediaSigPath(spark, store, dirPath)
-      assert(newKey !== written,
-        "regenerated corpus must key to a different store path")
-      // cold read of the regenerated corpus: no table for the new stamp
-      // yet — a CLEAN miss (the designed cold path, counted as such,
-      // not as a failure)
-      graft.queries.MultimodalQueries.mediaNearDup(spark, dirPath).collect()
-      spark.catalog.clearCache()
-      val rep2 = graft.queries.MultimodalQueries
-        .sigStoreReport(spark, dirPath).collect().head
-      assert(rep2.getLong(3) === 1L,
-        s"regenerated-corpus cold read must count as a store miss: $rep2")
-      assert(rep2.getLong(2) === 4L && rep2.getLong(4) === 0L &&
-        rep2.getLong(5) === 0L, rep2.toString)
-      // retention guard: materialize the new generation, then prune —
-      // the grace window protects the just-superseded generation, a
-      // zero grace removes it, and the live generation always survives
-      val written2 = graft.queries.MultimodalQueries
-        .writeMediaSignatures(spark, dirPath, store)
-      assert(written2 === newKey)
-      val graced = graft.queries.MultimodalQueries
-        .pruneMediaSignatures(spark, store, Seq(dirPath),
-          graceMs = 3600L * 1000)
-      assert(graced.isEmpty, "grace window must protect the stale generation")
-      assert(new java.io.File(written).exists)
-      // fail-safe: an unresolvable live dir (retired path left in the
-      // retention config) must abort the prune with zero deletions —
-      // a live generation could otherwise be mistaken for garbage
-      val aborted = graft.queries.MultimodalQueries
-        .pruneMediaSignatures(spark, store,
-          Seq(dirPath, "/nonexistent/retired-corpus"), graceMs = 0L)
-      assert(aborted.isEmpty, "unresolvable live dir must abort the prune")
-      assert(new java.io.File(written).exists,
-        "fail-safe prune must not delete anything")
-      // owner attribution (ADVICE r13): a generation owned by a corpus
-      // NOT in liveDirs (another deployment's store) and a generation
-      // with no _owner manifest must both SURVIVE the prune — deletion
-      // requires positive attribution to a managed corpus
-      val foreign = s"$store/media_sigs_feedfeedfeed.parquet"
-      new java.io.File(foreign).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$foreign/_owner"), "/some/other/corpus")
-      val orphan = s"$store/media_sigs_0rphan000000.parquet"
-      new java.io.File(orphan).mkdirs()
-      val deleted = graft.queries.MultimodalQueries
-        .pruneMediaSignatures(spark, store, Seq(dirPath), graceMs = 0L)
-      assert(deleted.map(p => p.split('/').last) ===
-        Seq(written.split('/').last))
-      assert(new java.io.File(foreign).exists,
-        "foreign-owner generation must survive an incomplete liveDirs prune")
-      assert(new java.io.File(orphan).exists,
-        "ownerless generation must survive the prune")
-      assert(!new java.io.File(written).exists,
-        "stale generation must be removed")
-      assert(new java.io.File(written2).exists,
-        "live generation must survive the prune")
-    } finally {
-      System.clearProperty("graft.media.sigs.dir")
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("sigSlice: a corrupt signature store degrades to inline decode " +
-    "with identical results (and never throws)") {
-    import spark.implicits._
-    val dirPath = java.nio.file.Files.createTempDirectory("sigcorrupt").toString
-    Seq((0L, "alpha"), (5L, "beta"), (10L, "gamma")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dirPath/documents.parquet")
-    val inline = graft.queries.MultimodalQueries.mediaNearDup(spark, dirPath)
-      .collect().map(_.toSeq).toSet
-    spark.catalog.clearCache()
-    val store = java.nio.file.Files.createTempDirectory("sigstore-bad").toString
-    // plant garbage exactly where the store table for this corpus keys
-    val key = graft.queries.MultimodalQueries.mediaSigPath(spark, store, dirPath)
-    java.nio.file.Files.write(java.nio.file.Paths.get(key),
-      "definitely not a parquet table".getBytes("UTF-8"))
-    System.setProperty("graft.media.sigs.dir", store)
-    try {
-      val got = graft.queries.MultimodalQueries.mediaNearDup(spark, dirPath)
-        .collect().map(_.toSeq).toSet
-      assert(got === inline,
-        "corrupt store must fall back to inline decode, bit-identical")
-      // the degrade is visible in the report: an exists-but-unreadable
-      // store counts as an open_failure, not a clean miss
-      val rep = graft.queries.MultimodalQueries
-        .sigStoreReport(spark, dirPath).collect().head
-      assert(rep.getLong(5) === 1L,
-        s"corrupt store read must count as an open_failure: $rep")
-      assert(rep.getLong(2) === 0L && rep.getLong(3) === 0L, rep.toString)
-    } finally {
-      System.clearProperty("graft.media.sigs.dir")
-      spark.catalog.clearCache()
-    }
-  }
-
   test("videoNearDup: touched-frame twin found, unrelated clips absent") {
     import spark.implicits._
     // doc 5 is video (5 % 3 == 2) and gets a twin (5 % 5 == 0); docs 2
@@ -592,5 +417,61 @@ class MultimodalSpec extends SparkTestBase {
     assert(collapsed.toSeq === itemLevel.toSeq)
     assert(collapsed.toSeq === Seq((0L, 12L, 0L), (20L, 2L, 20L)))
     spark.catalog.clearCache()
+  }
+}
+
+object MultimodalSpec {
+  import java.io.ByteArrayOutputStream
+
+  /** PNG with an explicit filter type per scanline (forward-filtered
+    * here, so decode must invert it) — exercises the Sub/Up/Average/Paeth
+    * unfilter paths that filter-0 round-trips never touch. Written
+    * independently of [[ImageCodec]]'s encoders.
+    */
+  def encodePngWithFilters(w: Int, h: Int, rgb: Array[Byte],
+                           filters: Array[Int]): Array[Byte] = {
+    require(rgb.length == w * h * 3 && filters.length == h)
+    def paeth(a: Int, b: Int, c: Int): Int = {
+      val p = a + b - c
+      val (pa, pb, pc) = (math.abs(p - a), math.abs(p - b), math.abs(p - c))
+      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+    }
+    val stride = w * 3
+    val raw = new Array[Byte]((stride + 1) * h)
+    for (y <- 0 until h) {
+      val f = filters(y)
+      raw(y * (stride + 1)) = f.toByte
+      for (x <- 0 until stride) {
+        val cur = rgb(y * stride + x) & 0xff
+        val a = if (x >= 3) rgb(y * stride + x - 3) & 0xff else 0
+        val b = if (y > 0) rgb((y - 1) * stride + x) & 0xff else 0
+        val c = if (x >= 3 && y > 0) rgb((y - 1) * stride + x - 3) & 0xff else 0
+        val enc = f match {
+          case 0 => cur
+          case 1 => cur - a
+          case 2 => cur - b
+          case 3 => cur - (a + b) / 2
+          case 4 => cur - paeth(a, b, c)
+        }
+        raw(y * (stride + 1) + 1 + x) = (enc & 0xff).toByte
+      }
+    }
+    def be32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+    val out = new ByteArrayOutputStream()
+    def chunk(ctype: String, data: Array[Byte]): Unit = {
+      val typeBytes = ctype.getBytes("US-ASCII")
+      val crc = new java.util.zip.CRC32()
+      crc.update(typeBytes); crc.update(data)
+      out.write(be32(data.length)); out.write(typeBytes); out.write(data)
+      out.write(be32(crc.getValue.toInt))
+    }
+    val z = new ByteArrayOutputStream()
+    val dz = new java.util.zip.DeflaterOutputStream(z)
+    dz.write(raw); dz.close()
+    out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 13, 10, 26, 10))
+    chunk("IHDR", be32(w) ++ be32(h) ++ Array[Byte](8, 2, 0, 0, 0))
+    chunk("IDAT", z.toByteArray)
+    chunk("IEND", Array.emptyByteArray)
+    out.toByteArray
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.plans.{GraftFunctions, NfkcNormalize}
-import graft.text.Normalize
 
 /** Native NFKC expression: semantics vs the UDF baseline and the JVM
   * Normalizer, codegen + interpreted paths, SQL registration.
@@ -26,7 +25,7 @@ class NfkcSpec extends SparkTestBase {
     val df = (samples :+ null.asInstanceOf[String]).toDF("s")
     val rows = df.select(
       NfkcNormalize(col("s")).as("native"),
-      Normalize.nfkc(col("s")).as("viaUdf")).collect()
+      graft.text.NormalizeRef.nfkc(col("s")).as("viaUdf")).collect()
     rows.foreach { r => assert(r.get(0) === r.get(1)) }
     samples.foreach { s =>
       val expect = java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC)

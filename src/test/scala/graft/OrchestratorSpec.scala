@@ -4,9 +4,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{DataFrame, TestSqlBridge}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Shard
 import graft.sources.Sinks
@@ -241,7 +240,7 @@ class OrchestratorSpec extends SparkTestBase {
     val outside = new Thread(() => fused())
     outside.start()
     outside.join()
-    assert(GraftSqlBridge.noCachedPlans(spark),
+    assert(TestSqlBridge.noCachedPlans(spark),
       "the fused run left its dedup branch point in the CacheManager")
     // outside a scope the branch point is a plain RDD persist; drop it
     // so this test leaves the session as it found it
@@ -310,51 +309,5 @@ class OrchestratorSpec extends SparkTestBase {
     // v2..v4 are still on disk, so their rows carry over unchanged
     assertSummaryMatchesParquet(outDir, stageNames(2))
     assert(summaryRows(outDir).take(3) === firstRunRows.take(3))
-  }
-
-  test("incremental run matches a from-scratch run on content columns") {
-    // snapshot B = A with the tail third dropped and fresh docs added
-    // (doc_id is content-addressed, so an edited doc IS a remove+add)
-    val rawA = Pipeline.fromDocuments(Tables.documents(spark, sfDir))
-      .select("url", "text")
-    val keepIds = Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 3 =!= 0).select("doc_id")
-    val rawB = Pipeline.fromDocuments(
-      Tables.documents(spark, sfDir).join(keepIds, Seq("doc_id"), "left_semi")
-        .unionByName(Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 3 === 0).limit(30)
-          .withColumn("text", concat(lit("fresh revision: "), coalesce(col("text"), lit(""))))
-          .withColumn("doc_id", col("doc_id") + 1000000L)))
-      .select("url", "text")
-    val prevDir = Files.createTempDirectory("graft-inc-prev").toString
-    // a run releases every cache it takes and none the caller owns
-    spark.catalog.clearCache()
-    val callerOwned = spark.range(5).toDF("x").persist()
-    callerOwned.count()
-    Orchestrator.run(spark, prevDir, raw = Some(rawA))
-    assert(callerOwned.storageLevel === StorageLevel.MEMORY_AND_DISK,
-      "run evicted a frame the caller cached")
-    callerOwned.unpersist(blocking = true)
-    assert(GraftSqlBridge.noCachedPlans(spark),
-      "run left DataFrame-level caches pinned")
-    // the production CLI never calls clearCache, so incrementalRun must
-    // release its own stage-2/3 persists (ADVICE r12): start from a
-    // clean cache and assert none survive the call
-    spark.catalog.clearCache()
-    val incDir = Files.createTempDirectory("graft-inc-out").toString
-    val incr = Orchestrator.incrementalRun(spark, prevDir, incDir, rawB)
-    assert(GraftSqlBridge.noCachedPlans(spark),
-      "incrementalRun left DataFrame-level caches pinned")
-    assertSummaryMatchesParquet(incDir, "v3:incremental_prefix" +: stageNames(4))
-    val fullDir = Files.createTempDirectory("graft-inc-full").toString
-    Orchestrator.run(spark, fullDir, raw = Some(rawB))
-    // content columns must agree; seq-derived artifacts (shard_id,
-    // global_seq) legitimately follow each run's ingest interleaving
-    val cols = Seq("doc_id", "lang_pred", "token_count", "has_pii",
-      "quality_score", "subset", "n_tokens")
-    val a = incr.select(cols.map(col): _*).collect().map(_.toSeq).toSet
-    val b = spark.read.parquet(Orchestrator.versionPath(fullDir, 7))
-      .select(cols.map(col): _*).collect().map(_.toSeq).toSet
-    assert(a === b)
   }
 }

@@ -78,7 +78,7 @@ class PlanSpec extends SparkTestBase {
     assert(wsNodes.nonEmpty, s"no WholeStageCodegen node at all:\n$exec")
     assert(wsNodes.exists(_.toString.contains("drop_reason_stage2")),
       s"the drop-reason projection must sit under WholeStageCodegen:\n$exec")
-    wsNodes.foreach(org.apache.spark.sql.GraftSqlBridge.compileWholeStage)
+    wsNodes.foreach(org.apache.spark.sql.TestSqlBridge.compileWholeStage)
   }
 
   test("as-of join costs exactly one keyed shuffle") {

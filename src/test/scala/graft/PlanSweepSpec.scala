@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.TestSqlBridge
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
@@ -87,7 +87,7 @@ class PlanSweepSpec extends SparkTestBase {
             case NonFatal(e) => Seq(s"$name: failed: ${e.getMessage}")
           }
         val plans =
-          if (plansLeaked || GraftSqlBridge.noCachedPlans(spark)) Nil
+          if (plansLeaked || TestSqlBridge.noCachedPlans(spark)) Nil
           else { plansLeaked = true; Seq(s"$name: left a cached plan") }
         val rdds = sc.getPersistentRDDs.values.filter(r => seenRdds.add(r.id))
           .map(r => s"$name: left persistent RDD ${r.id} " +

@@ -76,7 +76,7 @@ class PropertySpec extends SparkTestBase {
           TextMetrics.alphaRatio(col("s")).as("a"),
           TextMetrics.repetitionRatio(col("s")).as("r"),
           TextMetrics.uniqueTokenRatio(col("s")).as("u"),
-          TextMetrics.stopwordRatio(col("s")).as("sw"),
+          graft.text.TextMetricsRef.stopwordRatio(col("s")).as("sw"),
           TextMetrics.nonLatinRatio(col("s")).as("nl"))
           .as[(Double, Double, Double, Double, Double)].collect()
         rows.foreach { case (a, r, u, sw, nl) =>
@@ -120,7 +120,7 @@ class PropertySpec extends SparkTestBase {
           .withColumn("word_count", TextMetrics.wordCount(col("text_norm")).cast("long"))
         val ruled = rules(df)
         val n = ruled.count()
-        assert(Filters.kept(ruled).count() + Filters.dropped(ruled).count() === n)
+        assert(Filters.kept(ruled).count() + ruled.filter(col("drop_reason").isNotNull).count() === n)
         val first = ruled.select("ingest_seq", "drop_reason").collect()
           .map(r => r.getLong(0) -> r.getString(1)).toMap
         val second = rules(ruled).select("ingest_seq", "drop_reason").collect()
@@ -365,7 +365,7 @@ class PropertySpec extends SparkTestBase {
       }
       // random per-row PNG filter choices must unfilter to the same pixels
       val filters = Array.tabulate(h)(r => (w * 31 + r * 7) % 5)
-      val filtered = ImageCodec.encodePngWithFilters(w, h, px, filters)
+      val filtered = MultimodalSpec.encodePngWithFilters(w, h, px, filters)
       assert(ImageCodec.decode(filtered).get.pixels.toSeq === px.toSeq,
         s"filters=${filters.toSeq}")
     }

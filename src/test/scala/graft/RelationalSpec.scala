@@ -240,24 +240,6 @@ class RelationalSpec extends SparkTestBase {
     assert("""\(\d+\) Scan parquet""".r.findAllIn(p).size === 1, p)
   }
 
-  test("approx describe tracks exact describe (bounded-state scale path)") {
-    val docs = Tables.documents(spark, sf)
-    val exact = graft.ops.Report.describeCol(docs, "n_chars").collect()(0)
-    val approx = graft.ops.Report.describeColApprox(docs, "n_chars").collect()(0)
-    // identical moments (same plain aggregates)...
-    assert(approx.getAs[Long]("n") === exact.getAs[Long]("n"))
-    assert(approx.getAs[Long]("min") === exact.getAs[Long]("min"))
-    assert(approx.getAs[Long]("max") === exact.getAs[Long]("max"))
-    assert(math.abs(approx.getAs[Double]("mean") - exact.getAs[Double]("mean")) < 1e-9)
-    assert(math.abs(approx.getAs[Double]("std") - exact.getAs[Double]("std")) < 1e-6)
-    // ...and sketched quantiles within 2% of exact at default accuracy
-    Seq("p25", "median", "p75").foreach { q =>
-      val e = exact.getAs[Double](q)
-      val a = approx.getAs[Long](q).toDouble // approx returns the col's type
-      assert(math.abs(a - e) <= math.max(1.0, e * 0.02), s"$q: approx $a vs exact $e")
-    }
-  }
-
   test("session_window merges the exact-gap event (inclusive boundary)") {
     // pins the semantics q_session_window's oracle mirrors: an event
     // exactly gapDuration after the session's last event MERGES, so the

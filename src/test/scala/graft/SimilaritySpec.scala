@@ -156,15 +156,13 @@ class SimilaritySpec extends SparkTestBase {
     import graft.ops.Pq
     val label = Pq.codebooks(emb, m = 4, dim = 64)
     val trained = Pq.codebooksLloyd(emb, m = 4, dim = 64, k = 10, iters = 3)
-    val eLabel = Pq.reconstructionErrorQ(emb, label, m = 4, dim = 64)
-    val eTrained = Pq.reconstructionErrorQ(emb, trained, m = 4, dim = 64)
+    val eLabel = reconstructionError(emb, label, m = 4, dim = 64)
+    val eTrained = reconstructionError(emb, trained, m = 4, dim = 64)
     println(s"SIM pq recon error: label=$eLabel trained=$eTrained")
     // Lloyd optimizes exactly this objective; label means are arbitrary
     // partitions of weak clusters
     assert(eTrained < eLabel,
       s"training did not improve the quantizer: $eTrained vs $eLabel")
-    // trained codebooks satisfy the dense-code contract end to end
-    assert(Pq.encode(emb, trained, m = 4, dim = 64).count() === emb.count())
   }
 
   test("fused multi-subspace Lloyd codebooks match the per-subspace composition") {
@@ -181,7 +179,7 @@ class SimilaritySpec extends SparkTestBase {
       val (_, cents) = KMeans.lloyd(
         vecs.select(col("vec_id"),
           slice(col("__vec"), lit(mi * sub + 1), lit(sub)).as("embedding")),
-        k, iters)
+        k, iters, sub)
       cents.collect().sortBy(_.getInt(0)).zipWithIndex.map { case (r, code) =>
         (mi, code, r.getSeq[Long](1).map(_.toDouble / KMeans.Quant))
       }
@@ -194,7 +192,7 @@ class SimilaritySpec extends SparkTestBase {
       }
       (got, plans.size)
     }
-    val (got, localRuns) = trained(Pq.LocalBytes)
+    val (got, localRuns) = trained(KMeans.LocalBytes)
     assert(got === want, "fused codebooks diverged from per-subspace Lloyd")
     // one vector short of the byte budget: the per-subspace fallback
     // runs (at least one more execution per subspace), same codebooks
@@ -204,7 +202,7 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("distributed Lloyd releases its cache on failure and with its scope") {
-    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.TestSqlBridge
     import org.apache.spark.sql.functions.{array, lit, udf}
     val badVector = udf { (id: Long) =>
       if (id > 1) throw new IllegalStateException(s"bad vector $id")
@@ -213,8 +211,8 @@ class SimilaritySpec extends SparkTestBase {
     val emb = spark.range(8)
       .select(col("id").as("vec_id"), badVector(col("id")).as("embedding"))
     spark.catalog.clearCache()
-    intercept[Exception](graft.ops.KMeans.lloyd(emb, k = 2, iters = 2, localGate = 0))
-    assert(GraftSqlBridge.noCachedPlans(spark),
+    intercept[Exception](graft.ops.KMeans.lloyd(emb, k = 2, iters = 2, dim = 2, localGate = 0))
+    assert(TestSqlBridge.noCachedPlans(spark),
       "a failed Lloyd run left its input cached")
     // on success the returned assignment is a checkpoint that the
     // caller's scope releases
@@ -223,10 +221,10 @@ class SimilaritySpec extends SparkTestBase {
     val good = spark.range(8).select(col("id").as("vec_id"),
       array(col("id").cast("double"), lit(1.0)).as("embedding"))
     Persisted.owned {
-      val (assigned, _) = graft.ops.KMeans.lloyd(good, k = 2, iters = 2, localGate = 0)
+      val (assigned, _) = graft.ops.KMeans.lloyd(good, k = 2, iters = 2, dim = 2, localGate = 0)
       assert(assigned.count() === 8)
     }
-    assert(GraftSqlBridge.noCachedPlans(spark) && sc.getPersistentRDDs.keySet == before,
+    assert(TestSqlBridge.noCachedPlans(spark) && sc.getPersistentRDDs.keySet == before,
       "a Lloyd run left cached state behind its caller's scope")
   }
 
@@ -488,6 +486,26 @@ class SimilaritySpec extends SparkTestBase {
 
 object SimilaritySpec {
   import org.apache.spark.sql.functions._
+
+  /** Total squared reconstruction error of a PQ codebook (m_idx, code,
+    * cv) over the unit-normalized embeddings: per vector and subspace,
+    * the squared L2 distance to the nearest centroid — the objective
+    * Lloyd minimizes, computed on the driver.
+    */
+  def reconstructionError(emb: DataFrame, cb: DataFrame, m: Int, dim: Int): Double = {
+    val sub = dim / m
+    val cents = cb.collect().groupBy(_.getInt(0)).map { case (mi, rs) =>
+      mi -> rs.map(_.getSeq[Double](2).toArray) }
+    emb.select(col("embedding").cast("array<double>")).collect().map { r =>
+      val v = r.getSeq[Double](0).toArray
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      val u = if (norm == 0.0) v else v.map(_ / norm)
+      (0 until m).map { mi =>
+        val s = u.slice(mi * sub, mi * sub + sub)
+        cents(mi).map(c => s.indices.map(i => (s(i) - c(i)) * (s(i) - c(i))).sum).min
+      }.sum
+    }.sum
+  }
 
   /** Exact all-pairs cosine baseline the LSH recall is measured against
     * (the cross join is quadratic; never a scale path).

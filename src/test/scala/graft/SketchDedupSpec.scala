@@ -238,8 +238,10 @@ class SketchDedupSpec extends SparkTestBase {
       (12L, ""),                                                  // empty: no sketch
       (13L, "fresh new content that matches nothing in the corpus at all") // intra-dup of 11
     ).toDF("doc_id", "text")
-    val res = SketchDedup.incrementalMinhash(batch, state, "doc_id", "text",
-      threshold = 0.6)
+    def incremental(b: org.apache.spark.sql.DataFrame, corpusState: org.apache.spark.sql.DataFrame) =
+      SketchDedup.incrementalFromSketches(b, SketchDedup.sketchTable(b, "doc_id", "text"),
+        corpusState, "doc_id", threshold = 0.6)
+    val res = incremental(batch, state)
     val out = res.flagged
       .select("doc_id", "is_dup_near_corpus", "near_dup_of",
         "is_dup_near_batch", "batch_dup_of")
@@ -256,14 +258,12 @@ class SketchDedupSpec extends SparkTestBase {
       .select(col("doc_id").as("id"))
     val grown = state.unionByName(
       res.sketches.join(keptIds, Seq("id"), "left_semi"))
-    val res2 = SketchDedup.incrementalMinhash(
+    val res2 = incremental(
       Seq((20L, "fresh new content that matches nothing in the corpus at all"))
-        .toDF("doc_id", "text"),
-      grown, "doc_id", "text", threshold = 0.6)
+        .toDF("doc_id", "text"), grown)
     val out2 = res2.flagged
       .select("is_dup_near_corpus", "near_dup_of").collect()(0)
     assert(out2.getBoolean(0) && out2.getLong(1) === 11L)
-    res2.release(); res.release()
   }
 
   test("incremental md5 variant matches the pairwise md5 ground truth") {
@@ -449,7 +449,7 @@ class SketchDedupSpec extends SparkTestBase {
     // kernel to 0L, so THAT composition is what must equal the UDF
     val both = docs.select(
       coalesce(graft.plans.Simhash64(col("t")), lit(0L)).as("k"),
-      SketchDedup.simhash64(col("t")).as("u")).collect()
+      SketchDedupSpec.simhash64(col("t")).as("u")).collect()
     both.foreach { r =>
       assert(!r.isNullAt(0) && !r.isNullAt(1))
       assert(r.getLong(0) === r.getLong(1),
@@ -462,7 +462,7 @@ class SketchDedupSpec extends SparkTestBase {
     graft.plans.GraftFunctions.register(spark)
     val viaSql = spark.sql("SELECT simhash64('hello world')").head().getLong(0)
     val viaUdf = Seq("hello world").toDF("t")
-      .select(SketchDedup.simhash64(col("t"))).head().getLong(0)
+      .select(SketchDedupSpec.simhash64(col("t"))).head().getLong(0)
     assert(viaSql === viaUdf)
   }
 }
@@ -520,4 +520,40 @@ object SketchDedupSpec {
     transform(sequence(lit(0), lit(numHashes - 1)), j =>
       array_min(transform(sh, s0 =>
         md5(concat(j.cast("string"), lit(":"), s0)))))
+
+  /** 64-bit SimHash over whitespace tokens (FNV-1a token hashes) —
+    * the executable SPEC form of the codegen kernel
+    * [[graft.plans.Simhash64]].
+    */
+  val simhash64 = udf { (s: String) =>
+    if (s == null) 0L
+    else {
+      val toks = s.trim.split("\\s+").filter(_.nonEmpty)
+      if (toks.isEmpty) 0L
+      else {
+        val counts = new Array[Int](64)
+        toks.foreach { t =>
+          var h = 0xcbf29ce484222325L // FNV-1a 64 offset basis
+          var i = 0
+          while (i < t.length) {
+            h ^= t.charAt(i).toLong
+            h *= 0x100000001b3L
+            i += 1
+          }
+          var bit = 0
+          while (bit < 64) {
+            if (((h >>> bit) & 1L) == 1L) counts(bit) += 1 else counts(bit) -= 1
+            bit += 1
+          }
+        }
+        var sig = 0L
+        var bit = 0
+        while (bit < 64) {
+          if (counts(bit) > 0) sig |= (1L << bit)
+          bit += 1
+        }
+        sig
+      }
+    }
+  }
 }

@@ -2,59 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Skew
-
-/** Salting helpers must be result-identical to their unsalted forms. */
+/** Skew routing must be result-identical to the plain window path. */
 class SkewSpec extends SparkTestBase {
-
-  private def hotData = {
-    import spark.implicits._
-    // one hot key (90% of rows) + a tail
-    ((1 to 90).map(i => ("hot", i.toDouble)) ++
-      (1 to 10).map(i => (s"k$i", i.toDouble))).toDF("k", "v")
-  }
-
-  private def dim = {
-    import spark.implicits._
-    (Seq(("hot", "HOT")) ++ (1 to 10).map(i => (s"k$i", s"K$i")))
-      .toDF("k", "label")
-  }
-
-  test("saltedJoin equals plain join") {
-    val plain = hotData.join(dim, Seq("k")).groupBy("k", "label")
-      .agg(count(lit(1)).as("n"), sum("v").as("s"))
-      .collect().map(_.toSeq).toSet
-    val salted = Skew.saltedJoin(hotData, dim, "k", salts = 8)
-      .groupBy("k", "label")
-      .agg(count(lit(1)).as("n"), sum("v").as("s"))
-      .collect().map(_.toSeq).toSet
-    assert(salted === plain)
-  }
-
-  test("saltedJoin spreads the hot key across salt partitions") {
-    val salted = hotData.withColumn("__salt",
-      pmod(xxhash64(struct(hotData.columns.map(col): _*)), lit(8L)))
-    val distinctSalts = salted.filter(col("k") === "hot")
-      .select("__salt").distinct().count()
-    assert(distinctSalts > 4, s"hot key only hit $distinctSalts of 8 salts")
-  }
-
-  test("saltedSumCount equals plain aggregation") {
-    val plain = hotData.groupBy("k")
-      .agg(sum("v").as("sum_v"), count(lit(1)).as("n_rows"))
-      .collect().map(_.toSeq).toSet
-    val salted = Skew.saltedSumCount(hotData, "k", "v", salts = 8)
-      .collect().map(_.toSeq).toSet
-    assert(salted === plain)
-  }
-
-  test("nonDegenerate nulls out empty and null keys") {
-    import spark.implicits._
-    val r = Seq("x", "", "  ", null).toDF("k")
-      .select(Skew.nonDegenerate(col("k"))).collect().map(r =>
-        if (r.isNullAt(0)) null else r.getString(0))
-    assert(r.toSeq === Seq("x", null, null, null))
-  }
 
   // 99%-one-language corpus: the fixture from the verdict's skew item.
   // 990 'en' docs + 10 spread over 5 tail languages, adversarial score

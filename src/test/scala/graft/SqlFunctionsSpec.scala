@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{InjectedFunctions, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSessionExtensions, TestSqlBridge}
 
 import graft.plans.{GraftFunctions, GraftSparkExtensions}
 
@@ -67,7 +67,7 @@ class SqlFunctionsSpec extends SparkTestBase {
   test("the session extension injects exactly the names register loads") {
     val ext = new SparkSessionExtensions
     new GraftSparkExtensions().apply(ext)
-    assert(InjectedFunctions.names(ext) === names)
+    assert(TestSqlBridge.names(ext) === names)
   }
 
   test("register is idempotent: no second rule or strategy") {

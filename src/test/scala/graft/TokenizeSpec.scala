@@ -13,7 +13,7 @@ class TokenizeSpec extends SparkTestBase {
 
   private def both(texts: Seq[String]): Unit = {
     val df = texts.toDF("t")
-    val udfIds = df.select(Tokenize.tokenize(col("t")).getField("_1")).collect()
+    val udfIds = df.select(graft.text.TokenizeRef.tokenize(col("t")).getField("_1")).collect()
       .map(_.getSeq[Int](0).toList)
     val natIds = df.select(Tokenize.native(col("t")).getField("input_ids")).collect()
       .map(_.getSeq[Int](0).toList)
@@ -91,7 +91,7 @@ class TokenizeSpec extends SparkTestBase {
     texts.zipWithIndex.foreach { case (t, i) =>
       val scrubbed = wsFam.replaceAllIn(
         nonBmp.replaceAllIn(Option(t).getOrElse(""), ""), " ")
-      val ids = Tokenize.encode(scrubbed)
+      val ids = graft.text.TokenizeRef.encode(scrubbed)
       val want = (ids.length.toLong,
         ids.zipWithIndex.map { case (id, p) => id.toLong * (p + 1) }.sum)
       assert(got(i.toLong) === want, s"doc $i: ${String.valueOf(t).take(60)}")

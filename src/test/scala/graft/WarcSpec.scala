@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Warc
 import graft.sources.Warc.{HttpResponse, WarcRecord}
 
 /** WARC (ISO 28500) reader/writer: spec-exact framing, gzip-member
-  * layout, streamed file reads, HTTP payload split, and the
+  * layout, HTTP payload split, and the
   * malformed→stop-never-throw contract.
   */
 class WarcSpec extends SparkTestBase {
@@ -115,28 +113,6 @@ class WarcSpec extends SparkTestBase {
     assert(Warc.httpResponse("HTTP/1.1 abc OK\r\n\r\n".getBytes) === None)
   }
 
-  test("file-level roundtrip: writeWarcFiles -> readWarcFiles, " +
-    ".warc.gz, multi-partition, record set survives exactly") {
-    import spark.implicits._
-    val recs = (0 until 64).map(rec(_))
-    val ds = spark.createDataset(recs).repartition(4)
-    val dir = Files.createTempDirectory("warc").toString
-    Warc.writeWarcFiles(ds, dir)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".warc.gz"))
-    assert(files.length === 4)
-    val back = Warc.readWarcFiles(spark, s"$dir/*.warc.gz")
-    assert(back.count() === 64L)
-    val ids = back.select("record_id").as[String].collect().sorted
-    assert(ids.toSeq === recs.map(_.recordId).sorted)
-    val lens = back.select("content_length").as[Long].collect().sum
-    assert(lens === recs.map(_.contentLength).sum)
-    // payloads byte-exact
-    val bodies = back.select("record_id", "payload")
-      .as[(String, Array[Byte])].collect().toMap
-    recs.foreach(r => assert(bodies(r.recordId).toSeq === r.payload.toSeq))
-  }
-
   test("surtKey: label reversal, scheme/userinfo/port drop, lowercase, " +
     "query kept, degenerate inputs don't throw") {
     import spark.implicits._
@@ -176,17 +152,7 @@ class WarcSpec extends SparkTestBase {
     assert(badParsed.forall(_.isNullAt(2))) // url null on every malformed line
   }
 
-  test("readWarcFiles: plain .warc files (no gzip) read identically") {
-    val recs = (0 until 8).map(rec(_))
-    val dir = Files.createTempDirectory("warcplain").toString
-    val f = new java.io.FileOutputStream(s"$dir/a.warc")
-    recs.foreach(r => f.write(Warc.encodeRecord(r)))
-    f.close()
-    val back = Warc.readWarcFiles(spark, s"$dir/a.warc")
-    assert(back.count() === 8L)
-  }
-
-  test("sitemap: urlset fields, entity decode, index locs, malformed XML") {
+  test("sitemap: urlset fields, entity decode, malformed XML") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.sources.Sitemap
@@ -209,15 +175,6 @@ class WarcSpec extends SparkTestBase {
     // &amp; decodes LAST: &amp;lt; -> the literal &lt;
     assert(rows(1).getString(0) === "https://a.example/\"quoted\"&lt;")
     assert(rows(1).isNullAt(3)) // absent priority -> null
-    // index file: child sitemap locations
-    val idx = """<sitemapindex><sitemap><loc>https://a.example/s1.xml</loc>
-      |</sitemap><sitemap><loc> https://a.example/s2.xml?x=1&amp;y=2 </loc>
-      |</sitemap></sitemapindex>""".stripMargin
-    val locs = Seq(idx).toDF("xml")
-      .select(Sitemap.sitemapLocs(col("xml")).as("l"))
-      .as[Seq[String]].collect().head
-    assert(locs === Seq("https://a.example/s1.xml",
-      "https://a.example/s2.xml?x=1&y=2"))
     // malformed: junk, empty, null -> zero rows, never a throw
     val bad = Seq("not xml at all", "<urlset><url></url>", "", null)
       .toDF("xml")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.TestSqlBridge
 import org.apache.spark.sql.functions._
 
 import graft.plans.WordlistHits
@@ -31,7 +32,7 @@ class WordlistHitsSpec extends SparkTestBase {
       size(filter(col("toks"), t => array_contains(typedlit(ws), t))).as(s"h$i")
     }
     val rows = df.select(
-      WordlistHits(col("toks"), "langid").as("native") +: hof: _*).collect()
+      TestSqlBridge.kernel(col("toks"))(WordlistHits(_, "langid")).as("native") +: hof: _*).collect()
     rows.foreach { r =>
       val native = r.getSeq[Int](0)
       (0 until 4).foreach { i =>
@@ -44,10 +45,10 @@ class WordlistHitsSpec extends SparkTestBase {
     import spark.implicits._
     val df = texts.toDF("s").withColumn("toks",
       regexp_extract_all(lower(coalesce(col("s"), lit(""))), lit("\\w+"), lit(0)))
-    val expect = df.select(WordlistHits(col("toks"), "toxicity")).collect()
+    val expect = df.select(TestSqlBridge.kernel(col("toks"))(WordlistHits(_, "toxicity"))).collect()
       .map(_.getSeq[Int](0))
     withSQLConf("spark.sql.wholeStageCodegen.enabled" -> "false") {
-      val got = df.select(WordlistHits(col("toks"), "toxicity")).collect()
+      val got = df.select(TestSqlBridge.kernel(col("toks"))(WordlistHits(_, "toxicity"))).collect()
         .map(_.getSeq[Int](0))
       assert(got.toSeq == expect.toSeq)
     }
@@ -69,7 +70,7 @@ class WordlistHitsSpec extends SparkTestBase {
 
   test("unknown profile is rejected at construction") {
     intercept[IllegalArgumentException] {
-      WordlistHits(col("x"), "nope")
+      TestSqlBridge.kernel(col("x"))(WordlistHits(_, "nope"))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, TestSqlBridge}
 import org.apache.spark.sql.functions._
 
 // The regex/HOF/array forms the compiled text kernels replaced, kept in
@@ -13,13 +13,27 @@ import org.apache.spark.sql.functions._
 /** References for [[Normalize]]'s kernels. */
 object NormalizeRef {
 
+  /** NFKC through java.text.Normalizer as a UDF: the differential-test
+    * baseline of the codegen'd [[graft.plans.NfkcNormalize]].
+    */
+  val nfkc = udf { (s: String) =>
+    if (s == null) null
+    else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC)
+  }
+
+  /** Control chars the reference strips: U+0000-U+001F and U+007F-U+009F. */
+  val ControlChars = "[\\x00-\\x1F\\x7F-\\x9F]"
+
+  /** [[Normalize.BoilerplatePatterns]] as one alternation. */
+  val BoilerRe: String = Normalize.BoilerplatePatterns.mkString("(", ")|(", ")")
+
   /** The two-regex form of [[Normalize.normalizeText]]'s scrub tail
     * (CtrlWsNormalize), also the oracle-SQL statement of the semantics.
     */
   def normalizeTextRegex(c: Column, applyNfkc: Boolean = true): Column = {
     val base = if (applyNfkc) graft.plans.NfkcNormalize(c) else c
     val cleaned = trim(regexp_replace(
-      regexp_replace(base, Normalize.ControlChars, " "), "\\s+", " "))
+      regexp_replace(base, ControlChars, " "), "\\s+", " "))
     nullif(cleaned, lit(""))
   }
 
@@ -32,7 +46,7 @@ object NormalizeRef {
     */
   def removeBoilerplateLinesHof(c: Column): Column =
     trim(array_join(
-      filter(split(c, "\n"), l => !lower(l).rlike(Normalize.BoilerRe)),
+      filter(split(c, "\n"), l => !lower(l).rlike(BoilerRe)),
       "\n"))
 
   /** The backref-regex pair of [[Normalize.normalizeRepeatedChars]]
@@ -84,7 +98,28 @@ object TextMetricsRef {
       .otherwise(lit(0.0))
   }
 
-  /** The HOF form of [[TextMetrics.stopwordRatio]]. */
+  /** English-stopword share of the tokens, through the compiled
+    * [[graft.plans.TokenSetStats]] kernel (the production stage reads
+    * the same count from [[TextMetrics.withTokenStats]]).
+    */
+  def stopwordRatio(c: Column): Column = {
+    val t = tokens(c)
+    when(size(t) > 0,
+      element_at(graft.plans.TokenSetStats(t, EnStopwords), 2).cast("double")
+        / size(t).cast("double"))
+      .otherwise(lit(0.0))
+  }
+
+  /** Max single-token frequency / token count over a token array,
+    * through the compiled [[graft.plans.TokenDistStats]] kernel.
+    */
+  def maxTokenFreqFromTokens(t: Column): Column =
+    coalesce(element_at(graft.plans.TokenDistStats(t), 2), lit(0.0))
+
+  /** [[maxTokenFreqFromTokens]] straight from a text column. */
+  def maxTokenFreqRatio(c: Column): Column = maxTokenFreqFromTokens(tokens(c))
+
+  /** The HOF form of [[stopwordRatio]]. */
   def stopwordRatioHof(c: Column): Column = {
     val t = tokens(c)
     val stops = typedlit(EnStopwords)
@@ -123,13 +158,17 @@ object TextMetricsRef {
         when(size(t) > 0,
           element_at(col("__tss"), 2).cast("double") / size(t).cast("double"))
           .otherwise(lit(0.0)))
-      .withColumn("max_token_freq_ratio", TextMetrics.maxTokenFreqFromTokens(t))
+      .withColumn("max_token_freq_ratio", maxTokenFreqFromTokens(t))
       .drop("__toks", "__tss")
   }
 }
 
 /** References for [[LangId.withLangColumns]] (TextProfileStats). */
 object LangIdRef {
+
+  /** Lowercased `\p{L}+` runs of the text. */
+  def letterTokens(c: Column): Column =
+    regexp_extract_all(lower(coalesce(c, lit(""))), lit("\\p{L}+"), lit(0))
 
   private[text] def hitsIn(toks: Column, words: Seq[String]): Column =
     size(filter(toks, t => array_contains(typedlit(words), t)))
@@ -141,7 +180,7 @@ object LangIdRef {
   def detect(c: Column): (Column, Column) = {
     val s = coalesce(c, lit(""))
     val cjk = length(regexp_replace(s, "[^一-鿿]", ""))
-    val toks = LangId.letterTokens(c)
+    val toks = letterTokens(c)
     LangId.predScoreFrom(c, size(toks), hitsIn(toks, LangId.En), hitsIn(toks, LangId.De),
       hitsIn(toks, LangId.Es), hitsIn(toks, LangId.Fr), cjk)
   }
@@ -156,10 +195,10 @@ object LangIdRef {
       scoreName: String = "lang_score"): DataFrame = {
     val s = coalesce(c, lit(""))
     val staged = df
-      .withColumn("__lang_toks", LangId.letterTokens(c))
+      .withColumn("__lang_toks", letterTokens(c))
       .withColumn("__cjk", length(regexp_replace(s, "[^一-鿿]", "")))
       .withColumn("__lang_hits",
-        graft.plans.WordlistHits(col("__lang_toks"), "langid"))
+        TestSqlBridge.kernel(col("__lang_toks"))(graft.plans.WordlistHits(_, "langid")))
       .withColumn("__he", element_at(col("__lang_hits"), 1))
       .withColumn("__hd", element_at(col("__lang_hits"), 2))
       .withColumn("__hs", element_at(col("__lang_hits"), 3))
@@ -179,6 +218,10 @@ object LangIdRef {
 object ToxicityRef {
   import Toxicity._
   import LangIdRef.hitsIn
+
+  /** `\w+` tokens of the lowercased text (reference tokenization). */
+  def toxTokens(c: Column): Column =
+    regexp_extract_all(lower(coalesce(c, lit(""))), lit("\\w+"), lit(0))
 
   /** The six reference score columns as inline HOF expressions over the
     * text column (the reference arithmetic; n_tokens floor of 1 matches
@@ -207,9 +250,9 @@ object ToxicityRef {
   /** The WordlistHits-over-token-array staging. */
   def withToxicityColumnsArr(df: DataFrame, c: Column): DataFrame = {
     val staged = df
-      .withColumn("__tox_toks", Toxicity.toxTokens(c))
+      .withColumn("__tox_toks", toxTokens(c))
       .withColumn("__tox_hits",
-        graft.plans.WordlistHits(col("__tox_toks"), "toxicity"))
+        TestSqlBridge.kernel(col("__tox_toks"))(graft.plans.WordlistHits(_, "toxicity")))
       .withColumn("__tox_n",
         greatest(lit(1), size(col("__tox_toks"))).cast("double"))
     val n = col("__tox_n")
@@ -224,5 +267,36 @@ object ToxicityRef {
       .withColumn("identity_attack", least(lit(1.0), slr / n * 5.0))
       .withColumn("sexual_explicit", least(lit(1.0), sex / n * 5.0))
       .drop("__tox_toks", "__tox_hits", "__tox_n")
+  }
+}
+
+/** The reference for [[Tokenize.native]] (TokenizeText). */
+object TokenizeRef {
+
+  /** GPT-2-style pre-tokenization pattern (public knowledge: the GPT-2
+    * paper's regex, simplified to Java syntax without unicode captures).
+    */
+  val PreToken =
+    "'(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+(?!\\S)|\\s+".r
+
+  /** Deterministic id: stable across JVMs (String.hashCode is
+    * spec-defined) and mapped into [IdOffset, IdOffset + VocabSize).
+    */
+  def tokenId(tok: String): Int =
+    math.floorMod(tok.hashCode, Tokenize.VocabSize) + Tokenize.IdOffset
+
+  /** The pre-tokens of `text`, whitespace-only ones dropped, as ids. */
+  def encode(text: String): Seq[Int] =
+    if (text == null || text.isEmpty) Seq.empty
+    else PreToken.findAllIn(text).filterNot(_.forall(_.isWhitespace))
+      .map(tokenId).toSeq
+
+  /** UDF returning struct<input_ids, attention_mask, n_tokens> through
+    * [[encode]]: the executable grammar spec the one-pass
+    * scanner kernel is held id-identical to.
+    */
+  val tokenize = udf { (s: String) =>
+    val ids = encode(s)
+    (ids, Seq.fill(ids.length)(1), ids.length)
   }
 }
