@@ -155,4 +155,72 @@ class AudioCodecSpec extends AnyFunSuite {
       assert(AudioCodec.decode(wav.take(50)).exists(_.nFrames == 6 / ch))
     }
   }
+
+  test("audio features: bounded, deterministic, silence vs tone separate") {
+    val tone = AudioCodec.decode(AudioCodec.encodeWav16(8000, 1, sine(4096, 1))).get
+    val silence = AudioCodec.decode(
+      AudioCodec.encodeWav16(8000, 1, new Array[Float](4096))).get
+    val ft = AudioCodecSpec.audioFeatures(tone, 13)
+    val fs = AudioCodecSpec.audioFeatures(silence, 13)
+    assert(ft.length === 13 && fs.length === 13)
+    assert(ft(3) > fs(3), "tone RMS above silence")
+    assert(ft(0) === 4096.0f / 8000.0f, "duration")
+    assert(ft.sameElements(AudioCodecSpec.audioFeatures(tone, 13)), "deterministic")
+    assert(ft(5) >= 0.0f && ft(5) <= 1.0f, "zcr bounded")
+  }
+}
+
+object AudioCodecSpec {
+
+  /** A content-derived feature vector from decoded samples, the audio
+    * sibling of [[graft.ops.Multimodal.pixelFeatures]]: duration, RMS,
+    * peak, zero-crossing rate, and an 8-bin RMS-energy histogram over
+    * fixed 1024-frame windows (fractions). `dim` other than 13 truncates
+    * or zero-pads. Consumes any [[AudioCodec.DecodedAudio]], so it is
+    * the common sink the WAV and FLAC decoders are checked into.
+    */
+  def audioFeatures(a: AudioCodec.DecodedAudio, dim: Int): Array[Float] = {
+    val mono = new Array[Float](a.nFrames)
+    var f = 0
+    while (f < a.nFrames) {
+      var c = 0
+      var s = 0.0f
+      while (c < a.channels) { s += a.samples(f * a.channels + c); c += 1 }
+      mono(f) = s / a.channels
+      f += 1
+    }
+    var sumSq = 0.0
+    var peak = 0.0f
+    var crossings = 0L
+    var i = 0
+    while (i < mono.length) {
+      val v = mono(i)
+      sumSq += v.toDouble * v
+      val av = math.abs(v)
+      if (av > peak) peak = av
+      if (i > 0 && ((mono(i - 1) >= 0) != (v >= 0))) crossings += 1
+      i += 1
+    }
+    val rms = math.sqrt(sumSq / mono.length).toFloat
+    val zcr = if (mono.length > 1) crossings.toFloat / (mono.length - 1) else 0.0f
+    val hist = new Array[Long](8)
+    var w = 0
+    var nWindows = 0
+    while (w < mono.length) {
+      val end = math.min(mono.length, w + 1024)
+      var ss = 0.0
+      var j = w
+      while (j < end) { ss += mono(j).toDouble * mono(j); j += 1 }
+      val wr = math.sqrt(ss / (end - w))
+      hist(math.min((wr * 8).toInt, 7)) += 1
+      nWindows += 1
+      w += 1024
+    }
+    val base = Array(
+      a.nFrames.toFloat / a.sampleRate, // duration s
+      a.channels.toFloat, a.sampleRate.toFloat,
+      rms, peak, zcr) ++
+      hist.map(h => if (nWindows > 0) h.toFloat / nWindows else 0.0f)
+    java.util.Arrays.copyOf(base, dim)
+  }
 }

@@ -124,6 +124,36 @@ class ClassifierSpec extends SparkTestBase {
     }
   }
 
+  test("model persistence round-trips bit-exactly and rejects corruption") {
+    val train = fixture(120).filter(col("id") % 10 < 7)
+    val m = Classifier.trainLogistic(train, "x", "label", Dim, iters = 10)
+    val s = ClassifierSpec.modelToString(m)
+    val back = ClassifierSpec.modelFromString(s)
+    // hex IEEE bit patterns make equality exact, not approximate —
+    // including negative zero and subnormals a decimal form could fold
+    assert(back.bias === m.bias)
+    assert(back.weights.toSeq === m.weights.toSeq)
+    assert(java.lang.Double.doubleToRawLongBits(back.bias) ===
+      java.lang.Double.doubleToRawLongBits(m.bias))
+    // special values survive
+    val odd = Classifier.LogisticModel(
+      Array(-0.0, Double.MinPositiveValue, 1.5e308), -3.25)
+    val oddBack = ClassifierSpec.modelFromString(ClassifierSpec.modelToString(odd))
+    assert(oddBack.weights.map(java.lang.Double.doubleToRawLongBits).toSeq ===
+      odd.weights.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    // corruption raises instead of silently drifting the filter
+    intercept[IllegalArgumentException] { ClassifierSpec.modelFromString("") }
+    intercept[IllegalArgumentException] {
+      ClassifierSpec.modelFromString("wrong-header 1 0 0")
+    }
+    intercept[IllegalArgumentException] {
+      ClassifierSpec.modelFromString(s + " deadbeef") // extra weight field
+    }
+    intercept[IllegalArgumentException] {
+      ClassifierSpec.modelFromString(s.replaceFirst(" [0-9a-f]+$", " zz"))
+    }
+  }
+
   test("held-out accuracy separates spam from clean") {
     val all = fixture(400)
     val train = all.filter(col("id") % 10 < 7)
@@ -286,6 +316,42 @@ class ClassifierSpec extends SparkTestBase {
 
 object ClassifierSpec {
   import org.apache.spark.sql.DataFrame
+
+  private val ModelHeader = "graft-logistic-v1"
+
+  /** One-line textual model form, `graft-logistic-v1 <dim> <biasHex>
+    * <wHex>*`: weights as hex IEEE-754 bit patterns, so a round-trip is
+    * exact by construction.
+    */
+  def modelToString(m: Classifier.LogisticModel): String = {
+    val sb = new StringBuilder(ModelHeader)
+    sb.append(' ').append(m.weights.length)
+    sb.append(' ').append(java.lang.Long.toHexString(
+      java.lang.Double.doubleToRawLongBits(m.bias)))
+    m.weights.foreach { w =>
+      sb.append(' ').append(java.lang.Long.toHexString(
+        java.lang.Double.doubleToRawLongBits(w)))
+    }
+    sb.toString
+  }
+
+  /** Strict inverse of [[modelToString]]; raises on any corruption. */
+  def modelFromString(s: String): Classifier.LogisticModel = {
+    def fail(msg: String): Nothing =
+      throw new IllegalArgumentException(s"modelFromString: $msg")
+    val parts = s.trim.split("\\s+")
+    if (parts.length < 3 || parts(0) != ModelHeader)
+      fail(s"expected '$ModelHeader <dim> <biasHex> <wHex>*'")
+    val dim =
+      try parts(1).toInt
+      catch { case _: NumberFormatException => fail(s"bad dim '${parts(1)}'") }
+    if (dim < 0 || parts.length != dim + 3)
+      fail(s"dim $dim but ${parts.length - 3} weight fields")
+    def bits(h: String): Double =
+      try java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(h, 16))
+      catch { case _: NumberFormatException => fail(s"bad hex '$h'") }
+    Classifier.LogisticModel(Array.tabulate(dim)(i => bits(parts(i + 3))), bits(parts(2)))
+  }
 
   /** Mean logistic loss of a model over a labeled frame — one
     * aggregation, to assert training monotonicity.

@@ -191,6 +191,34 @@ class FiltersDedupSpec extends SparkTestBase {
     assert(out(0) == "high_quality" && out(1) == "rest")
   }
 
+  test("incremental exact dedup: cross-batch dups flagged, history never re-windowed") {
+    import spark.implicits._
+    val batch1 = Seq((1L, "day one document alpha"), (2L, "day one document beta"))
+      .toDF("ingest_seq", "text_pii_masked")
+    val day1 = Dedup.exactDedup(batch1)
+    val seen = day1.filter(!col("is_dup_exact")).select("exact_hash")
+
+    val batch2 = Seq(
+      (10L, "day one document alpha"),   // dup of history
+      (11L, "fresh document gamma"),     // new
+      (12L, "fresh document gamma"),     // within-batch dup
+      (13L, "day one DOCUMENT   beta")   // dup of history via canon (case/ws)
+    ).toDF("ingest_seq", "text_pii_masked")
+
+    val flagged = FiltersDedupSpec.incrementalExactDedup(batch2, seen)
+      .select("ingest_seq", "is_dup_exact", "drop_reason").collect()
+      .map(r => r.getLong(0) -> (r.getBoolean(1), Option(r.getString(2)))).toMap
+
+    assert(flagged(10L) == (true, Some("exact_duplicate")))
+    assert(flagged(11L) == (false, None))
+    assert(flagged(12L) == (true, Some("exact_duplicate")))
+    assert(flagged(13L) == (true, Some("exact_duplicate")))
+    // appending the new survivors grows the state by exactly one hash
+    val day2Seen = FiltersDedupSpec.incrementalExactDedup(batch2, seen)
+      .filter(!col("is_dup_exact")).select("exact_hash")
+    assert(seen.union(day2Seen).distinct().count() == seen.count() + 1)
+  }
+
   test("DropReasonStage2 kernel == applyRules(langRules)+applyRules(" +
     "qualityRules) bit-for-bit on null/threshold fuzz, both eval paths") {
     // The fused F9-F20 kernel (plans/DropReasonStage2) replaces the
@@ -260,7 +288,8 @@ class FiltersDedupSpec extends SparkTestBase {
 
 /** The composed stage-4 form [[Dedup.dedupStage]] replaced, kept as its
   * parity reference: `nearDedup(exactDedup(df))` is the reference's
-  * D1∘D2 with two wide window shuffles.
+  * D1∘D2 with two wide window shuffles. Also the cross-batch form of
+  * exact dedup, which no pipeline stage runs.
   */
 object FiltersDedupSpec {
   import org.apache.spark.sql.DataFrame
@@ -290,5 +319,40 @@ object FiltersDedupSpec {
 
     val unioned = candFlagged.unionByName(rest)
     Filters.applyRules(unioned, Seq(col("is_dup_near") -> "near_duplicate"))
+  }
+
+  /** Exact dedup of a NEW batch against the running corpus without
+    * re-windowing history: within-batch keep-first runs as
+    * [[Dedup.exactDedup]]'s window; rows whose hash is already in
+    * `seenHashes` are marked duplicates through a left join, so the
+    * history contributes only its distinct hash set. When the state
+    * carries the kept row's `dedup_id`, cross-batch duplicates point
+    * `dup_of` at the corpus keeper; with a hash-only state it stays
+    * batch-local.
+    */
+  def incrementalExactDedup(batch: DataFrame, seenHashes: DataFrame,
+                            textCol: String = "text_pii_masked",
+                            seqCol: String = "ingest_seq"): DataFrame = {
+    val flagged = Dedup.exactDedup(batch, textCol, seqCol)
+    val seen =
+      if (seenHashes.columns.contains("dedup_id"))
+        seenHashes.groupBy(col("exact_hash").as("__seen_hash"))
+          .agg(min("dedup_id").as("__seen_id"))
+      else
+        seenHashes.select(col("exact_hash").as("__seen_hash")).distinct()
+          .withColumn("__seen_id", lit(null).cast("string"))
+    flagged
+      .join(seen, col("exact_hash") === col("__seen_hash"), "left")
+      .withColumn("is_dup_exact",
+        col("is_dup_exact") || col("__seen_hash").isNotNull)
+      // the corpus keeper predates everything in the batch, so it wins
+      // the lineage pointer over the within-batch first occurrence
+      .withColumn("dup_of",
+        when(col("__seen_hash").isNotNull && col("__seen_id").isNotNull,
+          col("__seen_id")).otherwise(col("dup_of")))
+      .withColumn("drop_reason",
+        when(col("drop_reason").isNull && col("__seen_hash").isNotNull,
+          "exact_duplicate").otherwise(col("drop_reason")))
+      .drop("__seen_hash", "__seen_id")
   }
 }

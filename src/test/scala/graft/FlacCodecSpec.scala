@@ -113,4 +113,30 @@ class FlacCodecSpec extends AnyFunSuite {
     assert(FlacCodec.decode(bomb).isEmpty,
       "36-bit total-samples bomb must be rejected before allocation")
   }
+
+  test("toAudio adapter normalizes by bit depth into the feature path") {
+    val x = Array[Int](16384, -32768, 0, 8192)
+    val enc = FlacCodec.encodeFlac16(8000, 1, x)
+    val a = FlacCodecSpec.toAudio(FlacCodec.decode(enc).get)
+    assert(a.samples.toSeq === Seq(0.5f, -1.0f, 0.0f, 0.25f))
+    assert(a.sampleRate === 8000 && a.channels === 1 && a.nFrames === 4)
+    // and the WAV feature extractor consumes it unchanged
+    val f = AudioCodecSpec.audioFeatures(a, dim = 8)
+    assert(f.length === 8)
+  }
+}
+
+object FlacCodecSpec {
+
+  /** Normalized-float adapter from FLAC's integer samples into
+    * [[graft.ops.AudioCodec.DecodedAudio]], scaled by the bit depth.
+    */
+  def toAudio(d: FlacCodec.DecodedFlac): graft.ops.AudioCodec.DecodedAudio = {
+    val scale = 1.0f / (1 << (d.bitsPerSample - 1))
+    val out = new Array[Float](d.samples.length)
+    var i = 0
+    while (i < out.length) { out(i) = d.samples(i) * scale; i += 1 }
+    graft.ops.AudioCodec.DecodedAudio(d.sampleRate, d.channels, d.bitsPerSample,
+      d.nFrames, out)
+  }
 }

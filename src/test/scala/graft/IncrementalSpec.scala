@@ -1,13 +1,57 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.ops.{Incremental, SnapshotDiff}
+import graft.text.TextMetrics
 
-/** Incremental maintenance: a snapshot merge replaces, deletes and
-  * carries forward exactly, and fails on ambiguous ids.
+/** Incremental maintenance: delta-only reprocessing equals a full
+  * recompute, and a snapshot merge replaces, deletes and carries
+  * forward exactly, and fails on ambiguous ids.
   */
 class IncrementalSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private def mkDocs(rows: Seq[(Long, String)]): DataFrame =
+    rows.toDF("doc_id", "text")
+
+  private def canon(df: DataFrame): Seq[Row] =
+    df.collect().sortBy(_.getLong(0)).toSeq
+
+  test("incremental output equals full recompute across add/change/remove") {
+    val prev = mkDocs((0L until 50L).map(i => (i, s"doc $i body text")))
+    // 0-9 removed; 10-39 unchanged; 40-49 changed; 50-54 added
+    val cur = mkDocs(
+      (10L until 40L).map(i => (i, s"doc $i body text")) ++
+        (40L until 50L).map(i => (i, s"doc $i REVISED body")) ++
+        (50L until 55L).map(i => (i, s"doc $i brand new")))
+
+    val processed = spark.sparkContext.longAccumulator("processed")
+    def process(acc: Option[LongAccumulator])(df: DataFrame): DataFrame = {
+      val staged = acc match {
+        case Some(a) => df.map { r => a.add(1); r.getLong(0) -> r.getString(1) }
+          .toDF("doc_id", "text")
+        case None => df
+      }
+      staged.select(col("doc_id"),
+        TextMetrics.charLen(col("text")).cast("long").as("n_chars"),
+        TextMetrics.wordCount(col("text")).cast("long").as("n_words"),
+        md5(col("text")).as("text_md5"))
+    }
+
+    val prevOut = process(None)(prev)
+    val inc = IncrementalSpec.processDelta(cur, prev, prevOut,
+      process(Some(processed)))
+    val full = process(None)(cur)
+    val incRows = canon(inc) // single action — the accumulator counts one run
+    assert(incRows === canon(full))
+    // ids: exactly the current snapshot, nothing from removed docs
+    assert(incRows.map(_.getLong(0)).toSeq === (10L until 55L).toSeq)
+    // the delta side processed ONLY changed+added rows (10 + 5)
+    assert(processed.value === 15L)
+  }
 
   test("applyDelta: upserts replace, deletes fall out, merge->diff closes") {
     import spark.implicits._
@@ -98,5 +142,37 @@ class IncrementalSpec extends SparkTestBase {
     }
     assert(messages(exSnap).exists(_.contains("snapshot")),
       s"unexpected failure: $exSnap")
+  }
+}
+
+object IncrementalSpec {
+
+  /** Per-doc output for the current snapshot, recomputing only the
+    * delta over [[SnapshotDiff.diff]]: added and changed documents go
+    * through `process`, unchanged ones carry the previous run's rows
+    * forward, removed ones fall out. `process` must be row-local, so
+    * carry-forward equals recompute by construction. Content identity
+    * is md5(textCol).
+    */
+  def processDelta(cur: DataFrame, prev: DataFrame, prevOut: DataFrame,
+                   process: DataFrame => DataFrame,
+                   idCol: String = "doc_id",
+                   textCol: String = "text"): DataFrame = {
+    def fps(df: DataFrame): DataFrame =
+      df.select(col(idCol),
+        md5(coalesce(col(textCol), lit(""))).as("fingerprint"))
+    // the diff feeds BOTH union branches: persist the (id, status)
+    // sliver — ids only, never text — or each branch re-scans and
+    // re-fingerprints both snapshots.
+    val diffed = SnapshotDiff.diff(fps(prev), fps(cur), idCol)
+      .select(col(idCol), col("status"))
+    val d = cur.sparkSession.createDataFrame(
+      graft.Persisted(diffed.rdd),
+      diffed.schema)
+    val todo = d.filter(col("status").isin("added", "changed"))
+      .select(idCol)
+    val keep = d.filter(col("status") === "unchanged").select(idCol)
+    process(cur.join(todo, Seq(idCol), "left_semi"))
+      .unionByName(prevOut.join(keep, Seq(idCol), "left_semi"))
   }
 }

@@ -70,6 +70,13 @@ class MultimodalSpec extends SparkTestBase {
     }
   }
 
+  test("decode stub returns declared dims and a stable checksum") {
+    val (w, h, c1) = MultimodalSpec.decodeImageStub("payload".getBytes, 64, 48)
+    val (_, _, c2) = MultimodalSpec.decodeImageStub("payload".getBytes, 64, 48)
+    assert((w, h) === (64, 48))
+    assert(c1 === c2)
+  }
+
   // ---- real codec --------------------------------------------------------
 
   // 3x2 RGB test card: distinct channel values in every pixel so any
@@ -135,6 +142,20 @@ class MultimodalSpec extends SparkTestBase {
     val bmp = ImageCodec.encodeBmp(3, 2, rgb3x2)
     bmp(28) = 8 // 8-bpp palette BMP: out of scope
     assert(ImageCodec.decode(bmp).isEmpty)
+  }
+
+  test("decodeImage: pixel checksum is representation-independent") {
+    // the same pixels through different encodings must checksum equal —
+    // impossible for any byte-level hash of the payload
+    val viaPng = MultimodalSpec.decodeImage(ImageCodec.encodePng(3, 2, rgb3x2), 0, 0)
+    val viaBmp = MultimodalSpec.decodeImage(ImageCodec.encodeBmp(3, 2, rgb3x2), 0, 0)
+    val viaPpm = MultimodalSpec.decodeImage(ImageCodec.encodePpm(3, 2, rgb3x2), 0, 0)
+    assert(viaPng === ((3, 2, viaPng._3)))
+    assert(viaPng === viaBmp)
+    assert(viaBmp === viaPpm)
+    // and the stub fallback reports the declared dims instead
+    val stub = MultimodalSpec.decodeImage("jpegish garbage".getBytes, 64, 48)
+    assert((stub._1, stub._2) === ((64, 48)))
   }
 
   test("extractFeatures: image payloads embed from pixels, flagged decoded") {
@@ -422,6 +443,33 @@ class MultimodalSpec extends SparkTestBase {
 
 object MultimodalSpec {
   import java.io.ByteArrayOutputStream
+
+  import org.apache.spark.sql.catalyst.expressions.XXH64
+  import org.apache.spark.unsafe.Platform
+
+  /** Image decode through [[ImageCodec]] (PNG/BMP/PPM): actual dims and
+    * a checksum of the DECODED PIXELS, so two payloads that encode the
+    * same pixels differently checksum equal, which no byte-level hash
+    * can do. Falls back to [[decodeImageStub]] outside the codec's
+    * scope.
+    */
+  def decodeImage(content: Array[Byte], width: Int, height: Int): (Int, Int, Long) =
+    ImageCodec.decode(content) match {
+      case Some(img) =>
+        val checksum = XXH64.hashUnsafeBytes(img.pixels,
+          Platform.BYTE_ARRAY_OFFSET, img.pixels.length, 42L)
+        (img.width, img.height, checksum)
+      case None => decodeImageStub(content, width, height)
+    }
+
+  /** The fallback for payloads outside the codec's scope (e.g. JPEG):
+    * the declared dims and a deterministic checksum of the payload bytes.
+    */
+  def decodeImageStub(content: Array[Byte], width: Int, height: Int): (Int, Int, Long) = {
+    val checksum = XXH64.hashUnsafeBytes(content,
+      Platform.BYTE_ARRAY_OFFSET, content.length, 42L)
+    (width, height, checksum)
+  }
 
   /** PNG with an explicit filter type per scanline (forward-filtered
     * here, so decode must invert it) — exercises the Sub/Up/Average/Paeth

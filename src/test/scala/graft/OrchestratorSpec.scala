@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, TestSqlBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Shard
 import graft.sources.Sinks
@@ -309,5 +310,95 @@ class OrchestratorSpec extends SparkTestBase {
     // v2..v4 are still on disk, so their rows carry over unchanged
     assertSummaryMatchesParquet(outDir, stageNames(2))
     assert(summaryRows(outDir).take(3) === firstRunRows.take(3))
+  }
+
+  test("incremental run matches a from-scratch run on content columns") {
+    // snapshot B = A with the tail third dropped and fresh docs added
+    // (doc_id is content-addressed, so an edited doc IS a remove+add)
+    val rawA = Pipeline.fromDocuments(Tables.documents(spark, sfDir))
+      .select("url", "text")
+    val keepIds = Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 3 =!= 0).select("doc_id")
+    val rawB = Pipeline.fromDocuments(
+      Tables.documents(spark, sfDir).join(keepIds, Seq("doc_id"), "left_semi")
+        .unionByName(Tables.documents(spark, sfDir)
+          .filter(col("doc_id") % 3 === 0).limit(30)
+          .withColumn("text", concat(lit("fresh revision: "), coalesce(col("text"), lit(""))))
+          .withColumn("doc_id", col("doc_id") + 1000000L)))
+      .select("url", "text")
+    val prevDir = Files.createTempDirectory("graft-inc-prev").toString
+    // a run releases every cache it takes and none the caller owns
+    spark.catalog.clearCache()
+    val callerOwned = spark.range(5).toDF("x").persist()
+    callerOwned.count()
+    Orchestrator.run(spark, prevDir, raw = Some(rawA))
+    assert(callerOwned.storageLevel === StorageLevel.MEMORY_AND_DISK,
+      "run evicted a frame the caller cached")
+    callerOwned.unpersist(blocking = true)
+    assert(TestSqlBridge.noCachedPlans(spark),
+      "run left DataFrame-level caches pinned")
+    // the incremental composition must release its own stage-2/3
+    // persists: start from a clean cache and assert none survive
+    spark.catalog.clearCache()
+    val incDir = Files.createTempDirectory("graft-inc-out").toString
+    val incr = OrchestratorSpec.incrementalRun(spark, prevDir, incDir, rawB)
+    assert(TestSqlBridge.noCachedPlans(spark),
+      "incrementalRun left DataFrame-level caches pinned")
+    assertSummaryMatchesParquet(incDir, "v3:incremental_prefix" +: stageNames(4))
+    val fullDir = Files.createTempDirectory("graft-inc-full").toString
+    Orchestrator.run(spark, fullDir, raw = Some(rawB))
+    // content columns must agree; seq-derived artifacts (shard_id,
+    // global_seq) legitimately follow each run's ingest interleaving
+    val cols = Seq("doc_id", "lang_pred", "token_count", "has_pii",
+      "quality_score", "subset", "n_tokens")
+    val a = incr.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val b = spark.read.parquet(Orchestrator.versionPath(fullDir, 7))
+      .select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    assert(a === b)
+  }
+}
+
+object OrchestratorSpec {
+  import org.apache.spark.sql.{Observation, SparkSession}
+
+  import graft.ops.Filters
+
+  /** An incremental run over a previous completed run's outputs, built
+    * from the public stage functions and the resume entry of
+    * [[Orchestrator.run]]. Stages 2-3 are row-local, so they run through
+    * [[IncrementalSpec.processDelta]] against the previous v1/v3 (only
+    * the crawl delta pays them); the corpus-global stages (dedup to
+    * shard) resume from the merged v3. Carried-forward rows keep their
+    * original ingest_seq, so seq-derived columns follow this run's
+    * interleaving. The summary's `v3:incremental_prefix` row holds the
+    * merged v3's row count, with -1 for its unmaterialized dropped rows.
+    */
+  def incrementalRun(spark: SparkSession, prevDir: String, outDir: String,
+                     rawCur: DataFrame, dropPii: Boolean = false): DataFrame = {
+    val prevV1 = spark.read.parquet(Orchestrator.versionPath(prevDir, 1))
+    val prevV3 = spark.read.parquet(Orchestrator.versionPath(prevDir, 3))
+    val ingested = Pipeline.ingest(rawCur)
+    ingested.write.mode("overwrite").parquet(Orchestrator.versionPath(outDir, 1))
+    val curV1 = spark.read.schema(ingested.schema)
+      .parquet(Orchestrator.versionPath(outDir, 1))
+    // a branch point before each kept(): the stage-2 chain must not be
+    // substituted into the filter condition or computed twice
+    val rowLocal: DataFrame => DataFrame = df => {
+      val s2 = Persisted.rows(Pipeline.cleanAndFilter(df))
+      Filters.kept(Persisted.rows(Pipeline.deepCleanAndPii(Filters.kept(s2), dropPii)))
+    }
+    val v3Rows = Persisted.owned {
+      val merged = IncrementalSpec.processDelta(curV1, prevV1, prevV3, rowLocal)
+      val written = Observation()
+      merged.observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(Orchestrator.versionPath(outDir, 3))
+      written.get("rows").asInstanceOf[Long]
+    }
+    val prefix = {
+      import spark.implicits._
+      Seq(("v3:incremental_prefix", v3Rows, -1L)).toDF("stage", "kept", "dropped")
+    }
+    Sinks.writeMetricsJson(Map("stages" -> prefix), s"$outDir/run_summary.json")
+    Orchestrator.run(spark, outDir, fromVersion = 4, dropPii = dropPii)
   }
 }

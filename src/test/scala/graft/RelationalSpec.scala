@@ -240,6 +240,24 @@ class RelationalSpec extends SparkTestBase {
     assert("""\(\d+\) Scan parquet""".r.findAllIn(p).size === 1, p)
   }
 
+  test("approx describe tracks exact describe (bounded-state scale path)") {
+    val docs = Tables.documents(spark, sf)
+    val exact = graft.ops.Report.describeCol(docs, "n_chars").collect()(0)
+    val approx = RelationalSpec.describeColApprox(docs, "n_chars").collect()(0)
+    // identical moments (same plain aggregates)...
+    assert(approx.getAs[Long]("n") === exact.getAs[Long]("n"))
+    assert(approx.getAs[Long]("min") === exact.getAs[Long]("min"))
+    assert(approx.getAs[Long]("max") === exact.getAs[Long]("max"))
+    assert(math.abs(approx.getAs[Double]("mean") - exact.getAs[Double]("mean")) < 1e-9)
+    assert(math.abs(approx.getAs[Double]("std") - exact.getAs[Double]("std")) < 1e-6)
+    // ...and sketched quantiles within 2% of exact at default accuracy
+    Seq("p25", "median", "p75").foreach { q =>
+      val e = exact.getAs[Double](q)
+      val a = approx.getAs[Long](q).toDouble // approx returns the col's type
+      assert(math.abs(a - e) <= math.max(1.0, e * 0.02), s"$q: approx $a vs exact $e")
+    }
+  }
+
   test("session_window merges the exact-gap event (inclusive boundary)") {
     // pins the semantics q_session_window's oracle mirrors: an event
     // exactly gapDuration after the session's last event MERGES, so the
@@ -317,4 +335,26 @@ class RelationalSpec extends SparkTestBase {
     assert(roundTrip(timestamp_micros(us).cast(TimestampNTZType)) === micros.sorted)
     assert(roundTrip(timestamp_micros(us)) === micros.sorted)
   }
+}
+
+object RelationalSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** The bounded-state form of [[graft.ops.Report.describeCol]]: exact
+    * `percentile` buffers every value in the aggregation state, while
+    * approx_percentile's sketch keeps bounded state at a chosen
+    * accuracy. Sketch internals are engine-defined, so this form is
+    * checked against the exact describe, not oracle-hashed.
+    */
+  def describeColApprox(df: DataFrame, c: String, accuracy: Int = 10000): DataFrame =
+    df.agg(
+        count(col(c)).as("n"),
+        min(col(c)).as("min"),
+        max(col(c)).as("max"),
+        avg(col(c)).as("mean"),
+        stddev_samp(col(c)).as("std"),
+        expr(s"approx_percentile($c, array(0.25, 0.5, 0.75), $accuracy)").as("_q"))
+      .select(col("n"), col("min"), col("max"), col("mean"), col("std"),
+        col("_q").getItem(0).as("p25"), col("_q").getItem(1).as("median"),
+        col("_q").getItem(2).as("p75"))
 }

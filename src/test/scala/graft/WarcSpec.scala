@@ -152,7 +152,7 @@ class WarcSpec extends SparkTestBase {
     assert(badParsed.forall(_.isNullAt(2))) // url null on every malformed line
   }
 
-  test("sitemap: urlset fields, entity decode, malformed XML") {
+  test("sitemap: urlset fields, entity decode, index locs, malformed XML") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.sources.Sitemap
@@ -175,6 +175,15 @@ class WarcSpec extends SparkTestBase {
     // &amp; decodes LAST: &amp;lt; -> the literal &lt;
     assert(rows(1).getString(0) === "https://a.example/\"quoted\"&lt;")
     assert(rows(1).isNullAt(3)) // absent priority -> null
+    // index file: child sitemap locations
+    val idx = """<sitemapindex><sitemap><loc>https://a.example/s1.xml</loc>
+      |</sitemap><sitemap><loc> https://a.example/s2.xml?x=1&amp;y=2 </loc>
+      |</sitemap></sitemapindex>""".stripMargin
+    val locs = Seq(idx).toDF("xml")
+      .select(WarcSpec.sitemapLocs(col("xml")).as("l"))
+      .as[Seq[String]].collect().head
+    assert(locs === Seq("https://a.example/s1.xml",
+      "https://a.example/s2.xml?x=1&y=2"))
     // malformed: junk, empty, null -> zero rows, never a throw
     val bad = Seq("not xml at all", "<urlset><url></url>", "", null)
       .toDF("xml")
@@ -207,4 +216,22 @@ class WarcSpec extends SparkTestBase {
     assert(scan.metrics("numFiles").value === 1L,
       s"pruned scan opened ${scan.metrics("numFiles").value} of $total files")
   }
+}
+
+object WarcSpec {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.{coalesce, lit, regexp_extract_all, transform}
+
+  import graft.sources.Sitemap.unescapeXml
+
+  /** The child-sitemap locations of a `<sitemapindex>` document, read
+    * with the same RE2-safe lazy regex and entity decode as
+    * [[graft.sources.Sitemap.parseUrlset]].
+    */
+  def sitemapLocs(xml: Column): Column =
+    transform(
+      regexp_extract_all(coalesce(xml, lit("")),
+        lit("(?s)<sitemap\\b[^>]*>.*?<loc>\\s*(.*?)\\s*</loc>.*?</sitemap>"),
+        lit(1)),
+      l => unescapeXml(l))
 }
